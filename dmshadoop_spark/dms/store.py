@@ -35,6 +35,19 @@ copy-on-write step, now explicitly scheduled instead of paid per
 delete). This is exactly Delta's deletion-vector / Iceberg's
 merge-on-read delete-file design, rebuilt on the generation machinery.
 
+Execution rule: a call keyed on a single name runs on the driver through
+Arrow; a scan-shaped call stays in Spark. The point calls (``download``,
+``get_file_meta_data``, ``get_file_version``, ``get_lastest_version``,
+``upload``, ``delete``, ``delete_all_version`` and ``update``'s
+pre-checks) read the committed generation with ``pyarrow.dataset``
+filtered on ``name`` and apply its tombstones in memory, and ``upload``
+writes its row as one pyarrow parquet file. A Spark job costs a few
+hundred milliseconds of scheduling, which is the whole price of a point
+call; the files are the same either way, so Spark reads what the driver
+writes and vice versa. ``df()``, ``search``, ``compact``,
+``bulk_ingest``, ``delete_where``, ``diff``, ``update``'s rewrite and
+``delete_all`` stay Spark jobs.
+
 Fixed reference bugs (SURVEY.md §2 notes):
   B1 — latest version is numeric max(version), not a string sort
        (src/DMS.py:391 sorts "10" < "9").
@@ -52,9 +65,15 @@ from __future__ import annotations
 import datetime
 import os
 import re
+import uuid
+from collections.abc import Callable
 
+import pyarrow as pa
+import pyarrow.dataset as ds
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     BinaryType,
     IntegerType,
@@ -87,6 +106,10 @@ TOMBSTONE_SCHEMA = StructType(
     ]
 )
 
+# the same two schemas for the driver path's pyarrow reads and writes
+_ARROW_DOCUMENT_SCHEMA = to_arrow_schema(DOCUMENT_SCHEMA)
+_ARROW_TOMBSTONE_SCHEMA = to_arrow_schema(TOMBSTONE_SCHEMA)
+
 _GEN_RE = re.compile(r"^gen=(\d+)$")
 
 _TOMBSTONE_DIR = "_tombstones"
@@ -110,24 +133,57 @@ class ConcurrentWriteError(RuntimeError):
     miniature."""
 
 
+def _visible_files(dir_path: str) -> list[str]:
+    """Paths of the visible data files directly under ``dir_path`` (none
+    if it does not exist); markers and hidden files (``_``/``.``-prefixed)
+    are skipped."""
+    if not os.path.isdir(dir_path):
+        return []
+    return [
+        os.path.join(dir_path, fn)
+        for fn in sorted(os.listdir(dir_path))
+        if not fn.startswith(("_", "."))
+        and os.path.isfile(os.path.join(dir_path, fn))
+    ]
+
+
 def _link_visible(src_dir: str, dst_dir: str) -> None:
     """Hardlink every visible data file from ``src_dir`` into ``dst_dir``
-    (copy on cross-device); markers and hidden files are skipped. Names
-    are kept — Spark part files carry a fresh job UUID, so files from
-    different commits can't collide."""
+    (copy on cross-device). Names are kept — part files carry a fresh
+    UUID, so files from different commits can't collide."""
     import shutil
 
-    for fn in os.listdir(src_dir):
-        if fn.startswith(("_", ".")):
-            continue
-        src = os.path.join(src_dir, fn)
-        if not os.path.isfile(src):
-            continue
-        dst = os.path.join(dst_dir, fn)
+    for src in _visible_files(src_dir):
+        dst = os.path.join(dst_dir, os.path.basename(src))
         try:
             os.link(src, dst)
         except OSError:  # cross-device fallback
             shutil.copy2(src, dst)
+
+
+def _write_part(table: pa.Table, dir_path: str) -> None:
+    """Write ``table`` as one new parquet part file under ``dir_path``.
+    Footer statistics cover the scalar columns only: min/max of
+    ``content`` and ``meta`` would copy the document into the footer
+    again, and nothing prunes on them. The Arrow schema is not stored;
+    every reader passes its own."""
+    os.makedirs(dir_path, exist_ok=True)
+    pq.write_table(
+        table,
+        os.path.join(dir_path, f"part-{uuid.uuid4().hex}.parquet"),
+        write_statistics=[
+            f.name for f in table.schema if f.name not in ("content", "meta")
+        ],
+        store_schema=False,
+    )
+
+
+def _pick(rows: list[dict], version: int | None) -> dict | None:
+    """The row of ``version`` among one name's live rows, or the row of
+    its latest version when ``version`` is None."""
+    if version is None:
+        return max(rows, key=lambda r: r["version"], default=None)
+    return next((r for r in rows if r["version"] == version), None)
 
 
 class DocumentStore:
@@ -144,7 +200,11 @@ class DocumentStore:
     ``ConcurrentWriteError`` with its staged files intact (no torn or
     interleaved generation is ever possible). Multi-writer deployments
     should bind this API to Delta/Iceberg, whose transaction log provides
-    real optimistic concurrency across processes."""
+    real optimistic concurrency across processes.
+
+    EXECUTION RULE: calls keyed on a single name run on the driver
+    through Arrow (``_rows`` reads, ``_write_part`` writes) and start no
+    Spark job; scan-shaped calls run in Spark."""
 
     def __init__(self, spark: SparkSession, base_dir: str):
         self.spark = spark
@@ -167,11 +227,26 @@ class DocumentStore:
         gens = self._generations()
         return gens[-1] if gens else None
 
+    def _resolve(self, generation: int | None) -> int | None:
+        """``generation`` if committed (ValueError otherwise), or the
+        current generation when None (None for an empty store)."""
+        if generation is None:
+            return self._current_gen()
+        if generation not in self._generations():
+            raise ValueError(f"no committed generation {generation}")
+        return generation
+
     def _gen_path(self, gen: int) -> str:
         return os.path.join(self.base_dir, f"gen={gen}")
 
     def _tombstone_dir(self, gen: int) -> str:
         return os.path.join(self._gen_path(gen), _TOMBSTONE_DIR)
+
+    def _data_files(self, gen: int) -> list[str]:
+        return _visible_files(self._gen_path(gen))
+
+    def _tombstone_files(self, gen: int) -> list[str]:
+        return _visible_files(self._tombstone_dir(gen))
 
     def _sweep_debris(self) -> None:
         """Remove crash debris at the start of every commit path: leftover
@@ -193,8 +268,6 @@ class DocumentStore:
                 shutil.rmtree(path, ignore_errors=True)
 
     def _staging_dir(self) -> str:
-        import uuid
-
         return os.path.join(self.base_dir, f".staging-{uuid.uuid4().hex}")
 
     def _publish(self, staging: str, new_gen: int) -> None:
@@ -222,14 +295,45 @@ class DocumentStore:
         """The generation's deletion-vector frame (name, version), or
         None when the snapshot carries no tombstones. Lives under an
         ``_``-prefixed child of the generation dir, which Spark's
-        hidden-file filter excludes from the data scan but reads fine
-        when addressed explicitly (the ``_delta_log`` trick)."""
-        tdir = self._tombstone_dir(gen)
-        if not os.path.isdir(tdir) or not any(
-            not fn.startswith(("_", ".")) for fn in os.listdir(tdir)
-        ):
+        hidden-file filter excludes from the data scan (the
+        ``_delta_log`` trick). It is read by its explicit part-file
+        list: addressing the ``_``-prefixed directory itself makes Spark
+        warn that all paths were ignored."""
+        files = self._tombstone_files(gen)
+        if not files:
             return None
-        return self.spark.read.schema(TOMBSTONE_SCHEMA).parquet(tdir)
+        return self.spark.read.schema(TOMBSTONE_SCHEMA).parquet(*files)
+
+    def _rows(
+        self,
+        name: str,
+        columns: tuple[str, ...] = (),
+        generation: int | None = None,
+    ) -> tuple[list[dict], set[int]]:
+        """Driver-path read of one name in a committed generation (default:
+        the current one): its live rows (``version`` plus ``columns``) and
+        its tombstoned versions. ``pyarrow.dataset`` reads the
+        generation's files filtered on ``name`` — footer statistics skip
+        the row groups whose name range cannot match, and
+        ``compact(cluster_by=["name"])`` makes those ranges disjoint —
+        and the tombstones are applied in memory, the same anti-join
+        ``df()`` runs in Spark. No Spark job."""
+        gen = self._resolve(generation)
+        if gen is None:
+            return [], set()
+        match = ds.field("name") == name
+        dead: set[int] = set()
+        tomb_files = self._tombstone_files(gen)
+        if tomb_files:
+            tombs = ds.dataset(tomb_files, schema=_ARROW_TOMBSTONE_SCHEMA)
+            dead = set(
+                tombs.to_table(columns=["version"], filter=match)
+                .column("version")
+                .to_pylist()
+            )
+        data = ds.dataset(self._data_files(gen), schema=_ARROW_DOCUMENT_SCHEMA)
+        rows = data.to_table(columns=["version", *columns], filter=match)
+        return [r for r in rows.to_pylist() if r["version"] not in dead], dead
 
     def df(self, generation: int | None = None) -> DataFrame:
         """A table snapshot (empty, schema-stable, if no data).
@@ -243,11 +347,9 @@ class DocumentStore:
         O(deletes committed since the last compaction) — a broadcast of
         a few thousand (name, version) pairs against a 100 TB scan, not
         a second data pass; ``compact()`` folds them away."""
-        gen = self._current_gen() if generation is None else generation
+        gen = self._resolve(generation)
         if gen is None:
             return self.spark.createDataFrame([], DOCUMENT_SCHEMA)
-        if generation is not None and generation not in self._generations():
-            raise ValueError(f"no committed generation {generation}")
         data = self.spark.read.schema(DOCUMENT_SCHEMA).parquet(
             self._gen_path(gen)
         )
@@ -343,18 +445,7 @@ class DocumentStore:
         until vacuumed). Pure metadata: the target's data files AND its
         tombstone sidecar are hardlinked, nothing is read or copied.
         Returns the new generation number."""
-        if generation not in self._generations():
-            raise ValueError(f"no committed generation {generation}")
-        self._sweep_debris()
-        new_gen = self._current_gen() + 1
-        staging = self._staging_dir()
-        os.makedirs(staging)
-        _link_visible(self._gen_path(generation), staging)
-        self._carry_tombstones(generation, staging)
-        with open(os.path.join(staging, "_SUCCESS"), "w"):
-            pass
-        self._publish(staging, new_gen)
-        return new_gen
+        return self._commit(None, self._resolve(generation))
 
     def vacuum(self, keep_last: int = 1) -> list[int]:
         """Drop all but the newest ``keep_last`` committed generations —
@@ -373,40 +464,50 @@ class DocumentStore:
             shutil.rmtree(self._gen_path(g))
         return drop
 
-    def _write_snapshot(self, df: DataFrame) -> None:
-        """Full-rewrite commit (compact): write the snapshot to a staging
-        dir (Spark's job commit puts ``_SUCCESS`` there itself), then
-        atomically rename-publish it as the next generation."""
-        self._sweep_debris()
-        gen = self._current_gen()
-        new_gen = 0 if gen is None else gen + 1
-        staging = self._staging_dir()
-        df.write.mode("overwrite").parquet(staging)
-        self._publish(staging, new_gen)
-
-    def _append_commit(self, rows: DataFrame) -> None:
-        """Insert rows as a NEW generation without rewriting existing data:
-        write the new part-files into a ``.staging-*`` dot-dir no reader
-        matches, hardlink gen=N's data files and tombstone sidecar into it
-        (data is never copied; O(files) metadata ops), then publish the
-        COMPLETE directory as gen=N+1 with one atomic ``os.rename``
-        (``_publish``). A crash at ANY point leaves gen=N intact and only
-        staging debris behind — swept by ``_sweep_debris`` at the start of
-        the next commit — which is the atomic-commit guarantee the module
+    def _commit(
+        self, stage: Callable[[str], None] | None, base: int | None
+    ) -> int:
+        """The one commit sequence of every write but ``delete_where``:
+        sweep crash debris, let ``stage`` write the new files into a
+        ``.staging-*`` dot-dir no reader matches, hardlink ``base``'s data
+        files and tombstone sidecar into it (data is never copied; O(files)
+        metadata ops; ``base=None`` carries nothing — a full rewrite),
+        mark it ``_SUCCESS`` and publish the COMPLETE directory as the next
+        generation with one atomic ``os.rename`` (``_publish``). A crash at
+        ANY point leaves the current generation intact and only staging
+        debris behind — swept by ``_sweep_debris`` at the start of the
+        next commit — which is the atomic-commit guarantee the module
         header claims (vs the reference's torn two-store write, bug B5).
         The rename is also the single-writer guard: a concurrent commit of
         the same generation raises ``ConcurrentWriteError`` instead of
         interleaving files (see the class docstring's concurrency
-        contract)."""
+        contract). Returns the new generation number."""
         self._sweep_debris()
         gen = self._current_gen()
         new_gen = 0 if gen is None else gen + 1
         staging = self._staging_dir()
-        rows.write.mode("overwrite").parquet(staging)
-        if gen is not None:
-            _link_visible(self._gen_path(gen), staging)
-            self._carry_tombstones(gen, staging)
+        if stage is not None:
+            stage(staging)
+        os.makedirs(staging, exist_ok=True)
+        if base is not None:
+            _link_visible(self._gen_path(base), staging)
+            self._carry_tombstones(base, staging)
+        with open(os.path.join(staging, "_SUCCESS"), "w"):
+            pass
         self._publish(staging, new_gen)
+        return new_gen
+
+    def _write_snapshot(self, df: DataFrame) -> None:
+        """Full-rewrite commit (compact, update, delete_all): the snapshot
+        is the whole new generation."""
+        self._commit(lambda staging: df.write.parquet(staging), None)
+
+    def _append_commit(self, rows: DataFrame) -> None:
+        """Insert Spark-written rows as a NEW generation without rewriting
+        existing data (``bulk_ingest``)."""
+        self._commit(
+            lambda staging: rows.write.parquet(staging), self._current_gen()
+        )
 
     def _carry_tombstones(self, gen: int, target: str) -> None:
         """Hardlink gen's deletion-vector files into the new generation —
@@ -421,9 +522,8 @@ class DocumentStore:
         """Merge-on-read delete commit: generation N+1 is gen=N's data
         files hardlinked UNCHANGED (zero data read or rewritten — the
         100-TB requirement) plus the prior tombstones plus one new tiny
-        (name, version) tombstone parquet under ``_tombstones/``. Same
-        all-or-nothing discipline as ``_append_commit``: build the dir,
-        link, ``_SUCCESS`` last. The rewrite that physically drops the
+        (name, version) tombstone parquet under ``_tombstones/``, through
+        the shared ``_commit``. The rewrite that physically drops the
         rows is ``compact()`` — scheduled maintenance, not per-delete
         cost.
 
@@ -437,37 +537,18 @@ class DocumentStore:
         them through one serial Python-runner task) vs ~0.15 s total
         this way. The predicate-shaped bulk path is ``delete_where``,
         which writes its key set distributed."""
-        import uuid
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        self._sweep_debris()
-        gen = self._current_gen()
-        new_gen = 0 if gen is None else gen + 1
-        staging = self._staging_dir()
-        os.makedirs(staging)
-        if gen is not None:
-            _link_visible(self._gen_path(gen), staging)
-            self._carry_tombstones(gen, staging)
-        tdst = os.path.join(staging, _TOMBSTONE_DIR)
-        os.makedirs(tdst, exist_ok=True)
-        tbl = pa.table(
-            {
-                "name": pa.array([k[0] for k in keys], type=pa.string()),
-                "version": pa.array(
-                    [int(k[1]) for k in keys], type=pa.int32()
-                ),
-            }
+        tbl = pa.Table.from_pylist(
+            [{"name": n, "version": int(v)} for n, v in keys],
+            schema=_ARROW_TOMBSTONE_SCHEMA,
         )
         # one part file per delete commit keeps sidecar file count =
         # number of delete commits since the last compaction
-        pq.write_table(
-            tbl, os.path.join(tdst, f"part-{uuid.uuid4().hex}.parquet")
+        self._commit(
+            lambda staging: _write_part(
+                tbl, os.path.join(staging, _TOMBSTONE_DIR)
+            ),
+            self._current_gen(),
         )
-        with open(os.path.join(staging, "_SUCCESS"), "w"):
-            pass
-        self._publish(staging, new_gen)
 
     def delete_where(self, predicate) -> int:
         """Bulk merge-on-read delete: tombstone every (name, version)
@@ -521,9 +602,9 @@ class DocumentStore:
         count, tombstone file/row counts, and how many data files are
         inode-shared with the PREVIOUS generation (the merge-on-read
         pin: a delete commit shares every data file; a rewrite shares
-        none). Metadata-only except the tombstone row count (a scan of
-        the tiny sidecar)."""
-        gen = self._current_gen() if generation is None else generation
+        none). Metadata-only: the tombstone row count comes from the
+        parquet footers, so no Spark job runs."""
+        gen = self._resolve(generation)
         if gen is None:
             return {
                 "data_files": 0,
@@ -531,64 +612,46 @@ class DocumentStore:
                 "tombstone_rows": 0,
                 "data_files_shared_with_prev": 0,
             }
-        gdir = self._gen_path(gen)
-        data_files = [
-            fn
-            for fn in os.listdir(gdir)
-            if not fn.startswith(("_", "."))
-            and os.path.isfile(os.path.join(gdir, fn))
-        ]
-        tdir = self._tombstone_dir(gen)
-        tomb_files = (
-            [fn for fn in os.listdir(tdir) if not fn.startswith(("_", "."))]
-            if os.path.isdir(tdir)
-            else []
-        )
-        tombs = self._tombstones(gen)
+        data_files = self._data_files(gen)
+        tomb_files = self._tombstone_files(gen)
         prev_inodes: set[int] = set()
         if gen - 1 in self._generations():
-            pdir = self._gen_path(gen - 1)
             prev_inodes = {
-                os.stat(os.path.join(pdir, fn)).st_ino
-                for fn in os.listdir(pdir)
-                if not fn.startswith(("_", "."))
-                and os.path.isfile(os.path.join(pdir, fn))
+                os.stat(f).st_ino for f in self._data_files(gen - 1)
             }
-        shared = sum(
-            1
-            for fn in data_files
-            if os.stat(os.path.join(gdir, fn)).st_ino in prev_inodes
-        )
+        shared = sum(1 for f in data_files if os.stat(f).st_ino in prev_inodes)
         return {
             "data_files": len(data_files),
             "tombstone_files": len(tomb_files),
-            "tombstone_rows": 0 if tombs is None else tombs.count(),
+            "tombstone_rows": sum(
+                pq.ParquetFile(f).metadata.num_rows for f in tomb_files
+            ),
             "data_files_shared_with_prev": shared,
         }
 
     # -- write path --------------------------------------------------------
 
-    def _make_row_df(
-        self,
+    @staticmethod
+    def _make_row(
         name: str,
         version: int,
         content: bytes,
         extra_meta: dict[str, str] | None,
-    ) -> DataFrame:
+    ) -> dict:
+        """One document row, keyed by ``DOCUMENT_SCHEMA``'s field names."""
         meta = extract_metadata(content)
         if extra_meta:
             meta.update({str(k): str(v) for k, v in extra_meta.items()})
         now = datetime.datetime.now(datetime.timezone.utc).replace(tzinfo=None)
-        row = (
-            name,
-            version,
-            content,
-            meta["sha256"],
-            len(content),
-            now,
-            meta,
-        )
-        return self.spark.createDataFrame([row], DOCUMENT_SCHEMA)
+        return {
+            "name": name,
+            "version": version,
+            "content": content,
+            "content_hash": meta["sha256"],
+            "length": len(content),
+            "modification_time": now,
+            "meta": meta,
+        }
 
     def upload(
         self,
@@ -596,13 +659,20 @@ class DocumentStore:
         content: bytes,
         extra_meta: dict[str, str] | None = None,
     ) -> int:
-        """Insert a new version: next = numeric max(version)+1 (one windowed
-        aggregate — replaces the reference's O(versions)-scans probe loop,
-        src/DMS.py:113-117) and ONE parquet append (vs N+2 sequential HTTP
-        inserts, src/DMS.py:125-165)."""
+        """Insert a new version on the driver path: next = numeric
+        max(version)+1 over live and tombstoned versions (one filtered
+        Arrow read — replaces the reference's O(versions)-scans probe
+        loop, src/DMS.py:113-117), then ONE pyarrow-written parquet file
+        committed as the next generation (vs N+2 sequential HTTP inserts,
+        src/DMS.py:125-165). No Spark job."""
         version = self._max_version_any(name) + 1
-        row_df = self._make_row_df(name, version, content, extra_meta)
-        self._append_commit(row_df)
+        row = pa.Table.from_pylist(
+            [self._make_row(name, version, content, extra_meta)],
+            schema=_ARROW_DOCUMENT_SCHEMA,
+        )
+        self._commit(
+            lambda staging: _write_part(row, staging), self._current_gen()
+        )
         return version
 
     def _max_version_any(self, name: str) -> int:
@@ -611,19 +681,8 @@ class DocumentStore:
         pair matching an old deletion vector would be masked on read,
         and reuse would also break snapshot identity for ``diff``/time
         travel (same key, different content across generations)."""
-        live = self.get_lastest_version(name) or 0
-        gen = self._current_gen()
-        tomb_max = 0
-        if gen is not None:
-            t = self._tombstones(gen)
-            if t is not None:
-                row = (
-                    t.filter(F.col("name") == name)
-                    .agg(F.max("version"))
-                    .head(1)
-                )
-                tomb_max = row[0][0] or 0 if row else 0
-        return max(live, tomb_max)
+        live, dead = self._rows(name)
+        return max([r["version"] for r in live] + list(dead), default=0)
 
     def bulk_ingest(self, files: DataFrame) -> int:
         """Distributed ingest of many documents in ONE job — the scale path
@@ -696,13 +755,14 @@ class DocumentStore:
         rewrite this method carried before round 5."""
         from dmshadoop_spark.operators.merge import merge_into
 
-        version = version or self.get_lastest_version(name)
-        if version is None or not self._exists(name, version):
+        row = _pick(self._rows(name)[0], version or None)
+        if row is None:
             return False
+        replacement = self._make_row(name, row["version"], content, extra_meta)
         self._write_snapshot(
             merge_into(
                 self.df(),
-                self._make_row_df(name, version, content, extra_meta),
+                self.spark.createDataFrame([replacement], DOCUMENT_SCHEMA),
                 on=["name", "version"],
                 insert_not_matched=False,
             )
@@ -717,10 +777,10 @@ class DocumentStore:
         rewrote the whole snapshot per delete — full-partition rewrites
         don't survive 100 TB). ``compact()`` is the scheduled rewrite
         that folds tombstones into the data."""
-        version = version or self.get_lastest_version(name)
-        if version is None or not self._exists(name, version):
+        row = _pick(self._rows(name)[0], version or None)
+        if row is None:
             return False
-        self._delete_keys([(name, int(version))])
+        self._delete_keys([(name, row["version"])])
         return True
 
     def delete_all_version(self, name: str) -> bool:
@@ -739,24 +799,12 @@ class DocumentStore:
 
     # -- read path ---------------------------------------------------------
 
-    def _exists(self, name: str, version: int) -> bool:
-        return bool(
-            self.df()
-            .filter((F.col("name") == name) & (F.col("version") == version))
-            .select("name")
-            .head(1)
-        )
-
     def download(self, name: str, version: int | None = None) -> bytes | None:
         """Point read of content by (name, version); default latest
-        (src/DMS.py:174-200). Column pruning: only `content` leaves the scan."""
-        df = self.df().filter(F.col("name") == name)
-        if version is not None:
-            df = df.filter(F.col("version") == version)
-        else:
-            df = df.orderBy(F.desc("version")).limit(1)
-        row = df.select("content").head(1)
-        return bytes(row[0][0]) if row else None
+        (src/DMS.py:174-200). Only the name's row groups and the
+        ``version``/``content`` columns are read."""
+        row = _pick(self._rows(name, ("content",))[0], version)
+        return None if row is None else row["content"]
 
     get_file_content = download
 
@@ -764,37 +812,19 @@ class DocumentStore:
         self, name: str, version: int | None = None
     ) -> dict[str, str] | None:
         """Project the metadata map (fetch(key)['meta_data'], src/DMS.py:327)."""
-        df = self.df().filter(F.col("name") == name)
-        if version is not None:
-            df = df.filter(F.col("version") == version)
-        else:
-            df = df.orderBy(F.desc("version")).limit(1)
-        row = df.select("meta").head(1)
-        return dict(row[0][0]) if row else None
+        row = _pick(self._rows(name, ("meta",))[0], version)
+        return None if row is None else dict(row["meta"])
 
     def get_file_version(self, name: str) -> list[int]:
         """All versions of a name, numerically sorted (src/DMS.py:368-383).
         Anchored name equality — 'a.txt' never matches 'bba.txt' (bug B2)."""
-        rows = (
-            self.df()
-            .filter(F.col("name") == name)
-            .select("version")
-            .orderBy("version")
-            .collect()
-        )
-        return [r[0] for r in rows]
+        return sorted(r["version"] for r in self._rows(name)[0])
 
     def get_lastest_version(self, name: str) -> int | None:
         """Numeric max(version) — v10 > v9 (bug B1 fixed; the reference's
         string sort at src/DMS.py:391 says otherwise). Name kept for
         reference parity; ``get_latest_version`` aliases it."""
-        row = (
-            self.df()
-            .filter(F.col("name") == name)
-            .agg(F.max("version"))
-            .head(1)
-        )
-        return row[0][0] if row and row[0][0] is not None else None
+        return max((r["version"] for r in self._rows(name)[0]), default=None)
 
     get_latest_version = get_lastest_version
 

@@ -26,7 +26,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 LITERAL_MAX_CENTROIDS = 256
@@ -134,7 +134,7 @@ def with_nearest_cell(
             F.array_position(F.col("_d"), F.array_min(F.col("_d"))),
         ).drop("_d")
 
-    spark = SparkSession.getActiveSession()
+    spark = df.sparkSession
     bc = spark.sparkContext.broadcast(
         np.ascontiguousarray(cents, dtype=np.float64)
     )
@@ -247,7 +247,7 @@ def with_nearest_cell_coarse(
     the opt-in final-assignment strategy for callers that own their
     operating point (semdedup(assign="coarse"))."""
     coarse, perm, offs = coarse_quantize(cents, n_coarse=n_coarse)
-    spark = SparkSession.getActiveSession()
+    spark = df.sparkSession
     bc_fine = spark.sparkContext.broadcast(
         np.ascontiguousarray(cents, dtype=np.float64)[perm]
     )
@@ -349,7 +349,7 @@ def with_probe_cells(
             F.transform(F.slice(ranked, 1, nprobe), lambda s: s["cell"]),
         )
 
-    spark = SparkSession.getActiveSession()
+    spark = df.sparkSession
     bc = spark.sparkContext.broadcast(
         np.ascontiguousarray(cents, dtype=np.float64)
     )

@@ -953,6 +953,45 @@ def test_ivf_large_k_plan_size_bounded(spark):
     assert abs(plans[2048] - plans[1024]) < 500  # plan size O(1) in k
 
 
+def test_nearest_cell_broadcast_path_from_fresh_thread(spark):
+    """The broadcast (pandas-UDF) path takes its session from the input
+    frame, so it works from a thread with no active session — a pool
+    worker, say — and agrees with the same call on the main thread."""
+    import threading
+
+    import numpy as np
+
+    from dmshadoop_spark.similarity import assign
+
+    rng = np.random.RandomState(5)
+    cents = rng.randn(8, 4)
+    df = spark.createDataFrame(
+        [(i, rng.randn(4).tolist()) for i in range(32)],
+        "vid long, v array<double>",
+    )
+
+    def cells() -> dict[int, int]:
+        out = assign.with_nearest_cell(df, "v", cents, vectorized=True)
+        return {r["vid"]: r["cell"] for r in out.collect()}
+
+    want = cells()
+    got: dict[int, int] = {}
+    errors: list[Exception] = []
+
+    def work() -> None:
+        try:
+            got.update(cells())
+        except Exception as exc:  # surfaced by the assert below
+            errors.append(exc)
+
+    t = threading.Thread(target=work)
+    t.start()
+    t.join(timeout=300)
+    assert not t.is_alive()
+    assert errors == []
+    assert got == want
+
+
 def test_g711_wav_decode_anchors_and_roundtrip():
     """parse_wav decodes G.711 µ-law/A-law (WAV formats 7/6) through the
     ITU expansion: published anchor codes pin the tables (µ-law 0x00 →

@@ -1051,3 +1051,219 @@ def test_vbr_header_reads_bounded_by_first_frame():
     assert w["frames"] == 7 and w["bytes"] == 999  # in-frame fields kept
     assert w["quality"] is None  # beyond the frame end: never misread
     assert w["encoder"] is None
+
+
+# --------------------------------------------------------------------------
+# driver path: point calls read and commit through Arrow, no Spark job
+# --------------------------------------------------------------------------
+
+
+def _jobs_started(spark, call):
+    """Run ``call`` under its own Spark job group; return its result and
+    the ids of the jobs it started (the listener bus is drained first, so
+    a job that ran is never missed)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"dms-point-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "point call")
+    try:
+        out = call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _mixed_store(spark, store):
+    """A store whose current generation holds Spark-written rows (a bulk
+    ingest and a clustered compaction), Arrow-written rows and a
+    tombstone sidecar."""
+    batch = spark.createDataFrame(
+        [(f"doc-{i}.txt", f"body {i}".encode()) for i in range(8)],
+        "name string, content binary",
+    )
+    store.bulk_ingest(batch)
+    store.upload("doc-1.txt", b"body 1 v2")
+    store.compact(2, cluster_by=["name"])
+    store.upload("doc-2.txt", b"body 2 v2")
+    store.delete("doc-3.txt")
+
+
+def test_point_ops_run_no_spark_job(spark, store):
+    """Calls keyed on one name (download, meta, versions, upload, delete)
+    and layout() run on the driver: their job group sees zero Spark jobs,
+    over Spark-written, Arrow-written and tombstoned rows alike. An
+    upload adds exactly one data file."""
+    _mixed_store(spark, store)
+    files_before = store.layout()["data_files"]
+    calls = {
+        "download": lambda: store.download("doc-1.txt"),
+        "download_version": lambda: store.download("doc-1.txt", 1),
+        "get_file_meta_data": lambda: store.get_file_meta_data("doc-2.txt"),
+        "get_file_version": lambda: store.get_file_version("doc-1.txt"),
+        "get_lastest_version": lambda: store.get_lastest_version("doc-3.txt"),
+        "upload": lambda: store.upload("doc-3.txt", b"body 3 v2"),
+        "delete": lambda: store.delete("doc-4.txt"),
+        "delete_all_version": lambda: store.delete_all_version("doc-5.txt"),
+        "layout": store.layout,
+    }
+    got = {}
+    for op, call in calls.items():
+        got[op], jobs = _jobs_started(spark, call)
+        assert jobs == [], f"{op} started Spark jobs {jobs}"
+    assert got["download"] == b"body 1 v2"
+    assert got["download_version"] == b"body 1"
+    assert got["get_file_meta_data"]["length"] == str(len(b"body 2 v2"))
+    assert got["get_file_version"] == [1, 2]
+    assert got["get_lastest_version"] is None
+    assert got["upload"] == 2  # version 1 of doc-3 is tombstoned
+    assert got["delete"] is True and got["delete_all_version"] is True
+    assert got["layout"]["tombstone_rows"] == 3
+    assert got["layout"]["data_files"] == files_before + 1
+    # a control: a scan-shaped call in the same harness does start jobs
+    _, jobs = _jobs_started(spark, lambda: store.df().count())
+    assert jobs
+
+
+def test_arrow_upload_reads_back_through_spark(spark, store):
+    """A driver-written upload reads back through df() with exactly
+    DOCUMENT_SCHEMA, and its modification_time (TIMESTAMP_NTZ, UTC wall
+    clock) is not shifted by a non-UTC session time zone."""
+    import datetime
+
+    from dmshadoop_spark.dms.store import DOCUMENT_SCHEMA
+
+    def utc_now():
+        now = datetime.datetime.now(datetime.timezone.utc)
+        return now.replace(tzinfo=None)
+
+    prior = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        t0 = utc_now()
+        assert store.upload("t.txt", b"hello arrow", {"k": "v"}) == 1
+        t1 = utc_now()
+        df = store.df()
+        assert df.schema == DOCUMENT_SCHEMA
+        (row,) = df.collect()
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prior)
+    assert (row["name"], row["version"]) == ("t.txt", 1)
+    assert bytes(row["content"]) == b"hello arrow"
+    assert row["length"] == 11
+    assert row["content_hash"] == row["meta"]["sha256"]
+    assert row["meta"]["k"] == "v"
+    assert row["meta"] == store.get_file_meta_data("t.txt")
+    assert t0 <= row["modification_time"] <= t1
+
+
+def test_compact_diff_empty_over_arrow_written_rows(spark, store):
+    """compact() rewrites Arrow-written rows (and the Spark-written ones
+    beside them) without changing one: diff(before, after) is empty, for
+    a plain and a clustered compaction."""
+    _mixed_store(spark, store)
+    for i in range(4):
+        store.upload(f"new-{i}.txt", f"fresh {i}".encode())
+    before = store.history()[-1]
+    n = store.df().count()
+    after = store.compact()
+    assert store.diff(before, after).count() == 0
+    clustered = store.compact(3, cluster_by=["name"])
+    assert store.diff(before, clustered).count() == 0
+    assert store.df().count() == n
+
+
+_NAMES = ("a.txt", "b.txt", "a.txt.1")
+
+_store_ops = st.lists(
+    st.one_of(
+        st.tuples(
+            st.just("upload"),
+            st.sampled_from(_NAMES),
+            st.binary(min_size=0, max_size=24),
+        ),
+        st.tuples(
+            st.just("delete"),
+            st.sampled_from(_NAMES),
+            st.none() | st.integers(min_value=1, max_value=4),
+        ),
+        st.tuples(st.just("delete_all_version"), st.sampled_from(_NAMES)),
+        st.tuples(st.just("compact"), st.booleans()),
+    ),
+    min_size=1,
+    max_size=10,
+)
+
+
+def _spark_answers(store, gen):
+    """Per name: {version: (content, meta)} of the live rows and the
+    tombstoned versions of generation ``gen``, computed in Spark."""
+    live: dict[str, dict] = {}
+    for r in store.df(gen).select("name", "version", "content", "meta").collect():
+        live.setdefault(r["name"], {})[r["version"]] = (
+            bytes(r["content"]),
+            dict(r["meta"]),
+        )
+    dead: dict[str, set] = {}
+    tombs = store._tombstones(gen)
+    if tombs is not None:
+        for r in tombs.collect():
+            dead.setdefault(r["name"], set()).add(r["version"])
+    return live, dead
+
+
+@settings(max_examples=12, deadline=None)
+@given(ops=_store_ops)
+def test_driver_path_matches_spark_df(spark, tmp_path_factory, ops):
+    """For random upload / delete / delete_all_version / compact
+    sequences, every driver-path answer — latest and explicit-version
+    reads, version listings, the tombstone-aware next version, and the
+    same reads against an older generation — equals the answer computed
+    from df() in Spark."""
+    store = DocumentStore(spark, str(tmp_path_factory.mktemp("dms_drv")))
+    for op in ops:
+        if op[0] == "upload":
+            store.upload(op[1], op[2])
+        elif op[0] == "delete":
+            store.delete(op[1], op[2])
+        elif op[0] == "delete_all_version":
+            store.delete_all_version(op[1])
+        else:
+            store.compact(cluster_by=["name"] if op[1] else None)
+    gens = store.history()
+    if not gens:
+        for name in _NAMES:
+            assert store.download(name) is None
+            assert store.get_file_version(name) == []
+        return
+    for gen in sorted({gens[-1], gens[len(gens) // 2]}):
+        live, dead = _spark_answers(store, gen)
+        for name in (*_NAMES, "missing.txt"):
+            want = live.get(name, {})
+            rows, tomb = store._rows(name, ("content", "meta"), gen)
+            assert tomb == dead.get(name, set())
+            assert {
+                r["version"]: (r["content"], dict(r["meta"])) for r in rows
+            } == want
+            if gen != gens[-1]:
+                continue
+            latest = max(want, default=None)
+            assert store.get_file_version(name) == sorted(want)
+            assert store.get_lastest_version(name) == latest
+            assert store.download(name) == (
+                None if latest is None else want[latest][0]
+            )
+            assert store.get_file_meta_data(name) == (
+                None if latest is None else want[latest][1]
+            )
+            for v in range(0, max([*want, *tomb], default=0) + 2):
+                assert store.download(name, v) == (
+                    want[v][0] if v in want else None
+                )
+                assert store.get_file_meta_data(name, v) == (
+                    want[v][1] if v in want else None
+                )
+            assert store._max_version_any(name) == max(
+                [*want, *dead.get(name, ())], default=0
+            )
