@@ -17,9 +17,9 @@ truncates values containing ':' (bug B4: "Creation date: 2014-04-25
     FileStatus (length; src/DMS.py:122,146-155) plus a content hash.
 
 Two surfaces: ``extract_metadata`` (plain Python, used by the DocumentStore
-facade on single uploads) and ``with_extracted_meta`` (Arrow-batched pandas
-UDF for bulk ingest — the scale path; one Python round-trip per batch, not
-per row).
+for uploads and inside its bulk-ingest write tasks) and
+``with_extracted_meta`` (Arrow-batched pandas UDF for the LLM-data queries;
+one Python round-trip per batch, not per row).
 """
 
 from __future__ import annotations

@@ -6,8 +6,9 @@ reference's unfinished Solr delegation (src/DMS.py:345-356, README.md:24
 corpus snapshot (tokenize → explode → partial-count → shuffle on term);
 ``tfidf_search`` answers queries from it with a broadcast join — the
 per-query cost is proportional to the posting lists touched, not the
-corpus. This is the library behind queries t2-t5; DocumentStore.search
-uses the direct-scan form for small stores.
+corpus. This is the library behind queries t2-t5. DocumentStore.search
+does not use it: the store writes a postings file beside every data file
+and answers from those on the driver (dms/store.py).
 """
 
 from __future__ import annotations

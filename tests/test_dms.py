@@ -6,7 +6,7 @@ from __future__ import annotations
 import struct
 
 import pytest
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from dmshadoop_spark.dms import DocumentStore, extract_metadata
@@ -1091,10 +1091,11 @@ def _mixed_store(spark, store):
 
 
 def test_point_ops_run_no_spark_job(spark, store):
-    """Calls keyed on one name (download, meta, versions, upload, delete)
-    and layout() run on the driver: their job group sees zero Spark jobs,
-    over Spark-written, Arrow-written and tombstoned rows alike. An
-    upload adds exactly one data file."""
+    """Calls keyed on one name (download, meta, versions, upload, delete),
+    search (keyed on its query's terms) and layout() run on the driver:
+    their job group sees zero Spark jobs, over Spark-written,
+    Arrow-written and tombstoned rows alike, and so does collecting the
+    search answer. An upload adds exactly one data file."""
     _mixed_store(spark, store)
     files_before = store.layout()["data_files"]
     calls = {
@@ -1106,6 +1107,7 @@ def test_point_ops_run_no_spark_job(spark, store):
         "upload": lambda: store.upload("doc-3.txt", b"body 3 v2"),
         "delete": lambda: store.delete("doc-4.txt"),
         "delete_all_version": lambda: store.delete_all_version("doc-5.txt"),
+        "search": lambda: [tuple(r) for r in store.search("BODY 1").collect()],
         "layout": store.layout,
     }
     got = {}
@@ -1121,6 +1123,20 @@ def test_point_ops_run_no_spark_job(spark, store):
     assert got["delete"] is True and got["delete_all_version"] is True
     assert got["layout"]["tombstone_rows"] == 3
     assert got["layout"]["data_files"] == files_before + 1
+    assert got["search"] == [
+        ("doc-1.txt", 1, 2),
+        ("doc-1.txt", 2, 2),
+        ("doc-0.txt", 1, 1),
+        ("doc-2.txt", 1, 1),
+        ("doc-2.txt", 2, 1),
+        ("doc-3.txt", 2, 1),
+        ("doc-6.txt", 1, 1),
+        ("doc-7.txt", 1, 1),
+    ]
+    # every data file has its twin; postings of tombstoned rows stay on
+    # disk until compact(): eight "body i" rows, three "body i v2" rows
+    assert got["layout"]["postings_files"] == got["layout"]["data_files"]
+    assert got["layout"]["postings_rows"] == 8 * 2 + 3 * 3
     # a control: a scan-shaped call in the same harness does start jobs
     _, jobs = _jobs_started(spark, lambda: store.df().count())
     assert jobs
@@ -1267,3 +1283,272 @@ def test_driver_path_matches_spark_df(spark, tmp_path_factory, ops):
             assert store._max_version_any(name) == max(
                 [*want, *dead.get(name, ())], default=0
             )
+
+
+# --------------------------------------------------------------------------
+# search reads the postings twins
+# --------------------------------------------------------------------------
+
+# Words and separators on which Python's str.lower/str.split agree with
+# Arrow's utf8_lower/utf8_split_whitespace, so a Python recompute can
+# stand for the store's tokenizer. The separators go beyond ASCII: a
+# no-break space, an em space and an ideographic space separate tokens.
+_WORDS = ("alpha", "Beta", "GAMMA", "dElTa", "Élan", "жук")
+_SEPS = (" ", "\t", "\n", "\u00a0", "\u2003", "\u3000")
+
+_texts = st.lists(
+    st.tuples(st.sampled_from(_SEPS), st.sampled_from(_WORDS)), max_size=6
+).map(lambda parts: "".join(s + w for s, w in parts).encode())
+_contents = st.one_of(_texts, st.binary(max_size=12))
+
+_text_uploads = st.lists(
+    st.tuples(st.just("upload"), st.sampled_from(_NAMES), _texts),
+    min_size=1,
+    max_size=3,
+)
+_search_ops = st.lists(
+    st.one_of(
+        st.tuples(st.just("upload"), st.sampled_from(_NAMES), _contents),
+        st.tuples(
+            st.just("delete"),
+            st.sampled_from(_NAMES),
+            st.none() | st.integers(min_value=1, max_value=3),
+        ),
+        st.tuples(st.just("delete_all_version"), st.sampled_from(_NAMES)),
+        st.tuples(
+            st.just("delete_where"),
+            st.sampled_from(
+                ("name = 'a.txt'", "length > 20", "length < 5", "version = 1")
+            ),
+        ),
+        st.tuples(st.just("update"), st.sampled_from(_NAMES), _texts),
+        st.tuples(st.just("compact"), st.booleans()),
+        st.tuples(st.just("restore"), st.integers(min_value=0, max_value=9)),
+        st.tuples(st.just("delete_all")),
+    ),
+    max_size=6,
+)
+
+
+def _search_recompute(store, query, k):
+    """``search``'s answer recomputed in plain Python from the live rows of
+    ``df()``: per text/plain document, how many of its lowercased
+    whitespace tokens equal a lowercased query term; top ``k`` by (score
+    desc, name, version)."""
+    terms = set(query.lower().split())
+    hits = []
+    for r in store.df().select("name", "version", "content", "meta").collect():
+        if r["meta"].get("content_type") != "text/plain":
+            continue
+        tokens = bytes(r["content"]).decode("utf-8", "replace").lower().split()
+        score = sum(1 for t in tokens if t in terms)
+        if score:
+            hits.append((-score, r["name"], r["version"]))
+    return [(n, v, -s) for s, n, v in sorted(hits)[:k]]
+
+
+@settings(max_examples=10, deadline=None)
+@example(
+    uploads=[("upload", "a.txt", "Alpha\u00a0beta\u3000BETA".encode())],
+    ops=[],
+    queries=[(["beta"], 2)],
+)
+@example(
+    uploads=[
+        ("upload", "a.txt", b" beta beta"),
+        ("upload", "b.txt", b" beta"),
+    ],
+    ops=[("delete", "a.txt", None)],
+    queries=[(["beta"], 2)],
+)
+@given(
+    uploads=_text_uploads,
+    ops=_search_ops,
+    queries=st.lists(
+        st.tuples(
+            st.lists(st.sampled_from(_WORDS + ("ALPHA", "élan", "none")),
+                     min_size=1, max_size=3),
+            st.integers(min_value=1, max_value=4),
+        ),
+        min_size=1,
+        max_size=3,
+    ),
+)
+def test_search_matches_python_recompute(
+    spark, tmp_path_factory, uploads, ops, queries
+):
+    """For random sequences of every write the store has — uploads of
+    text (mixed case, Unicode whitespace) and binary content, delete,
+    delete_all_version, delete_where, update, compact (clustered or not),
+    restore and delete_all — after some text uploads, search after each
+    step equals a Python recompute over the live rows."""
+    store = DocumentStore(spark, str(tmp_path_factory.mktemp("dms_search")))
+    for op in uploads + ops:
+        kind = op[0]
+        if kind == "upload":
+            store.upload(op[1], op[2])
+        elif kind == "delete":
+            store.delete(op[1], op[2])
+        elif kind == "delete_all_version":
+            store.delete_all_version(op[1])
+        elif kind == "delete_where":
+            store.delete_where(op[1])
+        elif kind == "update":
+            store.update(op[1], op[2])
+        elif kind == "compact":
+            store.compact(cluster_by=["name"] if op[1] else None)
+        elif kind == "restore":
+            if store.history():
+                store.restore(store.history()[op[1] % len(store.history())])
+        else:
+            store.delete_all()
+        for words, k in queries:
+            query = "\u3000".join(words)
+            got = [tuple(r) for r in store.search(query, k).collect()]
+            assert got == _search_recompute(store, query, k), (op, query)
+
+
+def test_search_after_compaction_reuses_a_version(store):
+    """upload ×2, delete, compact, upload: the last upload gets version 2
+    again (compaction folds the tombstone that remembered it). search
+    must score the new v2's content; the deleted v2's postings must not
+    come back with the reused key."""
+    assert store.upload("a.txt", b"first draft") == 1
+    assert store.upload("a.txt", b"secret secret plan") == 2
+    assert store.delete("a.txt")
+    store.compact()
+    assert store.upload("a.txt", b"fresh fresh fresh text") == 2
+    assert store.search("secret plan").collect() == []
+    assert [tuple(r) for r in store.search("fresh draft").collect()] == [
+        ("a.txt", 2, 3),
+        ("a.txt", 1, 1),
+    ]
+
+
+def test_unreported_task_attempt_files_are_never_published(
+    spark, store, monkeypatch
+):
+    """A task attempt that wrote files but whose report Spark discarded
+    (a failed, retried or duplicate attempt) must publish nothing: the
+    commit moves only the reported files out of the per-attempt
+    directories and removes the rest."""
+    import os
+
+    import pyarrow as pa
+
+    from dmshadoop_spark.dms import store as store_mod
+
+    stray = pa.Table.from_pylist(
+        [store_mod._make_row("ghost.txt", 1, b"ghost words", None)],
+        schema=store_mod._ARROW_DOCUMENT_SCHEMA,
+    )
+    planted = []
+    place = store_mod._place_reported
+
+    def place_after_a_lost_attempt(staging, reports):
+        lost = os.path.join(staging, store_mod._ATTEMPTS_DIR, "lost-attempt")
+        planted.append(store_mod._write_docs(stray, lost)[0])
+        place(staging, reports)
+
+    monkeypatch.setattr(store_mod, "_place_reported", place_after_a_lost_attempt)
+    batch = spark.createDataFrame(
+        [(f"doc-{i}.txt", f"words {i}".encode()) for i in range(6)],
+        "name string, content binary",
+    )
+    assert store.bulk_ingest(batch) == 6
+    store.compact(2)
+    assert store.update("doc-1.txt", b"new words")
+    assert len(planted) == 3
+    for gen in store.history():
+        published = [
+            fn
+            for _root, _dirs, files in os.walk(store._gen_path(gen))
+            for fn in files
+        ]
+        assert not set(planted) & set(published), gen
+        assert not os.path.exists(
+            os.path.join(store._gen_path(gen), store_mod._ATTEMPTS_DIR)
+        )
+    assert store.get_file_version("ghost.txt") == []
+    assert store.search("ghost").collect() == []
+    assert store.df().count() == 6
+    lay = store.layout()
+    assert lay["postings_files"] == lay["data_files"]
+    assert lay["postings_rows"] == 12
+
+
+def test_search_raises_on_data_file_without_postings_twin(store):
+    """A data file with no postings twin (a generation written before
+    twins existed) makes search raise rather than answer from part of the
+    store; compact() rewrites the generation with twins."""
+    import os
+
+    import pytest as _pytest
+
+    store.upload("a.txt", b"kept words")
+    store.upload("b.txt", b"lost words")
+    gen_dir = store._gen_path(store.history()[-1])
+    postings = os.path.join(gen_dir, "_postings")
+    os.remove(os.path.join(postings, sorted(os.listdir(postings))[0]))
+    with _pytest.raises(RuntimeError, match="postings twin"):
+        store.search("words")
+    store.compact()
+    assert [tuple(r) for r in store.search("words").collect()] == [
+        ("a.txt", 1, 1),
+        ("b.txt", 1, 1),
+    ]
+
+
+def test_search_lowercases_content_and_query_alike(store):
+    """Content and query go through one tokenizer: an upload of
+    "İSTANBUL" is found by the query "İstanbul" (Python's str.lower would
+    give the query a combining dot that Arrow's lowercasing of the
+    content does not have)."""
+    store.upload("city.txt", "İSTANBUL".encode())
+    assert [tuple(r) for r in store.search("İstanbul").collect()] == [
+        ("city.txt", 1, 1)
+    ]
+
+
+def test_search_indexes_invalid_utf8_labelled_text(store):
+    """Content that is not valid UTF-8 but labelled text/plain through
+    extra_meta is indexed with U+FFFD in place of the bad bytes (as
+    Spark's binary-to-string cast reads it) instead of failing the
+    write."""
+    store.upload("odd.txt", b"\xff\xfe Mixed mixed", {"content_type": "text/plain"})
+    assert [tuple(r) for r in store.search("MIXED").collect()] == [
+        ("odd.txt", 1, 2)
+    ]
+
+
+def test_task_rewrites_keep_every_column_under_session_tz(spark, store):
+    """compact and update rewrite rows inside mapInArrow tasks: every
+    column of every untouched row, modification_time (TIMESTAMP_NTZ)
+    included, comes back unchanged under a non-UTC session time zone."""
+    batch = spark.createDataFrame(
+        [(f"doc-{i}.txt", f"body {i}".encode()) for i in range(5)],
+        "name string, content binary",
+    )
+    store.bulk_ingest(batch)
+    store.upload("doc-1.txt", b"body 1 v2", {"k": "v"})
+
+    def rows():
+        return sorted(
+            (r["name"], r["version"], bytes(r["content"]), r["content_hash"],
+             r["length"], r["modification_time"], sorted(r["meta"].items()))
+            for r in store.df().collect()
+        )
+
+    prior = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        before = rows()
+        store.compact(2, cluster_by=["name"])
+        assert rows() == before
+        assert store.update("doc-3.txt", b"body 3 new")
+        after = rows()
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prior)
+    assert [r for r in after if r[0] != "doc-3.txt"] == [
+        r for r in before if r[0] != "doc-3.txt"
+    ]
