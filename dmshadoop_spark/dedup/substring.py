@@ -92,16 +92,13 @@ carries ~32 bytes/token.
 from __future__ import annotations
 
 import hashlib
-import json
 import os
-import re
-import shutil
-import uuid
 
 import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from dmshadoop_spark import generations
 from dmshadoop_spark.functions.checkpoint import stabilize
 from dmshadoop_spark.functions.text import tokenize
 
@@ -286,7 +283,6 @@ _OCC_SCHEMA = "_id long, pos long, h1 long, h2 long"
 # on-disk schema: same rows plus the hash-prefix bucket partition column
 _OCC_SCHEMA_B = "_id long, pos long, h1 long, h2 long, b int"
 _OCC_BUCKETS = 64  # fallback bucket count; stored per-generation in _meta.json
-_OCC_GEN_RE = re.compile(r"^gen=(\d+)$")
 
 # Adaptive bucket sizing (round 12, guide §6): every per-commit cost of
 # the index — build/append file count, hardlink count, and the probe's
@@ -334,28 +330,27 @@ def _auto_buckets(src: DataFrame) -> int:
     return 1 << (raw - 1).bit_length()  # next power of two
 
 # ---------------------------------------------------------------------------
-# Occurrence-index storage (round-11 verdict task 2 + staging-atomicity
-# advice). Layout v2 — MVCC generations of a HASH-PREFIX-BUCKETED table:
+# Occurrence-index storage (round-11 verdict task 2). Layout v2 — MVCC
+# generations of a HASH-PREFIX-BUCKETED table, each committed through
+# dmshadoop_spark/generations.py (the protocol and its guarantees live
+# there):
 #
 #   <index>/gen=N/_meta.json          {"format":2,"buckets":NB,"min_len":L}
 #   <index>/gen=N/_SUCCESS
 #   <index>/gen=N/b=<pmod(h1,NB)>/part-*.parquet
 #
-# Every mutation (build, per-batch append, compact) builds the next
-# generation in a `.staging-*` dot-dir and publishes it with one atomic
-# `os.rename`, the same commit protocol as dms/store.py (same
-# ConcurrentWriteError on a lost claim race). This closes the round-11
-# advice gap: a crash mid-append can no longer leave the index silently
-# missing part of an accepted batch's windows — the rename either
-# happened (whole batch indexed) or it didn't (index byte-identical to
-# before; the failed ingest call raises and the caller retries the
-# batch).
+# Every mutation (build, per-batch append, compact) is one generation
+# commit, so a crash mid-append can never leave the index missing part
+# of an accepted batch's windows: either the whole batch is indexed or
+# the index is byte-identical to before (the failed ingest call raises
+# and the caller retries the batch).
 #
 # CARRIED GENERATIONS (round 13, r12 verdict task 4): an append's new
 # generation holds ONLY the batch's new bucket files; the files it
 # shares with the previous snapshot are recorded as a `"carries"` list
 # of generation numbers in its _meta.json (the resolved chain, not a
-# recursive pointer), and the reader unions the chain's directory
+# recursive pointer; generations.carries reads it and raises on a
+# corrupt manifest), and the reader unions the chain's directory
 # scans. Until round 12 the append HARDLINKED every carried bucket file
 # into the staging dir — O(total index files) metadata ops per commit,
 # ~65k hardlinks per batch at the bucket cap (the scale-killer class
@@ -371,66 +366,14 @@ def _auto_buckets(src: DataFrame) -> int:
 # ---------------------------------------------------------------------------
 
 
-def _occ_gen_path(path: str, gen: int) -> str:
-    return os.path.join(path, f"gen={gen}")
-
-
-def _occ_generations(path: str) -> list[int]:
-    if not os.path.isdir(path):
-        return []
-    gens = []
-    for entry in os.listdir(path):
-        m = _OCC_GEN_RE.match(entry)
-        if m and os.path.exists(os.path.join(path, entry, "_SUCCESS")):
-            gens.append(int(m.group(1)))
-    return sorted(gens)
-
-
-def _occ_current_gen(path: str) -> int | None:
-    gens = _occ_generations(path)
-    return gens[-1] if gens else None
-
-
 def _occ_meta(path: str) -> dict | None:
     """The CURRENT generation's metadata — buckets and min_len travel
     inside the generation dir so they commit atomically with the data
     (a re-bucketing compact can never leave meta and files disagreeing,
-    which would silently mis-prune the probe)."""
-    gen = _occ_current_gen(path)
-    if gen is None:
-        return None
-    try:
-        with open(os.path.join(_occ_gen_path(path, gen), "_meta.json")) as f:
-            return json.load(f)
-    except (OSError, ValueError):
-        return None
-
-
-def _occ_sweep(path: str) -> None:
-    """Remove crashed-commit staging debris at the start of every index
-    mutation (the dms/store.py sweep discipline)."""
-    if not os.path.isdir(path):
-        return
-    for entry in os.listdir(path):
-        p = os.path.join(path, entry)
-        if entry.startswith(".staging-") and os.path.isdir(p):
-            shutil.rmtree(p, ignore_errors=True)
-
-
-def _occ_publish(staging: str, path: str, new_gen: int) -> None:
-    """Atomic rename-publish of a fully-built staging dir as gen=N —
-    shares the single-writer claim semantics of DocumentStore commits."""
-    from dmshadoop_spark.dms.store import ConcurrentWriteError
-
-    target = _occ_gen_path(path, new_gen)
-    try:
-        os.rename(staging, target)
-    except OSError as exc:
-        raise ConcurrentWriteError(
-            f"occurrence-index generation {new_gen} was committed "
-            f"concurrently (single-writer contract); staged commit left "
-            f"at {staging}"
-        ) from exc
+    which would silently mis-prune the probe). None when nothing is
+    committed; raises on a corrupt manifest (``generations.manifest``)."""
+    gen = generations.current(path)
+    return None if gen is None else generations.manifest(path, gen)
 
 
 def _occ_with_bucket(occ: DataFrame, nb: int) -> DataFrame:
@@ -439,27 +382,10 @@ def _occ_with_bucket(occ: DataFrame, nb: int) -> DataFrame:
     )
 
 
-def _occ_carries(path: str, gen: int | None = None) -> list[int]:
-    """The resolved list of generations whose data files generation
-    ``gen`` (default: current) reads in addition to its own — empty for
-    self-contained generations (builds, compacts, pre-v13 hardlinked
-    layouts, which carry their files physically)."""
-    gen = _occ_current_gen(path) if gen is None else gen
-    if gen is None:
-        return []
-    try:
-        with open(os.path.join(_occ_gen_path(path, gen), "_meta.json")) as f:
-            meta = json.load(f)
-    except (OSError, ValueError):
-        return []
-    return sorted(int(g) for g in meta.get("carries", []))
-
-
-def _occ_stage_write(occ_b: DataFrame, path: str, nb: int, L: int,
-                     sort: bool = False, wide: bool = True,
-                     carries: list[int] | None = None) -> str:
-    """Write a bucketed occurrence frame + its _meta.json into a fresh
-    staging dir under the index root; returns the staging path.
+def _occ_stage(occ_b: DataFrame, nb: int, L: int, sort: bool = False,
+               wide: bool = True, carries: list[int] | None = None):
+    """The stage callback of an index commit: it writes a bucketed
+    occurrence frame + its _meta.json into the staging dir.
     Repartitioning on ``b`` co-locates each bucket's rows, so a commit
     adds at most ONE file per bucket (hashes are uniform, so buckets
     are skew-free by construction). ``wide=True`` (builds/compacts)
@@ -469,21 +395,23 @@ def _occ_stage_write(occ_b: DataFrame, path: str, nb: int, L: int,
     growth probe measured the 256-task append tax exceeding the scan
     savings at small scale). ``sort`` additionally orders rows by
     (h1, h2) within each bucket so compacted files carry tight parquet
-    row-group stats."""
-    os.makedirs(path, exist_ok=True)
-    staging = os.path.join(path, f".staging-{uuid.uuid4().hex}")
+    row-group stats. ``carries`` (sorted) lists the generations the new
+    one reads besides its own files."""
     part = (
         occ_b.repartition(int(nb), "b") if wide else occ_b.repartition("b")
     )
     if sort:
         part = part.sortWithinPartitions("b", "h1", "h2")
-    part.write.partitionBy("b").parquet(staging)
-    meta = {"format": 2, "buckets": int(nb), "min_len": int(L)}
-    if carries:
-        meta["carries"] = sorted(int(g) for g in carries)
-    with open(os.path.join(staging, "_meta.json"), "w") as f:
-        json.dump(meta, f)
-    return staging
+
+    def stage(staging: str) -> None:
+        # the staging dir exists already: append into it
+        part.write.mode("append").partitionBy("b").parquet(staging)
+        meta = {"format": 2, "buckets": int(nb), "min_len": int(L)}
+        if carries:
+            meta["carries"] = carries
+        generations.write_manifest(staging, meta)
+
+    return stage
 
 
 def _index_committed(path: str | None) -> bool:
@@ -507,13 +435,13 @@ def read_occurrence_index(spark, path: str) -> DataFrame:
     ``carries`` (appends commit only the batch's new files — see the
     layout comment); each chain member is one partitioned directory
     scan, so bucket pruning applies per member."""
-    gen = _occ_current_gen(path)
-    if gen is None:
+    chain = generations.snapshot(path)
+    if not chain:
         raise ValueError(f"no committed occurrence index at {path}")
     out = None
-    for g in _occ_carries(path, gen) + [gen]:
+    for g in chain:
         part = spark.read.schema(_OCC_SCHEMA_B).parquet(
-            _occ_gen_path(path, g)
+            generations.gen_path(path, g)
         )
         out = part if out is None else out.unionByName(part)
     return out
@@ -527,12 +455,12 @@ def _read_occ_buckets(spark, path: str, hit: list[int]) -> DataFrame:
     partition directory of every chain member before pruning — at a
     4096-bucket index that listing alone cost ~6 s of every tiny-batch
     probe (round-13 breakdown), dwarfing the actual pruned scan."""
-    gen = _occ_current_gen(path)
-    if gen is None:
+    chain = generations.snapshot(path)
+    if not chain:
         raise ValueError(f"no committed occurrence index at {path}")
     out = None
-    for g in _occ_carries(path, gen) + [gen]:
-        gp = _occ_gen_path(path, g)
+    for g in chain:
+        gp = generations.gen_path(path, g)
         dirs = [
             d
             for d in (os.path.join(gp, f"b={b}") for b in hit)
@@ -588,12 +516,10 @@ def _occ_via_index(spark, toks: DataFrame, L: int, index_table: str | None):
         )
     occ = _occurrence_table(toks, L)
     if index_table is not None:
-        _occ_sweep(index_table)
         nb = _auto_buckets(toks)
-        staging = _occ_stage_write(
-            _occ_with_bucket(occ, nb), index_table, nb, L
+        generations.commit(
+            index_table, _occ_stage(_occ_with_bucket(occ, nb), nb, L)
         )
-        _occ_publish(staging, index_table, 0)
         return read_occurrence_index(spark, index_table).select(
             "_id", "pos", "h1", "h2"
         )
@@ -632,14 +558,11 @@ def build_occurrence_index(
     ``vacuum_index``."""
     L = int(min_len)
     nb = int(buckets) if buckets is not None else _auto_buckets(docs)
-    cur = _occ_current_gen(path)
+    cur = generations.current(path)
     if cur is not None and mode in ("error", "errorifexists"):
         raise ValueError(f"occurrence index already committed at {path}")
-    _occ_sweep(path)
     occ = _occurrence_table(_token_table(docs, id_col, text_col), L)
-    staging = _occ_stage_write(_occ_with_bucket(occ, nb), path, nb, L)
-    new_gen = 0 if cur is None else cur + 1
-    _occ_publish(staging, path, new_gen)
+    generations.commit(path, _occ_stage(_occ_with_bucket(occ, nb), nb, L))
     if cur is not None:
         vacuum_index(path, keep_last=1)
     return read_occurrence_index(docs.sparkSession, path)
@@ -660,35 +583,24 @@ def compact_index(spark, path: str, buckets: int | None = None) -> int:
     if meta is None:
         raise ValueError(f"no committed occurrence index at {path}")
     nb = int(buckets) if buckets is not None else int(meta["buckets"])
-    cur = _occ_current_gen(path)
-    _occ_sweep(path)
     occ = read_occurrence_index(spark, path).select(
         "_id", "pos", "h1", "h2"
     )
-    staging = _occ_stage_write(
-        _occ_with_bucket(occ, nb), path, nb, int(meta["min_len"]), sort=True
+    return generations.commit(
+        path,
+        _occ_stage(
+            _occ_with_bucket(occ, nb), nb, int(meta["min_len"]), sort=True
+        ),
     )
-    _occ_publish(staging, path, cur + 1)
-    return cur + 1
 
 
 def vacuum_index(path: str, keep_last: int = 1) -> list[int]:
     """Drop committed index generations that are neither among the
     newest ``keep_last`` nor CARRIED by one of them (a kept append
     generation reads its carried ancestors' files, so those directories
-    must survive — the referential form of the hardlink sharing that
-    made the pre-r13 vacuum safe). Returns the removed generation
-    numbers."""
-    if keep_last < 1:
-        raise ValueError("keep_last must be >= 1")
-    gens = _occ_generations(path)
-    kept = set(gens[-keep_last:])
-    for g in list(kept):
-        kept.update(_occ_carries(path, g))
-    drop = [g for g in gens if g not in kept]
-    for g in drop:
-        shutil.rmtree(_occ_gen_path(path, g))
-    return drop
+    must survive — ``generations.vacuum``). Returns the removed
+    generation numbers."""
+    return generations.vacuum(path, keep_last)
 
 
 def substring_dedup(
@@ -1074,11 +986,9 @@ def substring_ingest(
     out = stabilize(_excise(toks, islands, id_col))
     # fold step: the accepted remainders' windows join the index so the
     # next batch sees corpus ∪ everything accepted so far. The append
-    # is ATOMIC (round-11 advice): the batch's new bucket files are
-    # staged, the previous generation's files are hardlinked in beside
-    # them, and one rename publishes the whole next generation — a
-    # crash leaves the index exactly as before (the failed call raises;
-    # re-ingesting the batch is idempotent-safe by construction).
+    # is one generation commit — a crash leaves the index exactly as
+    # before (the failed call raises; re-ingesting the batch is
+    # idempotent-safe by construction).
     # Only docs the excision actually TOUCHED need a second hash pass
     # (round 12, guide §4: the Arrow pass is the expensive per-row
     # term): an untouched doc's clean tokens are exactly its original
@@ -1097,26 +1007,22 @@ def substring_ingest(
             L,
         )
     )
-    _occ_sweep(index_table)
-    cur = _occ_current_gen(index_table)
     # the new generation holds ONLY the batch's files; the previous
     # snapshot rides along as a carried-generation list (O(1) commit
     # metadata — the pre-r13 layout hardlinked every carried bucket
     # file here, O(total index files) per batch)
-    carries = (
-        sorted(set(_occ_carries(index_table, cur)) | {cur})
-        if cur is not None
-        else None
+    chain = generations.snapshot(index_table)
+    write = _occ_stage(
+        _occ_with_bucket(clean_occ, nb), nb, L, wide=False, carries=chain
     )
-    staging = _occ_stage_write(
-        _occ_with_bucket(clean_occ, nb), index_table, nb, L, wide=False,
-        carries=carries,
-    )
-    has_new = any(e.startswith("b=") for e in os.listdir(staging))
-    if not has_new and cur is not None:
+
+    def stage(staging: str) -> bool:
+        write(staging)
         # idempotent re-ingest: nothing accepted carries a new window —
         # no commit (the index already equals corpus ∪ accepted batches)
-        shutil.rmtree(staging)
-        return out
-    _occ_publish(staging, index_table, 0 if cur is None else cur + 1)
+        return not chain or any(
+            e.startswith("b=") for e in os.listdir(staging)
+        )
+
+    generations.commit(index_table, stage)
     return out

@@ -6684,8 +6684,8 @@ def x42b_index_maintenance(spark, sf_dir):
     bucket."""
     import os as _os
 
+    from dmshadoop_spark import generations
     from dmshadoop_spark.dedup.substring import (
-        _occ_generations,
         build_occurrence_index,
         compact_index,
         read_occurrence_index,
@@ -6708,8 +6708,8 @@ def x42b_index_maintenance(spark, sf_dir):
     rows = read_occurrence_index(spark, idx).count()
     substring_ingest(batch, idx, min_len=10, keep="all")  # idempotent
     rows2 = read_occurrence_index(spark, idx).count()
-    gens = _occ_generations(idx)
-    cur = _os.path.join(idx, f"gen={gens[-1]}")
+    gens = generations.committed(idx)
+    cur = generations.gen_path(idx, gens[-1])
     files_per_bucket = [
         len([
             f for f in _os.listdir(_os.path.join(cur, e))

@@ -749,7 +749,7 @@ def s20_compaction(spark, sf_dir):
     store.compact(target_files=2)
     store.vacuum(keep_last=1)
     n_generations = len(store.history())
-    gen_dir = store._gen_path(store._current_gen())
+    gen_dir = store._gen_path(store.history()[-1])
     n_part_files = sum(
         1 for f in _os.listdir(gen_dir)
         if f.startswith("part-") and f.endswith(".parquet")

@@ -3738,7 +3738,7 @@ def test_compact_index_folds_files_and_preserves_rows(spark, tmp_path):
         substring_ingest,
         vacuum_index,
     )
-    from dmshadoop_spark.dedup.substring import _occ_generations
+    from dmshadoop_spark import generations
 
     idx = str(tmp_path / "idx")
     build_occurrence_index(_ing_corpus(spark), idx, min_len=10, buckets=4)
@@ -3754,14 +3754,12 @@ def test_compact_index_folds_files_and_preserves_rows(spark, tmp_path):
         map(tuple, read_occurrence_index(spark, idx)
             .select("_id", "pos", "h1", "h2").collect())
     )
-    gens_before = _occ_generations(idx)
+    gens_before = generations.committed(idx)
     assert len(gens_before) == 3  # build + 2 appends
     # appends accumulate files ACROSS the carried-generation chain
     # (round 13: an append's gen dir holds only the batch's new files;
     # the previous snapshot rides as a `carries` list in its meta):
     # some bucket's file count over the whole snapshot exceeds 1
-    from dmshadoop_spark.dedup.substring import _occ_carries
-
     def files_per_bucket(d):
         out = {}
         for e in os.listdir(d):
@@ -3774,7 +3772,7 @@ def test_compact_index_folds_files_and_preserves_rows(spark, tmp_path):
 
     def snapshot_files_per_bucket(idx_path, gen):
         total: dict = {}
-        for g in _occ_carries(idx_path, gen) + [gen]:
+        for g in generations.carries(idx_path, gen) + [gen]:
             for b, n in files_per_bucket(
                 os.path.join(idx_path, f"gen={g}")
             ).items():
@@ -3782,7 +3780,7 @@ def test_compact_index_folds_files_and_preserves_rows(spark, tmp_path):
         return total
 
     cur = gens_before[-1]
-    assert _occ_carries(idx, cur) == gens_before[:-1]  # resolved chain
+    assert generations.carries(idx, cur) == gens_before[:-1]  # resolved chain
     assert max(snapshot_files_per_bucket(idx, cur).values()) > 1
     # and the append generation itself carries ONLY the batch's files
     # (the pre-r13 layout hardlinked the whole previous snapshot in —
@@ -3844,6 +3842,113 @@ def test_index_append_is_atomic_and_guarded(spark, tmp_path):
     assert not os.path.exists(debris)  # swept by the next mutation
     with _pytest.raises(ValueError, match="min_len"):
         substring_ingest(_ing_batch(spark), idx, min_len=12)
+
+
+def _ing_index_expected(*docs):
+    """The occurrence rows the index must hold over ``docs`` frames."""
+    from dmshadoop_spark.dedup.substring import (
+        _occurrence_table,
+        _token_table,
+    )
+
+    full = docs[0]
+    for d in docs[1:]:
+        full = full.unionByName(d)
+    return sorted(
+        map(tuple, _occurrence_table(_token_table(full, "doc_id", "text"), 10)
+            .collect())
+    )
+
+
+def _ing_index_rows(spark, idx):
+    from dmshadoop_spark.dedup import read_occurrence_index
+
+    return sorted(
+        map(tuple, read_occurrence_index(spark, idx)
+            .select("_id", "pos", "h1", "h2").collect())
+    )
+
+
+def test_index_commits_without_spark_success_marker(spark, tmp_path):
+    """An index generation is committed by the commit protocol's own
+    _SUCCESS marker, not by the one Spark's output committer may drop:
+    with marksuccessfuljobs=false, a build and an append still read
+    back."""
+    from dmshadoop_spark.dedup import build_occurrence_index, substring_ingest
+
+    key = "mapreduce.fileoutputcommitter.marksuccessfuljobs"
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, "false")
+    try:
+        idx = str(tmp_path / "idx")
+        corpus = _ing_corpus(spark)
+        build_occurrence_index(corpus, idx, min_len=10, buckets=4)
+        assert _ing_index_rows(spark, idx) == _ing_index_expected(corpus)
+        out = substring_ingest(_ing_batch(spark), idx, min_len=10)
+        accepted = out.select("doc_id", F.col("clean_text").alias("text"))
+        assert _ing_index_rows(spark, idx) == _ing_index_expected(
+            corpus, accepted
+        )
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
+
+
+def test_corrupt_index_manifest_raises(spark, tmp_path):
+    """A committed append generation whose _meta.json is unreadable must
+    not be read as carrying nothing (that would drop every carried
+    generation from the snapshot and let vacuum delete them): reads,
+    ingests and vacuum all raise."""
+    import os
+
+    from dmshadoop_spark import generations
+    from dmshadoop_spark.dedup import (
+        build_occurrence_index,
+        read_occurrence_index,
+        substring_ingest,
+        vacuum_index,
+    )
+
+    idx = str(tmp_path / "idx")
+    build_occurrence_index(_ing_corpus(spark), idx, min_len=10, buckets=4)
+    substring_ingest(_ing_batch(spark), idx, min_len=10)
+    cur = generations.current(idx)
+    assert generations.carries(idx, cur) == [0]
+    with open(os.path.join(generations.gen_path(idx, cur), "_meta.json"),
+              "w") as f:
+        f.write("\x00junk{")
+    with pytest.raises(ValueError, match="corrupt manifest"):
+        read_occurrence_index(spark, idx)
+    with pytest.raises(ValueError, match="corrupt manifest"):
+        substring_ingest(_ing_batch(spark), idx, min_len=10)
+    with pytest.raises(ValueError, match="corrupt manifest"):
+        vacuum_index(idx, keep_last=1)
+    assert generations.committed(idx) == [0, cur]
+
+
+def test_unmarked_index_generation_debris_is_swept(spark, tmp_path):
+    """A non-empty unmarked gen=N left by a crash is not a generation and
+    does not wedge the index: the next append sweeps it, publishes N and
+    reads back."""
+    import os
+
+    from dmshadoop_spark import generations
+    from dmshadoop_spark.dedup import build_occurrence_index, substring_ingest
+
+    idx = str(tmp_path / "idx")
+    corpus = _ing_corpus(spark)
+    build_occurrence_index(corpus, idx, min_len=10, buckets=4)
+    debris = os.path.join(generations.gen_path(idx, 1), "b=0")
+    os.makedirs(debris)
+    with open(os.path.join(debris, "part-torn.parquet"), "wb") as f:
+        f.write(b"\x00junk")
+    out = substring_ingest(_ing_batch(spark), idx, min_len=10)
+    assert generations.committed(idx) == [0, 1]
+    assert not os.path.exists(os.path.join(debris, "part-torn.parquet"))
+    accepted = out.select("doc_id", F.col("clean_text").alias("text"))
+    assert _ing_index_rows(spark, idx) == _ing_index_expected(corpus, accepted)
 
 
 def test_decontaminate_via_index_skips_train_scan_and_prunes(spark, tmp_path):

@@ -279,6 +279,20 @@ def test_bulk_ingest_versions_and_metadata(spark, store):
     assert store.download("a.txt", 3) == b"bulk two longer"
 
 
+def test_bulk_ingest_refuses_null_content(spark, store):
+    """A row without content is refused by the write task with a
+    ValueError naming the document, and nothing is committed."""
+    store.upload("a.txt", b"existing v1")
+    before = store.history()
+    batch = spark.createDataFrame(
+        [("b.txt", b"fine"), ("empty.txt", None)],
+        "name string, content binary",
+    )
+    with pytest.raises(Exception, match=r"ValueError: .*'empty\.txt'.*null content"):
+        store.bulk_ingest(batch)
+    assert store.history() == before
+
+
 def test_generation_diff(store):
     """diff(gen_a, gen_b) is the change-data feed between two immutable
     snapshots: inserts/deletes/updates by document key, no false updates
@@ -938,6 +952,7 @@ def test_concurrent_commit_raises_instead_of_clobbering(store):
     survives for retry."""
     import os
 
+    from dmshadoop_spark import generations
     from dmshadoop_spark.dms.store import ConcurrentWriteError
 
     store.upload("a.txt", b"v1")  # gen=0
@@ -946,14 +961,14 @@ def test_concurrent_commit_raises_instead_of_clobbering(store):
     before = sorted(os.listdir(gen1))
     # writer B interleaved: it read gen=0 before A committed, so it
     # stages its own commit and tries to publish the SAME generation
-    staging = store._staging_dir()
+    staging = generations.staging_path(store.base_dir)
     os.makedirs(staging)
     with open(os.path.join(staging, "part-b.parquet"), "wb") as f:
         f.write(b"\x00loser")
     with open(os.path.join(staging, "_SUCCESS"), "w"):
         pass
     with pytest.raises(ConcurrentWriteError):
-        store._publish(staging, 1)
+        generations.publish(store.base_dir, staging, 1)
     assert sorted(os.listdir(gen1)) == before  # winner untouched
     assert os.path.exists(os.path.join(staging, "part-b.parquet"))  # retryable
     assert store.download("a.txt") == b"v2"

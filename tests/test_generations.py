@@ -1,0 +1,120 @@
+"""The generation-commit protocol (dmshadoop_spark/generations.py) on the
+filesystem alone: no Spark session."""
+
+import os
+
+import pytest
+
+from dmshadoop_spark import generations
+from dmshadoop_spark.generations import ConcurrentWriteError
+
+
+def _writer(name: str, meta: dict | None = None):
+    """A stage callback that writes one file ``name`` (and a manifest)."""
+
+    def stage(staging: str) -> None:
+        with open(os.path.join(staging, name), "w") as f:
+            f.write(name)
+        if meta is not None:
+            generations.write_manifest(staging, meta)
+
+    return stage
+
+
+def _staging_dirs(root: str) -> list[str]:
+    return [e for e in os.listdir(root) if e.startswith(".staging-")]
+
+
+def test_raising_stage_keeps_current_and_is_swept_next_commit(tmp_path):
+    root = str(tmp_path / "t")
+    assert generations.commit(root, _writer("a")) == 0
+
+    def boom(staging: str) -> None:
+        _writer("torn")(staging)
+        raise RuntimeError("crash mid-stage")
+
+    with pytest.raises(RuntimeError, match="crash mid-stage"):
+        generations.commit(root, boom)
+    assert generations.committed(root) == [0]
+    assert sorted(os.listdir(generations.gen_path(root, 0))) == [
+        "_SUCCESS",
+        "a",
+    ]
+    assert len(_staging_dirs(root)) == 1  # the crash left debris
+    assert generations.commit(root, _writer("b")) == 1
+    assert _staging_dirs(root) == []  # swept by the next commit
+    assert sorted(os.listdir(generations.gen_path(root, 1))) == [
+        "_SUCCESS",
+        "b",
+    ]
+
+
+def test_stage_returning_false_publishes_nothing(tmp_path):
+    root = str(tmp_path / "t")
+    generations.commit(root, _writer("a"))
+
+    def nothing(staging: str) -> bool:
+        _writer("x")(staging)
+        return False
+
+    assert generations.commit(root, nothing) is None
+    assert generations.committed(root) == [0]
+    assert sorted(os.listdir(root)) == ["gen=0"]
+
+
+def test_lost_claim_raises_and_keeps_staged_files(tmp_path):
+    root = str(tmp_path / "t")
+    generations.commit(root, _writer("a"))
+
+    def racing(staging: str) -> None:
+        _writer("loser")(staging)
+        # another writer publishes the generation this commit claimed
+        winner = generations.gen_path(root, 1)
+        os.makedirs(winner)
+        _writer("winner")(winner)
+        open(os.path.join(winner, "_SUCCESS"), "w").close()
+
+    with pytest.raises(ConcurrentWriteError):
+        generations.commit(root, racing)
+    assert sorted(os.listdir(generations.gen_path(root, 1))) == [
+        "_SUCCESS",
+        "winner",
+    ]
+    (staged,) = _staging_dirs(root)
+    assert os.path.exists(os.path.join(root, staged, "loser"))
+
+
+def test_vacuum_keeps_generations_the_kept_one_carries(tmp_path):
+    root = str(tmp_path / "t")
+    generations.commit(root, _writer("a"))  # 0
+    generations.commit(root, _writer("b"))  # 1
+    generations.commit(root, _writer("c", {"carries": [1]}))  # 2 reads 1
+    assert generations.snapshot(root) == [1, 2]
+    assert generations.vacuum(root, keep_last=1) == [0]
+    assert generations.committed(root) == [1, 2]
+    with pytest.raises(ValueError):
+        generations.vacuum(root, keep_last=0)
+
+
+def test_unmarked_generation_is_invisible_and_swept(tmp_path):
+    root = str(tmp_path / "t")
+    generations.commit(root, _writer("a"))
+    debris = generations.gen_path(root, 1)
+    os.makedirs(debris)
+    _writer("torn")(debris)
+    assert generations.committed(root) == [0]
+    assert generations.commit(root, _writer("b")) == 1
+    assert sorted(os.listdir(debris)) == ["_SUCCESS", "b"]
+
+
+def test_manifest_missing_is_none_corrupt_raises(tmp_path):
+    root = str(tmp_path / "t")
+    generations.commit(root, _writer("a"))
+    assert generations.manifest(root, 0) is None
+    assert generations.carries(root, 0) == []
+    for junk in ("{not json", "[1, 2]"):
+        with open(os.path.join(generations.gen_path(root, 0), "_meta.json"),
+                  "w") as f:
+            f.write(junk)
+        with pytest.raises(ValueError, match="corrupt manifest"):
+            generations.carries(root, 0)
