@@ -71,12 +71,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view (for spark.sql usage)."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
 def widen(df: DataFrame) -> DataFrame:
     """Round-robin repartition a *narrow* small-scan DataFrame to cluster
     width before a CPU-bound expression stage (shingling, hashing,

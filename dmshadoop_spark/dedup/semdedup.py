@@ -534,7 +534,7 @@ def semdedup(
     WHICH POSTURE AT WHICH n (round-10 decision table; floors pinned by
     test_semdedup_coarse_posture_agreement_floor and
     test_semdedup_train_sample_survivor_stability, measured two decades
-    out in SCALE.md / BENCH_r9_probes.json):
+    out in SCALE.md):
 
       n ≲ 10⁵ (k ≲ 200)      — defaults. Exact assignment is cheap,
                                full training converges fast; the coarse

@@ -58,7 +58,7 @@ def with_sorted_digest(df: DataFrame, *cols: str) -> DataFrame:
     first's): a drift must now cancel both sums simultaneously, ~2⁻¹²⁸
     for non-adversarial edits. Same O(n), same single window. The
     upgrade flipped every pinned digest constant — all re-measured in
-    the round-9 re-pin sweep (tools/digest_sweep.py).
+    the round-9 re-pin sweep.
 
     NULL SAFETY (round-9 review finding): concat_ws silently DROPS null
     fields, so (NULL, x) and (x, NULL) rows produced the same key —

@@ -6116,7 +6116,7 @@ def x38_bigram_lm_score(spark, sf_dir):
 # dims. The round-8 point FIXED expand=16 (80 candidates): recall@5
 # 0.800/0.825 at n=500 but 0.575 at n=2000 (sf0.1) — a fixed budget
 # decays with N on this margin-less random corpus. The measured law
-# (tools/jl_sq8_recall_probe.py; full curve in similarity/jl.auto_expand)
+# (full curve in similarity/jl.auto_expand)
 # is constant candidate FRACTION ⇒ constant recall: at 25% the curve is
 # flat 0.875 / 0.925 / 0.875 across n=500/500/2000. expand="auto"
 # applies it; the pytest floor ≥ 0.8 now holds at the bench SF too.

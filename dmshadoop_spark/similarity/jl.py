@@ -169,7 +169,7 @@ def auto_expand(
     scores recall@5 = 1.0 at fixed expand=8 where the random corpus
     gives 0.575 (test_jl_sq8_fixed_budget_holds_on_clustered_corpus);
     callers with such data should pass an explicit ``expand`` and
-    re-measure with tools/jl_sq8_recall_probe.py."""
+    re-measure recall on their corpus."""
     want = max(floor, -(-int(frac * n) // k))
     return max(floor, min(want, max_cands // k))
 

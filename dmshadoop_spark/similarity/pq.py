@@ -102,9 +102,9 @@ def train_pq_codebooks(
     # sequential loop — each subspace's training is self-contained and
     # order never matters for np.stack's indexing. Measured on the
     # x5_pq_recall shape (8 subspaces, k=256, sf0.01): 14.9 s
-    # sequential → 8.0 s pooled(4), centroids bit-identical
-    # (tools/lloyd_probe.py). 4 workers is plenty: enough to fill
-    # driver gaps, not so many that init sort-limits fight for cores.
+    # sequential → 8.0 s pooled(4), centroids bit-identical. 4 workers
+    # is plenty: enough to fill driver gaps, not so many that init
+    # sort-limits fight for cores.
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=min(4, m)) as pool:

@@ -754,7 +754,7 @@ def test_rows_only_digests_pinned(spark, sf_dir):
         # jpeg.py); the value below is the post-fix constant, verified
         # invariant under OMP_NUM_THREADS=1/16 and
         # OPENBLAS_NUM_THREADS=2 and across local[8]/local[32] +
-        # PYTHONHASHSEED 0/1/42 (tools/jpeg_digest_probe.py).
+        # PYTHONHASHSEED 0/1/42.
         "x6_jpeg_roundtrip": -3082455253893048038,
         "x21_dedup_incremental": 26021813196804841,
         # image near-dup over sha256-pattern synth images (doc_id-pure):

@@ -35,3 +35,4 @@ def test_entry_smoke(spark):
     df = e.entry(spark)
     assert df.count() > 0
     assert set(e.oracle_sql()) <= set(e.queries())
+    assert list(e.queries()) == list(registry.QUERIES)

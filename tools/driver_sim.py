@@ -4,12 +4,11 @@ correctness gate does — a PLAIN SparkSession (no tuned confs, default
 and compare each against its DuckDB oracle at sf0.01.
 
 Usage:
-    python tools/driver_sim.py            # first 50 (the PRIORITY window)
-    python tools/driver_sim.py --all      # every registered query
+    python tools/driver_sim.py                  # every registered query
     python tools/driver_sim.py name1 name2...   # specific queries
 
 Exit code 0 iff zero failures. This is the strongest local predictor of
-CORRECTNESS_r{N}: the tuned-session pytest gate can mask session-conf
+the external gate: the tuned-session pytest gate can mask session-conf
 dependencies (time zone, ANSI mode, broadcast thresholds) that only
 show under the driver's bare session.
 """
@@ -53,13 +52,7 @@ def main() -> int:
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')"
         )
 
-    args = sys.argv[1:]
-    if args == ["--all"]:
-        names = list(qs)
-    elif args:
-        names = args
-    else:
-        names = list(qs)[:50]
+    names = sys.argv[1:] or list(qs)
 
     bad = []
     for name in names:
