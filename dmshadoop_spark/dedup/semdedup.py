@@ -413,8 +413,7 @@ def semdedup_ingest(
     )
     comps = connected_components(pairs, src="vec_a", dst="vec_b")
 
-    spark = SparkSession.getActiveSession()
-    cent_df = centroid_frame(spark, cents)
+    cent_df = centroid_frame(nb.sparkSession, cents)
     staged = (
         nb.join(broadcast(cent_df), "cell")
         .select(
@@ -613,8 +612,7 @@ def semdedup(
             base, "_v", cents, out_col="cell", vectorized=vectorized
         )
 
-    spark = SparkSession.getActiveSession()
-    cent_df = centroid_frame(spark, cents)
+    cent_df = centroid_frame(base.sparkSession, cents)
     with_cos = assigned.join(broadcast(cent_df), "cell").select(
         "_id",
         "_v",

@@ -38,25 +38,57 @@ rows, sorted by term, so ``search`` reads the postings of its query
 terms instead of re-tokenizing every document. ``_postings/`` is
 ``_``-prefixed like ``_tombstones/``: the data scan never sees it, and
 every commit carries it by hardlink together with the data files.
-Tombstones mask postings at search time; ``compact`` and ``update``
-rewrite the twins from content along with the data.
+Tombstones mask postings at search time. ``compact`` and ``update``
+rewrite the twins along with the data: on the driver they merge the old
+twins minus the dropped keys, in Spark tasks they re-tokenize the rows.
 
-Execution rule: a call that reads by key runs on the driver through
-Arrow, where a key is one name's rows or the postings of a query's
-terms; a call that must read every row runs in Spark; and every document
-file is written by ``_write_docs``, which writes the data part and its
-postings twin together. The point calls (``download``,
-``get_file_meta_data``, ``get_file_version``, ``get_lastest_version``,
-``upload``, ``delete``, ``delete_all_version`` and ``update``'s
-pre-checks) read the committed generation with ``pyarrow.dataset``
-filtered on ``name`` and apply its tombstones in memory; ``search`` reads
-the postings the same way. A Spark job costs a few hundred milliseconds
-of scheduling, which is the whole price of such a call. ``upload`` calls
-``_write_docs`` on the driver; ``bulk_ingest``, ``compact`` and
-``update``'s rewrite call it inside ``mapInArrow`` tasks, which report
-the files they wrote (``_write_in_tasks``). ``df()``, ``diff`` and
-``delete_where``'s predicate scan are Spark jobs; ``delete_all`` commits
-an empty generation and reads nothing.
+Execution rule. The whole-snapshot rewrites, ``compact`` and
+``update``'s rewrite, choose their path by size; every other call keeps
+a fixed path. A Spark job costs a few hundred milliseconds of
+scheduling, which is the whole price of a small call.
+
+- ``compact`` and ``update``'s rewrite run on the driver through Arrow
+  when the generation's data files take at most ``_DRIVER_REWRITE_BYTES``
+  once decoded (``layout()["data_bytes"]``: the ``length`` column's sum,
+  so repeated contents count every time, plus the other columns'
+  uncompressed footer sizes). There ``_rewrite_on_driver`` masks, sorts
+  and slices the rows and merges the old postings twins instead of
+  re-tokenizing. Larger generations are rewritten in ``mapInArrow``
+  tasks, which report the files they wrote (``_write_in_tasks``).
+- The point calls (``download``, ``get_file_meta_data``,
+  ``get_file_version``, ``get_lastest_version``, ``upload``, ``delete``,
+  ``delete_all_version`` and ``update``'s pre-checks) and ``search``
+  always run on the driver. They read the committed generation with
+  ``pyarrow.dataset`` filtered on ``name`` (or, for ``search``, on the
+  postings twins' ``term``), so they read one name's or one term's row
+  groups, and apply its tombstones in memory.
+- ``bulk_ingest``, ``df()``, ``diff`` and ``delete_where``'s predicate
+  scan take or return Spark frames and always run in Spark;
+  ``delete_all`` commits an empty generation and reads nothing.
+
+Every document file, data part and postings twin together, is written
+by ``_write_docs``. Timing ``compact(cluster_by=["name"])`` both ways on
+a 4-vCPU host (store of versioned 10-100-word distinct text documents,
+9 data files, 2 tombstones; medians of 5 runs, 3 at the largest size;
+driver vs Spark; sizes by the footers, within 1% of the decoded bytes
+for distinct texts):
+
+    2.3 MiB (5k docs)      146 ms   vs  1041 ms
+    11.3 MiB (25k docs)    609 ms   vs  1860 ms
+    22.7 MiB (50k docs)   1059 ms   vs  2561 ms
+    45.2 MiB (100k docs)  2442 ms   vs  4952 ms
+    113 MiB (250k docs)   6175 ms   vs 11872 ms
+
+The driver path wins at every size measured, so the threshold is not a
+crossover: its lead falls from 7x to 2x as Spark's fixed cost stops
+mattering, but it does not end. What bounds it is driver memory, which
+grows with the decoded input, postings twins included: the 113 MiB
+rewrite above peaked at 0.94 GiB more driver RSS (8.4x its decoded
+bytes), and stores of 5k texts each repeated under 10 and 30 names
+peaked at 13.6x (17 MiB decoded, 5.4 MiB by the footers) and 11.4x
+(51 MiB decoded, 16 MiB by the footers). ``_DRIVER_REWRITE_BYTES`` is
+32 MiB, which keeps that peak under half a GiB at the highest ratio
+measured.
 
 Fixed reference bugs (SURVEY.md §2 notes):
   B1 — latest version is numeric max(version), not a string sort
@@ -80,6 +112,7 @@ import shutil
 import uuid
 from collections.abc import Callable, Iterable
 
+import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.dataset as ds
@@ -161,6 +194,12 @@ _ATTEMPTS_DIR = ".attempts"
 # reads only the row groups whose range holds one of its terms.
 _POSTINGS_ROW_GROUP = 16384
 
+# Whole-snapshot rewrites (``compact`` and ``update``'s rewrite) of a
+# generation whose data files take at most this many bytes once decoded
+# run on the driver: a bound on driver memory, see the module
+# docstring's execution rule.
+_DRIVER_REWRITE_BYTES = 32 * 2**20
+
 # Upper bound on part files per bulk-delete tombstone commit (round-11
 # verdict task 4): a predicate-shaped delete writes its key set through
 # at most this many tasks, so a delete matching millions of keys neither
@@ -197,6 +236,45 @@ def _link_visible(src_dir: str, dst_dir: str) -> None:
 def _footer_rows(files: list[str]) -> int:
     """Total rows of ``files``, read from their parquet footers."""
     return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
+
+
+def _decoded_bytes(files: list[str]) -> int:
+    """Bytes the document files ``files`` take once decoded: the sum of
+    their ``length`` column (the content bytes, which dictionary encoding
+    stores once however often a content repeats) plus the uncompressed
+    size of every other column chunk, read from the parquet footers."""
+    total = 0
+    for f in files:
+        pf = pq.ParquetFile(f)
+        md = pf.metadata
+        for i in range(md.num_row_groups):
+            rg = md.row_group(i)
+            total += sum(
+                rg.column(j).total_uncompressed_size
+                for j in range(rg.num_columns)
+                if rg.column(j).path_in_schema != "content"
+            )
+        total += pc.sum(pf.read(columns=["length"]).column(0)).as_py() or 0
+    return total
+
+
+def _keys(rows: pa.Table) -> pa.ChunkedArray:
+    """The (name, version) key of each of ``rows`` as one
+    ``name\\x00version`` string, for ``pc.is_in``: Acero's joins reject
+    the map column of document rows."""
+    return pc.binary_join_element_wise(
+        rows.column("name"), rows.column("version").cast(pa.string()), "\x00"
+    )
+
+
+def _changes(col: pa.ChunkedArray) -> pa.ChunkedArray:
+    """For each row of ``col`` but the first, whether its value differs
+    from the row before (a null differs from a value, not from a null)."""
+    after, before = col.slice(1), col.slice(0, len(col) - 1)
+    return pc.or_(
+        pc.fill_null(pc.not_equal(after, before), False),
+        pc.xor(pc.is_null(after), pc.is_null(before)),
+    )
 
 
 def _twin(data_file: str) -> str:
@@ -265,15 +343,20 @@ def _postings_of(docs: pa.Table) -> pa.Table:
 
 
 def _write_docs(
-    docs: pa.Table | Iterable[pa.RecordBatch], dir_path: str
+    docs: pa.Table | Iterable[pa.RecordBatch],
+    dir_path: str,
+    postings: pa.Table | None = None,
 ) -> tuple[str, int] | None:
     """The one writer of document files. Streams ``docs`` (document rows,
     a table or record batches) batch by batch through one
     ``pq.ParquetWriter`` into a new part file under ``dir_path``, and
     writes the part's postings twin, sorted by term in row groups of
     ``_POSTINGS_ROW_GROUP``, under ``dir_path/_postings/`` with the same
-    file name. Only the postings are buffered. Returns (part file name,
-    rows), or None when ``docs`` has no row (nothing is written).
+    file name. The twin is ``postings`` when given (the postings of
+    exactly these rows, sorted by ``_POSTINGS_ORDER``), else the rows are
+    tokenized batch by batch and only the postings are buffered. Returns
+    (part file name, rows), or None when ``docs`` has no row (nothing is
+    written).
 
     Footer statistics cover only what prunes: the scalar columns of the
     data part (min/max of ``content`` and ``meta`` would copy the
@@ -282,7 +365,7 @@ def _write_docs(
     batches = docs.to_batches() if isinstance(docs, pa.Table) else docs
     part = f"part-{uuid.uuid4().hex}.parquet"
     writer = None
-    postings = []
+    tokenized = []
     rows = 0
     try:
         for batch in batches:
@@ -302,14 +385,17 @@ def _write_docs(
                     store_schema=False,
                 )
             writer.write_table(table)
-            postings.append(_postings_of(table))
+            if postings is None:
+                tokenized.append(_postings_of(table))
             rows += table.num_rows
     finally:
         if writer is not None:
             writer.close()
     if writer is None:
         return None
-    twin = pa.concat_tables(postings).sort_by(_POSTINGS_ORDER)
+    twin = postings
+    if twin is None:
+        twin = pa.concat_tables(tokenized).sort_by(_POSTINGS_ORDER)
     os.makedirs(os.path.join(dir_path, _POSTINGS_DIR), exist_ok=True)
     pq.write_table(
         twin,
@@ -435,11 +521,8 @@ class DocumentStore:
     should bind this API to Delta/Iceberg, whose transaction log provides
     real optimistic concurrency across processes.
 
-    EXECUTION RULE: a call that reads by key — one name's rows
-    (``_rows``) or the postings of a query's terms (``search``) — runs on
-    the driver through Arrow and starts no Spark job; a call that must
-    read every row runs in Spark; every document file, data part and
-    postings twin together, is written by ``_write_docs``."""
+    EXECUTION RULE: see the module docstring. Every document file, data
+    part and postings twin together, is written by ``_write_docs``."""
 
     def __init__(self, spark: SparkSession, base_dir: str):
         self.spark = spark
@@ -590,10 +673,17 @@ class DocumentStore:
         copy-on-write half of the merge-on-read delete design: ``df()``
         already excludes tombstoned keys, so the rewritten generation
         physically drops the deleted rows and carries NO tombstone
-        sidecar — reads after compaction are a pure scan again. The
-        postings twins are rewritten from content with the data parts.
-        Old generations stay time-travelable. Returns the new generation
+        sidecar — reads after compaction are a pure scan again. Old
+        generations stay time-travelable. Returns the new generation
         number.
+
+        Where it runs is the execution rule's: when the generation's data
+        files take at most ``_DRIVER_REWRITE_BYTES`` once decoded
+        (``layout()["data_bytes"]``), ``_rewrite_on_driver`` rewrites it
+        through Arrow with no Spark job and merges the postings twins;
+        otherwise a ``repartition`` (or ``repartitionByRange``) of
+        ``df()`` is written in ``mapInArrow`` tasks, which re-tokenize the
+        rows into new twins. Both give the same rows and postings.
 
         ``cluster_by`` (round 11): range-partition + sort the rewrite on
         the given columns (``["name"]`` is the natural choice) so every
@@ -602,9 +692,17 @@ class DocumentStore:
         non-matching file (the probe is the data-dependent part of a
         deletion-vector delete; clustered, it reads ~one file instead
         of scanning the generation). Same rows either way; only the
-        physical layout differs (disjoint ranges pinned by test)."""
-        if self._resolve(None) is None:
+        physical layout differs (disjoint ranges pinned by test). On the
+        driver the sorted rows are cut into ``target_files`` slices at
+        key boundaries, which gives the same disjoint ranges."""
+        gen = self._resolve(None)
+        if gen is None:
             return None
+        if self._on_driver(gen):
+            return self._rewrite_on_driver(
+                gen, [], _ARROW_DOCUMENT_SCHEMA.empty_table(), target_files,
+                cluster_by,
+            )
         if cluster_by:
             snap = (
                 self.df()
@@ -616,6 +714,102 @@ class DocumentStore:
         return self._commit(
             lambda staging: _write_in_tasks(snap, staging), None
         )
+
+    def _on_driver(self, gen: int) -> bool:
+        """Whether a whole-snapshot rewrite of ``gen`` runs on the driver:
+        when its data files take at most ``_DRIVER_REWRITE_BYTES`` once
+        decoded."""
+        return _decoded_bytes(self._data_files(gen)) <= _DRIVER_REWRITE_BYTES
+
+    def _rewrite_on_driver(
+        self,
+        gen: int,
+        drop: list[tuple[str, int]],
+        add: pa.Table,
+        target_files: int = 1,
+        cluster_by: list[str] | None = None,
+    ) -> int:
+        """Rewrite generation ``gen`` on the driver through Arrow and commit
+        the result as a new generation with no base. The live rows are
+        ``gen``'s rows minus its tombstoned keys and the (name, version)
+        keys in ``drop``, plus the document rows ``add``; sorted by
+        ``cluster_by`` when given, they are cut into ``target_files``
+        contiguous slices (at ``cluster_by`` key boundaries, so clustered
+        files cover disjoint ranges as ``repartitionByRange`` gives), and
+        each slice is written by ``_write_docs``.
+
+        The postings are merged, not rebuilt: ``gen``'s twins minus the
+        masked keys, plus the postings of ``add``, split per slice. A data
+        file without a twin is tokenized from its rows. Returns the new
+        generation number."""
+        files = self._data_files(gen)
+        bare = [f for f in files if not os.path.isfile(_twin(f))]
+        twins = [_twin(f) for f in files if f not in bare]
+        docs = ds.dataset(files, schema=_ARROW_DOCUMENT_SCHEMA).to_table()
+        postings = [
+            ds.dataset(twins, schema=_ARROW_POSTINGS_SCHEMA).to_table(),
+            _postings_of(
+                ds.dataset(bare, schema=_ARROW_DOCUMENT_SCHEMA).to_table()
+            ),
+        ]
+        masked = [
+            pa.Table.from_pylist(
+                [{"name": n, "version": v} for n, v in drop],
+                schema=_ARROW_TOMBSTONE_SCHEMA,
+            ),
+            ds.dataset(
+                self._tombstone_files(gen), schema=_ARROW_TOMBSTONE_SCHEMA
+            ).to_table(),
+        ]
+        dead = _keys(pa.concat_tables(masked)).combine_chunks()
+
+        def live(rows: pa.Table) -> pa.Table:
+            return rows.filter(pc.invert(pc.is_in(_keys(rows), value_set=dead)))
+
+        docs = pa.concat_tables([live(docs), add])
+        postings = pa.concat_tables(
+            [*map(live, postings), _postings_of(add)]
+        ).sort_by(_POSTINGS_ORDER)
+        n = docs.num_rows
+        starts = None  # rows whose cluster_by key differs from the row before
+        if cluster_by:
+            docs = docs.sort_by([(c, "ascending") for c in cluster_by])
+            if target_files > 1 and n > 1:
+                changed = functools.reduce(
+                    pc.or_, (_changes(docs.column(c)) for c in cluster_by)
+                )
+                starts = pc.indices_nonzero(changed).to_numpy() + 1
+        cuts = [0]
+        for i in range(1, target_files):
+            cut = max(cuts[-1], n * i // target_files)
+            if starts is not None and 0 < cut < n:
+                # move the cut forward to the next key boundary
+                j = np.searchsorted(starts, cut)
+                cut = int(starts[j]) if j < len(starts) else n
+            cuts.append(cut)
+        cuts.append(n)
+        postings_keys = _keys(postings) if target_files > 1 else None
+        # row groups the size of the Arrow batches Spark's write tasks get
+        batch = int(
+            self.spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+        )
+
+        def stage(staging: str) -> None:
+            for lo, hi in zip(cuts, cuts[1:]):
+                if lo == hi:
+                    continue
+                part = docs.slice(lo, hi - lo).combine_chunks()
+                twin = postings
+                if postings_keys is not None:
+                    mine = _keys(part).combine_chunks()
+                    twin = postings.filter(
+                        pc.is_in(postings_keys, value_set=mine)
+                    )
+                _write_docs(
+                    part.to_batches(batch if batch > 0 else None), staging, twin
+                )
+
+        return self._commit(stage, None)
 
     def restore(self, generation: int) -> int:
         """RESTORE TABLE analogue: commit a NEW generation whose content
@@ -730,39 +924,39 @@ class DocumentStore:
 
     def layout(self, generation: int | None = None) -> dict[str, int]:
         """Physical-layout facts for one committed generation: data file
-        count, tombstone file/row counts, postings file/row counts, and
-        how many data files are inode-shared with the PREVIOUS generation
-        (the merge-on-read pin: a delete commit shares every data file; a
-        rewrite shares none). Metadata-only: row counts come from the
-        parquet footers, so no Spark job runs."""
+        count, ``data_bytes`` (the bytes its data files take once decoded,
+        which the execution rule compares with ``_DRIVER_REWRITE_BYTES`` to
+        tell where ``compact`` and ``update`` will run), tombstone
+        file/row counts, postings file/row counts, how many data files are
+        inode-shared with the PREVIOUS generation (the merge-on-read pin:
+        a delete commit shares every data file; a rewrite shares none),
+        and the store's committed ``generations`` count. Byte and row
+        counts come from the parquet footers and the ``length`` column,
+        read with pyarrow, so no Spark job runs."""
         gen = self._resolve(generation)
-        if gen is None:
-            return {
-                "data_files": 0,
-                "tombstone_files": 0,
-                "tombstone_rows": 0,
-                "postings_files": 0,
-                "postings_rows": 0,
-                "data_files_shared_with_prev": 0,
-            }
-        data_files = self._data_files(gen)
-        tomb_files = self._tombstone_files(gen)
-        postings_files = _visible_files(
-            os.path.join(self._gen_path(gen), _POSTINGS_DIR)
-        )
+        committed = generations.committed(self.base_dir)
+        data_files, tomb_files, postings_files = [], [], []
         prev_inodes: set[int] = set()
-        if gen - 1 in generations.committed(self.base_dir):
+        if gen is not None:
+            data_files = self._data_files(gen)
+            tomb_files = self._tombstone_files(gen)
+            postings_files = _visible_files(
+                os.path.join(self._gen_path(gen), _POSTINGS_DIR)
+            )
+        if gen is not None and gen - 1 in committed:
             prev_inodes = {
                 os.stat(f).st_ino for f in self._data_files(gen - 1)
             }
         shared = sum(1 for f in data_files if os.stat(f).st_ino in prev_inodes)
         return {
             "data_files": len(data_files),
+            "data_bytes": _decoded_bytes(data_files),
             "tombstone_files": len(tomb_files),
             "tombstone_rows": _footer_rows(tomb_files),
             "postings_files": len(postings_files),
             "postings_rows": _footer_rows(postings_files),
             "data_files_shared_with_prev": shared,
+            "generations": len(committed),
         }
 
     # -- write path --------------------------------------------------------
@@ -865,14 +1059,30 @@ class DocumentStore:
         columns, unmatched target rows pass through, and
         ``insert_not_matched=False`` keeps the update-only contract —
         one full-outer join instead of the bespoke anti-join ∪ union
-        rewrite this method carried before round 5. The rewrite, postings
-        twins included, is written in tasks (``_write_in_tasks``)."""
+        rewrite this method carried before round 5, written in tasks
+        (``_write_in_tasks``).
+
+        That Spark rewrite runs only when the generation's data files take
+        more than ``_DRIVER_REWRITE_BYTES`` once decoded (the execution
+        rule); at or
+        under it, ``_rewrite_on_driver`` drops the old (name, version)
+        row, appends the replacement and writes one data file, with the
+        old postings twins merged and only the replacement tokenized, and
+        starts no Spark job."""
         from dmshadoop_spark.operators.merge import merge_into
 
         row = _pick(self._rows(name)[0], version or None)
         if row is None:
             return False
         replacement = _make_row(name, row["version"], content, extra_meta)
+        gen = self._resolve(None)
+        if self._on_driver(gen):
+            self._rewrite_on_driver(
+                gen,
+                [(name, row["version"])],
+                pa.Table.from_pylist([replacement], schema=_ARROW_DOCUMENT_SCHEMA),
+            )
+            return True
         merged = merge_into(
             self.df(),
             self.spark.createDataFrame([replacement], DOCUMENT_SCHEMA),

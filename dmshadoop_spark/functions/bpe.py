@@ -20,7 +20,7 @@ cluster size.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 END_OF_WORD = "</w>"
@@ -127,8 +127,7 @@ def with_bpe_tokens(
     once per executor as a SparkContext broadcast; the pandas_udf
     memoizes per distinct word within each Arrow batch, so the cost per
     batch is O(distinct words), not O(tokens)."""
-    spark = SparkSession.getActiveSession()
-    bc = spark.sparkContext.broadcast(
+    bc = docs.sparkSession.sparkContext.broadcast(
         {pair: i for i, pair in enumerate(merges)}
     )
 

@@ -29,9 +29,11 @@ PQ subspace trainings.
   ``loop_shuffle_partitions`` — 1 at every test operating point,
   growing with genuine reduce load.
 
-Clones are cached per (SparkContext id, partition count): clone
+Clones are cached per (application id, partition count): clone
 creation costs a SessionState build (~100 ms), and a loop family keeps
-hitting the same width.
+hitting the same width. The application id names one SparkContext for
+good; ``id()`` of a stopped context can be reused by the next one, which
+would then be handed a clone bound to the stopped context.
 """
 
 from __future__ import annotations
@@ -47,7 +49,7 @@ from pyspark.sql import DataFrame, SparkSession
 # partition of a few dozen bytes each.
 _ROWS_PER_REDUCE_TASK = 4_000_000
 
-_CLONES: dict[tuple[int, int], SparkSession] = {}
+_CLONES: dict[tuple[str, int], SparkSession] = {}
 _CLONES_LOCK = threading.Lock()
 
 
@@ -67,7 +69,7 @@ def loop_shuffle_partitions(partial_rows_per_partition: int,
 
 
 def _clone_for(spark: SparkSession, n_parts: int) -> SparkSession:
-    key = (id(spark.sparkContext), int(n_parts))
+    key = (spark.sparkContext.applicationId, int(n_parts))
     with _CLONES_LOCK:
         clone = _CLONES.get(key)
         if clone is None:

@@ -22,9 +22,14 @@ def tokenize(text: Column | str) -> Column:
     CONTRACT: splits on one literal ``' '`` — exactly DuckDB's
     ``string_split(text, ' ')`` — so every oracle comparison holds on ANY
     input, including consecutive/tab whitespace (both engines then emit the
-    same empty tokens). This is the repo's single tokenizer definition; all
-    text operators (T1-T5, X2, X3, X7) must route through it rather than
-    calling ``F.split`` directly."""
+    same empty tokens). The oracle-compared text operators (T1-T5, X2, X3,
+    X7) route through it rather than calling ``F.split`` directly.
+
+    ``DocumentStore`` has the other tokenizer (``dms/store.py``'s
+    ``_terms``, for its postings and ``search``): it lowercases, splits on
+    any run of Unicode whitespace and drops empty tokens. On ``"A b  c"``
+    this function gives ``["A", "b", "", "c"]`` and the store's gives
+    ``["a", "b", "c"]``."""
     c = F.col(text) if isinstance(text, str) else text
     return F.split(c, " ", -1)
 

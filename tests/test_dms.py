@@ -3,6 +3,8 @@ bug deviations (SURVEY.md §2 notes B1-B4, FIXTURES.md §B)."""
 
 from __future__ import annotations
 
+import contextlib
+import math
 import struct
 
 import pytest
@@ -1105,12 +1107,16 @@ def _mixed_store(spark, store):
     store.delete("doc-3.txt")
 
 
-def test_point_ops_run_no_spark_job(spark, store):
+def test_point_ops_run_no_spark_job(spark, store, monkeypatch):
     """Calls keyed on one name (download, meta, versions, upload, delete),
     search (keyed on its query's terms) and layout() run on the driver:
     their job group sees zero Spark jobs, over Spark-written,
     Arrow-written and tombstoned rows alike, and so does collecting the
-    search answer. An upload adds exactly one data file."""
+    search answer. An upload adds exactly one data file. A store this
+    small is also rewritten on the driver: compact and update start no
+    job either, until the rewrite threshold is 0."""
+    from dmshadoop_spark.dms import store as store_mod
+
     _mixed_store(spark, store)
     files_before = store.layout()["data_files"]
     calls = {
@@ -1138,6 +1144,10 @@ def test_point_ops_run_no_spark_job(spark, store):
     assert got["delete"] is True and got["delete_all_version"] is True
     assert got["layout"]["tombstone_rows"] == 3
     assert got["layout"]["data_files"] == files_before + 1
+    assert got["layout"]["generations"] == len(store.history())
+    # the facts the execution rule compares: this store is rewritten on
+    # the driver
+    assert 0 < got["layout"]["data_bytes"] <= store_mod._DRIVER_REWRITE_BYTES
     assert got["search"] == [
         ("doc-1.txt", 1, 2),
         ("doc-1.txt", 2, 2),
@@ -1152,9 +1162,65 @@ def test_point_ops_run_no_spark_job(spark, store):
     # disk until compact(): eight "body i" rows, three "body i v2" rows
     assert got["layout"]["postings_files"] == got["layout"]["data_files"]
     assert got["layout"]["postings_rows"] == 8 * 2 + 3 * 3
-    # a control: a scan-shaped call in the same harness does start jobs
+    rewrites = {
+        "compact": lambda: store.compact(cluster_by=["name"]),
+        "update": lambda: store.update("doc-6.txt", b"body 6 new"),
+    }
+    for op, call in rewrites.items():
+        got[op], jobs = _jobs_started(spark, call)
+        assert jobs == [], f"{op} started Spark jobs {jobs}"
+    assert got["update"] is True
+    assert store.layout()["tombstone_rows"] == 0
+    assert store.download("doc-6.txt") == b"body 6 new"
+    assert [tuple(r) for r in store.search("new").collect()] == [
+        ("doc-6.txt", 1, 1)
+    ]
+    # controls: a scan-shaped call in the same harness does start jobs,
+    # and so do the rewrites once the threshold sends them to Spark
     _, jobs = _jobs_started(spark, lambda: store.df().count())
     assert jobs
+    monkeypatch.setattr(store_mod, "_DRIVER_REWRITE_BYTES", 0)
+    for op, call in rewrites.items():
+        _, jobs = _jobs_started(spark, call)
+        assert jobs, f"{op} at threshold 0 started no Spark job"
+
+
+def test_rewrite_rule_counts_repeated_contents_decoded(spark, store, monkeypatch):
+    """The rewrite rule compares decoded bytes: a store of one content
+    repeated under many names, which dictionary encoding stores once per
+    file, is rewritten in Spark once its decoded bytes pass the threshold
+    although its footer bytes stay under it; at exactly its decoded bytes
+    it is rewritten on the driver."""
+    import pyarrow.parquet as pq
+
+    from dmshadoop_spark.dms import store as store_mod
+
+    content = bytes(range(256)) * 64  # 16 KiB
+    store.bulk_ingest(
+        spark.createDataFrame(
+            [(f"dup-{i}.txt", content) for i in range(40)],
+            "name string, content binary",
+        )
+    )
+    files = store._data_files(store.history()[-1])
+    footer = 0
+    for f in files:
+        md = pq.ParquetFile(f).metadata
+        footer += sum(
+            md.row_group(i).total_byte_size for i in range(md.num_row_groups)
+        )
+    decoded = store.layout()["data_bytes"]
+    assert decoded >= 40 * len(content)
+    assert 2 * footer < decoded
+    monkeypatch.setattr(store_mod, "_DRIVER_REWRITE_BYTES", 2 * footer)
+    _, jobs = _jobs_started(spark, lambda: store.compact(cluster_by=["name"]))
+    assert jobs, "a store over the threshold once decoded ran on the driver"
+    monkeypatch.setattr(
+        store_mod, "_DRIVER_REWRITE_BYTES", store.layout()["data_bytes"]
+    )
+    _, jobs = _jobs_started(spark, lambda: store.compact(cluster_by=["name"]))
+    assert jobs == []
+    assert store.df().count() == 40
 
 
 def test_arrow_upload_reads_back_through_spark(spark, store):
@@ -1220,11 +1286,26 @@ _store_ops = st.lists(
             st.none() | st.integers(min_value=1, max_value=4),
         ),
         st.tuples(st.just("delete_all_version"), st.sampled_from(_NAMES)),
-        st.tuples(st.just("compact"), st.booleans()),
+        # (clustered, on the driver)
+        st.tuples(st.just("compact"), st.booleans(), st.booleans()),
     ),
     min_size=1,
     max_size=10,
 )
+
+
+@contextlib.contextmanager
+def _rewrite_path(on_driver: bool):
+    """Send the whole-snapshot rewrites made inside the block to the
+    driver (threshold ∞) or to Spark (threshold 0)."""
+    from dmshadoop_spark.dms import store as store_mod
+
+    prior = store_mod._DRIVER_REWRITE_BYTES
+    store_mod._DRIVER_REWRITE_BYTES = math.inf if on_driver else 0
+    try:
+        yield
+    finally:
+        store_mod._DRIVER_REWRITE_BYTES = prior
 
 
 def _spark_answers(store, gen):
@@ -1248,7 +1329,8 @@ def _spark_answers(store, gen):
 @given(ops=_store_ops)
 def test_driver_path_matches_spark_df(spark, tmp_path_factory, ops):
     """For random upload / delete / delete_all_version / compact
-    sequences, every driver-path answer — latest and explicit-version
+    sequences, each compact on the driver or in Spark, every driver-path
+    answer — latest and explicit-version
     reads, version listings, the tombstone-aware next version, and the
     same reads against an older generation — equals the answer computed
     from df() in Spark."""
@@ -1261,7 +1343,8 @@ def test_driver_path_matches_spark_df(spark, tmp_path_factory, ops):
         elif op[0] == "delete_all_version":
             store.delete_all_version(op[1])
         else:
-            store.compact(cluster_by=["name"] if op[1] else None)
+            with _rewrite_path(op[2]):
+                store.compact(cluster_by=["name"] if op[1] else None)
     gens = store.history()
     if not gens:
         for name in _NAMES:
@@ -1336,8 +1419,11 @@ _search_ops = st.lists(
                 ("name = 'a.txt'", "length > 20", "length < 5", "version = 1")
             ),
         ),
-        st.tuples(st.just("update"), st.sampled_from(_NAMES), _texts),
-        st.tuples(st.just("compact"), st.booleans()),
+        # the last field of update and compact: rewrite on the driver
+        st.tuples(
+            st.just("update"), st.sampled_from(_NAMES), _texts, st.booleans()
+        ),
+        st.tuples(st.just("compact"), st.booleans(), st.booleans()),
         st.tuples(st.just("restore"), st.integers(min_value=0, max_value=9)),
         st.tuples(st.just("delete_all")),
     ),
@@ -1394,8 +1480,9 @@ def test_search_matches_python_recompute(
 ):
     """For random sequences of every write the store has — uploads of
     text (mixed case, Unicode whitespace) and binary content, delete,
-    delete_all_version, delete_where, update, compact (clustered or not),
-    restore and delete_all — after some text uploads, search after each
+    delete_all_version, delete_where, update, compact (clustered or not;
+    update and compact each on the driver or in Spark), restore and
+    delete_all — after some text uploads, search after each
     step equals a Python recompute over the live rows."""
     store = DocumentStore(spark, str(tmp_path_factory.mktemp("dms_search")))
     for op in uploads + ops:
@@ -1409,9 +1496,11 @@ def test_search_matches_python_recompute(
         elif kind == "delete_where":
             store.delete_where(op[1])
         elif kind == "update":
-            store.update(op[1], op[2])
+            with _rewrite_path(op[3]):
+                store.update(op[1], op[2])
         elif kind == "compact":
-            store.compact(cluster_by=["name"] if op[1] else None)
+            with _rewrite_path(op[2]):
+                store.compact(cluster_by=["name"] if op[1] else None)
         elif kind == "restore":
             if store.history():
                 store.restore(store.history()[op[1] % len(store.history())])
@@ -1446,13 +1535,15 @@ def test_unreported_task_attempt_files_are_never_published(
     """A task attempt that wrote files but whose report Spark discarded
     (a failed, retried or duplicate attempt) must publish nothing: the
     commit moves only the reported files out of the per-attempt
-    directories and removes the rest."""
+    directories and removes the rest. The rewrite threshold is 0, so
+    compact and update run their Spark path here."""
     import os
 
     import pyarrow as pa
 
     from dmshadoop_spark.dms import store as store_mod
 
+    monkeypatch.setattr(store_mod, "_DRIVER_REWRITE_BYTES", 0)
     stray = pa.Table.from_pylist(
         [store_mod._make_row("ghost.txt", 1, b"ghost words", None)],
         schema=store_mod._ARROW_DOCUMENT_SCHEMA,
@@ -1525,6 +1616,26 @@ def test_search_lowercases_content_and_query_alike(store):
     ]
 
 
+def test_store_tokenizer_differs_from_the_oracle_tokenizer(spark):
+    """Two tokenizers, two contracts: functions.text.tokenize splits on a
+    single space, as DuckDB's string_split does (a double space gives an
+    empty token, case is kept); the store lowercases and splits on runs of
+    any Unicode whitespace, dropping empty tokens."""
+    import pyarrow as pa
+
+    from dmshadoop_spark.dms.store import _terms
+    from dmshadoop_spark.functions.text import tokenize
+
+    (row,) = (
+        spark.createDataFrame([("A b  c",)], "t string")
+        .select(tokenize("t").alias("tokens"))
+        .collect()
+    )
+    assert row["tokens"] == ["A", "b", "", "c"]
+    (terms,) = _terms(pa.array(["A b  c"])).to_pylist()
+    assert [t for t in terms if t] == terms == ["a", "b", "c"]
+
+
 def test_search_indexes_invalid_utf8_labelled_text(store):
     """Content that is not valid UTF-8 but labelled text/plain through
     extra_meta is indexed with U+FFFD in place of the bad bytes (as
@@ -1536,34 +1647,119 @@ def test_search_indexes_invalid_utf8_labelled_text(store):
     ]
 
 
-def test_task_rewrites_keep_every_column_under_session_tz(spark, store):
-    """compact and update rewrite rows inside mapInArrow tasks: every
-    column of every untouched row, modification_time (TIMESTAMP_NTZ)
-    included, comes back unchanged under a non-UTC session time zone."""
+def _every_column(store):
+    """Every column of every live row of the current generation, as
+    sorted comparable tuples."""
+    return sorted(
+        (r["name"], r["version"], bytes(r["content"]), r["content_hash"],
+         r["length"], r["modification_time"], sorted(r["meta"].items()))
+        for r in store.df().collect()
+    )
+
+
+def test_task_rewrites_keep_every_column_under_session_tz(
+    spark, store, monkeypatch
+):
+    """compact and update rewrite rows inside mapInArrow tasks (the
+    rewrite threshold is 0, so both take their Spark path): every column
+    of every untouched row, modification_time (TIMESTAMP_NTZ) included,
+    comes back unchanged under a non-UTC session time zone."""
+    from dmshadoop_spark.dms import store as store_mod
+
+    monkeypatch.setattr(store_mod, "_DRIVER_REWRITE_BYTES", 0)
     batch = spark.createDataFrame(
         [(f"doc-{i}.txt", f"body {i}".encode()) for i in range(5)],
         "name string, content binary",
     )
     store.bulk_ingest(batch)
     store.upload("doc-1.txt", b"body 1 v2", {"k": "v"})
-
-    def rows():
-        return sorted(
-            (r["name"], r["version"], bytes(r["content"]), r["content_hash"],
-             r["length"], r["modification_time"], sorted(r["meta"].items()))
-            for r in store.df().collect()
-        )
-
     prior = spark.conf.get("spark.sql.session.timeZone")
     spark.conf.set("spark.sql.session.timeZone", "America/New_York")
     try:
-        before = rows()
+        before = _every_column(store)
         store.compact(2, cluster_by=["name"])
-        assert rows() == before
+        assert _every_column(store) == before
         assert store.update("doc-3.txt", b"body 3 new")
-        after = rows()
+        after = _every_column(store)
     finally:
         spark.conf.set("spark.sql.session.timeZone", prior)
     assert [r for r in after if r[0] != "doc-3.txt"] == [
         r for r in before if r[0] != "doc-3.txt"
     ]
+
+
+def _twins_match_rows(store):
+    """Assert that every data file of the current generation has a
+    postings twin equal to the postings recomputed from its rows, and
+    return the files' sorted (min, max) name ranges."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from dmshadoop_spark.dms import store as store_mod
+
+    ranges = []
+    for f in store._data_files(store.history()[-1]):
+        rows = pq.read_table(f, schema=store_mod._ARROW_DOCUMENT_SCHEMA)
+        twin = pq.read_table(
+            store_mod._twin(f), schema=store_mod._ARROW_POSTINGS_SCHEMA
+        )
+        assert twin.equals(store_mod._postings_of(rows)), f
+        names = rows.column("name")
+        ranges.append((pc.min(names).as_py(), pc.max(names).as_py()))
+    return sorted(ranges)
+
+
+@pytest.mark.parametrize(
+    "threshold", [0, math.inf], ids=["spark_path", "driver_path"]
+)
+def test_rewrite_paths_give_the_same_rows_and_postings(
+    spark, store, monkeypatch, threshold
+):
+    """compact(), compact(4, cluster_by=["name"]), compact(2) and update
+    give the same rows in Spark (threshold 0) and on the driver
+    (threshold ∞): every column, modification_time under a non-UTC
+    session time zone included, equals the rows before the rewrite (for
+    update, all but the replaced row). Every data file's postings twin
+    equals the postings of its rows, and clustered files cover disjoint
+    name ranges."""
+    import datetime
+
+    from dmshadoop_spark.dms import store as store_mod
+
+    monkeypatch.setattr(store_mod, "_DRIVER_REWRITE_BYTES", threshold)
+    _mixed_store(spark, store)
+    for i in range(3):
+        store.upload(f"new-{i}.txt", f"fresh words {i}".encode())
+    store.delete("doc-0.txt")
+    prior = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        before = _every_column(store)
+        for target_files, cluster_by in ((1, None), (4, ["name"]), (2, None)):
+            store.compact(target_files, cluster_by=cluster_by)
+            assert _every_column(store) == before
+            ranges = _twins_match_rows(store)
+            assert 1 <= len(ranges) <= target_files
+            if cluster_by:
+                assert len(ranges) >= 2
+                for (_, hi), (lo, _) in zip(ranges, ranges[1:]):
+                    assert hi < lo
+        assert store.layout()["tombstone_rows"] == 0
+        t0 = datetime.datetime.now(datetime.timezone.utc).replace(tzinfo=None)
+        assert store.update("doc-2.txt", b"body 2 rewritten", version=1)
+        t1 = datetime.datetime.now(datetime.timezone.utc).replace(tzinfo=None)
+        after = _every_column(store)
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prior)
+    key = ("doc-2.txt", 1)
+    assert [r for r in after if r[:2] != key] == [
+        r for r in before if r[:2] != key
+    ]
+    (new,) = [r for r in after if r[:2] == key]
+    assert new[2:5] == (
+        b"body 2 rewritten",
+        dict(new[6])["sha256"],
+        len(b"body 2 rewritten"),
+    )
+    assert t0 <= new[5] <= t1
+    _twins_match_rows(store)

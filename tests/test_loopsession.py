@@ -64,6 +64,16 @@ def test_loop_frame_clone_is_cached_and_concurrent(spark):
     assert c is not a
 
 
+def test_loop_clones_are_keyed_on_application_id(spark):
+    """The clone cache is keyed on the application id, which names one
+    SparkContext for good, not on ``id()`` of the context object."""
+    from dmshadoop_spark.functions import loopsession
+
+    clone = loopsession.loop_frame(spark.range(3), 3).sparkSession
+    key = (spark.sparkContext.applicationId, 3)
+    assert loopsession._CLONES[key] is clone
+
+
 def test_loop_shuffle_partitions_law():
     from dmshadoop_spark.functions.loopsession import (
         loop_shuffle_partitions,

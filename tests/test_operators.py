@@ -858,6 +858,42 @@ def test_bpe_train_and_encode(spark):
     ).replace("unseen</w>", "".join(segment_word("unseen", ranks)))
 
 
+def test_bpe_tokens_from_fresh_thread(spark):
+    """with_bpe_tokens takes its session from the input frame, so it works
+    from a thread with no active session — a pool worker, say — and
+    agrees with the same call on the main thread."""
+    import threading
+
+    from dmshadoop_spark.functions.bpe import bpe_train, with_bpe_tokens
+
+    docs = spark.createDataFrame(
+        [(1, "low lower newest widest"), (2, "newest lowest")],
+        "doc_id long, text string",
+    )
+    merges = bpe_train(docs, n_merges=6)
+
+    def tokens() -> dict[int, list[str]]:
+        out = with_bpe_tokens(docs, merges)
+        return {r["doc_id"]: list(r["bpe_tokens"]) for r in out.collect()}
+
+    want = tokens()
+    got: dict[int, list[str]] = {}
+    errors: list[Exception] = []
+
+    def work() -> None:
+        try:
+            got.update(tokens())
+        except Exception as exc:  # surfaced by the assert below
+            errors.append(exc)
+
+    t = threading.Thread(target=work)
+    t.start()
+    t.join(timeout=300)
+    assert not t.is_alive()
+    assert errors == []
+    assert got == want
+
+
 def test_bpe_scales_on_corpus(spark, sf_dir):
     """bpe_train over the documents table: the word-frequency table is
     the only thing collected (bounded by max_words), merges are
