@@ -26,6 +26,7 @@ fixed point, one cheap aggregate instead of a full old-vs-new join.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -50,12 +51,13 @@ from dmshadoop_spark.functions.checkpoint import stabilize
 DRIVER_UNION_FIND_MAX_EDGES = 1_000_000
 
 
-def _driver_union_find(pairs) -> list[tuple[int, int]]:
-    """Union-find with path compression; returns (node, min-id-in-component)
-    rows sorted by node — the exact contract of the distributed loop."""
-    parent: dict[int, int] = {}
+def _driver_union_find(a: np.ndarray, b: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Union-find with path compression over the edges ``zip(a, b)``;
+    returns (node, min-id-in-component) as two arrays of ``a``'s dtype,
+    sorted by node — the exact contract of the distributed loop."""
+    parent: dict = {}
 
-    def find(x: int) -> int:
+    def find(x):
         root = x
         while parent[root] != root:
             root = parent[root]
@@ -63,18 +65,22 @@ def _driver_union_find(pairs) -> list[tuple[int, int]]:
             parent[x], x = root, parent[x]
         return root
 
-    for a, b in pairs:
-        parent.setdefault(a, a)
-        parent.setdefault(b, b)
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    comp_min: dict[int, int] = {}
+    for x, y in zip(a.tolist(), b.tolist()):
+        parent.setdefault(x, x)
+        parent.setdefault(y, y)
+        rx, ry = find(x), find(y)
+        if rx != ry:
+            parent[max(rx, ry)] = min(rx, ry)
+    comp_min: dict = {}
     for node in parent:
         r = find(node)
         if r not in comp_min or node < comp_min[r]:
             comp_min[r] = node
-    return sorted((node, comp_min[find(node)]) for node in parent)
+    nodes = sorted(parent)
+    return (
+        np.array(nodes, dtype=a.dtype),
+        np.array([comp_min[find(x)] for x in nodes], dtype=a.dtype),
+    )
 
 
 def connected_components(
@@ -115,15 +121,25 @@ def connected_components(
     # und holds each undirected edge twice; the count is free post-
     # checkpoint (it is the materialization row count)
     if und.count() <= 2 * driver_max_edges:
-        spark = edges.sparkSession
-        # Arrow collect: two numpy int64 columns, not Row objects — the
-        # footprint math in DRIVER_UNION_FIND_MAX_EDGES's comment
-        # depends on this path staying columnar until the loop.
-        pdf = und.toPandas()
-        pairs = zip(pdf["a"].tolist(), pdf["b"].tolist())
-        rows = _driver_union_find(pairs)
-        node_t = dict(e.dtypes)["a"]  # preserve the caller's id type
-        return spark.createDataFrame(rows, f"node {node_t}, comp {node_t}")
+        import pyarrow as pa
+
+        # Arrow both ways: the edges come back as two numpy columns and
+        # the labels go out as one Arrow table of the caller's id type —
+        # never Row objects or pickled tuples (the footprint math in
+        # DRIVER_UNION_FIND_MAX_EDGES's comment depends on it).
+        tbl = und.toArrow()
+        nodes, comps = _driver_union_find(
+            tbl["a"].to_numpy(), tbl["b"].to_numpy()
+        )
+        id_t = tbl.schema.field("a").type  # the caller's id type
+        return edges.sparkSession.createDataFrame(
+            pa.table(
+                {
+                    "node": pa.array(nodes, type=id_t),
+                    "comp": pa.array(comps, type=id_t),
+                }
+            )
+        )
     labels = (
         und.select(F.col("a").alias("node"))
         .distinct()

@@ -24,8 +24,43 @@ per partition); pair emission never crosses clusters, so the worst
 exchange is the intra-cluster triangle — sharded and cap-able the same
 way the label-blocked near-dup is; components run on pair keys only
 (never vectors); the survivor pick is one window over (component).
-Everything after training is a declarative plan — no Python in any
-per-row loop.
+On the Spark plan (above the execution rule's bounds, below) everything
+after training is a declarative plan — no Python in any per-row loop.
+
+Execution rule: ``semdedup`` runs its PAIR, GROUP and SURVIVOR stages on
+the driver when the embeddings decode to at most
+``_DRIVER_SEMDEDUP_BYTES`` (n × dim × 8 bytes). k="auto" decides it with
+the count it runs anyway to size k; an explicit k decides it after
+training with a count that stops one row past the bound — one bounded
+job the Spark plan did not run before. Training stays in Spark (k=1 is
+one mean aggregation — kmeans_centroids). One Spark projection then
+computes every number that depends on Spark's arithmetic — norms,
+cells, the rounded centroid cosine — and one Arrow collect brings it
+back; the pairs come from the same kernel the vectorized Spark stage
+calls (``_block_pairs``, fold or einsum arithmetic by the same pick),
+components from ``components._driver_union_find``, and the survivor
+order is the window's. The decision set is bit-identical to the Spark
+plan's (tests pin each case and the x35-family digests on both paths).
+Measured with x35b's parameters on a 4-vCPU host, warm, median of 3
+(embeddings of dim 64 from tools/gen_scale.py's replicas):
+
+  n       decoded    k    driver path        Spark path
+  2 000   1.0 MiB    4    2.9 s, 13 jobs     4.1 s, 22 jobs
+  20 000  9.8 MiB    40   7.9 s, 13 jobs     10.5 s, 22 jobs
+  64 000  31.3 MiB   128  17.2 s, 13 jobs    24.0 s, 22 jobs
+
+The driver path won at every size, so 32 MiB is a bound on driver
+memory, not a crossover: at 64 000 embeddings the driver process peaked
+104–138 MiB above its idle RSS (3.3–4.4× the decoded bytes), against
+120 MiB for the Spark path, whose component stage collects the pairs to
+the driver as well. Those figures are for bounded cells (k="auto", about
+500 rows each). Beyond the embeddings the driver path holds at most
+``components.DRIVER_UNION_FIND_MAX_EDGES`` pairs plus one row slice of
+one cell: past that many pairs (a small explicit k or a low eps on a
+duplicate-heavy corpus) it drops its work and the call runs the Spark
+plan, whose component stage leaves the driver at the same bound. Larger
+inputs, and that fallback, run the Spark plan as before the rule
+existed, but for the bounded count above.
 
 Rows-only by nature (iterative k-means training has no SQL oracle);
 determinism is pinned by seeded init + fixed iteration count + explicit
@@ -94,12 +129,100 @@ def centroid_frame(
         {
             "cell": pa.array(np.arange(1, k + 1, dtype=np.int64)),
             "cent": pa.chunked_array(chunks),
-            "ncent": pa.array(np.sqrt((cents64 * cents64).sum(axis=1))),
+            "ncent": pa.array(_centroid_norms(cents64)),
         }
     )
     return spark.createDataFrame(
         tbl, "cell long, cent array<double>, ncent double"
     )
+
+
+def _centroid_norms(cents64: np.ndarray) -> np.ndarray:
+    return np.sqrt((cents64 * cents64).sum(axis=1))
+
+
+def _with_centroid(df: DataFrame, cents: np.ndarray, literal: bool) -> DataFrame:
+    """``df`` with its cell's centroid as ``cent`` and ``ncent``. With
+    ``literal`` the centroids ride the plan as literals, as the literal
+    assignment's do, so no broadcast job runs; otherwise centroid_frame
+    is broadcast-joined on cell. Same doubles either way: the literals
+    round-trip exactly and the norms are centroid_frame's."""
+    from dmshadoop_spark.functions.sqllit import sql_double_array
+
+    if not literal:
+        return df.join(broadcast(centroid_frame(df.sparkSession, cents)), "cell")
+    cents64 = np.ascontiguousarray(cents, dtype=np.float64)
+    mat = "array(" + ",".join(sql_double_array(c) for c in cents64) + ")"
+    norms = sql_double_array(_centroid_norms(cents64))
+    # the join drops a row whose cell is null or out of range (a NaN
+    # distance); element_at would keep or fail on it
+    return df.where(F.col("cell").between(1, len(cents))).select(
+        "*",
+        F.expr(f"element_at({mat}, CAST(cell AS INT))").alias("cent"),
+        F.expr(f"element_at({norms}, CAST(cell AS INT))").alias("ncent"),
+    )
+
+
+def _require_integral_ids(id_t: str, id_col: str) -> None:
+    if id_t not in ("tinyint", "smallint", "int", "bigint"):
+        raise ValueError(
+            f"blocked_cosine_pairs(vectorized=True) requires an "
+            f"integral id column; {id_col!r} is {id_t}. Use the "
+            f"default fold path for non-integer ids."
+        )
+
+
+def _block_pairs(
+    ia, A, na, ib, B, nb, threshold: float, intra: bool, fold: bool,
+    limit: int | None = None,
+):
+    """The pair kernel: every (a, b) with cosine >= ``threshold`` between
+    the rows of ``A`` (ids ``ia``, norms ``na``) and ``B``, each unordered
+    pair once (``intra``: A and B are the same rows, so only a < b), as
+    (vec_a, vec_b, cosine) arrays with vec_a < vec_b — or None as soon as
+    more than ``limit`` pairs are found, so a dense block cannot hold the
+    caller's memory hostage.
+
+    ``fold`` picks the arithmetic: ``vectors.dot``'s left fold over d from
+    0.0 (one IEEE product and add per step, the fold path's digits) or
+    the fixed-order einsum of the vectorized path (not BLAS matmul — see
+    assign.py's bit-stability note; its entries do not depend on the
+    block's shape or row order as long as the operands are C-contiguous).
+    A zero norm gives -inf, never a pair — the fold path's null cosine;
+    a NaN cosine passes the fold path's threshold, as in Spark.
+    A is processed in row slices so no (rows, |B|) block exceeds
+    ``assign._MAX_DIST_CELLS`` doubles; each entry is computed alone, so
+    slicing does not change it."""
+    from dmshadoop_spark.similarity import assign
+
+    out = [(ia[:0], ib[:0], np.empty(0))]
+    found = 0
+    if len(ia) and len(ib):
+        A, B = np.ascontiguousarray(A), np.ascontiguousarray(B)
+        step = max(1, assign._MAX_DIST_CELLS // len(ib))
+        for lo in range(0, len(ia), step):
+            a = A[lo : lo + step]
+            if fold:
+                M = np.zeros((len(a), len(B)))
+                for d in range(A.shape[1]):
+                    M += a[:, d, None] * B[None, :, d]
+            else:
+                M = np.einsum("nd,kd->nk", a, B, optimize=False)
+            denom = np.outer(na[lo : lo + step], nb)
+            with np.errstate(divide="ignore", invalid="ignore"):
+                cos = np.where(denom == 0, -np.inf, M / denom)
+            mask = cos >= threshold
+            if fold:  # Spark orders NaN above every number
+                mask |= np.isnan(cos)
+            if intra:
+                mask &= ia[lo : lo + step, None] < ib[None, :]
+            r, c = np.nonzero(mask)
+            found += len(r)
+            if limit is not None and found > limit:
+                return None
+            ida, idb = ia[lo + r], ib[c]
+            out.append((np.minimum(ida, idb), np.maximum(ida, idb), cos[r, c]))
+    return tuple(np.concatenate(col) for col in zip(*out))
 
 
 def blocked_cosine_pairs(
@@ -170,55 +293,34 @@ def blocked_cosine_pairs(
 
         dts = dict(base.dtypes)
         blk_t, id_t = dts["_blk"], dts["_id"]
-        if id_t not in ("tinyint", "smallint", "int", "bigint"):
-            raise ValueError(
-                f"blocked_cosine_pairs(vectorized=True) requires an "
-                f"integral id column; {id_col!r} is {id_t}. Use the "
-                f"default fold path for non-integer ids."
-            )
+        _require_integral_ids(id_t, id_col)
         out_schema = (
             f"`{block_col}` {blk_t}, vec_a {id_t}, vec_b {id_t}, "
             f"cosine double"
         )
         thr = float(threshold)  # close over a plain float, not a Column
 
-        def emit(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        def side(pdf, s):
+            rows = pdf[pdf["_s"] == s]
+            return (
+                rows["_id"].to_numpy(),
+                np.array(rows["_v"].tolist(), dtype=np.float64),
+                rows["_nv"].to_numpy(dtype=np.float64),
+            )
+
+        # unannotated: a partly annotated grouped function makes PySpark
+        # warn on every call that it cannot infer the eval type
+        def emit(key, pdf):
             blk, i, j = key
-            a = pdf[pdf["_s"] == i]
-            b = pdf[pdf["_s"] == j]
-            if len(a) and len(b):
-                A = np.array(a["_v"].tolist(), dtype=np.float64)
-                B = np.array(b["_v"].tolist(), dtype=np.float64)
-                # fixed-order einsum, not BLAS matmul — see assign.py's
-                # bit-stability note
-                M = np.einsum("nd,kd->nk", A, B, optimize=False)
-                denom = np.outer(
-                    a["_nv"].to_numpy(dtype=np.float64),
-                    b["_nv"].to_numpy(dtype=np.float64),
-                )
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    cos = np.where(denom > 0, M / denom, -np.inf)
-                ia = a["_id"].to_numpy()
-                ib = b["_id"].to_numpy()
-                mask = cos >= thr
-                if i == j:
-                    mask &= ia[:, None] < ib[None, :]
-                r, c = np.nonzero(mask)
-                ida, idb = ia[r], ib[c]
-                return pd.DataFrame(
-                    {
-                        block_col: pd.Series([blk] * len(r)),
-                        "vec_a": np.minimum(ida, idb),
-                        "vec_b": np.maximum(ida, idb),
-                        "cosine": cos[r, c],
-                    }
-                )
+            va, vb, cos = _block_pairs(
+                *side(pdf, i), *side(pdf, j), thr, intra=i == j, fold=False
+            )
             return pd.DataFrame(
                 {
-                    block_col: pd.Series([], dtype=object),
-                    "vec_a": pd.Series([], dtype="int64"),
-                    "vec_b": pd.Series([], dtype="int64"),
-                    "cosine": pd.Series([], dtype="float64"),
+                    block_col: pd.Series([blk] * len(va)),
+                    "vec_a": va,
+                    "vec_b": vb,
+                    "cosine": cos,
                 }
             )
 
@@ -465,6 +567,12 @@ def semdedup_ingest(
 # (x35 k=8, IVF k=16, PQ codebooks k≤256) never see this constant.
 SEMDEDUP_VECTORIZED_MIN_K = 32
 
+# The execution rule (module docstring): semdedup runs its pair, component
+# and survivor stages on the driver when the embeddings decode to at most
+# this many bytes (n × dim × 8). A bound on driver memory, not a measured
+# crossover: the driver path was faster at every size probed.
+_DRIVER_SEMDEDUP_BYTES = 32 * 1024 * 1024
+
 
 def auto_k(n: int, target_cell_size: int = 500) -> int:
     """The bounded-cell-size law: k = ceil(n / target_cell_size).
@@ -560,22 +668,16 @@ def semdedup(
     faster than the default at sf3 (13.7 s vs 34.8 s) with the floors
     above — safe to recommend wherever exact-pinned outputs are not
     required."""
+    from dmshadoop_spark.catalog import widen
     from dmshadoop_spark.dedup.components import connected_components
     from dmshadoop_spark.similarity.assign import (
+        LITERAL_MAX_CENTROIDS,
         with_nearest_cell,
         with_nearest_cell_coarse,
     )
     from dmshadoop_spark.similarity.kmeans import kmeans_centroids
 
-    from dmshadoop_spark.catalog import widen
-
-    # widen(): the full-corpus assignment fold and the pair staging are
-    # scan-local CPU work — on the single-file test scan they would run
-    # on one core (no-op at scale — catalog.widen docstring)
-    base = widen(emb).select(
-        F.col(id_col).alias("_id"), as_double(vec_col).alias("_v")
-    ).withColumn("_nv", F.sqrt(norm_sq(F.col("_v"))))
-
+    n: int | None = None
     vectorized: bool | None = None
     pair_vectorized = False
     if k == "auto":
@@ -587,8 +689,10 @@ def semdedup(
         # keep the fold path — a pair exactly at eps could flip.
         pair_vectorized = True
         # one bounded driver scalar (a count), same class as the
-        # convergence checks the component loop already does
-        k = auto_k(emb.count(), target_cell_size)
+        # convergence checks the component loop already does; it also
+        # decides the execution rule (module docstring)
+        n = emb.count()
+        k = auto_k(n, target_cell_size)
         # the auto path OWNS its operating point, so it may flip the
         # assignment to the vectorized einsum path once the literal
         # path's interpreted zip_with folds (CodegenFallback — k·dim
@@ -598,22 +702,50 @@ def semdedup(
         # keep the default path pick — the two paths' float arithmetic
         # differs, so pinned outputs must never flip.
         vectorized = True if k > SEMDEDUP_VECTORIZED_MIN_K else None
+    id_t = emb.select(id_col).dtypes[0][1]
+    if pair_vectorized:
+        _require_integral_ids(id_t, id_col)
 
     cents = kmeans_centroids(
         emb, vec_col=vec_col, k=k, n_iter=n_iter, seed=seed, id_col=id_col,
         vectorized=vectorized, train_sample=train_sample,
     )
-    if assign == "coarse":
-        assigned = with_nearest_cell_coarse(
-            base, "_v", cents, nprobe=assign_nprobe, out_col="cell"
+    if len(cents) == 0:  # no rows, no centroid: no decisions
+        return emb.sparkSession.createDataFrame(
+            [],
+            f"`{id_col}` {id_t}, cell bigint, component {id_t}, "
+            "cos_centroid double, keep boolean",
         )
-    else:
-        assigned = with_nearest_cell(
+
+    def assigned_cells(src: DataFrame) -> DataFrame:
+        base = src.select(
+            F.col(id_col).alias("_id"), as_double(vec_col).alias("_v")
+        ).withColumn("_nv", F.sqrt(norm_sq(F.col("_v"))))
+        if assign == "coarse":
+            return with_nearest_cell_coarse(
+                base, "_v", cents, nprobe=assign_nprobe, out_col="cell"
+            )
+        return with_nearest_cell(
             base, "_v", cents, out_col="cell", vectorized=vectorized
         )
 
-    cent_df = centroid_frame(base.sparkSession, cents)
-    with_cos = assigned.join(broadcast(cent_df), "cell").select(
+    if _fits_on_driver(emb, n, cents.shape[1]):
+        # the centroids ride as literals where the assignment put them
+        # in the plan as literals already; no widen(): the one collect
+        # gains nothing from it
+        literal = not vectorized and len(cents) <= LITERAL_MAX_CENTROIDS
+        decided = _semdedup_on_driver(
+            _with_centroid(assigned_cells(emb), cents, literal),
+            id_col, eps, fold=not pair_vectorized,
+        )
+        if decided is not None:
+            return decided
+
+    # widen(): the full-corpus assignment fold and the pair staging are
+    # scan-local CPU work — on the single-file test scan they would run
+    # on one core (no-op at scale — catalog.widen docstring)
+    assigned = assigned_cells(widen(emb))
+    with_cos = _with_centroid(assigned, cents, literal=False).select(
         "_id",
         "_v",
         "cell",
@@ -650,5 +782,113 @@ def semdedup(
             "component",
             "cos_centroid",
             "keep",
+        )
+    )
+
+
+def _fits_on_driver(emb: DataFrame, n: int | None, dim: int) -> bool:
+    """The execution rule: do the embeddings decode to at most
+    _DRIVER_SEMDEDUP_BYTES (n × dim × 8)? ``n`` is the row count when
+    the caller has one; otherwise a count that stops one row past the
+    bound decides, so a large input is not counted in full."""
+    max_rows = _DRIVER_SEMDEDUP_BYTES / (8 * dim)
+    if n is None:
+        # limit() takes an int; the bound's row count is far below 2^31
+        n = emb.limit(int(min(max_rows, 2**31 - 2)) + 1).count()
+    return n <= max_rows
+
+
+def _semdedup_on_driver(
+    attached: DataFrame, id_col: str, eps: float, fold: bool
+) -> DataFrame | None:
+    """SemDeDup's PAIR, GROUP and SURVIVOR stages on the driver, over one
+    Arrow collect of ``attached`` (_id, _v, _nv, cell and its centroid's
+    cent, ncent) projected to (_id, _v, _nv, cell, cos_centroid).
+
+    Spark computes every number that depends on its arithmetic (norms,
+    cells, the rounded centroid cosine); the pair stage runs each cell
+    through the kernel blocked_cosine_pairs' vectorized groups call (its
+    entries do not depend on how a cell is split into groups),
+    components are components._driver_union_find's min-id labels, and
+    the survivor order is the Spark path's window order. The decision
+    set is therefore the Spark path's, bit for bit.
+
+    Returns None, and the caller runs the Spark plan, once the pairs
+    exceed components.DRIVER_UNION_FIND_MAX_EDGES: the bound at which
+    connected_components leaves the driver too, so a dense cell never
+    holds more pairs here than that route would."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from dmshadoop_spark.dedup import components
+
+    tbl = attached.select(
+        "_id",
+        "_v",
+        "_nv",
+        "cell",
+        F.round(
+            dot(F.col("_v"), F.col("cent")) / (F.col("_nv") * F.col("ncent")),
+            6,
+        ).alias("cos_centroid"),
+    ).toArrow()
+    n = tbl.num_rows
+    ids = tbl["_id"].to_numpy()
+    vecs = tbl["_v"].combine_chunks()
+    lens = pc.list_value_length(vecs).to_numpy(zero_copy_only=False)
+    if np.any(lens != lens[:1]):
+        raise ValueError("semdedup: embeddings differ in length")
+    V = pc.list_flatten(vecs).to_numpy(zero_copy_only=False).reshape(n, -1)
+    # a null element nulls the norm and, in Spark, every cosine of the
+    # row: as a zero norm it pairs with nothing here too
+    nv = tbl["_nv"].fill_null(0.0).to_numpy()
+    cells = tbl["cell"].to_numpy()
+
+    # Components never span cells, so each cell's PAIR and GROUP stages
+    # run together and only one cell's pairs are held at a time.
+    component = ids.copy()  # unpaired rows label themselves
+    budget = components.DRIVER_UNION_FIND_MAX_EDGES
+    order = np.argsort(cells, kind="stable")
+    for grp in np.split(order, np.flatnonzero(np.diff(cells[order])) + 1):
+        # PAIR: the whole cell as one intra block, each pair once
+        found = _block_pairs(
+            ids[grp], V[grp], nv[grp], ids[grp], V[grp], nv[grp], eps,
+            intra=True, fold=fold, limit=budget,
+        )
+        if found is None:
+            return None
+        budget -= len(found[0])
+        # GROUP: min-id component labels
+        nodes, comps = components._driver_union_find(found[0], found[1])
+        if len(nodes):
+            at = np.searchsorted(nodes, ids[grp]).clip(max=len(nodes) - 1)
+            hit = nodes[at] == ids[grp]
+            component[grp[hit]] = comps[at[hit]]
+    # SURVIVOR: first row per component by (cos_centroid asc, nulls
+    # first, then id asc) — the Spark path's window order
+    cos = tbl["cos_centroid"]
+    null = cos.is_null().to_numpy()
+    comp_code = np.unique(component, return_inverse=True)[1]
+    by = np.lexsort((
+        np.unique(ids, return_inverse=True)[1],
+        np.where(null, 0.0, cos.to_numpy()),
+        ~null,
+        comp_code,
+    ))
+    first = np.ones(n, dtype=bool)
+    first[1:] = comp_code[by][1:] != comp_code[by][:-1]
+    keep = np.zeros(n, dtype=bool)
+    keep[by[first]] = True
+    return attached.sparkSession.createDataFrame(
+        pa.table(
+            {
+                id_col: tbl["_id"],
+                "cell": tbl["cell"],
+                "component": pa.array(
+                    component, type=tbl.schema.field("_id").type
+                ),
+                "cos_centroid": cos,
+                "keep": pa.array(keep),
+            }
         )
     )

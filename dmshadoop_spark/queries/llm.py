@@ -5561,6 +5561,10 @@ def x35b_semdedup_autok(spark, sf_dir):
     picks 1 cell (n=500 embeddings at both sf0.001 and sf0.01) — small
     corpora legitimately cluster coarsely; the law matters at sf1+
     (n=20k+) where the probe re-measures the exponent (SCALE.md).
+    At these sizes k=1 training is one mean aggregation and the pair,
+    component and survivor stages run on the driver after one Arrow
+    collect (dedup/semdedup.py's execution rule), so the whole entry,
+    digest included, starts at most 8 Spark jobs instead of 23.
 
     Same rows-only digest contract as x35: the full per-embedding
     decision set (cell, component, centroid cosine, survivor flag) is

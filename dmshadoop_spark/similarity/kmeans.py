@@ -47,6 +47,9 @@ def kmeans_centroids(
     quantizer, so ``n_iter=0`` reproduces it exactly). ``vectorized``
     is threaded to the assignment path pick (assign.with_nearest_cell's
     docstring has the trade — don't flip it under pinned outputs).
+    ``k=1`` with ``n_iter >= 1`` is the training set's mean, which Lloyd
+    reaches in its first round; it is computed by one aggregation with
+    the update's expression, so the doubles are the loop's.
 
     ``train_sample`` (opt-in; None = train on everything, today's
     pinned behavior) bounds the TRAINING set to the first N rows of the
@@ -67,6 +70,18 @@ def kmeans_centroids(
     vecs = df.select(
         *( [F.col(id_col)] if id_col else [] ), as_double(vec_col).alias("_v")
     )
+    if k == 1 and n_iter > 0:
+        # One cell: the first round assigns every training row to it, so
+        # the update is the training set's mean, and the second round
+        # reproduces that mean and stops. One aggregation with the update's
+        # own expression returns the same doubles without the init
+        # sort-limit, the materialization or the rounds.
+        if train_sample is not None and train_sample > 0:
+            vecs = vecs.orderBy(*order).limit(train_sample)
+        upd = _cell_means(vecs.select(F.lit(1).alias("cell"), "_v"))
+        if upd.empty:  # no rows: no centroid, as the init would give
+            return np.array([], dtype=np.float64)
+        return upd.sort_values("pos")["m"].to_numpy(dtype=np.float64)[None, :]
     # widen() so the n_iter assignment scans don't run on one core when
     # the source is a single small file (catalog.widen: no-op at scale,
     # where the scan already yields >= parallelism splits)
@@ -128,6 +143,8 @@ def kmeans_centroids(
     # boxed Python floats.
     init_pdf = vecs.orderBy(*order).limit(k).select("_v").toPandas()
     cents = np.array(init_pdf["_v"].tolist(), dtype=np.float64)
+    if len(cents) == 0:  # no rows: no centroid to move
+        return cents
     if train_sample is not None and train_sample > 0 and n_iter > 0:
         # bounded train sample: already stabilized above; rebalance the
         # (typically single-partition) sort-limit result so the n_iter
@@ -188,28 +205,7 @@ def _lloyd_loop(
         staged = with_nearest_cell(
             vecs.select("_v"), "_v", cents, vectorized=vectorized
         )
-        # DECIMAL sum: double addition is order-dependent, so a plain
-        # F.sum would make centroids (and every digest downstream of
-        # them) depend on partitioning — the same bug class as the JPEG
-        # einsum bistability fixed in round 7. DECIMAL(38,18) is exact
-        # and order-independent; cast back once per component. The
-        # decimal→double cast and the double division happen JVM-side —
-        # bit-identical to the former driver-side float(Decimal)/int
-        # (both are round-to-nearest conversion + one IEEE divide).
-        upd = (
-            staged.select("cell", F.posexplode("_v").alias("pos", "x"))
-            .groupBy("cell", "pos")
-            .agg(
-                F.sum(F.col("x").cast("decimal(38,18)")).alias("s"),
-                F.count(F.lit(1)).alias("n"),
-            )
-            .select(
-                "cell",
-                "pos",
-                (F.col("s").cast("double") / F.col("n")).alias("m"),
-            )
-            .toPandas()
-        )
+        upd = _cell_means(staged)
         new_cents = cents.copy()  # empty cells keep their old centroid
         new_cents[
             upd["cell"].to_numpy(dtype=np.int64) - 1,
@@ -219,3 +215,31 @@ def _lloyd_loop(
             break
         cents = new_cents
     return cents
+
+
+def _cell_means(staged: DataFrame):
+    """The Lloyd update: per-(cell, pos) mean ``m`` of ``staged``'s
+    ``_v`` rows, collected as pandas.
+
+    DECIMAL sum: double addition is order-dependent, so a plain F.sum
+    would make centroids (and every digest downstream of them) depend on
+    partitioning — the same bug class as the JPEG einsum bistability
+    fixed in round 7. DECIMAL(38,18) is exact and order-independent; cast
+    back once per component. The decimal→double cast and the double
+    division happen JVM-side — bit-identical to the former driver-side
+    float(Decimal)/int (both are round-to-nearest conversion + one IEEE
+    divide)."""
+    return (
+        staged.select("cell", F.posexplode("_v").alias("pos", "x"))
+        .groupBy("cell", "pos")
+        .agg(
+            F.sum(F.col("x").cast("decimal(38,18)")).alias("s"),
+            F.count(F.lit(1)).alias("n"),
+        )
+        .select(
+            "cell",
+            "pos",
+            (F.col("s").cast("double") / F.col("n")).alias("m"),
+        )
+        .toPandas()
+    )

@@ -3,6 +3,8 @@ found, and determinism must hold across runs (pinned seeds)."""
 
 from __future__ import annotations
 
+import importlib
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -3996,3 +3998,379 @@ def test_decontaminate_via_index_skips_train_scan_and_prunes(spark, tmp_path):
         substring_decontaminate(
             train, bench, min_len=12, index_table=idx
         )
+
+
+# -- SemDeDup's execution rule: driver path vs Spark path ---------------------
+
+
+def _planted_rows():
+    return [
+        (0, [1.0, 0.02, 0.0, 0.0]),
+        (1, [1.0, 0.00, 0.0, 0.0]),
+        (2, [1.0, -0.02, 0.0, 0.0]),
+        (3, [0.0, 0.0, 1.0, 0.01]),
+        (4, [0.0, 0.0, 1.0, -0.01]),
+        (5, [0.0, 1.0, 0.0, 0.0]),
+    ]
+
+
+def _semdedup_case(spark, case):
+    """(frame, semdedup kwargs) for one path-equivalence case."""
+    schema = "vec_id long, embedding array<double>"
+    if case == "planted":
+        return spark.createDataFrame(_planted_rows(), schema), dict(
+            k=3, n_iter=3, seed=7, eps=0.95, shards=2
+        )
+    if case == "vectorized_k_over_32":
+        rows = []
+        for i in range(140):
+            v = [0.0] * 8
+            v[i % 7] = 10.0
+            v[(i % 7 + 1) % 8] = 0.01 * (i // 7)
+            rows.append((i, v))
+        return spark.createDataFrame(rows, schema), dict(
+            k="auto", target_cell_size=2, n_iter=3, seed=11, eps=0.9, shards=2
+        )
+    if case == "coarse_train_sample":
+        return _clustered_corpus(spark, n=240), dict(
+            k="auto", target_cell_size=20, n_iter=3, eps=0.2,
+            train_sample=96, assign="coarse", assign_nprobe=2,
+        )
+    if case.startswith("exact_duplicates"):
+        rows = [(i, [1.0, 2.0, 3.0] if i % 2 else [0.5, -1.0, 0.25]) for i in range(12)]
+        k = 2 if case.endswith("fold") else "auto"
+        return spark.createDataFrame(rows, schema), dict(k=k, eps=1.0, shards=3)
+    if case.startswith("empty"):  # k=3: no init rows for the Lloyd loop
+        k = 3 if case.endswith("k3") else "auto"
+        return spark.createDataFrame([], schema), dict(k=k)
+    raise KeyError(case)
+
+
+def _decision_set(semdedup_mod, monkeypatch, limit, frame, **kw):
+    monkeypatch.setattr(semdedup_mod, "_DRIVER_SEMDEDUP_BYTES", limit)
+    out = semdedup_mod.semdedup(frame, **kw)
+    # NaN as a string: NaN != NaN would make equal sets compare unequal
+    return out.dtypes, {
+        (r["vec_id"], r["cell"], r["component"],
+         "NaN" if r["cos_centroid"] != r["cos_centroid"] else r["cos_centroid"],
+         r["keep"])
+        for r in out.collect()
+    }
+
+
+@pytest.mark.parametrize(
+    "case",
+    [
+        "planted",
+        "vectorized_k_over_32",
+        "coarse_train_sample",
+        "exact_duplicates_fold",
+        "exact_duplicates_vectorized",
+        "empty",
+        "empty_k3",
+    ],
+)
+def test_semdedup_driver_and_spark_paths_agree(spark, monkeypatch, case):
+    """Below ``_DRIVER_SEMDEDUP_BYTES`` semdedup runs its pair, component
+    and survivor stages on the driver; the decision set and its schema
+    must be the Spark path's exactly — including pairs exactly at eps
+    (exact duplicates at eps=1.0) on both pair kernels."""
+    import math
+
+    sd = importlib.import_module("dmshadoop_spark.dedup.semdedup")
+
+    frame, kw = _semdedup_case(spark, case)
+    on_driver = _decision_set(sd, monkeypatch, math.inf, frame, **kw)
+    in_spark = _decision_set(sd, monkeypatch, 0, frame, **kw)
+    assert on_driver == in_spark
+    if case.startswith("empty"):
+        assert on_driver[1] == set()
+    else:
+        assert len(on_driver[1]) == frame.count()
+
+
+@pytest.mark.parametrize("fold", [True, False])
+def test_semdedup_pair_at_eps_agrees_on_both_paths(spark, monkeypatch, fold):
+    """A pair whose cosine is exactly eps under its pair stage's own
+    arithmetic — the left fold for an explicit k, the einsum for
+    k="auto" — and a hair below eps under the other: both execution
+    paths pair it, so the driver kernel reproduces each stage's digits."""
+    import math
+
+    import numpy as np
+
+    sd = importlib.import_module("dmshadoop_spark.dedup.semdedup")
+
+    def cosine(a, b, use_fold):
+        if use_fold:
+            dot = 0.0
+            for x, y in zip(a.tolist(), b.tolist()):
+                dot = dot + x * y
+        else:
+            dot = np.einsum("nd,kd->nk", a[None], b[None], optimize=False)[0, 0]
+        norms = [math.sqrt(sum(x * x for x in v.tolist())) for v in (a, b)]
+        return dot / (norms[0] * norms[1])
+
+    rng = np.random.default_rng(5)
+    while True:
+        a = rng.standard_normal(16)
+        b = a + 0.05 * rng.standard_normal(16)
+        own, other = cosine(a, b, fold), cosine(a, b, not fold)
+        if own > other:
+            break
+    frame = spark.createDataFrame(
+        [(0, a.tolist()), (1, b.tolist())], "vec_id long, embedding array<double>"
+    )
+    kw = dict(k=1 if fold else "auto", eps=own, shards=2)
+    on_driver = _decision_set(sd, monkeypatch, math.inf, frame, **kw)
+    in_spark = _decision_set(sd, monkeypatch, 0, frame, **kw)
+    assert on_driver == in_spark
+    assert {t[2] for t in on_driver[1]} == {0}  # one component: paired
+
+
+@pytest.mark.parametrize("fold", [True, False])
+def test_semdedup_driver_row_slices_keep_the_decisions(spark, monkeypatch, fold):
+    """A cell larger than one driver row slice: with the block cap forced
+    down to a handful of cells the driver pair kernel slices every block
+    to single rows, and the decisions still equal the Spark path's."""
+    import math
+
+    from dmshadoop_spark.similarity import assign
+
+    sd = importlib.import_module("dmshadoop_spark.dedup.semdedup")
+    rows = [
+        (i, [1.0, 0.01 * (i % 9), 0.002 * i, float(i % 3)]) for i in range(60)
+    ]
+    frame = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    kw = dict(k=1 if fold else "auto", eps=0.97, shards=2)
+    in_spark = _decision_set(sd, monkeypatch, 0, frame, **kw)
+    monkeypatch.setattr(assign, "_MAX_DIST_CELLS", 7)
+    on_driver = _decision_set(sd, monkeypatch, math.inf, frame, **kw)
+    assert on_driver == in_spark
+    components = {c for _, _, c, _, _ in in_spark[1]}
+    assert 1 < len(components) < 60  # pairs found, not one blob
+
+
+@pytest.mark.parametrize("k", [1, "auto"])
+def test_semdedup_degenerate_vectors_agree_on_both_paths(spark, monkeypatch, k):
+    """A zero embedding (and a zero centroid) has no cosine. Under ANSI
+    both paths raise the same division-by-zero error; with ANSI off both
+    give a null cos_centroid, a zero vector never pairs, and the survivor
+    of an all-null component is its smallest id (nulls sort first). A NaN
+    element gives NaN cosines, which Spark orders above every number: the
+    fold path (explicit k) pairs the row with its whole cell, the einsum
+    path (k="auto") pairs it with nothing — on both execution paths. A
+    null element nulls the row's norm and cosines: it pairs with nothing,
+    on either kernel."""
+    import math
+
+    from pyspark.errors import ArithmeticException
+
+    from dmshadoop_spark.similarity import assign
+
+    sd = importlib.import_module("dmshadoop_spark.dedup.semdedup")
+    schema = "vec_id long, embedding array<double>"
+    axes = spark.createDataFrame(
+        [
+            (0, [1.0, 0.0]),
+            (1, [-1.0, 0.0]),
+            (2, [0.0, 1.0]),
+            (3, [0.0, -1.0]),
+            (4, [0.0, 0.0]),
+        ],
+        schema,
+    )
+    with_nan = spark.createDataFrame(
+        _planted_rows() + [(6, [float("nan"), 0.0, 0.0, 0.0])], schema
+    )
+    for limit in (math.inf, 0):
+        with pytest.raises(ArithmeticException, match="DIVIDE_BY_ZERO"):
+            _decision_set(sd, monkeypatch, limit, axes, k=k, eps=-2.0, shards=2)
+    # the einsum assignment (forced for every k) gives a null-element row
+    # a cell, so it reaches the pair stage; the literal one drops it
+    with_null = spark.createDataFrame(
+        _planted_rows() + [(6, [1.0, None, 0.0, 0.0])], schema
+    )
+    with monkeypatch.context() as m:
+        m.setattr(assign, "LITERAL_MAX_CENTROIDS", 0)
+        on_driver, in_spark = (
+            _decision_set(sd, m, limit, with_null, k=k, eps=-2.0, shards=2)
+            for limit in (math.inf, 0)
+        )
+    assert on_driver == in_spark
+    null_row = next(t for t in on_driver[1] if t[0] == 6)
+    assert null_row[2:] == (6, None, True)
+    prior = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        got = {}
+        for name, frame, eps in (("axes", axes, -2.0), ("nan", with_nan, 0.95)):
+            on_driver, in_spark = (
+                _decision_set(sd, monkeypatch, limit, frame, k=k, eps=eps, shards=2)
+                for limit in (math.inf, 0)
+            )
+            assert on_driver == in_spark, name
+            got[name] = on_driver[1]
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prior)
+    # the centroid is the zero mean: every cos_centroid is null; the four
+    # axis vectors form one component (eps -2 admits every pair) whose
+    # survivor is id 0; the zero vector stays alone and keeps itself
+    assert got["axes"] == {
+        (0, 1, 0, None, True),
+        (1, 1, 0, None, False),
+        (2, 1, 0, None, False),
+        (3, 1, 0, None, False),
+        (4, 1, 4, None, True),
+    }
+    nan_row = next(t for t in got["nan"] if t[0] == 6)
+    assert nan_row[3] == "NaN"
+    if k == 1:
+        assert {t[2] for t in got["nan"]} == {0}
+    else:
+        assert nan_row[2] == 6 and nan_row[4]
+
+
+@pytest.mark.parametrize("fold", [True, False])
+def test_semdedup_dense_cell_past_the_edge_cap_runs_the_spark_plan(
+    spark, monkeypatch, fold
+):
+    """The execution rule bounds pairs as well as bytes: a dense single
+    cell whose pairs exceed components.DRIVER_UNION_FIND_MAX_EDGES drops
+    the driver attempt and the call returns the Spark plan's decisions.
+    Under the cap the same corpus stays on the driver."""
+    import math
+
+    from dmshadoop_spark.dedup import components
+
+    sd = importlib.import_module("dmshadoop_spark.dedup.semdedup")
+    rows = [(i, [1.0, 0.001 * i, 0.002 * (i % 5)]) for i in range(30)]
+    frame = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    kw = dict(k=1 if fold else "auto", eps=0.5, shards=2)
+    in_spark = _decision_set(sd, monkeypatch, 0, frame, **kw)
+
+    attempts = []
+    on_driver = sd._semdedup_on_driver
+
+    def spy(*args, **kwargs):
+        attempts.append(on_driver(*args, **kwargs))
+        return attempts[-1]
+
+    monkeypatch.setattr(sd, "_semdedup_on_driver", spy)
+    assert _decision_set(sd, monkeypatch, math.inf, frame, **kw) == in_spark
+    assert attempts[-1] is not None  # 435 pairs: under the real cap
+    monkeypatch.setattr(components, "DRIVER_UNION_FIND_MAX_EDGES", 100)
+    assert _decision_set(sd, monkeypatch, math.inf, frame, **kw) == in_spark
+    assert attempts[-1] is None
+    assert {c for _, _, c, _, _ in in_spark[1]} == {0}  # one dense component
+
+
+@pytest.mark.parametrize(
+    "qid", ["x35_semdedup", "x35b_semdedup_autok", "x35c_semdedup_coarse"]
+)
+def test_x35_family_digests_equal_on_both_paths(spark, sf_dir, monkeypatch, qid):
+    """The pinned x35-family entries digest the same decision set on the
+    driver path and on the Spark path."""
+    import math
+
+    from dmshadoop_spark import registry
+
+    sd = importlib.import_module("dmshadoop_spark.dedup.semdedup")
+    registry.load_all()
+    digests = []
+    for limit in (math.inf, 0):
+        monkeypatch.setattr(sd, "_DRIVER_SEMDEDUP_BYTES", limit)
+        digests.append(
+            {r["digest"] for r in registry.QUERIES[qid](spark, sf_dir).collect()}
+        )
+    assert digests[0] == digests[1] and len(digests[0]) == 1
+
+
+def test_x35b_on_the_driver_starts_at_most_8_jobs(spark, sf_dir, monkeypatch):
+    """x35b at the test SF takes the driver path: the parquet schema read,
+    the count, the k=1 mean, one collect and the digest's collect — at
+    most 8 Spark jobs. With the threshold at 0 the Spark path starts more."""
+    from dmshadoop_spark.queries.llm import x35b_semdedup_autok
+    from tests.test_dms import _jobs_started
+
+    sd = importlib.import_module("dmshadoop_spark.dedup.semdedup")
+
+    def run():
+        return x35b_semdedup_autok(spark, sf_dir).collect()
+
+    run()  # warm: the first call also pays one-off planning jobs
+    rows, jobs = _jobs_started(spark, run)
+    assert len(jobs) <= 8, jobs
+    monkeypatch.setattr(sd, "_DRIVER_SEMDEDUP_BYTES", 0)
+    spark_rows, spark_jobs = _jobs_started(spark, run)
+    assert len(spark_jobs) > len(jobs)
+    assert {r["digest"] for r in rows} == {r["digest"] for r in spark_rows}
+
+
+def test_kmeans_k1_is_the_lloyd_mean(spark):
+    """k=1 skips Lloyd's rounds: one aggregation returns exactly what the
+    loop returns for n_iter = 1..4, with and without a train sample; with
+    n_iter=0 it is still the init row (the seeded order's first vector)."""
+    import numpy as np
+
+    from dmshadoop_spark.functions.vectors import as_double
+    from dmshadoop_spark.similarity.kmeans import _lloyd_loop, kmeans_centroids
+
+    df = _clustered_corpus(spark, n=90)
+    vecs = df.select(as_double("embedding").alias("_v"))
+    init = kmeans_centroids(df, k=1, n_iter=0, seed=3, id_col="vec_id")
+    first = (
+        df.orderBy(F.xxhash64("vec_id", F.lit(3)), "vec_id")
+        .select("embedding")
+        .first()[0]
+    )
+    assert init.shape == (1, 16)
+    assert np.array_equal(init[0], np.array(first, dtype=np.float64))
+    for m in range(1, 5):
+        fast = kmeans_centroids(df, k=1, n_iter=m, seed=3, id_col="vec_id")
+        assert np.array_equal(fast, _lloyd_loop(vecs, init, m, None)), m
+    sample = df.orderBy(F.xxhash64("vec_id", F.lit(3)), "vec_id").limit(40)
+    fast = kmeans_centroids(
+        df, k=1, n_iter=2, seed=3, id_col="vec_id", train_sample=40
+    )
+    assert np.array_equal(
+        fast,
+        _lloyd_loop(sample.select(as_double("embedding").alias("_v")), init, 2, None),
+    )
+
+
+def test_vectorized_pair_stage_builds_without_user_warning(spark):
+    """The grouped pair kernel is unannotated, so building the vectorized
+    pair stage does not make PySpark warn that it cannot infer the eval
+    type from partial type hints."""
+    import warnings
+
+    from dmshadoop_spark.dedup import blocked_cosine_pairs
+
+    df = spark.createDataFrame(
+        [(1, 1, [1.0, 0.0]), (1, 2, [1.0, 0.01])],
+        "blk long, vid long, emb array<double>",
+    )
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        pairs = blocked_cosine_pairs(
+            df, "blk", "vid", "emb", 0.9, 2, vectorized=True
+        )
+    assert not [w for w in caught if issubclass(w.category, UserWarning)]
+    assert {(r["vec_a"], r["vec_b"]) for r in pairs.collect()} == {(1, 2)}
+
+
+def test_components_driver_route_keeps_the_id_type(spark):
+    """The union-find route returns an Arrow-built frame in the caller's
+    id type — int, bigint and string ids alike."""
+    from dmshadoop_spark.dedup import connected_components
+
+    for t, edges, want in (
+        ("int", [(1, 2), (2, 3), (7, 9)], {(1, 1), (2, 1), (3, 1), (7, 7), (9, 7)}),
+        ("bigint", [(2**40, 5)], {(2**40, 5), (5, 5)}),
+        ("string", [("b", "a"), ("c", "b")], {("a", "a"), ("b", "a"), ("c", "a")}),
+    ):
+        df = spark.createDataFrame(edges, f"src {t}, dst {t}")
+        out = connected_components(df)
+        assert out.dtypes == [("node", t), ("comp", t)]
+        assert {(r["node"], r["comp"]) for r in out.collect()} == want

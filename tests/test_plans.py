@@ -497,23 +497,27 @@ def test_digest_is_o_n_in_plan(spark):
 def test_components_checkpoint_edges_once(spark):
     """connected_components must not re-execute the caller's edge plan per
     propagation round (round-7 sf1 probe: x35's 24s pair subtree re-ran
-    ~10×). The checkpoint turns the edge source into an ExistingRDD scan,
-    so the ORIGINAL edge-generating plan must be absent from the result's
-    physical plan."""
+    ~10×). On the distributed loop the checkpoint turns the edge source
+    into an ExistingRDD scan; the driver union-find returns a local Arrow
+    table. Either way the ORIGINAL edge-generating plan must be absent
+    from the result's physical plan."""
     from dmshadoop_spark.dedup.components import connected_components
 
     edges = spark.range(100).selectExpr(
         "id AS src", "CASE WHEN id % 10 = 0 THEN id + 1 ELSE id - 1 END AS dst"
     )
-    comps = connected_components(edges, "src", "dst")
-    p = spark._jvm.PythonSQLUtils.explainString(
-        comps._jdf.queryExecution(), "formatted"
-    )
-    assert "Scan ExistingRDD" in p  # checkpointed labels AND edges
-    assert "Range (0, 100" not in p  # the edge-generating plan is gone
-    # semantics unchanged: chain pairs collapse to min-label components
-    rows = {r["node"]: r["comp"] for r in comps.collect()}
-    assert rows[1] == 0 and rows[11] == 10
+    for max_edges, scan in ((0, "Scan ExistingRDD"), (10**6, "LocalTableScan")):
+        comps = connected_components(
+            edges, "src", "dst", driver_max_edges=max_edges
+        )
+        p = spark._jvm.PythonSQLUtils.explainString(
+            comps._jdf.queryExecution(), "formatted"
+        )
+        assert scan in p  # checkpointed labels AND edges, or a local table
+        assert "Range (0, 100" not in p  # the edge-generating plan is gone
+        # semantics unchanged: chain pairs collapse to min-label components
+        rows = {r["node"]: r["comp"] for r in comps.collect()}
+        assert rows[1] == 0 and rows[11] == 10
 
 
 def test_bigram_lm_no_literal_map_above_threshold(spark, sf_dir, monkeypatch):
