@@ -6,9 +6,11 @@ events documents embeddings — one parquet file per table under an sf dir.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import TimestampNTZType, TimestampType
+from pyspark.sql.types import StructType, TimestampNTZType, TimestampType
 
 TABLES = (
     "region",
@@ -25,6 +27,18 @@ TABLES = (
 
 DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 
+# The session confs that change what Spark infers from a parquet footer.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+# (path, st_size, st_mtime_ns, inference confs) -> the schema Spark
+# inferred; one dict get or set is atomic, so threads need no lock
+_SCHEMAS: dict[tuple, StructType] = {}
+
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one testdata table. Plain parquet scan → Catalyst gets full
@@ -35,13 +49,16 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     the DuckDB oracle regardless of host time zone. events.ts is stored as
     parquet TIMESTAMP(NANOS), which Spark's reader rejects outright — we use
     the designed escape hatch (nanosAsLong) and rebuild the timestamp at
-    microsecond precision (exactly what DuckDB's reader keeps)."""
+    microsecond precision (exactly what DuckDB's reader keeps).
+
+    The schema Spark infers is remembered per file (``_read_parquet``), so
+    only the first load of a file starts the inference job."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
     path = f"{sf_dir}/{name}.parquet"
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
+        df = _read_parquet(spark, path)
         # Testdata vintages differ: TIMESTAMP(NANOS) parquet surfaces as
         # BIGINT nanos under nanosAsLong (older driver runs), TIMESTAMP(µs)
         # reads as a timestamp directly (current runs). Normalize both to
@@ -64,10 +81,30 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         elif isinstance(ts_type, TimestampType):
             df = df.withColumn("ts", F.col("ts").cast(TimestampNTZType()))
         return df
-    df = spark.read.parquet(path)
+    df = _read_parquet(spark, path)
     for field in df.schema.fields:
         if isinstance(field.dataType, TimestampType):
             df = df.withColumn(field.name, F.col(field.name).cast(TimestampNTZType()))
+    return df
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without the schema-inference job when
+    this file, unchanged (size and mtime), was already read under the same
+    inference confs: the remembered schema is passed to the reader."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        # not a local file (a URI, or missing): Spark reads it and reports
+        # its own error
+        return spark.read.parquet(path)
+    key = (os.path.abspath(path), st.st_size, st.st_mtime_ns,
+           tuple(spark.conf.get(c) for c in _INFERENCE_CONFS))
+    schema = _SCHEMAS.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = df.schema
     return df
 
 

@@ -4,20 +4,93 @@ reference's unfinished Solr delegation (src/DMS.py:345-356, README.md:24
 
 ``build_inverted_index`` materializes the derived index table once per
 corpus snapshot (tokenize → explode → partial-count → shuffle on term);
-``tfidf_search`` answers queries from it with a broadcast join — the
-per-query cost is proportional to the posting lists touched, not the
-corpus. This is the library behind queries t2-t5. DocumentStore.search
-does not use it: the store writes a postings file beside every data file
-and answers from those on the driver (dms/store.py).
+``tfidf_search`` answers queries from it with an ``isin`` filter on the
+query's terms — the per-query cost is proportional to the posting lists
+touched, not the corpus. This is the library behind queries t2-t5.
+DocumentStore.search does not use it: the store writes a postings file
+beside every data file and answers from those on the driver
+(dms/store.py).
+
+Execution rule: ``tfidf_search`` answers on the driver when all four of
+these hold, and runs its Spark plan otherwise:
+
+  * ``n_docs`` is an int > 0 (Spark's ``ln`` gives null at n ≤ 0);
+  * Spark's cache holds ``index``'s plan and has fully materialized it
+    (``persist()`` then an action). A frame derived from the index has a
+    plan, and no cache entry, of its own;
+  * that cache's in-memory size (``sizeInBytesStats``) is at most
+    ``_DRIVER_INDEX_BYTES``;
+  * the postings copy held for ``index`` was taken from that same cache
+    entry (its RDD id; ids are never reused within an application and
+    change on unpersist/re-persist, so a stale copy is never served).
+
+The first search of such an index collects its (term, doc_id, tf,
+doc_freq) rows once through Arrow — one job — and keeps them, grouped
+by term, in a weak-keyed map that frees them with the frame. That search
+and every later one are scored in numpy and returned through
+``createDataFrame(pyarrow.Table)``, a local relation: collecting it
+starts no job. Like a search server's in-memory index, the gain is in
+several searches per persisted index. The numbers are the Spark plan's:
+``idf = ln(n / doc_freq)`` by the JVM's ``StrictMath.log`` (numpy's log
+differs in the last bits), ``tf * idf`` summed per doc_id, HALF_UP to 4
+decimals on the double's shortest decimal form as Spark's ``Round``
+does, ranked by (score desc, doc_id asc nulls first). Only the order in
+which a document's terms are summed may differ, as it may between two
+runs of the Spark plan; that moves a rounded score only when the sum
+sits within a few ulps of a rounding boundary.
+
+Measured on a 4-vCPU host: 8 three-term searches after ``persist();
+count()`` of the documents of testdata sf0.1 and of tools/gen_scale.py's
+replicas of it; warm figures, first-in-process figures in brackets:
+
+  corpus  postings  cache      8 searches       first driver  driver
+                               Spark / driver   search        RSS growth
+  sf0.1   116k      3.6 MiB    3.2 / 0.7 s      0.39 s        +6-13 MiB
+  ×10     1.16M     36.0 MiB   4.5 / 0.8 s      0.51 s        +95-105 MiB
+  ×18     2.09M     64.8 MiB   4.7 / 1.3 s      0.90 (2.0) s  +86-177 MiB
+                                  (just over the bound: Spark path)
+  ×40     4.65M     144.1 MiB  5.8 / 2.5 s      1.82 (2.9) s  +209-352 MiB
+
+A Spark search took 0.38-0.70 s warm (2 jobs), a driver search after the
+first 39-97 ms, and both paths gave the same answers everywhere. The
+first driver search costs about one Spark search at 36 MiB and 2.6 at
+144 MiB, so the driver path loses only to an index searched once or
+twice; ``_DRIVER_INDEX_BYTES`` = 64 MiB holds that first search under
+about 1.5 Spark searches and the driver's extra memory under about
+0.2 GiB.
+
+Jobs the Spark plan starts per search, counted at sf0.01 and sf0.1: an
+int ``n_docs`` search is 2 jobs over a persisted index and 4 over an
+unpersisted one; the DataFrame ``n_docs`` form (t4b) is 6, plus one
+schema-inference job when t4b's ``load_table`` first reads the file.
 """
 
 from __future__ import annotations
 
+import threading
+import weakref
+from decimal import ROUND_HALF_UP, Context, Decimal
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
+from pyspark.sql.types import DoubleType, StructField, StructType
 
 from dmshadoop_spark.functions.text import tokenize
+
+# Cached in-memory size at or under which a persisted index is searched on
+# the driver; a bound on the first search's collect and on driver memory
+# (module docstring).
+_DRIVER_INDEX_BYTES = 64 << 20
+
+# index frame -> (cache RDD id, postings copy); see _held_postings
+_HELD: "weakref.WeakKeyDictionary[DataFrame, tuple[int, _Postings]]" = (
+    weakref.WeakKeyDictionary()
+)
+_HELD_LOCK = threading.Lock()
 
 
 def build_inverted_index(
@@ -199,18 +272,27 @@ def tfidf_search(
 
     ``n_docs`` is either a plain int or a 1-row DataFrame with an
     ``n_docs`` column (e.g. ``docs.agg(count(*))``): the DataFrame form
-    folds the corpus count into the plan as a broadcast cross join — one
-    job, no driver-side action — and on parquet that count branch is
-    metadata-only (reads zero data columns).
+    folds the corpus count into the plan as a broadcast cross join, so no
+    driver-side action computes it first (t4b's search is 6 jobs at
+    sf0.01; on parquet that count branch reads zero data columns).
+
+    ``index`` is ``build_inverted_index``'s (or ``merge_postings``')
+    output: ``tf`` and ``doc_freq`` are counts, never null.
 
     Deterministic: score rounded to 4 decimals before ranking, ties broken
-    on doc_id — the same contract as query t4.
+    on doc_id — the same contract as query t4. A persisted, materialized
+    small index with an int ``n_docs`` is answered on the driver (module
+    docstring, "Execution rule"); the answer is the Spark plan's.
     """
     terms = [t for t in query.lower().split() if t]
     if not terms:
         return index.select("doc_id").limit(0).withColumn(
             "score", F.lit(0.0)
         )
+    if isinstance(n_docs, int) and n_docs > 0:
+        held = _held_postings(index)
+        if held is not None:
+            return held.search(index, float(n_docs), terms, k)
     matched = index.filter(F.col("term").isin(*terms))
     if isinstance(n_docs, DataFrame):
         matched = matched.crossJoin(broadcast(n_docs))
@@ -222,6 +304,103 @@ def tfidf_search(
         F.round(F.sum(F.col("tf") * idf), 4).cast("double").alias("score")
     )
     return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+
+
+def _held_postings(index: DataFrame) -> "_Postings | None":
+    """The driver copy of ``index``'s postings when the execution rule
+    allows one, collecting it on first use; None sends the search to the
+    Spark plan."""
+    cached = (
+        index.sparkSession._jsparkSession.sharedState()
+        .cacheManager().lookupCachedData(index._jdf)
+    )
+    if cached.isEmpty():
+        return None
+    builder = cached.get().cachedRepresentation().cacheBuilder()
+    if not builder.isCachedColumnBuffersLoaded():
+        return None
+    if builder.sizeInBytesStats().value() > _DRIVER_INDEX_BYTES:
+        return None
+    rdd_id = builder.cachedColumnBuffers().id()
+    with _HELD_LOCK:
+        entry = _HELD.get(index)
+    if entry is not None and entry[0] == rdd_id:
+        return entry[1]
+    held = _Postings(
+        index.select("term", "doc_id", "tf", "doc_freq").toArrow()
+    )
+    with _HELD_LOCK:
+        _HELD[index] = (rdd_id, held)
+    return held
+
+
+class _Postings:
+    """One index's postings on the driver, grouped by term: the rows of
+    term ``w`` are ``rows.take(order[start:stop])`` for
+    ``(start, stop) = spans[w]``."""
+
+    def __init__(self, table: pa.Table):
+        codes = pc.dictionary_encode(table.column("term").combine_chunks())
+        ids = codes.indices.to_numpy(zero_copy_only=False)
+        counts = np.bincount(ids, minlength=len(codes.dictionary))
+        stops = np.cumsum(counts)
+        self.spans = dict(zip(
+            codes.dictionary.to_pylist(),
+            zip((stops - counts).tolist(), stops.tolist()),
+        ))
+        self.order = np.argsort(ids, kind="stable")
+        self.rows = table.select(["doc_id", "tf", "doc_freq"]).combine_chunks()
+
+    def search(self, index: DataFrame, n: float, terms: list[str],
+               k: int) -> DataFrame:
+        spans = [self.spans[w] for w in set(terms) if w in self.spans]
+        rows = self.rows.take(np.concatenate(
+            [self.order[a:b] for a, b in spans] or [np.empty(0, np.int64)]
+        ))
+        # one ln per distinct doc_freq (one per term), by the JVM's
+        # StrictMath as Spark's Log computes it
+        df = rows.column("doc_freq").to_numpy(zero_copy_only=False)
+        ratios, inverse = np.unique(n / df.astype(np.float64),
+                                    return_inverse=True)
+        ln = index.sparkSession._jvm.java.lang.StrictMath.log
+        idf = pa.array(np.array([ln(float(r)) for r in ratios])[inverse])
+        sums = pa.table({
+            "doc_id": rows.column("doc_id"),
+            "s": pc.multiply(pc.cast(rows.column("tf"), pa.float64()), idf),
+        }).group_by("doc_id").aggregate([("s", "sum")])
+        raw = sums.column("s_sum").to_numpy()
+        # rounding moves a score by at most 5e-5, so nothing further below
+        # the k-th raw score can reach the k-th rounded one
+        floor = np.partition(raw, -k)[-k] - 1e-4 if len(raw) > k else -np.inf
+        keep = raw >= floor
+        top = sorted(
+            zip(sums.column("doc_id").filter(pa.array(keep)).to_pylist(),
+                map(_round4, raw[keep].tolist())),
+            key=lambda r: (-r[1], r[0] is not None, r[0]),  # nulls first
+        )[:k]
+        doc_field = index.schema["doc_id"]
+        schema = StructType([doc_field, StructField("score", DoubleType())])
+        table = pa.table({
+            "doc_id": pa.array([d for d, _ in top],
+                               rows.schema.field("doc_id").type),
+            "score": pa.array([s for _, s in top], pa.float64()),
+        })
+        return index.sparkSession.createDataFrame(table, schema=schema)
+
+
+def _round4(x: float) -> float:
+    """Spark's ``round(x, 4)`` of a double: HALF_UP on the double's
+    shortest decimal form (``BigDecimal(Double.toString(x))``), which
+    Python's ``round`` and ``pc.round`` (binary value) do not give —
+    0.12345 rounds to 0.1235. Enough digits for any finite double; + 0.0
+    drops the sign of a negative zero, which a BigDecimal has not."""
+    return float(
+        Decimal(repr(x)).quantize(_SCALE_4, context=_EXACT_HALF_UP)
+    ) + 0.0
+
+
+_SCALE_4 = Decimal("0.0001")
+_EXACT_HALF_UP = Context(prec=400, rounding=ROUND_HALF_UP)
 
 
 def parse_query_string(q: str) -> tuple[dict[str, str], list[str]]:
