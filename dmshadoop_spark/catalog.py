@@ -8,6 +8,8 @@ from __future__ import annotations
 
 import os
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType, TimestampNTZType, TimestampType
@@ -46,10 +48,16 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
     Timestamp normalization: every timestamp column is surfaced as
     TIMESTAMP_NTZ (naive UTC wall time) so results compare bit-for-bit with
-    the DuckDB oracle regardless of host time zone. events.ts is stored as
-    parquet TIMESTAMP(NANOS), which Spark's reader rejects outright — we use
-    the designed escape hatch (nanosAsLong) and rebuild the timestamp at
-    microsecond precision (exactly what DuckDB's reader keeps).
+    the DuckDB oracle regardless of host time zone. Older testdata stores
+    events.ts as parquet TIMESTAMP(NANOS), which Spark's reader rejects
+    outright — for such a file we set the designed escape hatch
+    (``spark.sql.legacy.parquet.nanosAsLong``) on the session, where it
+    stays set, and rebuild the timestamp at microsecond precision
+    (exactly what DuckDB's reader keeps). The file's footer, read with
+    pyarrow (no Spark job), tells which: an events file whose ts is
+    TIMESTAMP(µs) leaves the session conf as it was. A path that is not a
+    local file sets the conf too, and Spark reads it or reports its own
+    error.
 
     The schema Spark infers is remembered per file (``_read_parquet``), so
     only the first load of a file starts the inference job."""
@@ -57,7 +65,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
     path = f"{sf_dir}/{name}.parquet"
     if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # a path that is no local file (a URI, a directory, a missing
+        # file) keeps the escape hatch and is left to Spark to read
+        ts = pq.read_schema(path).field("ts").type if os.path.isfile(path) else None
+        if ts is None or pa.types.is_timestamp(ts) and ts.unit == "ns":
+            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         df = _read_parquet(spark, path)
         # Testdata vintages differ: TIMESTAMP(NANOS) parquet surfaces as
         # BIGINT nanos under nanosAsLong (older driver runs), TIMESTAMP(µs)

@@ -10,14 +10,14 @@ source of truth (SURVEY.md §1.3).
 Storage layout: MVCC generation snapshots. ``base/gen=N/`` holds the table
 at generation N and is immutable once committed. Inserts build generation
 N+1 by hardlinking gen=N's part-files plus the new ones (no data rewrite —
-see ``_commit``); updates write generation N+1 replacing the affected
-keys. Every commit goes through ``dmshadoop_spark/generations.py``, which
-owns the commit protocol (staging directory, ``_SUCCESS`` marker, one
-atomic rename, debris sweep, ``ConcurrentWriteError``): every commit is
-all-or-nothing and readers always see a complete snapshot — the answer
-to the reference's non-atomic two-store write (bug B5). On a production
-cluster the same API binds to Delta/Iceberg and deletes become
-MERGE/DELETE.
+see ``_commit``); an update rewrites only the part-file holding its row
+(copy-on-write) and hardlinks the rest. Every commit goes through
+``dmshadoop_spark/generations.py``, which owns the commit protocol
+(staging directory, ``_SUCCESS`` marker, one atomic rename, debris
+sweep, ``ConcurrentWriteError``): every commit is all-or-nothing and
+readers always see a complete snapshot — the answer to the reference's
+non-atomic two-store write (bug B5). On a production cluster the same
+API binds to Delta/Iceberg and deletes become MERGE/DELETE.
 
 Deletes are MERGE-ON-READ deletion vectors (round-10 verdict task 1 —
 the rewrite-excluding-predicate delete was the last full-rewrite path on
@@ -40,28 +40,29 @@ terms instead of re-tokenizing every document. ``_postings/`` is
 every commit carries it by hardlink together with the data files.
 Tombstones mask postings at search time. ``compact`` and ``update``
 rewrite the twins along with the data: on the driver they merge the old
-twins minus the dropped keys, in Spark tasks they re-tokenize the rows.
+twins minus the dropped keys, in Spark tasks ``compact`` re-tokenizes.
 
-Execution rule. The whole-snapshot rewrites, ``compact`` and
-``update``'s rewrite, choose their path by size; every other call keeps
-a fixed path. A Spark job costs a few hundred milliseconds of
-scheduling, which is the whole price of a small call.
+Execution rule. The one whole-snapshot rewrite, ``compact``, chooses
+its path by size; every other call keeps a fixed path. A Spark job
+costs a few hundred milliseconds of scheduling, which is the whole
+price of a small call.
 
-- ``compact`` and ``update``'s rewrite run on the driver through Arrow
-  when the generation's data files take at most ``_DRIVER_REWRITE_BYTES``
-  once decoded (``layout()["data_bytes"]``: the ``length`` column's sum,
-  so repeated contents count every time, plus the other columns'
-  uncompressed footer sizes). There ``_rewrite_on_driver`` masks, sorts
-  and slices the rows and merges the old postings twins instead of
-  re-tokenizing. Larger generations are rewritten in ``mapInArrow``
-  tasks, which report the files they wrote (``_write_in_tasks``).
+- ``compact`` runs on the driver through Arrow when the generation's
+  data files take at most ``_DRIVER_REWRITE_BYTES`` once decoded
+  (``layout()["data_bytes"]``: the ``length`` column's sum, so repeated
+  contents count every time, plus the other columns' uncompressed
+  footer sizes). There ``_rewrite_on_driver`` masks, sorts and slices
+  the rows and merges the old postings twins instead of re-tokenizing.
+  Larger generations are rewritten in ``mapInArrow`` tasks, which
+  report the files they wrote (``_write_in_tasks``).
 - The point calls (``download``, ``get_file_meta_data``,
   ``get_file_version``, ``get_lastest_version``, ``upload``, ``delete``,
-  ``delete_all_version`` and ``update``'s pre-checks) and ``search``
-  always run on the driver. They read the committed generation with
+  ``delete_all_version`` and ``update``) and ``search`` always run on
+  the driver. They read the committed generation with
   ``pyarrow.dataset`` filtered on ``name`` (or, for ``search``, on the
   postings twins' ``term``), so they read one name's or one term's row
-  groups, and apply its tombstones in memory.
+  groups, and apply its tombstones in memory. ``update`` streams the
+  one file it rewrites, so it holds one row group at a time.
 - ``bulk_ingest``, ``df()``, ``diff`` and ``delete_where``'s predicate
   scan take or return Spark frames and always run in Spark;
   ``delete_all`` commits an empty generation and reads nothing.
@@ -194,10 +195,9 @@ _ATTEMPTS_DIR = ".attempts"
 # reads only the row groups whose range holds one of its terms.
 _POSTINGS_ROW_GROUP = 16384
 
-# Whole-snapshot rewrites (``compact`` and ``update``'s rewrite) of a
-# generation whose data files take at most this many bytes once decoded
-# run on the driver: a bound on driver memory, see the module
-# docstring's execution rule.
+# ``compact`` of a generation whose data files take at most this many
+# bytes once decoded runs on the driver: a bound on driver memory, see
+# the module docstring's execution rule.
 _DRIVER_REWRITE_BYTES = 32 * 2**20
 
 # Upper bound on part files per bulk-delete tombstone commit (round-11
@@ -221,11 +221,14 @@ def _visible_files(dir_path: str) -> list[str]:
     ]
 
 
-def _link_visible(src_dir: str, dst_dir: str) -> None:
+def _link_visible(src_dir: str, dst_dir: str, skip: str | None = None) -> None:
     """Hardlink every visible data file from ``src_dir`` into ``dst_dir``
-    (copy on cross-device). Names are kept — part files carry a fresh
-    UUID, so files from different commits can't collide."""
+    (copy on cross-device), except the one named ``skip``. Names are kept
+    — part files carry a fresh UUID, so files from different commits
+    can't collide."""
     for src in _visible_files(src_dir):
+        if os.path.basename(src) == skip:
+            continue
         dst = os.path.join(dst_dir, os.path.basename(src))
         try:
             os.link(src, dst)
@@ -342,19 +345,42 @@ def _postings_of(docs: pa.Table) -> pa.Table:
     ).sort_by(_POSTINGS_ORDER)
 
 
+def _merged_postings(
+    path: str, drop: Callable[[pa.Table], pa.ChunkedArray], add: pa.Table
+) -> Iterable[pa.Table]:
+    """The postings file ``path`` minus the rows ``drop`` marks, plus the
+    postings ``add``, streamed in ``_POSTINGS_ORDER``: each row group of
+    ``path`` with the rows of ``add`` that sort before its last row, then
+    the rest of ``add``. One row group is held at a time."""
+    pf = pq.ParquetFile(path)
+    for i in range(pf.num_row_groups):
+        rows = pf.read_row_group(i).cast(_ARROW_POSTINGS_SCHEMA)
+        rows = rows.filter(pc.invert(drop(rows)))
+        if not rows.num_rows:
+            continue
+        both = pa.concat_tables([rows, add])
+        order = pc.sort_indices(both, sort_keys=_POSTINGS_ORDER)
+        cut = pc.index(order, rows.num_rows - 1).as_py() + 1
+        yield both.take(order[:cut])
+        add = both.take(order[cut:])
+    if add.num_rows:
+        yield add
+
+
 def _write_docs(
     docs: pa.Table | Iterable[pa.RecordBatch],
     dir_path: str,
-    postings: pa.Table | None = None,
+    postings: pa.Table | Iterable[pa.Table] | None = None,
 ) -> tuple[str, int] | None:
     """The one writer of document files. Streams ``docs`` (document rows,
     a table or record batches) batch by batch through one
     ``pq.ParquetWriter`` into a new part file under ``dir_path``, and
-    writes the part's postings twin, sorted by term in row groups of
-    ``_POSTINGS_ROW_GROUP``, under ``dir_path/_postings/`` with the same
-    file name. The twin is ``postings`` when given (the postings of
-    exactly these rows, sorted by ``_POSTINGS_ORDER``), else the rows are
-    tokenized batch by batch and only the postings are buffered. Returns
+    writes the part's postings twin, sorted by term in row groups of at
+    most ``_POSTINGS_ROW_GROUP``, under ``dir_path/_postings/`` with the
+    same file name. The twin is ``postings`` when given (the postings of
+    exactly these rows in ``_POSTINGS_ORDER``, a table or tables streamed
+    one at a time), else the rows are tokenized batch by batch and only
+    the postings are buffered. Returns
     (part file name, rows), or None when ``docs`` has no row (nothing is
     written).
 
@@ -397,13 +423,14 @@ def _write_docs(
     if twin is None:
         twin = pa.concat_tables(tokenized).sort_by(_POSTINGS_ORDER)
     os.makedirs(os.path.join(dir_path, _POSTINGS_DIR), exist_ok=True)
-    pq.write_table(
-        twin,
+    with pq.ParquetWriter(
         os.path.join(dir_path, _POSTINGS_DIR, part),
-        row_group_size=_POSTINGS_ROW_GROUP,
+        _ARROW_POSTINGS_SCHEMA,
         write_statistics=["term"],
         store_schema=False,
-    )
+    ) as writer:
+        for table in [twin] if isinstance(twin, pa.Table) else twin:
+            writer.write_table(table, row_group_size=_POSTINGS_ROW_GROUP)
     return part, rows
 
 
@@ -665,44 +692,29 @@ class DocumentStore:
         target_files: int = 1,
         cluster_by: list[str] | None = None,
     ) -> int | None:
-        """Rewrite the current snapshot into ``target_files`` part-files as
-        a NEW generation — the OPTIMIZE analogue. Hardlink-append commits
-        accumulate one part-file per insert; compaction restores scan
-        efficiency (fewer, larger row groups) without changing a single
-        row (``diff`` old→new is empty, pinned by test). It is also the
-        copy-on-write half of the merge-on-read delete design: ``df()``
-        already excludes tombstoned keys, so the rewritten generation
-        physically drops the deleted rows and carries NO tombstone
-        sidecar — reads after compaction are a pure scan again. Old
+        """Rewrite the current snapshot's live rows into ``target_files``
+        part-files as a NEW generation — the OPTIMIZE analogue, and the
+        copy-on-write half of the merge-on-read delete design: the result
+        carries no tombstones, and ``diff`` old→new is empty. Old
         generations stay time-travelable. Returns the new generation
         number.
 
-        Where it runs is the execution rule's: when the generation's data
-        files take at most ``_DRIVER_REWRITE_BYTES`` once decoded
-        (``layout()["data_bytes"]``), ``_rewrite_on_driver`` rewrites it
-        through Arrow with no Spark job and merges the postings twins;
-        otherwise a ``repartition`` (or ``repartitionByRange``) of
-        ``df()`` is written in ``mapInArrow`` tasks, which re-tokenize the
-        rows into new twins. Both give the same rows and postings.
+        The execution rule picks the path: at most
+        ``_DRIVER_REWRITE_BYTES`` decoded, ``_rewrite_on_driver`` (Arrow,
+        no Spark job, twins merged); above it, a ``repartition`` (or
+        ``repartitionByRange``) of ``df()`` written in ``mapInArrow``
+        tasks that re-tokenize the twins. Both give the same rows and
+        postings.
 
-        ``cluster_by`` (round 11): range-partition + sort the rewrite on
-        the given columns (``["name"]`` is the natural choice) so every
-        part file covers a DISJOINT key range — parquet footer min/max
-        stats then let the delete/download point probes skip every
-        non-matching file (the probe is the data-dependent part of a
-        deletion-vector delete; clustered, it reads ~one file instead
-        of scanning the generation). Same rows either way; only the
-        physical layout differs (disjoint ranges pinned by test). On the
-        driver the sorted rows are cut into ``target_files`` slices at
-        key boundaries, which gives the same disjoint ranges."""
+        ``cluster_by`` sorts the rewrite on the given columns (``["name"]``
+        is the natural choice) and gives every part file a DISJOINT key
+        range, so footer min/max statistics let the point reads skip every
+        other file. Same rows either way; only the layout differs."""
         gen = self._resolve(None)
         if gen is None:
             return None
-        if self._on_driver(gen):
-            return self._rewrite_on_driver(
-                gen, [], _ARROW_DOCUMENT_SCHEMA.empty_table(), target_files,
-                cluster_by,
-            )
+        if _decoded_bytes(self._data_files(gen)) <= _DRIVER_REWRITE_BYTES:
+            return self._rewrite_on_driver(gen, target_files, cluster_by)
         if cluster_by:
             snap = (
                 self.df()
@@ -715,33 +727,23 @@ class DocumentStore:
             lambda staging: _write_in_tasks(snap, staging), None
         )
 
-    def _on_driver(self, gen: int) -> bool:
-        """Whether a whole-snapshot rewrite of ``gen`` runs on the driver:
-        when its data files take at most ``_DRIVER_REWRITE_BYTES`` once
-        decoded."""
-        return _decoded_bytes(self._data_files(gen)) <= _DRIVER_REWRITE_BYTES
-
     def _rewrite_on_driver(
         self,
         gen: int,
-        drop: list[tuple[str, int]],
-        add: pa.Table,
         target_files: int = 1,
         cluster_by: list[str] | None = None,
     ) -> int:
-        """Rewrite generation ``gen`` on the driver through Arrow and commit
-        the result as a new generation with no base. The live rows are
-        ``gen``'s rows minus its tombstoned keys and the (name, version)
-        keys in ``drop``, plus the document rows ``add``; sorted by
-        ``cluster_by`` when given, they are cut into ``target_files``
-        contiguous slices (at ``cluster_by`` key boundaries, so clustered
-        files cover disjoint ranges as ``repartitionByRange`` gives), and
-        each slice is written by ``_write_docs``.
+        """``compact`` on the driver through Arrow: commit the live rows of
+        generation ``gen`` (its rows minus its tombstoned keys) as a new
+        generation with no base. Sorted by ``cluster_by`` when given, they
+        are cut into ``target_files`` contiguous slices (at ``cluster_by``
+        key boundaries, so clustered files cover disjoint ranges as
+        ``repartitionByRange`` gives), and each slice is written by
+        ``_write_docs``.
 
         The postings are merged, not rebuilt: ``gen``'s twins minus the
-        masked keys, plus the postings of ``add``, split per slice. A data
-        file without a twin is tokenized from its rows. Returns the new
-        generation number."""
+        tombstoned keys, split per slice. A data file without a twin is
+        tokenized from its rows. Returns the new generation number."""
         files = self._data_files(gen)
         bare = [f for f in files if not os.path.isfile(_twin(f))]
         twins = [_twin(f) for f in files if f not in bare]
@@ -752,24 +754,18 @@ class DocumentStore:
                 ds.dataset(bare, schema=_ARROW_DOCUMENT_SCHEMA).to_table()
             ),
         ]
-        masked = [
-            pa.Table.from_pylist(
-                [{"name": n, "version": v} for n, v in drop],
-                schema=_ARROW_TOMBSTONE_SCHEMA,
-            ),
-            ds.dataset(
-                self._tombstone_files(gen), schema=_ARROW_TOMBSTONE_SCHEMA
-            ).to_table(),
-        ]
-        dead = _keys(pa.concat_tables(masked)).combine_chunks()
+        tombs = ds.dataset(
+            self._tombstone_files(gen), schema=_ARROW_TOMBSTONE_SCHEMA
+        ).to_table()
+        dead = _keys(tombs).combine_chunks()
 
         def live(rows: pa.Table) -> pa.Table:
             return rows.filter(pc.invert(pc.is_in(_keys(rows), value_set=dead)))
 
-        docs = pa.concat_tables([live(docs), add])
-        postings = pa.concat_tables(
-            [*map(live, postings), _postings_of(add)]
-        ).sort_by(_POSTINGS_ORDER)
+        docs = live(docs)
+        postings = pa.concat_tables(map(live, postings)).sort_by(
+            _POSTINGS_ORDER
+        )
         n = docs.num_rows
         starts = None  # rows whose cluster_by key differs from the row before
         if cluster_by:
@@ -831,28 +827,32 @@ class DocumentStore:
         return generations.vacuum(self.base_dir, keep_last)
 
     def _commit(
-        self, stage: Callable[[str], object] | None, base: int | None
+        self,
+        stage: Callable[[str], object] | None,
+        base: int | None,
+        skip: str | None = None,
     ) -> int | None:
         """The one commit of every write, through ``generations.commit``.
         Its stage callback lets ``stage`` write the new files into the
         staging directory, then hardlinks ``base``'s data files, postings
         twins and tombstone sidecar into it (data is never copied; O(files)
-        metadata ops; ``base=None`` carries nothing — a full rewrite).
-        Returns the new generation number; a ``stage`` that returns False
-        staged nothing to commit, and then nothing is published and None
-        is returned."""
+        metadata ops; ``base=None`` carries nothing — a full rewrite). The
+        data file named ``skip`` and its twin are not carried: ``update``
+        staged their replacement. Returns the new generation number; a
+        ``stage`` that returns False staged nothing to commit, and then
+        nothing is published and None is returned."""
 
         def build(staging: str) -> bool:
             if stage is not None and stage(staging) is False:
                 return False
             if base is not None:
-                _link_visible(self._gen_path(base), staging)
+                _link_visible(self._gen_path(base), staging, skip)
                 for sidecar in (_TOMBSTONE_DIR, _POSTINGS_DIR):
                     src = os.path.join(self._gen_path(base), sidecar)
                     if os.path.isdir(src):
                         dst = os.path.join(staging, sidecar)
                         os.makedirs(dst, exist_ok=True)
-                        _link_visible(src, dst)
+                        _link_visible(src, dst, skip)
             return True
 
         return generations.commit(self.base_dir, build)
@@ -864,18 +864,9 @@ class DocumentStore:
         (name, version) tombstone parquet under ``_tombstones/``, through
         the shared ``_commit``. The rewrite that physically drops the
         rows is ``compact()`` — scheduled maintenance, not per-delete
-        cost.
-
-        The tombstone file is written by pyarrow ON THE DRIVER: key
-        sets are bounded Python lists (one per deleted document, same
-        cardinality class as the reference's per-document delete API),
-        and a Spark job for a few rows costs seconds of scheduling for
-        milliseconds of IO — measured 4.4 s/delete via
-        ``coalesce(1).write`` (a Python-created local relation spreads
-        over defaultParallelism slices, and coalesce(1) drains all of
-        them through one serial Python-runner task) vs ~0.15 s total
-        this way. The predicate-shaped bulk path is ``delete_where``,
-        which writes its key set distributed."""
+        cost. The tombstone file is written by pyarrow on the driver: the
+        key set is a bounded list, and a Spark write of it measured 4.4 s
+        per delete against ~0.15 s. The bulk path is ``delete_where``."""
         tbl = pa.Table.from_pylist(
             [{"name": n, "version": int(v)} for n, v in keys],
             schema=_ARROW_TOMBSTONE_SCHEMA,
@@ -897,13 +888,10 @@ class DocumentStore:
         matches). The predicate scan is the only data-dependent work
         (column-pruned — the content column is never read unless the
         predicate names it); data files are hardlinked unchanged, same
-        as ``delete``. The key set is written DISTRIBUTED into the staged
-        sidecar — through at most ``_TOMBSTONE_COMMIT_FILES`` tasks
-        (``coalesce``, a narrow dependency: no shuffle, no driver
-        collect), so a predicate matching millions of keys neither lands
-        on the driver nor serializes through one writer task (round-11
-        verdict task 4; the read side unions all sidecar part files). The
-        key count comes from the staged files' parquet footers."""
+        as ``delete``. The key set is written distributed into the staged
+        sidecar through at most ``_TOMBSTONE_COMMIT_FILES`` tasks
+        (``coalesce``: no shuffle, no driver collect); the key count comes
+        from the staged files' footers."""
         cond = F.expr(predicate) if isinstance(predicate, str) else predicate
         gen = self._resolve(None)
         if gen is None:
@@ -926,13 +914,13 @@ class DocumentStore:
         """Physical-layout facts for one committed generation: data file
         count, ``data_bytes`` (the bytes its data files take once decoded,
         which the execution rule compares with ``_DRIVER_REWRITE_BYTES`` to
-        tell where ``compact`` and ``update`` will run), tombstone
-        file/row counts, postings file/row counts, how many data files are
-        inode-shared with the PREVIOUS generation (the merge-on-read pin:
-        a delete commit shares every data file; a rewrite shares none),
-        and the store's committed ``generations`` count. Byte and row
-        counts come from the parquet footers and the ``length`` column,
-        read with pyarrow, so no Spark job runs."""
+        tell where ``compact`` will run), tombstone file/row counts,
+        postings file/row counts, how many data files are inode-shared
+        with the PREVIOUS generation (the merge-on-read pin: a delete
+        commit shares every data file, an update all but one, a compact
+        none), and the store's committed ``generations`` count. Byte and
+        row counts come from the parquet footers and the ``length``
+        column, read with pyarrow, so no Spark job runs."""
         gen = self._resolve(generation)
         committed = generations.committed(self.base_dir)
         data_files, tomb_files, postings_files = [], [], []
@@ -1054,52 +1042,59 @@ class DocumentStore:
         extra_meta: dict[str, str] | None = None,
     ) -> bool:
         """Overwrite a version in place (the reference's update is dead
-        code — bug, src/DMS.py:228). Delegates to the MERGE primitive
-        (operators/merge.py): matched rows take the replacement row's
-        columns, unmatched target rows pass through, and
-        ``insert_not_matched=False`` keeps the update-only contract —
-        one full-outer join instead of the bespoke anti-join ∪ union
-        rewrite this method carried before round 5, written in tasks
-        (``_write_in_tasks``).
-
-        That Spark rewrite runs only when the generation's data files take
-        more than ``_DRIVER_REWRITE_BYTES`` once decoded (the execution
-        rule); at or
-        under it, ``_rewrite_on_driver`` drops the old (name, version)
-        row, appends the replacement and writes one data file, with the
-        old postings twins merged and only the replacement tokenized, and
-        starts no Spark job."""
-        from dmshadoop_spark.operators.merge import merge_into
-
-        row = _pick(self._rows(name)[0], version or None)
+        code — bug B8, src/DMS.py:228); False when there is no such row.
+        Copy-on-write of the one data file that holds the row, as Delta
+        Lake's UPDATE, on the driver with no Spark job: the point read
+        finds the file, which is streamed one row group at a time into
+        ``_write_docs`` with the replacement at the old row's index (the
+        order and row-group sizes are kept), and its twin likewise through
+        ``_merged_postings`` (a file without a twin is tokenized). Every
+        other file is hardlinked, tombstones included, so the new
+        generation shares ``data_files - 1`` data files with the last."""
+        gen = self._resolve(None)
+        row = _pick(self._rows(name, ("__filename",), gen)[0], version or None)
         if row is None:
             return False
-        replacement = _make_row(name, row["version"], content, extra_meta)
-        gen = self._resolve(None)
-        if self._on_driver(gen):
-            self._rewrite_on_driver(
-                gen,
-                [(name, row["version"])],
-                pa.Table.from_pylist([replacement], schema=_ARROW_DOCUMENT_SCHEMA),
+        path, v = row["__filename"], row["version"]
+
+        def key(rows: pa.Table) -> pa.ChunkedArray:
+            same = pc.and_(
+                pc.equal(rows["name"], name), pc.equal(rows["version"], v)
             )
-            return True
-        merged = merge_into(
-            self.df(),
-            self.spark.createDataFrame([replacement], DOCUMENT_SCHEMA),
-            on=["name", "version"],
-            insert_not_matched=False,
+            return pc.fill_null(same, False)
+
+        replacement = pa.Table.from_pylist(
+            [_make_row(name, v, content, extra_meta)],
+            schema=_ARROW_DOCUMENT_SCHEMA,
         )
-        self._commit(lambda staging: _write_in_tasks(merged, staging), None)
+
+        def docs() -> Iterable[pa.RecordBatch]:
+            pf = pq.ParquetFile(path)
+            for i in range(pf.num_row_groups):
+                rows = pf.read_row_group(i).cast(_ARROW_DOCUMENT_SCHEMA)
+                at = pc.index(key(rows), True).as_py()
+                if at >= 0:
+                    rows = pa.concat_tables(
+                        [rows.slice(0, at), replacement, rows.slice(at + 1)]
+                    )
+                yield from rows.combine_chunks().to_batches()
+
+        twin = None
+        if os.path.isfile(_twin(path)):
+            twin = _merged_postings(_twin(path), key, _postings_of(replacement))
+        self._commit(
+            lambda staging: _write_docs(docs(), staging, twin),
+            gen,
+            os.path.basename(path),
+        )
         return True
 
     def delete(self, name: str, version: int | None = None) -> bool:
         """Delete one version (default: latest) — merge-on-read deletion
         vector: one tiny tombstone commit, ZERO data files read or
-        rewritten (the reference's delete, src/DMS.py:279-311, deleted
-        row+blob per document; the pre-round-11 implementation here
-        rewrote the whole snapshot per delete — full-partition rewrites
-        don't survive 100 TB). ``compact()`` is the scheduled rewrite
-        that folds tombstones into the data."""
+        rewritten (the reference deleted row+blob per document,
+        src/DMS.py:279-311). ``compact()`` folds tombstones into the
+        data."""
         row = _pick(self._rows(name)[0], version or None)
         if row is None:
             return False
@@ -1164,9 +1159,8 @@ class DocumentStore:
         Tokens: the content and the query are lowercased with Arrow's
         ``utf8_lower`` and split with ``utf8_split_whitespace``, so any
         Unicode whitespace (no-break space, em space, ...) separates
-        tokens. The earlier Spark scan split on the regex ``\\s``, which
-        is ASCII-only. Lowercasing is Unicode's simple case mapping, the
-        same for content and query ("İSTANBUL" and "İstanbul" both give
+        tokens. Lowercasing is Unicode's simple case mapping, the same for
+        content and query ("İSTANBUL" and "İstanbul" both give
         "istanbul").
 
         Runs on the driver, with no Spark job: it reads the postings rows

@@ -26,8 +26,10 @@ these hold, and runs its Spark plan otherwise:
 
 The first search of such an index collects its (term, doc_id, tf,
 doc_freq) rows once through Arrow — one job — and keeps them, grouped
-by term, in a weak-keyed map that frees them with the frame. That search
-and every later one are scored in numpy and returned through
+by term, in a map keyed weakly on the frame. Every frame that the same
+cache entry serves (equal plans, say two ``build_inverted_index(docs)``
+calls) shares that one copy, which is freed with the last of them.
+That search and every later one are scored in numpy and returned through
 ``createDataFrame(pyarrow.Table)``, a local relation: collecting it
 starts no job. Like a search server's in-memory index, the gain is in
 several searches per persisted index. The numbers are the Spark plan's:
@@ -86,7 +88,8 @@ from dmshadoop_spark.functions.text import tokenize
 # (module docstring).
 _DRIVER_INDEX_BYTES = 64 << 20
 
-# index frame -> (cache RDD id, postings copy); see _held_postings
+# index frame -> (cache RDD id, postings copy), one copy per cache RDD id
+# however many frames it serves; see _held_postings
 _HELD: "weakref.WeakKeyDictionary[DataFrame, tuple[int, _Postings]]" = (
     weakref.WeakKeyDictionary()
 )
@@ -308,8 +311,9 @@ def tfidf_search(
 
 def _held_postings(index: DataFrame) -> "_Postings | None":
     """The driver copy of ``index``'s postings when the execution rule
-    allows one, collecting it on first use; None sends the search to the
-    Spark plan."""
+    allows one, collecting it on the first use of its cache entry (a copy
+    taken through another frame that the entry serves is shared); None
+    sends the search to the Spark plan."""
     cached = (
         index.sparkSession._jsparkSession.sharedState()
         .cacheManager().lookupCachedData(index._jdf)
@@ -323,9 +327,10 @@ def _held_postings(index: DataFrame) -> "_Postings | None":
         return None
     rdd_id = builder.cachedColumnBuffers().id()
     with _HELD_LOCK:
-        entry = _HELD.get(index)
-    if entry is not None and entry[0] == rdd_id:
-        return entry[1]
+        held = next((h for rid, h in _HELD.values() if rid == rdd_id), None)
+        if held is not None:
+            _HELD[index] = (rdd_id, held)
+            return held
     held = _Postings(
         index.select("term", "doc_id", "tf", "doc_freq").toArrow()
     )

@@ -64,3 +64,52 @@ def test_rewritten_file_is_inferred_again(spark, tmp_path, monkeypatch):
     assert jobs == 1
     assert df.columns == ["doc_id", "text", "source"]
     assert [tuple(r) for r in df.collect()] == [(7, "c", "web")]
+
+
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01", "sf0.1"])
+def test_events_load_leaves_session_conf_as_it_was(spark, monkeypatch, sf):
+    """An events file whose ts is TIMESTAMP(µs) is loaded without setting
+    ``spark.sql.legacy.parquet.nanosAsLong``: the conf reads the same
+    before and after, and ts still surfaces as TIMESTAMP_NTZ."""
+    from pyspark.sql.types import TimestampNTZType
+
+    sf_dir = os.path.join(os.path.dirname(catalog.DEFAULT_SF_DIR), sf)
+    if not os.path.isdir(sf_dir):
+        pytest.skip(f"{sf_dir} not present")
+    conf = "spark.sql.legacy.parquet.nanosAsLong"
+    ts = pq.read_schema(f"{sf_dir}/events.parquet").field("ts").type
+    assert ts == pa.timestamp("us")
+    monkeypatch.setattr(catalog, "_SCHEMAS", {})
+    prior = spark.conf.get(conf)
+    spark.conf.set(conf, "false")  # so a leaked "true" shows
+    try:
+        before = spark.conf.get(conf)
+        df = catalog.load_table(spark, sf_dir, "events")
+        assert spark.conf.get(conf) == before == "false"
+    finally:
+        spark.conf.set(conf, prior)
+    assert isinstance(df.schema["ts"].dataType, TimestampNTZType)
+
+
+def test_events_path_that_is_no_file_is_left_to_spark(spark, tmp_path):
+    """An events path that is not a local file is read by Spark as before,
+    with the escape hatch set: a missing file raises Spark's own error,
+    and an events.parquet directory Spark wrote loads with ts as
+    TIMESTAMP_NTZ."""
+    from pyspark.errors import AnalysisException
+    from pyspark.sql.types import TimestampNTZType
+
+    conf = "spark.sql.legacy.parquet.nanosAsLong"
+    prior = spark.conf.get(conf)
+    try:
+        with pytest.raises(AnalysisException):
+            catalog.load_table(spark, str(tmp_path / "missing"), "events")
+        spark.sql(
+            "SELECT 1 AS id, TIMESTAMP '2024-01-02 03:04:05' AS ts"
+        ).write.parquet(str(tmp_path / "events.parquet"))
+        df = catalog.load_table(spark, str(tmp_path), "events")
+        assert spark.conf.get(conf) == "true"
+        assert isinstance(df.schema["ts"].dataType, TimestampNTZType)
+        assert df.count() == 1
+    finally:
+        spark.conf.set(conf, prior)

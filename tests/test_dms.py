@@ -1113,8 +1113,9 @@ def test_point_ops_run_no_spark_job(spark, store, monkeypatch):
     their job group sees zero Spark jobs, over Spark-written,
     Arrow-written and tombstoned rows alike, and so does collecting the
     search answer. An upload adds exactly one data file. A store this
-    small is also rewritten on the driver: compact and update start no
-    job either, until the rewrite threshold is 0."""
+    small is also compacted on the driver: compact starts no job either,
+    until the rewrite threshold is 0. update starts none at any
+    threshold."""
     from dmshadoop_spark.dms import store as store_mod
 
     _mixed_store(spark, store)
@@ -1176,13 +1177,14 @@ def test_point_ops_run_no_spark_job(spark, store, monkeypatch):
         ("doc-6.txt", 1, 1)
     ]
     # controls: a scan-shaped call in the same harness does start jobs,
-    # and so do the rewrites once the threshold sends them to Spark
+    # and so does compact once the threshold sends it to Spark; update
+    # does not, as it has no Spark path
     _, jobs = _jobs_started(spark, lambda: store.df().count())
     assert jobs
     monkeypatch.setattr(store_mod, "_DRIVER_REWRITE_BYTES", 0)
     for op, call in rewrites.items():
         _, jobs = _jobs_started(spark, call)
-        assert jobs, f"{op} at threshold 0 started no Spark job"
+        assert bool(jobs) == (op == "compact"), f"{op} at threshold 0: {jobs}"
 
 
 def test_rewrite_rule_counts_repeated_contents_decoded(spark, store, monkeypatch):
@@ -1419,10 +1421,8 @@ _search_ops = st.lists(
                 ("name = 'a.txt'", "length > 20", "length < 5", "version = 1")
             ),
         ),
-        # the last field of update and compact: rewrite on the driver
-        st.tuples(
-            st.just("update"), st.sampled_from(_NAMES), _texts, st.booleans()
-        ),
+        st.tuples(st.just("update"), st.sampled_from(_NAMES), _texts),
+        # the last field of compact: rewrite on the driver
         st.tuples(st.just("compact"), st.booleans(), st.booleans()),
         st.tuples(st.just("restore"), st.integers(min_value=0, max_value=9)),
         st.tuples(st.just("delete_all")),
@@ -1480,10 +1480,10 @@ def test_search_matches_python_recompute(
 ):
     """For random sequences of every write the store has — uploads of
     text (mixed case, Unicode whitespace) and binary content, delete,
-    delete_all_version, delete_where, update, compact (clustered or not;
-    update and compact each on the driver or in Spark), restore and
-    delete_all — after some text uploads, search after each
-    step equals a Python recompute over the live rows."""
+    delete_all_version, delete_where, update, compact (clustered or not,
+    on the driver or in Spark), restore and delete_all — after some text
+    uploads, search after each step equals a Python recompute over the
+    live rows."""
     store = DocumentStore(spark, str(tmp_path_factory.mktemp("dms_search")))
     for op in uploads + ops:
         kind = op[0]
@@ -1496,8 +1496,7 @@ def test_search_matches_python_recompute(
         elif kind == "delete_where":
             store.delete_where(op[1])
         elif kind == "update":
-            with _rewrite_path(op[3]):
-                store.update(op[1], op[2])
+            store.update(op[1], op[2])
         elif kind == "compact":
             with _rewrite_path(op[2]):
                 store.compact(cluster_by=["name"] if op[1] else None)
@@ -1536,7 +1535,8 @@ def test_unreported_task_attempt_files_are_never_published(
     (a failed, retried or duplicate attempt) must publish nothing: the
     commit moves only the reported files out of the per-attempt
     directories and removes the rest. The rewrite threshold is 0, so
-    compact and update run their Spark path here."""
+    bulk_ingest and compact write in tasks here (update, which writes on
+    the driver, plants nothing)."""
     import os
 
     import pyarrow as pa
@@ -1564,7 +1564,7 @@ def test_unreported_task_attempt_files_are_never_published(
     assert store.bulk_ingest(batch) == 6
     store.compact(2)
     assert store.update("doc-1.txt", b"new words")
-    assert len(planted) == 3
+    assert len(planted) == 2
     for gen in store.history():
         published = [
             fn
@@ -1660,10 +1660,11 @@ def _every_column(store):
 def test_task_rewrites_keep_every_column_under_session_tz(
     spark, store, monkeypatch
 ):
-    """compact and update rewrite rows inside mapInArrow tasks (the
-    rewrite threshold is 0, so both take their Spark path): every column
-    of every untouched row, modification_time (TIMESTAMP_NTZ) included,
-    comes back unchanged under a non-UTC session time zone."""
+    """compact rewrites rows inside mapInArrow tasks (the rewrite
+    threshold is 0, so it takes its Spark path), and update then rewrites
+    one of the files those tasks wrote: every column of every untouched
+    row, modification_time (TIMESTAMP_NTZ) included, comes back unchanged
+    under a non-UTC session time zone."""
     from dmshadoop_spark.dms import store as store_mod
 
     monkeypatch.setattr(store_mod, "_DRIVER_REWRITE_BYTES", 0)
@@ -1763,3 +1764,156 @@ def test_rewrite_paths_give_the_same_rows_and_postings(
     )
     assert t0 <= new[5] <= t1
     _twins_match_rows(store)
+
+
+def test_update_rewrites_only_the_file_that_holds_the_row(
+    spark, store, monkeypatch
+):
+    """On a multi-file store with tombstones, update is a copy-on-write of
+    the one data file that holds the row: no Spark job, even at rewrite
+    threshold 0; every other data file shared with the previous
+    generation; the tombstones kept; the new file's rows in the old
+    file's order with its twin equal to their postings; and diff showing
+    exactly the one update."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from dmshadoop_spark.dms import store as store_mod
+
+    monkeypatch.setattr(store_mod, "_DRIVER_REWRITE_BYTES", 0)
+    _mixed_store(spark, store)
+    store.delete("doc-5.txt")
+    prev = store.history()[-1]
+    lay = store.layout()
+    assert lay["data_files"] >= 3 and lay["tombstone_rows"] == 2
+    rows_before = _every_column(store)
+    done, jobs = _jobs_started(
+        spark, lambda: store.update("doc-6.txt", b"body 6 new")
+    )
+    assert done is True and jobs == []
+    cur = store.history()[-1]
+    after = store.layout()
+    assert after["data_files"] == lay["data_files"]
+    assert after["data_files_shared_with_prev"] == lay["data_files"] - 1
+    assert after["tombstone_files"] == lay["tombstone_files"]
+    assert after["tombstone_rows"] == lay["tombstone_rows"]
+    _twins_match_rows(store)
+    (old,) = set(map(os.path.basename, store._data_files(prev))) - set(
+        map(os.path.basename, store._data_files(cur))
+    )
+    (new,) = set(map(os.path.basename, store._data_files(cur))) - set(
+        map(os.path.basename, store._data_files(prev))
+    )
+
+    def keys(gen, fn):
+        path = os.path.join(store._gen_path(gen), fn)
+        return pq.read_table(path, columns=["name", "version"]).to_pylist()
+
+    assert keys(cur, new) == keys(prev, old)
+    assert {tuple(r) for r in store.diff(prev, cur).collect()} == {
+        ("update", "doc-6.txt", 1)
+    }
+    assert [r for r in _every_column(store) if r[0] != "doc-6.txt"] == [
+        r for r in rows_before if r[0] != "doc-6.txt"
+    ]
+    assert store.download("doc-6.txt") == b"body 6 new"
+    assert [tuple(r) for r in store.search("new").collect()] == [
+        ("doc-6.txt", 1, 1)
+    ]
+
+
+def test_update_gives_a_file_without_postings_twin_its_twin(store):
+    """update of a row whose data file has no postings twin writes that
+    file again with a twin, tokenized from its rows, after which search
+    answers from twins again."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from dmshadoop_spark.dms import store as store_mod
+
+    store.upload("a.txt", b"kept words")
+    store.upload("b.txt", b"lost words")
+    gen = store.history()[-1]
+    postings = os.path.join(store._gen_path(gen), "_postings")
+    os.remove(os.path.join(postings, sorted(os.listdir(postings))[0]))
+    with pytest.raises(RuntimeError, match="postings twin"):
+        store.search("words")
+    (bare,) = [
+        f for f in store._data_files(gen)
+        if not os.path.isfile(store_mod._twin(f))
+    ]
+    (name,) = pq.read_table(bare, columns=["name"]).column("name").to_pylist()
+    assert store.update(name, b"found words again")
+    _twins_match_rows(store)
+    assert [tuple(r) for r in store.search("words").collect()] == [
+        ("a.txt", 1, 1),
+        ("b.txt", 1, 1),
+    ]
+    assert [tuple(r) for r in store.search("again").collect()] == [
+        (name, 1, 1)
+    ]
+
+
+def test_update_streams_a_file_of_several_row_groups(
+    spark, store, monkeypatch
+):
+    """update rewrites a data file of uneven row groups one row group at a
+    time, never reading a whole file: the new file has the old one's rows
+    in the old order and the old row-group sizes, and its twin (of
+    several row groups, the replacement's terms landing in different
+    ones) equals the postings of its rows with no row group over the
+    bound."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from dmshadoop_spark.dms import store as store_mod
+
+    monkeypatch.setattr(store_mod, "_POSTINGS_ROW_GROUP", 5)
+    for i in range(12):
+        store.upload(f"doc-{i:02}.txt", f"word{i} common m{i % 3}".encode())
+    rows = store.df().orderBy("name").toArrow()
+    rows = pa.Table.from_batches(rows.to_batches(), rows.schema)
+    groups = [rows.slice(0, 5), rows.slice(5, 3), rows.slice(8)]
+    store._commit(
+        lambda staging: store_mod._write_docs(
+            [g.combine_chunks().to_batches()[0] for g in groups], staging
+        ),
+        None,
+    )
+    (path,) = store._data_files(store.history()[-1])
+
+    def sizes(f):
+        md = pq.ParquetFile(f).metadata
+        return [md.row_group(i).num_rows for i in range(md.num_row_groups)]
+
+    assert sizes(path) == [5, 3, 4]
+    assert len(sizes(store_mod._twin(path))) > 3
+    before = _every_column(store)
+
+    def whole_file(*args, **kwargs):
+        raise AssertionError("update read a whole file")
+
+    with monkeypatch.context() as m:
+        m.setattr(pq, "read_table", whole_file)
+        done, jobs = _jobs_started(
+            spark,
+            lambda: store.update("doc-06.txt", b"aaa common m0 zzz word6x"),
+        )
+    assert done is True and jobs == []
+    (new,) = store._data_files(store.history()[-1])
+    assert sizes(new) == [5, 3, 4]
+    assert pq.read_table(new, columns=["name"]).column(
+        "name"
+    ).to_pylist() == [f"doc-{i:02}.txt" for i in range(12)]
+    assert [r for r in _every_column(store) if r[0] != "doc-06.txt"] == [
+        r for r in before if r[0] != "doc-06.txt"
+    ]
+    assert store.download("doc-06.txt") == b"aaa common m0 zzz word6x"
+    _twins_match_rows(store)
+    assert max(sizes(store_mod._twin(new))) <= 5
+    assert [tuple(r) for r in store.search("zzz aaa").collect()] == [
+        ("doc-06.txt", 1, 2)
+    ]
+    assert store.search("word6").count() == 0

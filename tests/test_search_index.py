@@ -212,3 +212,34 @@ def test_changed_input_is_searched_after_re_persist(spark, tmp_path):
         assert jobs == 1  # a fresh copy of the new cache entry
     finally:
         index.unpersist()
+
+
+def test_frames_of_one_cache_entry_share_one_copy(spark, monkeypatch):
+    """Two build_inverted_index(docs) frames have equal plans, so one
+    persisted cache entry serves both: their searches collect the
+    postings once (one job in all) and hold one shared copy."""
+    rows = [(i, " ".join(["scan"] * (i % 3 + 1) + ["merge"] * (i % 2)))
+            for i in range(40)]
+    docs = spark.createDataFrame(rows, "doc_id bigint, text string")
+    first = ix.build_inverted_index(docs).persist()
+    first.count()
+    second = ix.build_inverted_index(docs)
+    collected = []
+    init = ix._Postings.__init__
+
+    def counted(self, table):
+        collected.append(table.num_rows)
+        init(self, table)
+
+    monkeypatch.setattr(ix._Postings, "__init__", counted)
+    try:
+        want, jobs_first = _jobs_started(
+            spark, lambda: _answer(first, 40, "merge scan", 5))
+        got, jobs_second = _jobs_started(
+            spark, lambda: _answer(second, 40, "merge scan", 5))
+        assert (jobs_first, jobs_second) == (1, 0)
+        assert got == want
+        assert len(collected) == 1
+        assert ix._HELD[first][1] is ix._HELD[second][1]
+    finally:
+        first.unpersist()
