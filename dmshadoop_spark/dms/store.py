@@ -39,57 +39,53 @@ terms instead of re-tokenizing every document. ``_postings/`` is
 ``_``-prefixed like ``_tombstones/``: the data scan never sees it, and
 every commit carries it by hardlink together with the data files.
 Tombstones mask postings at search time. ``compact`` and ``update``
-rewrite the twins along with the data: on the driver they merge the old
-twins minus the dropped keys, in Spark tasks ``compact`` re-tokenizes.
+rewrite the twins along with the data: they merge the old twins minus
+the dropped keys, and tokenize only the rows of a data file that has
+no twin.
 
-Execution rule. The one whole-snapshot rewrite, ``compact``, chooses
-its path by size; every other call keeps a fixed path. A Spark job
-costs a few hundred milliseconds of scheduling, which is the whole
-price of a small call.
+Execution rule. Every call has one fixed path; none chooses by size. A
+Spark job costs a few hundred milliseconds of scheduling, which is the
+whole price of a small call.
 
-- ``compact`` runs on the driver through Arrow when the generation's
-  data files take at most ``_DRIVER_REWRITE_BYTES`` once decoded
-  (``layout()["data_bytes"]``: the ``length`` column's sum, so repeated
-  contents count every time, plus the other columns' uncompressed
-  footer sizes). There ``_rewrite_on_driver`` masks, sorts and slices
-  the rows and merges the old postings twins instead of re-tokenizing.
-  Larger generations are rewritten in ``mapInArrow`` tasks, which
-  report the files they wrote (``_write_in_tasks``).
 - The point calls (``download``, ``get_file_meta_data``,
   ``get_file_version``, ``get_lastest_version``, ``upload``, ``delete``,
-  ``delete_all_version`` and ``update``) and ``search`` always run on
-  the driver. They read the committed generation with
-  ``pyarrow.dataset`` filtered on ``name`` (or, for ``search``, on the
-  postings twins' ``term``), so they read one name's or one term's row
-  groups, and apply its tombstones in memory. ``update`` streams the
-  one file it rewrites, so it holds one row group at a time.
+  ``delete_all_version`` and ``update``) and ``search`` run on the
+  driver. They read the committed generation with ``pyarrow.dataset``
+  filtered on ``name`` (or, for ``search``, on the postings twins'
+  ``term``), so they read one name's or one term's row groups, and
+  apply its tombstones in memory. ``update`` streams the one file it
+  rewrites, so it holds one row group at a time.
+- ``compact`` rewrites on the driver through Arrow at every size: it
+  reads the key columns of every data file, then each row group that
+  holds a live row and each twin once, spills them to memory-mapped
+  Arrow files and writes the output files from those, a row group at a
+  time (see ``_write_slices``).
 - ``bulk_ingest``, ``df()``, ``diff`` and ``delete_where``'s predicate
   scan take or return Spark frames and always run in Spark;
   ``delete_all`` commits an empty generation and reads nothing.
 
 Every document file, data part and postings twin together, is written
-by ``_write_docs``. Timing ``compact(cluster_by=["name"])`` both ways on
-a 4-vCPU host (store of versioned 10-100-word distinct text documents,
-9 data files, 2 tombstones; medians of 5 runs, 3 at the largest size;
-driver vs Spark; sizes by the footers, within 1% of the decoded bytes
-for distinct texts):
+by ``_write_docs``. Timing ``compact(cluster_by=["name"])`` on a 4-vCPU
+host shared with other work (store of versioned 10-100-word text
+documents over a 30-word vocabulary, 9 data files from ``bulk_ingest``
+and ``upload``, 2 tombstones; sizes decoded: the ``length`` column plus
+the other columns' uncompressed footer sizes). Wall time is the median
+of the warm calls (4 per fresh process, two processes at 114 MiB); peak
+RSS growth and peak heap (anonymous RSS) growth are those of each
+process's first call (their mean at 114 MiB). RSS also counts the
+pages of the memory-mapped spills that the call touched, which are file
+cache.
 
-    2.3 MiB (5k docs)      146 ms   vs  1041 ms
-    11.3 MiB (25k docs)    609 ms   vs  1860 ms
-    22.7 MiB (50k docs)   1059 ms   vs  2561 ms
-    45.2 MiB (100k docs)  2442 ms   vs  4952 ms
-    113 MiB (250k docs)   6175 ms   vs 11872 ms
+                          target_files=1            target_files=4
+                          wall    RSS    heap       wall    RSS    heap
+    2.3 MiB (5k docs)    146 ms   55 MiB  39 MiB    108 ms   40 MiB  25 MiB
+    11.4 MiB (25k docs)  662 ms  138 MiB  93 MiB    626 ms  110 MiB  64 MiB
+    22.9 MiB (50k docs)  1.23 s  200 MiB 116 MiB    1.50 s  167 MiB  89 MiB
+    45.8 MiB (100k docs) 3.09 s  270 MiB 112 MiB    2.84 s  258 MiB 104 MiB
+    114 MiB (250k docs)  6.22 s  530 MiB 189 MiB    6.58 s  526 MiB 191 MiB
 
-The driver path wins at every size measured, so the threshold is not a
-crossover: its lead falls from 7x to 2x as Spark's fixed cost stops
-mattering, but it does not end. What bounds it is driver memory, which
-grows with the decoded input, postings twins included: the 113 MiB
-rewrite above peaked at 0.94 GiB more driver RSS (8.4x its decoded
-bytes), and stores of 5k texts each repeated under 10 and 30 names
-peaked at 13.6x (17 MiB decoded, 5.4 MiB by the footers) and 11.4x
-(51 MiB decoded, 16 MiB by the footers). ``_DRIVER_REWRITE_BYTES`` is
-32 MiB, which keeps that peak under half a GiB at the highest ratio
-measured.
+At 114 MiB the heap holds 102 MiB of Arrow buffers at its peak, most of
+it the spilled twin's sort order (5.8M postings rows).
 
 Fixed reference bugs (SURVEY.md §2 notes):
   B1 — latest version is numeric max(version), not a string sort
@@ -115,6 +111,7 @@ from collections.abc import Callable, Iterable
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.acero as ac
 import pyarrow.compute as pc
 import pyarrow.dataset as ds
 import pyarrow.parquet as pq
@@ -195,10 +192,14 @@ _ATTEMPTS_DIR = ".attempts"
 # reads only the row groups whose range holds one of its terms.
 _POSTINGS_ROW_GROUP = 16384
 
-# ``compact`` of a generation whose data files take at most this many
-# bytes once decoded runs on the driver: a bound on driver memory, see
-# the module docstring's execution rule.
-_DRIVER_REWRITE_BYTES = 32 * 2**20
+# Rows per row group of a data file that ``compact`` writes: the default
+# of spark.sql.execution.arrow.maxRecordsPerBatch, so a compacted file has
+# the row groups of a file written by a ``mapInArrow`` task.
+_DATA_ROW_GROUP = 10_000
+
+# ``compact``'s spill files, inside its staging directory; hidden, and
+# removed before the commit
+_SPILL_DIR = ".spill"
 
 # Upper bound on part files per bulk-delete tombstone commit (round-11
 # verdict task 4): a predicate-shaped delete writes its key set through
@@ -241,35 +242,6 @@ def _footer_rows(files: list[str]) -> int:
     return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
 
 
-def _decoded_bytes(files: list[str]) -> int:
-    """Bytes the document files ``files`` take once decoded: the sum of
-    their ``length`` column (the content bytes, which dictionary encoding
-    stores once however often a content repeats) plus the uncompressed
-    size of every other column chunk, read from the parquet footers."""
-    total = 0
-    for f in files:
-        pf = pq.ParquetFile(f)
-        md = pf.metadata
-        for i in range(md.num_row_groups):
-            rg = md.row_group(i)
-            total += sum(
-                rg.column(j).total_uncompressed_size
-                for j in range(rg.num_columns)
-                if rg.column(j).path_in_schema != "content"
-            )
-        total += pc.sum(pf.read(columns=["length"]).column(0)).as_py() or 0
-    return total
-
-
-def _keys(rows: pa.Table) -> pa.ChunkedArray:
-    """The (name, version) key of each of ``rows`` as one
-    ``name\\x00version`` string, for ``pc.is_in``: Acero's joins reject
-    the map column of document rows."""
-    return pc.binary_join_element_wise(
-        rows.column("name"), rows.column("version").cast(pa.string()), "\x00"
-    )
-
-
 def _changes(col: pa.ChunkedArray) -> pa.ChunkedArray:
     """For each row of ``col`` but the first, whether its value differs
     from the row before (a null differs from a value, not from a null)."""
@@ -301,8 +273,11 @@ def _terms(texts: pa.Array) -> pa.Array:
     """The tokenizer of documents and queries alike: ``utf8_lower``, then
     ``utf8_split_whitespace`` (any Unicode whitespace separates), as one
     list of tokens per string; empty tokens are left for the caller to
-    drop."""
-    return pc.utf8_split_whitespace(pc.utf8_lower(texts))
+    drop. Trailing whitespace is trimmed before the split: pyarrow 16's
+    split reads the bytes after a string that ends in whitespace, and a
+    non-ASCII byte there (the next string's, or memory after the buffer
+    for the last one) makes it keep that whitespace in the last token."""
+    return pc.utf8_split_whitespace(pc.utf8_rtrim_whitespace(pc.utf8_lower(texts)))
 
 
 def _postings_of(docs: pa.Table) -> pa.Table:
@@ -368,12 +343,15 @@ def _merged_postings(
 
 
 def _write_docs(
-    docs: pa.Table | Iterable[pa.RecordBatch],
+    docs: pa.Table | Iterable[pa.RecordBatch | pa.Table],
     dir_path: str,
     postings: pa.Table | Iterable[pa.Table] | None = None,
 ) -> tuple[str, int] | None:
-    """The one writer of document files. Streams ``docs`` (document rows,
-    a table or record batches) batch by batch through one
+    """The one writer of document files, used on the driver by
+    ``upload``, ``update`` and ``compact`` and inside ``bulk_ingest``'s
+    tasks. Streams ``docs`` (document rows: a table, or record batches or
+    tables, each of which becomes one row group; a table's batches are
+    its row groups) through one
     ``pq.ParquetWriter`` into a new part file under ``dir_path``, and
     writes the part's postings twin, sorted by term in row groups of at
     most ``_POSTINGS_ROW_GROUP``, under ``dir_path/_postings/`` with the
@@ -397,7 +375,7 @@ def _write_docs(
         for batch in batches:
             if batch.num_rows == 0:
                 continue
-            table = pa.Table.from_batches([batch]).cast(_ARROW_DOCUMENT_SCHEMA)
+            table = pa.table(batch).cast(_ARROW_DOCUMENT_SCHEMA)
             if writer is None:
                 os.makedirs(dir_path, exist_ok=True)
                 writer = pq.ParquetWriter(
@@ -434,6 +412,112 @@ def _write_docs(
     return part, rows
 
 
+def _taken(
+    table: pa.Table, order: np.ndarray, size: int
+) -> Iterable[pa.Table]:
+    """The rows of ``table`` at the indices ``order``, as tables of at most
+    ``size`` rows. Each is taken from ``table``'s chunks one by one, so no
+    copy of the whole table is made."""
+    chunks = table.to_batches()
+    starts = np.cumsum([0] + [c.num_rows for c in chunks])
+    for lo in range(0, len(order), size):
+        at = order[lo : lo + size]
+        chunk = np.searchsorted(starts, at, "right") - 1
+        # a stable sort of small integers is a radix sort
+        small = chunk.astype(np.min_scalar_type(len(chunks)))
+        by_chunk = np.argsort(small, kind="stable")
+        at, chunk = at[by_chunk], chunk[by_chunk]
+        parts = [chunks[c].take(at[chunk == c] - starts[c]) for c in np.unique(chunk)]
+        back = np.empty_like(by_chunk)
+        back[by_chunk] = np.arange(len(by_chunk))
+        yield pa.Table.from_batches(parts).take(back)
+
+
+def _spilled(path: str, tables: Iterable, schema: pa.Schema | None = None) -> pa.Table:
+    """Write ``tables`` (record batches or tables of ``schema``, or a
+    record batch reader, whose schema is the default) one at a time to
+    the Arrow IPC file ``path`` and return its rows memory-mapped: their
+    pages are file cache, which the OS drops under memory pressure, not
+    driver heap."""
+    with pa.ipc.new_file(path, schema or tables.schema) as out:
+        for table in tables:
+            out.write(table)
+    return pa.ipc.open_file(pa.memory_map(path)).read_all()
+
+
+def _write_slices(
+    files: list[str], plan: pa.Table, cuts: list[int], staging: str
+) -> None:
+    """Write ``compact``'s plan (name, version and ``__gid``, each row's
+    running number across ``files``, in output order) under ``staging``:
+    one data part and twin per slice between consecutive ``cuts``.
+
+    Every data row group and twin is decoded once. One pass reads each
+    row group of ``files`` that holds a planned row and spills those rows,
+    in file order, to an Arrow IPC file in a hidden ``_SPILL_DIR`` (rows
+    of a twin-less file are tokenized into a spilled twin on the way).
+    One streamed hash join of all the twins against the plan's keys, each
+    tagged with its slice, spills the live postings. Each slice is then
+    written by ``_write_docs`` from the memory-mapped spills, its rows in
+    plan order and its twin in ``_POSTINGS_ORDER``, a row group at a
+    time. The driver's heap holds the plan, the twin's sort order (8
+    bytes per postings row, twice that while it is sorted) and a few row
+    groups; the spilled rows are file cache, and the spills take about
+    the output's size again on disk until the commit."""
+    spill = os.path.join(staging, _SPILL_DIR)
+    os.makedirs(spill)
+    slot = np.full(_footer_rows(files), -1)  # plan position, -1: dropped
+    slot[plan.column("__gid").to_numpy()] = np.arange(plan.num_rows)
+    tokens = os.path.join(spill, "tokens.parquet")
+
+    def live_rows() -> Iterable[pa.Table]:
+        first = 0
+        with pq.ParquetWriter(tokens, _ARROW_POSTINGS_SCHEMA) as tokenized:
+            for f in files:
+                pf = pq.ParquetFile(f)
+                for g in range(pf.num_row_groups):
+                    live = slot[first : first + pf.metadata.row_group(g).num_rows] >= 0
+                    first += len(live)
+                    if live.any():
+                        rows = pf.read_row_group(g).cast(_ARROW_DOCUMENT_SCHEMA)
+                        rows = rows if live.all() else rows.filter(live)
+                        if not os.path.isfile(_twin(f)):
+                            tokenized.write_table(_postings_of(rows))
+                        yield rows
+
+    rows = _spilled(os.path.join(spill, "rows"), live_rows(), _ARROW_DOCUMENT_SCHEMA)
+    twins = [t for t in map(_twin, files) if os.path.isfile(t)] + [tokens]
+    slices = np.searchsorted(cuts, np.arange(plan.num_rows), "right") - 1
+    keys = plan.select(["name", "version"]).append_column("__slice", [slices])
+    scan = ac.ScanNodeOptions(
+        ds.dataset(twins, schema=_ARROW_POSTINGS_SCHEMA),
+        batch_readahead=1, fragment_readahead=1,
+    )
+    on_keys = ac.HashJoinNodeOptions(
+        "inner", ["name", "version"], ["name", "version"],
+        left_output=_ARROW_POSTINGS_SCHEMA.names, right_output=["__slice"],
+    )
+    join = ac.Declaration("hashjoin", on_keys, inputs=[
+        ac.Declaration("scan", scan),
+        ac.Declaration("table_source", ac.TableSourceNodeOptions(keys)),
+    ])
+    # the join's reader, and with it its hash table, goes with the call
+    twin = _spilled(os.path.join(spill, "twin"), join.to_reader())
+    order = pc.sort_indices(twin, [("__slice", "ascending"), *_POSTINGS_ORDER])
+    counts = np.bincount(twin["__slice"].to_numpy(), minlength=len(cuts) - 1)
+    ends, order = np.cumsum([0, *counts]), order.to_numpy()
+    twin = twin.drop_columns("__slice")
+    at = np.argsort(slot[slot >= 0])  # plan row -> its row in the spill
+    for s, (lo, hi) in enumerate(zip(cuts, cuts[1:])):
+        if lo < hi:  # twin: tables of whole row groups, cut by _write_docs
+            _write_docs(
+                _taken(rows, at[lo:hi], _DATA_ROW_GROUP),
+                staging,
+                _taken(twin, order[ends[s] : ends[s + 1]], 16 * _POSTINGS_ROW_GROUP),
+            )
+    shutil.rmtree(spill)
+
+
 def _make_row(
     name: str,
     version: int,
@@ -459,41 +543,6 @@ def _make_row(
     }
 
 
-def _extracted(batch: pa.RecordBatch) -> pa.RecordBatch:
-    """(name, version, content) rows → document rows, through
-    ``_make_row``."""
-    return pa.RecordBatch.from_pylist(
-        [
-            _make_row(r["name"], r["version"], r["content"], None)
-            for r in batch.to_pylist()
-        ],
-        schema=_ARROW_DOCUMENT_SCHEMA,
-    )
-
-
-def _docs_task(attempts: str, extract: bool):
-    """The ``mapInArrow`` function of a Spark-shaped write: each task
-    attempt writes its partition through ``_write_docs`` into its own
-    directory under ``attempts`` and reports what it wrote (one
-    ``_REPORT_SCHEMA`` row, none for an empty partition). ``extract``
-    turns (name, version, content) input into document rows first."""
-
-    def task(batches):
-        from pyspark import TaskContext
-
-        out = os.path.join(attempts, str(TaskContext.get().taskAttemptId()))
-        written = _write_docs(
-            map(_extracted, batches) if extract else batches, out
-        )
-        if written is not None:
-            part, rows = written
-            yield pa.RecordBatch.from_pylist(
-                [{"dir": out, "part": part, "rows": rows}]
-            )
-
-    return task
-
-
 def _place_reported(staging: str, reports: list) -> None:
     """Move the file pairs that task attempts reported from their attempt
     directories into ``staging``, then remove the attempt directories.
@@ -511,19 +560,35 @@ def _place_reported(staging: str, reports: list) -> None:
         shutil.rmtree(attempts)
 
 
-def _write_in_tasks(
-    rows: DataFrame, staging: str, extract: bool = False
-) -> int:
-    """Write ``rows`` into ``staging`` through ``_write_docs`` inside
-    ``mapInArrow`` tasks, one data part and its postings twin per
-    non-empty partition, and return the number of rows written. Each
-    task attempt writes under its own hidden directory in
-    ``staging/.attempts/``; only the files that the reported attempts
-    wrote are moved into place (``_place_reported``). ``extract``:
-    ``rows`` are (name, version, content), and each task builds the
-    document rows, metadata included, through ``_make_row``."""
+def _write_in_tasks(rows: DataFrame, staging: str) -> int:
+    """Write ``rows``, (name, version, content), into ``staging`` as
+    document rows, metadata included (``_make_row``), through
+    ``_write_docs`` inside ``mapInArrow`` tasks: one data part and its
+    postings twin per non-empty partition. Returns the number of rows
+    written. Each task attempt writes under its own hidden directory in
+    ``staging/.attempts/`` and reports what it wrote (one
+    ``_REPORT_SCHEMA`` row, none for an empty partition); only the files
+    that the reported attempts wrote are moved into place
+    (``_place_reported``)."""
     attempts = os.path.join(staging, _ATTEMPTS_DIR)
-    task = _docs_task(attempts, extract)
+
+    def task(batches):
+        from pyspark import TaskContext
+
+        out = os.path.join(attempts, str(TaskContext.get().taskAttemptId()))
+        docs = (
+            pa.RecordBatch.from_pylist(
+                [_make_row(r["name"], r["version"], r["content"], None)
+                 for r in batch.to_pylist()],
+                schema=_ARROW_DOCUMENT_SCHEMA,
+            )
+            for batch in batches
+        )
+        written = _write_docs(docs, out)
+        if written is not None:
+            part, n = written
+            yield pa.RecordBatch.from_pylist([{"dir": out, "part": part, "rows": n}])
+
     reports = rows.mapInArrow(task, _REPORT_SCHEMA).collect()
     _place_reported(staging, reports)
     return sum(r["rows"] for r in reports)
@@ -699,113 +764,54 @@ class DocumentStore:
         generations stay time-travelable. Returns the new generation
         number.
 
-        The execution rule picks the path: at most
-        ``_DRIVER_REWRITE_BYTES`` decoded, ``_rewrite_on_driver`` (Arrow,
-        no Spark job, twins merged); above it, a ``repartition`` (or
-        ``repartitionByRange``) of ``df()`` written in ``mapInArrow``
-        tasks that re-tokenize the twins. Both give the same rows and
-        postings.
-
         ``cluster_by`` sorts the rewrite on the given columns (``["name"]``
         is the natural choice) and gives every part file a DISJOINT key
         range, so footer min/max statistics let the point reads skip every
-        other file. Same rows either way; only the layout differs."""
+        other file. Same rows either way; only the layout differs.
+
+        Runs on the driver through Arrow at every size, with no Spark job.
+        The plan is read first: only the ``name``, ``version`` and
+        ``cluster_by`` columns of every data file, each row numbered in
+        file order. An anti-join drops the tombstoned keys, a sort on
+        ``cluster_by`` (ties in file order) orders the rest, and the plan
+        is cut into ``target_files`` contiguous slices (each cut moved
+        forward to the next ``cluster_by`` key change, so clustered files
+        cover disjoint ranges; ``target_files`` below 1 counts as 1).
+        ``_write_slices`` then reads every data row group and twin once,
+        spills what survives, and writes the slices one row group at a
+        time (only rows of a twin-less file are tokenized)."""
         gen = self._resolve(None)
         if gen is None:
             return None
-        if _decoded_bytes(self._data_files(gen)) <= _DRIVER_REWRITE_BYTES:
-            return self._rewrite_on_driver(gen, target_files, cluster_by)
-        if cluster_by:
-            snap = (
-                self.df()
-                .repartitionByRange(target_files, *cluster_by)
-                .sortWithinPartitions(*cluster_by)
-            )
-        else:
-            snap = self.df().repartition(target_files)
-        return self._commit(
-            lambda staging: _write_in_tasks(snap, staging), None
-        )
-
-    def _rewrite_on_driver(
-        self,
-        gen: int,
-        target_files: int = 1,
-        cluster_by: list[str] | None = None,
-    ) -> int:
-        """``compact`` on the driver through Arrow: commit the live rows of
-        generation ``gen`` (its rows minus its tombstoned keys) as a new
-        generation with no base. Sorted by ``cluster_by`` when given, they
-        are cut into ``target_files`` contiguous slices (at ``cluster_by``
-        key boundaries, so clustered files cover disjoint ranges as
-        ``repartitionByRange`` gives), and each slice is written by
-        ``_write_docs``.
-
-        The postings are merged, not rebuilt: ``gen``'s twins minus the
-        tombstoned keys, split per slice. A data file without a twin is
-        tokenized from its rows. Returns the new generation number."""
         files = self._data_files(gen)
-        bare = [f for f in files if not os.path.isfile(_twin(f))]
-        twins = [_twin(f) for f in files if f not in bare]
-        docs = ds.dataset(files, schema=_ARROW_DOCUMENT_SCHEMA).to_table()
-        postings = [
-            ds.dataset(twins, schema=_ARROW_POSTINGS_SCHEMA).to_table(),
-            _postings_of(
-                ds.dataset(bare, schema=_ARROW_DOCUMENT_SCHEMA).to_table()
-            ),
-        ]
+        if not files:
+            return self._commit(None, None)
+        cluster_by = cluster_by or []
+        cols = list(dict.fromkeys(["name", "version", *cluster_by]))
+        keys = pa.concat_tables(
+            ds.dataset(f, schema=_ARROW_DOCUMENT_SCHEMA).to_table(columns=cols)
+            for f in files
+        )
         tombs = ds.dataset(
             self._tombstone_files(gen), schema=_ARROW_TOMBSTONE_SCHEMA
         ).to_table()
-        dead = _keys(tombs).combine_chunks()
-
-        def live(rows: pa.Table) -> pa.Table:
-            return rows.filter(pc.invert(pc.is_in(_keys(rows), value_set=dead)))
-
-        docs = live(docs)
-        postings = pa.concat_tables(map(live, postings)).sort_by(
-            _POSTINGS_ORDER
+        plan = (
+            keys.append_column("__gid", [np.arange(keys.num_rows)])
+            .join(tombs, ["name", "version"], join_type="left anti")
+            .sort_by([(c, "ascending") for c in [*cluster_by, "__gid"]])
         )
-        n = docs.num_rows
-        starts = None  # rows whose cluster_by key differs from the row before
-        if cluster_by:
-            docs = docs.sort_by([(c, "ascending") for c in cluster_by])
-            if target_files > 1 and n > 1:
-                changed = functools.reduce(
-                    pc.or_, (_changes(docs.column(c)) for c in cluster_by)
-                )
-                starts = pc.indices_nonzero(changed).to_numpy() + 1
-        cuts = [0]
-        for i in range(1, target_files):
-            cut = max(cuts[-1], n * i // target_files)
-            if starts is not None and 0 < cut < n:
-                # move the cut forward to the next key boundary
-                j = np.searchsorted(starts, cut)
-                cut = int(starts[j]) if j < len(starts) else n
-            cuts.append(cut)
-        cuts.append(n)
-        postings_keys = _keys(postings) if target_files > 1 else None
-        # row groups the size of the Arrow batches Spark's write tasks get
-        batch = int(
-            self.spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+        n, target_files = plan.num_rows, max(target_files, 1)
+        cuts = [n * i // target_files for i in range(target_files + 1)]
+        if cluster_by and target_files > 1 and n > 1:
+            changed = functools.reduce(
+                pc.or_, (_changes(plan.column(c)) for c in cluster_by)
+            )
+            # move each cut forward to the next key boundary (or the end)
+            starts = np.append(pc.indices_nonzero(changed).to_numpy() + 1, n)
+            cuts = [c and int(starts[np.searchsorted(starts, c)]) for c in cuts]
+        return self._commit(
+            lambda staging: _write_slices(files, plan, cuts, staging), None
         )
-
-        def stage(staging: str) -> None:
-            for lo, hi in zip(cuts, cuts[1:]):
-                if lo == hi:
-                    continue
-                part = docs.slice(lo, hi - lo).combine_chunks()
-                twin = postings
-                if postings_keys is not None:
-                    mine = _keys(part).combine_chunks()
-                    twin = postings.filter(
-                        pc.is_in(postings_keys, value_set=mine)
-                    )
-                _write_docs(
-                    part.to_batches(batch if batch > 0 else None), staging, twin
-                )
-
-        return self._commit(stage, None)
 
     def restore(self, generation: int) -> int:
         """RESTORE TABLE analogue: commit a NEW generation whose content
@@ -912,15 +918,12 @@ class DocumentStore:
 
     def layout(self, generation: int | None = None) -> dict[str, int]:
         """Physical-layout facts for one committed generation: data file
-        count, ``data_bytes`` (the bytes its data files take once decoded,
-        which the execution rule compares with ``_DRIVER_REWRITE_BYTES`` to
-        tell where ``compact`` will run), tombstone file/row counts,
-        postings file/row counts, how many data files are inode-shared
-        with the PREVIOUS generation (the merge-on-read pin: a delete
-        commit shares every data file, an update all but one, a compact
-        none), and the store's committed ``generations`` count. Byte and
-        row counts come from the parquet footers and the ``length``
-        column, read with pyarrow, so no Spark job runs."""
+        count, tombstone file/row counts, postings file/row counts, how
+        many data files are inode-shared with the PREVIOUS generation (the
+        merge-on-read pin: a delete commit shares every data file, an
+        update all but one, a compact none), and the store's committed
+        ``generations`` count. Row counts come from the parquet footers,
+        read with pyarrow, so no Spark job runs."""
         gen = self._resolve(generation)
         committed = generations.committed(self.base_dir)
         data_files, tomb_files, postings_files = [], [], []
@@ -938,7 +941,6 @@ class DocumentStore:
         shared = sum(1 for f in data_files if os.stat(f).st_ino in prev_inodes)
         return {
             "data_files": len(data_files),
-            "data_bytes": _decoded_bytes(data_files),
             "tombstone_files": len(tomb_files),
             "tombstone_rows": _footer_rows(tomb_files),
             "postings_files": len(postings_files),
@@ -1029,7 +1031,7 @@ class DocumentStore:
 
         def stage(staging: str) -> None:
             nonlocal ingested
-            ingested = _write_in_tasks(rows, staging, extract=True)
+            ingested = _write_in_tasks(rows, staging)
 
         self._commit(stage, cur)
         return ingested
@@ -1050,7 +1052,10 @@ class DocumentStore:
         order and row-group sizes are kept), and its twin likewise through
         ``_merged_postings`` (a file without a twin is tokenized). Every
         other file is hardlinked, tombstones included, so the new
-        generation shares ``data_files - 1`` data files with the last."""
+        generation shares ``data_files - 1`` data files with the last.
+        This is update's one path at every size, as ``compact`` has one:
+        it holds one row group of the file and one of its twin at a time,
+        whatever the file's size. Tombstones stay until ``compact``."""
         gen = self._resolve(None)
         row = _pick(self._rows(name, ("__filename",), gen)[0], version or None)
         if row is None:

@@ -43,6 +43,16 @@ from dmshadoop_spark.functions.sqllit import (  # noqa: E402
 )
 
 
+def _check_vec_col(vec_col: str) -> None:
+    """Refuse a ``__``-prefixed vector column: those names are reserved
+    for the lambda variables that ``_dist_arr`` renders."""
+    if vec_col.startswith("__"):
+        raise ValueError(
+            f"vec_col {vec_col!r}: '__'-prefixed names are reserved for "
+            "the rendered lambda variables"
+        )
+
+
 def _dist_arr(vec_col: str, cents: np.ndarray) -> Column:
     """Literal-path array of squared L2 distances to each centroid.
 
@@ -67,12 +77,9 @@ def _dist_arr(vec_col: str, cents: np.ndarray) -> Column:
     # column literally named `c`/`x`/`acc` would be shadowed inside the
     # lambda body (zip_with(c, c, ...) computes all-zero distances and
     # silently assigns every row to cell 1). `__` names cannot collide:
-    # with_nearest_cell/with_probe_cells reject them up front.
-    if vec_col.startswith("__"):
-        raise ValueError(
-            f"vec_col {vec_col!r}: '__'-prefixed names are reserved for "
-            "the rendered lambda variables"
-        )
+    # with_nearest_cell/with_probe_cells reject them up front, on either
+    # path, and so does the renderer itself.
+    _check_vec_col(vec_col)
     mat = "array(" + ",".join(_sql_double_array(row) for row in cents) + ")"
     return F.expr(
         f"transform({mat}, __cent -> aggregate(zip_with(`{vec_col}`, __cent,"
@@ -121,7 +128,11 @@ def with_nearest_cell(
     paths' float arithmetic differs (fold order vs matmul identity), so
     a near-tie argmin can land differently — callers with PINNED outputs
     must not flip paths (the default keeps today's threshold pick);
-    callers that OWN their operating point (semdedup k="auto") opt in."""
+    callers that OWN their operating point (semdedup k="auto") opt in.
+
+    A ``__``-prefixed ``vec_col`` is refused (ValueError) on both paths:
+    the literal path renders ``__`` lambda variables."""
+    _check_vec_col(vec_col)
     use_literal = (
         len(cents) <= LITERAL_MAX_CENTROIDS
         if vectorized is None
@@ -335,7 +346,9 @@ def with_probe_cells(
     out_col: str = "cells",
 ) -> DataFrame:
     """Append the array of the ``nprobe`` nearest cell ids, ranked by
-    (distance, cell) ascending."""
+    (distance, cell) ascending. A ``__``-prefixed ``vec_col`` is refused
+    (ValueError) on both paths, as in ``with_nearest_cell``."""
+    _check_vec_col(vec_col)
     if len(cents) <= LITERAL_MAX_CENTROIDS:
         ranked = F.array_sort(
             F.zip_with(

@@ -268,7 +268,15 @@ def run_foreach_batch_upsert(
     the snapshot is a partitioned table and the merge is a key-bucketed
     join; the commutative-reduce-then-merge shape is what makes restarts
     and at-least-once redelivery idempotent. Blocks until the source is
-    drained (availableNow)."""
+    drained (availableNow).
+
+    The swap keeps its own rename-aside instead of committing through
+    ``dmshadoop_spark/generations.py``, the protocol ``DocumentStore``
+    uses: the sink's public output is ``state_dir`` itself, a plain
+    parquet directory that callers read with ``spark.read.parquet``
+    (st10 and its tests do). Generations would put ``gen=N/``
+    children under it, and Spark's partition discovery would surface
+    those as a ``gen`` column of every read."""
     import os
     import shutil
 

@@ -3,8 +3,6 @@ bug deviations (SURVEY.md §2 notes B1-B4, FIXTURES.md §B)."""
 
 from __future__ import annotations
 
-import contextlib
-import math
 import struct
 
 import pytest
@@ -1107,17 +1105,14 @@ def _mixed_store(spark, store):
     store.delete("doc-3.txt")
 
 
-def test_point_ops_run_no_spark_job(spark, store, monkeypatch):
+def test_point_ops_run_no_spark_job(spark, store):
     """Calls keyed on one name (download, meta, versions, upload, delete),
     search (keyed on its query's terms) and layout() run on the driver:
     their job group sees zero Spark jobs, over Spark-written,
     Arrow-written and tombstoned rows alike, and so does collecting the
-    search answer. An upload adds exactly one data file. A store this
-    small is also compacted on the driver: compact starts no job either,
-    until the rewrite threshold is 0. update starts none at any
-    threshold."""
-    from dmshadoop_spark.dms import store as store_mod
-
+    search answer. An upload adds exactly one data file. compact and
+    update rewrite on the driver at every size, so they start no job
+    either."""
     _mixed_store(spark, store)
     files_before = store.layout()["data_files"]
     calls = {
@@ -1146,9 +1141,6 @@ def test_point_ops_run_no_spark_job(spark, store, monkeypatch):
     assert got["layout"]["tombstone_rows"] == 3
     assert got["layout"]["data_files"] == files_before + 1
     assert got["layout"]["generations"] == len(store.history())
-    # the facts the execution rule compares: this store is rewritten on
-    # the driver
-    assert 0 < got["layout"]["data_bytes"] <= store_mod._DRIVER_REWRITE_BYTES
     assert got["search"] == [
         ("doc-1.txt", 1, 2),
         ("doc-1.txt", 2, 2),
@@ -1176,53 +1168,9 @@ def test_point_ops_run_no_spark_job(spark, store, monkeypatch):
     assert [tuple(r) for r in store.search("new").collect()] == [
         ("doc-6.txt", 1, 1)
     ]
-    # controls: a scan-shaped call in the same harness does start jobs,
-    # and so does compact once the threshold sends it to Spark; update
-    # does not, as it has no Spark path
+    # control: a scan-shaped call in the same harness does start jobs
     _, jobs = _jobs_started(spark, lambda: store.df().count())
     assert jobs
-    monkeypatch.setattr(store_mod, "_DRIVER_REWRITE_BYTES", 0)
-    for op, call in rewrites.items():
-        _, jobs = _jobs_started(spark, call)
-        assert bool(jobs) == (op == "compact"), f"{op} at threshold 0: {jobs}"
-
-
-def test_rewrite_rule_counts_repeated_contents_decoded(spark, store, monkeypatch):
-    """The rewrite rule compares decoded bytes: a store of one content
-    repeated under many names, which dictionary encoding stores once per
-    file, is rewritten in Spark once its decoded bytes pass the threshold
-    although its footer bytes stay under it; at exactly its decoded bytes
-    it is rewritten on the driver."""
-    import pyarrow.parquet as pq
-
-    from dmshadoop_spark.dms import store as store_mod
-
-    content = bytes(range(256)) * 64  # 16 KiB
-    store.bulk_ingest(
-        spark.createDataFrame(
-            [(f"dup-{i}.txt", content) for i in range(40)],
-            "name string, content binary",
-        )
-    )
-    files = store._data_files(store.history()[-1])
-    footer = 0
-    for f in files:
-        md = pq.ParquetFile(f).metadata
-        footer += sum(
-            md.row_group(i).total_byte_size for i in range(md.num_row_groups)
-        )
-    decoded = store.layout()["data_bytes"]
-    assert decoded >= 40 * len(content)
-    assert 2 * footer < decoded
-    monkeypatch.setattr(store_mod, "_DRIVER_REWRITE_BYTES", 2 * footer)
-    _, jobs = _jobs_started(spark, lambda: store.compact(cluster_by=["name"]))
-    assert jobs, "a store over the threshold once decoded ran on the driver"
-    monkeypatch.setattr(
-        store_mod, "_DRIVER_REWRITE_BYTES", store.layout()["data_bytes"]
-    )
-    _, jobs = _jobs_started(spark, lambda: store.compact(cluster_by=["name"]))
-    assert jobs == []
-    assert store.df().count() == 40
 
 
 def test_arrow_upload_reads_back_through_spark(spark, store):
@@ -1288,26 +1236,12 @@ _store_ops = st.lists(
             st.none() | st.integers(min_value=1, max_value=4),
         ),
         st.tuples(st.just("delete_all_version"), st.sampled_from(_NAMES)),
-        # (clustered, on the driver)
-        st.tuples(st.just("compact"), st.booleans(), st.booleans()),
+        # (clustered)
+        st.tuples(st.just("compact"), st.booleans()),
     ),
     min_size=1,
     max_size=10,
 )
-
-
-@contextlib.contextmanager
-def _rewrite_path(on_driver: bool):
-    """Send the whole-snapshot rewrites made inside the block to the
-    driver (threshold ∞) or to Spark (threshold 0)."""
-    from dmshadoop_spark.dms import store as store_mod
-
-    prior = store_mod._DRIVER_REWRITE_BYTES
-    store_mod._DRIVER_REWRITE_BYTES = math.inf if on_driver else 0
-    try:
-        yield
-    finally:
-        store_mod._DRIVER_REWRITE_BYTES = prior
 
 
 def _spark_answers(store, gen):
@@ -1331,8 +1265,7 @@ def _spark_answers(store, gen):
 @given(ops=_store_ops)
 def test_driver_path_matches_spark_df(spark, tmp_path_factory, ops):
     """For random upload / delete / delete_all_version / compact
-    sequences, each compact on the driver or in Spark, every driver-path
-    answer — latest and explicit-version
+    sequences, every driver-path answer — latest and explicit-version
     reads, version listings, the tombstone-aware next version, and the
     same reads against an older generation — equals the answer computed
     from df() in Spark."""
@@ -1345,8 +1278,7 @@ def test_driver_path_matches_spark_df(spark, tmp_path_factory, ops):
         elif op[0] == "delete_all_version":
             store.delete_all_version(op[1])
         else:
-            with _rewrite_path(op[2]):
-                store.compact(cluster_by=["name"] if op[1] else None)
+            store.compact(cluster_by=["name"] if op[1] else None)
     gens = store.history()
     if not gens:
         for name in _NAMES:
@@ -1422,8 +1354,8 @@ _search_ops = st.lists(
             ),
         ),
         st.tuples(st.just("update"), st.sampled_from(_NAMES), _texts),
-        # the last field of compact: rewrite on the driver
-        st.tuples(st.just("compact"), st.booleans(), st.booleans()),
+        # (clustered)
+        st.tuples(st.just("compact"), st.booleans()),
         st.tuples(st.just("restore"), st.integers(min_value=0, max_value=9)),
         st.tuples(st.just("delete_all")),
     ),
@@ -1480,8 +1412,8 @@ def test_search_matches_python_recompute(
 ):
     """For random sequences of every write the store has — uploads of
     text (mixed case, Unicode whitespace) and binary content, delete,
-    delete_all_version, delete_where, update, compact (clustered or not,
-    on the driver or in Spark), restore and delete_all — after some text
+    delete_all_version, delete_where, update, compact (clustered or
+    not), restore and delete_all — after some text
     uploads, search after each step equals a Python recompute over the
     live rows."""
     store = DocumentStore(spark, str(tmp_path_factory.mktemp("dms_search")))
@@ -1498,8 +1430,7 @@ def test_search_matches_python_recompute(
         elif kind == "update":
             store.update(op[1], op[2])
         elif kind == "compact":
-            with _rewrite_path(op[2]):
-                store.compact(cluster_by=["name"] if op[1] else None)
+            store.compact(cluster_by=["name"] if op[1] else None)
         elif kind == "restore":
             if store.history():
                 store.restore(store.history()[op[1] % len(store.history())])
@@ -1534,16 +1465,14 @@ def test_unreported_task_attempt_files_are_never_published(
     """A task attempt that wrote files but whose report Spark discarded
     (a failed, retried or duplicate attempt) must publish nothing: the
     commit moves only the reported files out of the per-attempt
-    directories and removes the rest. The rewrite threshold is 0, so
-    bulk_ingest and compact write in tasks here (update, which writes on
-    the driver, plants nothing)."""
+    directories and removes the rest. Only bulk_ingest writes in tasks;
+    compact and update, which write on the driver, plant nothing."""
     import os
 
     import pyarrow as pa
 
     from dmshadoop_spark.dms import store as store_mod
 
-    monkeypatch.setattr(store_mod, "_DRIVER_REWRITE_BYTES", 0)
     stray = pa.Table.from_pylist(
         [store_mod._make_row("ghost.txt", 1, b"ghost words", None)],
         schema=store_mod._ARROW_DOCUMENT_SCHEMA,
@@ -1564,7 +1493,7 @@ def test_unreported_task_attempt_files_are_never_published(
     assert store.bulk_ingest(batch) == 6
     store.compact(2)
     assert store.update("doc-1.txt", b"new words")
-    assert len(planted) == 2
+    assert len(planted) == 1
     for gen in store.history():
         published = [
             fn
@@ -1636,6 +1565,32 @@ def test_store_tokenizer_differs_from_the_oracle_tokenizer(spark):
     assert [t for t in terms if t] == terms == ["a", "b", "c"]
 
 
+def test_tokenizer_ignores_the_bytes_after_a_string(monkeypatch):
+    """A text that ends in whitespace gives the same terms whatever bytes
+    follow it in its buffer. The lowercased copy that is split is a new
+    buffer, followed by whatever memory it was given, and pyarrow 16's
+    split kept the trailing whitespace in the last token when a non-ASCII
+    byte came next ("ab " gave ["ab "]). The texts here are lowercase,
+    and lowercasing is patched to pass each crafted buffer through, so
+    the bytes after it are the ones the split sees."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from dmshadoop_spark.dms.store import _terms
+
+    monkeypatch.setattr(pc, "utf8_lower", lambda texts: texts)
+    for text in ["ab ", "ab\u00a0", "word m0 \u2003", "a b\n", " "]:
+        data = text.encode()
+        offsets = np.array([0, len(data)], np.int32).tobytes()
+        for tail in (b"", b"\x80\x80", b"\xc2\x00", b"\xe2\x41", b"\xff\xff"):
+            texts = pa.Array.from_buffers(
+                pa.string(), 1, [None, pa.py_buffer(offsets), pa.py_buffer(data + tail)]
+            )
+            (terms,) = _terms(texts).to_pylist()
+            assert [t for t in terms if t] == text.split(), (text, tail)
+
+
 def test_search_indexes_invalid_utf8_labelled_text(store):
     """Content that is not valid UTF-8 but labelled text/plain through
     extra_meta is indexed with U+FFFD in place of the bad bytes (as
@@ -1657,17 +1612,12 @@ def _every_column(store):
     )
 
 
-def test_task_rewrites_keep_every_column_under_session_tz(
-    spark, store, monkeypatch
-):
-    """compact rewrites rows inside mapInArrow tasks (the rewrite
-    threshold is 0, so it takes its Spark path), and update then rewrites
-    one of the files those tasks wrote: every column of every untouched
-    row, modification_time (TIMESTAMP_NTZ) included, comes back unchanged
-    under a non-UTC session time zone."""
-    from dmshadoop_spark.dms import store as store_mod
-
-    monkeypatch.setattr(store_mod, "_DRIVER_REWRITE_BYTES", 0)
+def test_task_rewrites_keep_every_column_under_session_tz(spark, store):
+    """bulk_ingest writes rows inside mapInArrow tasks, compact rewrites
+    them on the driver, and update then rewrites one of the files compact
+    wrote: every column of every untouched row, modification_time
+    (TIMESTAMP_NTZ) included, comes back unchanged under a non-UTC
+    session time zone."""
     batch = spark.createDataFrame(
         [(f"doc-{i}.txt", f"body {i}".encode()) for i in range(5)],
         "name string, content binary",
@@ -1711,27 +1661,35 @@ def _twins_match_rows(store):
 
 
 @pytest.mark.parametrize(
-    "threshold", [0, math.inf], ids=["spark_path", "driver_path"]
+    "writer", ["spark", "driver"], ids=["spark_path", "driver_path"]
 )
-def test_rewrite_paths_give_the_same_rows_and_postings(
-    spark, store, monkeypatch, threshold
-):
+def test_rewrite_paths_give_the_same_rows_and_postings(spark, store, writer):
     """compact(), compact(4, cluster_by=["name"]), compact(2) and update
-    give the same rows in Spark (threshold 0) and on the driver
-    (threshold ∞): every column, modification_time under a non-UTC
-    session time zone included, equals the rows before the rewrite (for
-    update, all but the replaced row). Every data file's postings twin
-    equals the postings of its rows, and clustered files cover disjoint
-    name ranges."""
+    keep the rows, whether the files they rewrite were written by Spark
+    write tasks (bulk_ingest) or on the driver (upload): every column,
+    modification_time under a non-UTC session time zone included, equals
+    the rows before the rewrite (for update, all but the replaced row).
+    Every data file's postings twin equals the postings of its rows, and
+    clustered files cover disjoint name ranges."""
     import datetime
 
-    from dmshadoop_spark.dms import store as store_mod
+    def write(docs):
+        if writer == "spark":
+            store.bulk_ingest(
+                spark.createDataFrame(docs, "name string, content binary")
+            )
+        else:
+            for name, content in docs:
+                store.upload(name, content)
 
-    monkeypatch.setattr(store_mod, "_DRIVER_REWRITE_BYTES", threshold)
-    _mixed_store(spark, store)
-    for i in range(3):
-        store.upload(f"new-{i}.txt", f"fresh words {i}".encode())
+    write([(f"doc-{i}.txt", f"body {i}".encode()) for i in range(8)])
+    write(
+        [("doc-1.txt", b"body 1 v2")]
+        + [(f"new-{i}.txt", f"fresh words {i}".encode()) for i in range(3)]
+    )
+    store.delete("doc-3.txt")
     store.delete("doc-0.txt")
+    assert store.layout()["tombstone_rows"] >= 2
     prior = spark.conf.get("spark.sql.session.timeZone")
     spark.conf.set("spark.sql.session.timeZone", "America/New_York")
     try:
@@ -1766,12 +1724,9 @@ def test_rewrite_paths_give_the_same_rows_and_postings(
     _twins_match_rows(store)
 
 
-def test_update_rewrites_only_the_file_that_holds_the_row(
-    spark, store, monkeypatch
-):
+def test_update_rewrites_only_the_file_that_holds_the_row(spark, store):
     """On a multi-file store with tombstones, update is a copy-on-write of
-    the one data file that holds the row: no Spark job, even at rewrite
-    threshold 0; every other data file shared with the previous
+    the one data file that holds the row: no Spark job; every other data file shared with the previous
     generation; the tombstones kept; the new file's rows in the old
     file's order with its twin equal to their postings; and diff showing
     exactly the one update."""
@@ -1779,9 +1734,6 @@ def test_update_rewrites_only_the_file_that_holds_the_row(
 
     import pyarrow.parquet as pq
 
-    from dmshadoop_spark.dms import store as store_mod
-
-    monkeypatch.setattr(store_mod, "_DRIVER_REWRITE_BYTES", 0)
     _mixed_store(spark, store)
     store.delete("doc-5.txt")
     prev = store.history()[-1]
@@ -1917,3 +1869,200 @@ def test_update_streams_a_file_of_several_row_groups(
         ("doc-06.txt", 1, 2)
     ]
     assert store.search("word6").count() == 0
+
+
+def test_compact_over_32_mib_decoded_starts_no_spark_job(spark, store):
+    """compact of a store that takes over 32 MiB once decoded (one 64 KiB
+    content under 520 names: a few KiB on disk, dictionary-encoded, but
+    over 32 MiB in Arrow) starts no Spark job, keeps every column of every
+    live row, folds the tombstone and clusters the rows into files of
+    disjoint name ranges whose twins equal the postings of their rows."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    content = bytes(range(256)) * 256  # 64 KiB
+    store.bulk_ingest(
+        spark.createDataFrame(
+            [(f"dup-{i:03}.bin", content) for i in range(520)],
+            "name string, content binary",
+        )
+    )
+    store.upload("note.txt", b"a small text note")
+    store.delete("dup-007.bin")
+    files = store._data_files(store.history()[-1])
+    decoded = sum(
+        sum(pq.read_table(f, columns=["length"]).column(0).to_pylist())
+        for f in files
+    )
+    assert decoded > 32 * 2**20
+    assert 8 * sum(map(os.path.getsize, files)) < decoded
+    before = _every_column(store)
+    _, jobs = _jobs_started(spark, lambda: store.compact(2, cluster_by=["name"]))
+    assert jobs == []
+    assert _every_column(store) == before
+    assert len(before) == 520
+    assert store.layout()["tombstone_rows"] == 0
+    (lo_file, hi_file) = _twins_match_rows(store)
+    assert lo_file[1] < hi_file[0]
+    assert [tuple(r) for r in store.search("note").collect()] == [
+        ("note.txt", 1, 1)
+    ]
+
+
+def _unordered_store(store, n, row_group, repeat=1):
+    """Replace the store's content with one generation of one data file
+    of ``n`` text documents (``repeat`` copies of an 18-byte line each) in
+    shuffled name order, written in row groups of ``row_group`` rows, and
+    return that file's path."""
+    import random
+
+    import pyarrow as pa
+
+    from dmshadoop_spark.dms import store as store_mod
+
+    order = random.Random(5).sample(range(n), n)
+    rows = pa.Table.from_pylist(
+        [
+            store_mod._make_row(
+                f"doc-{i:03}.txt",
+                1,
+                f"word{i:03} common m{i % 3} ".encode() * repeat,
+                None,
+            )
+            for i in order
+        ],
+        schema=store_mod._ARROW_DOCUMENT_SCHEMA,
+    )
+    store._commit(
+        lambda staging: store_mod._write_docs(
+            rows.to_batches(max_chunksize=row_group), staging
+        ),
+        None,
+    )
+    (path,) = store._data_files(store.history()[-1])
+    return path
+
+
+@pytest.mark.parametrize(
+    "target_files, cluster_by, slices",
+    [(1, None, [159]), (1, ["name"], [159]), (4, ["name"], [39, 40, 40, 40])],
+    ids=["one_file", "one_clustered_file", "four_clustered_files"],
+)
+def test_compact_holds_one_row_group_at_a_time(
+    spark, store, monkeypatch, target_files, cluster_by, slices
+):
+    """compact of a data file of 32 row groups (160 documents of 72 KB,
+    names in no order, one tombstoned) reads the content one row group at
+    a time, hands _write_docs one output row group at a time, and never
+    holds a quarter of the store's content in Arrow memory (the rows in
+    between are spilled to a memory-mapped file). Rows, clustered ranges
+    and twins are as before."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from dmshadoop_spark.dms import store as store_mod
+
+    path = _unordered_store(store, 160, 5, repeat=4000)
+    md = pq.ParquetFile(path).metadata
+    assert [md.row_group(i).num_rows for i in range(md.num_row_groups)] == [5] * 32
+    content = sum(pq.read_table(path, columns=["length"]).column(0).to_pylist())
+    assert content > 10 * 2**20
+    store.delete("doc-003.txt")
+    before = _every_column(store)
+    monkeypatch.setattr(store_mod, "_DATA_ROW_GROUP", 4)
+    held, written, allocated = [], [], []
+
+    def record(table):
+        if "content" in table.column_names:
+            held.append(table.num_rows)
+        allocated.append(pa.total_allocated_bytes())
+        return table
+
+    write_docs = store_mod._write_docs
+
+    def write_recorded(docs, dir_path, postings=None):
+        written.append([])
+
+        def stream():
+            for table in docs:
+                written[-1].append(table.num_rows)
+                yield record(table)
+
+        return write_docs(stream(), dir_path, postings)
+
+    with monkeypatch.context() as m:
+        for method in ("read", "read_row_group", "read_row_groups"):
+            read = getattr(pq.ParquetFile, method)
+            m.setattr(
+                pq.ParquetFile,
+                method,
+                lambda self, *a, _read=read, **k: record(_read(self, *a, **k)),
+            )
+        read_table = pq.read_table
+        m.setattr(pq, "read_table", lambda *a, **k: record(read_table(*a, **k)))
+        m.setattr(store_mod, "_write_docs", write_recorded)
+        base = pa.total_allocated_bytes()
+        _, jobs = _jobs_started(
+            spark, lambda: store.compact(target_files, cluster_by=cluster_by)
+        )
+    assert jobs == []
+    assert held and max(held) <= 5
+    assert [sum(w) for w in written] == slices
+    assert max(max(w) for w in written) <= 4
+    assert max(allocated) - base < content / 4
+    assert _every_column(store) == before
+    ranges = _twins_match_rows(store)
+    assert len(ranges) == target_files
+    for (_, hi), (lo, _) in zip(ranges, ranges[1:]):
+        assert hi < lo
+    for f in store._data_files(store.history()[-1]):
+        md = pq.ParquetFile(f).metadata
+        sizes = [md.row_group(i).num_rows for i in range(md.num_row_groups)]
+        assert max(sizes) == 4 and sizes[:-1] == [4] * (len(sizes) - 1)
+
+
+def test_clustered_compact_tokenizes_only_twin_less_rows(store, monkeypatch):
+    """A multi-slice clustered compact over a store whose one data file
+    has no postings twin gives every new file a twin equal to the
+    postings of its rows; only that file's rows are tokenized, once, and
+    the twins of the other files are merged."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from dmshadoop_spark.dms import store as store_mod
+
+    for i in range(12):
+        store.upload(f"doc-{i:02}.txt", f"word{i} common m{i % 3}".encode())
+    rows = store.df().toArrow().combine_chunks()  # one row group per file
+    even = pc.is_in(
+        rows.column("name"),
+        value_set=pa.array([f"doc-{i:02}.txt" for i in range(0, 12, 2)]),
+    )
+
+    def stage(staging):
+        bare = store_mod._write_docs(rows.filter(even), staging)[0]
+        store_mod._write_docs(rows.filter(pc.invert(even)), staging)
+        os.remove(os.path.join(staging, "_postings", bare))
+
+    store._commit(stage, None)
+    before = _every_column(store)
+    tokenized = []
+    postings_of = store_mod._postings_of
+
+    def recorded(docs):
+        tokenized.append(docs.num_rows)
+        return postings_of(docs)
+
+    with monkeypatch.context() as m:
+        m.setattr(store_mod, "_postings_of", recorded)
+        store.compact(3, cluster_by=["name"])
+    assert tokenized == [6]
+    assert _every_column(store) == before
+    assert len(_twins_match_rows(store)) == 3
+    assert [tuple(r) for r in store.search("common m1").collect()][:2] == [
+        ("doc-01.txt", 1, 2),
+        ("doc-04.txt", 1, 2),
+    ]

@@ -226,3 +226,27 @@ def test_dist_arr_rejects_reserved_vec_col(spark):
         .collect()
     ]
     assert got == [1, 2]
+
+
+def test_reserved_vec_col_is_refused_on_the_vectorized_path(spark, monkeypatch):
+    """with_nearest_cell and with_probe_cells refuse a __-prefixed vector
+    column before they pick a path: the pandas-UDF path (vectorized=True,
+    or more centroids than LITERAL_MAX_CENTROIDS) refuses it as the
+    literal path does, while a plain name still assigns on that path."""
+    from dmshadoop_spark.similarity import assign
+
+    cents = np.array([[1.0, 1.0, 1.0], [5.0, 5.0, 5.0]])
+    rows = [([0.9, 1.0, 1.1],), ([5.0, 5.0, 5.0],)]
+    df = spark.createDataFrame(rows, "__v array<double>")
+    with pytest.raises(ValueError, match="reserved"):
+        assign.with_nearest_cell(df, "__v", cents, vectorized=True)
+    monkeypatch.setattr(assign, "LITERAL_MAX_CENTROIDS", 0)
+    with pytest.raises(ValueError, match="reserved"):
+        assign.with_nearest_cell(df, "__v", cents)
+    with pytest.raises(ValueError, match="reserved"):
+        assign.with_probe_cells(df, "__v", cents, 1)
+    plain = spark.createDataFrame(rows, "v array<double>")
+    got = assign.with_nearest_cell(plain, "v", cents, vectorized=True)
+    assert [r["cell"] for r in got.select("cell").collect()] == [1, 2]
+    got = assign.with_probe_cells(plain, "v", cents, 2)
+    assert [r["cells"] for r in got.select("cells").collect()] == [[1, 2], [2, 1]]
