@@ -14,6 +14,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType, TimestampNTZType, TimestampType
 
+from dmshadoop_spark.functions.checkpoint import _parse_bytes
+
 TABLES = (
     "region",
     "nation",
@@ -139,17 +141,6 @@ def widen(df: DataFrame) -> DataFrame:
     return df
 
 
-def _parse_byte_conf(value: str) -> int:
-    """Parse a Spark byte-size conf string ("134217728b", "128m", "1g")."""
-    import re
-
-    m = re.fullmatch(r"(\d+)\s*([kmgt]?)b?", value.strip().lower())
-    if not m:
-        return 128 * 1024 * 1024
-    mult = {"": 1, "k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
-    return int(m.group(1)) * mult[m.group(2)]
-
-
 def _estimated_scan_splits(df: DataFrame) -> int | None:
     """Estimate how many scan partitions ``df``'s file sources will yield,
     WITHOUT building a physical plan or an RDD (``df.rdd`` forces both —
@@ -172,7 +163,7 @@ def _estimated_scan_splits(df: DataFrame) -> int | None:
         return None
     if not files:
         return None
-    max_bytes = _parse_byte_conf(
+    max_bytes = _parse_bytes(
         str(df.sparkSession.conf.get("spark.sql.files.maxPartitionBytes", "134217728b"))
     )
     splits = 0

@@ -53,23 +53,28 @@ def _marked(path: str) -> bool:
     return os.path.exists(os.path.join(path, _MARKER))
 
 
+def _numbered(root: str) -> list[int]:
+    """The numbers of the ``gen=N`` directories under ``root``, marked or
+    not, oldest first (none if ``root`` does not exist)."""
+    if not os.path.isdir(root):
+        return []
+    return sorted(int(m.group(1)) for m in map(_GEN_RE.match, os.listdir(root)) if m)
+
+
 def committed(root: str) -> list[int]:
     """The committed generation numbers under ``root``, oldest first
     (none if ``root`` does not exist). Unmarked ``gen=*`` directories
     are not generations."""
-    if not os.path.isdir(root):
-        return []
-    return sorted(
-        int(m.group(1))
-        for m in map(_GEN_RE.match, os.listdir(root))
-        if m and _marked(os.path.join(root, m.group(0)))
-    )
+    return [g for g in _numbered(root) if _marked(gen_path(root, g))]
 
 
 def current(root: str) -> int | None:
-    """The newest committed generation, or None when there is none."""
-    gens = committed(root)
-    return gens[-1] if gens else None
+    """The newest committed generation, or None when there is none: one
+    directory listing, then the markers from the newest number down to
+    the first that is marked (only debris sits above it)."""
+    return next(
+        (g for g in reversed(_numbered(root)) if _marked(gen_path(root, g))), None
+    )
 
 
 def manifest(root: str, gen: int) -> dict | None:

@@ -207,9 +207,9 @@ def s23_delete_where(spark, sf_dir):
     documents table into a DocumentStore with the language as the name
     prefix (the document key carries routing facts, as real stores
     do), tombstone every German document in ONE delete_where commit —
-    the key set is computed BY the predicate scan and written
-    distributed, never collected to the driver — and read back through
-    the tombstone anti-join. The oracle replays the predicate as SQL
+    the key set is computed BY the predicate scan in Spark, collected to
+    the driver as (name, version) pairs only and written as one
+    tombstone part — and read back through the tombstone anti-join. The oracle replays the predicate as SQL
     and pins: surviving rows + exact byte total, the tombstoned-key
     count returned by the API, and zero data files rewritten (every
     data file of the delete commit inode-shared with the previous

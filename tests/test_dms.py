@@ -975,10 +975,9 @@ def test_concurrent_commit_raises_instead_of_clobbering(store):
 
 
 def test_delete_where_majority_multifile_tombstone_sidecar(spark, store):
-    """Round-11 verdict task 4: a predicate matching the majority of keys
-    writes its tombstone set through BOUNDED multiple part files (no
-    single-task serialization, no per-scan-partition spray), and the
-    read side merges them transparently."""
+    """A predicate matching the majority of keys of a store written in
+    several data files commits its whole tombstone set as ONE part file,
+    as every delete commit does, and the reads mask every key."""
     import os
 
     from pyspark.sql import functions as F
@@ -1000,11 +999,67 @@ def test_delete_where_majority_multifile_tombstone_sidecar(spark, store):
     parts = [
         f for f in os.listdir(tdir) if not f.startswith(("_", "."))
     ]
-    assert 1 < len(parts) <= 16
+    assert len(parts) == 1
     assert _names(store) == ["doc-0"]
     lay = store.layout()
     assert lay["tombstone_rows"] == 39
     assert lay["data_files"] == lay["data_files_shared_with_prev"] > 0
+
+
+def test_tombstone_sidecar_holds_one_store_written_part_per_delete_commit(
+    store,
+):
+    """After every commit of uploads, delete, delete_where and compact,
+    ``_tombstones/`` holds only ``part-*.parquet`` files, one per delete
+    commit since the last compaction, each readable with the store's
+    tombstone schema, whose rows are exactly the tombstoned keys."""
+    import os
+
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from dmshadoop_spark.dms.store import _ARROW_TOMBSTONE_SCHEMA
+
+    def check(commits: list[set]) -> None:
+        tdir = store._tombstone_dir(store.history()[-1])
+        files = sorted(os.listdir(tdir)) if os.path.isdir(tdir) else []
+        assert all(f.startswith("part-") and f.endswith(".parquet") for f in files)
+        assert len(files) == len(commits)
+        parts = [
+            pq.read_table(os.path.join(tdir, f), schema=_ARROW_TOMBSTONE_SCHEMA)
+            for f in files
+        ]
+        got = sorted(tuple(r.values()) for p in parts for r in p.to_pylist())
+        assert got == sorted(k for c in commits for k in c)
+        assert sorted(map(len, commits)) == sorted(p.num_rows for p in parts)
+
+    for i in range(4):
+        store.upload(f"a{i}.txt", b"alpha")
+        store.upload(f"a{i}.txt", b"alpha again")
+        store.upload(f"b{i}.txt", b"beta")
+    commits: list[set] = []
+    check(commits)
+    assert store.delete("a0.txt")
+    commits.append({("a0.txt", 2)})
+    check(commits)
+    assert store.delete_where(F.col("name").startswith("b")) == 4
+    commits.append({(f"b{i}.txt", 1) for i in range(4)})
+    check(commits)
+    assert store.delete_where("version = 1 AND name <> 'a0.txt'") == 3
+    commits.append({(f"a{i}.txt", 1) for i in range(1, 4)})
+    check(commits)
+    assert store.delete_where("name = 'nothing'") == 0
+    check(commits)
+    store.compact()
+    commits = []
+    check(commits)
+    assert store.delete_all_version("a0.txt")
+    commits.append({("a0.txt", 1)})
+    check(commits)
+    assert store.delete_where("length > 5") == 3
+    commits.append({(f"a{i}.txt", 2) for i in range(1, 4)})
+    check(commits)
+    assert _names(store) == []
 
 
 def test_id3_tagged_adts_sniffs_as_aac_with_metadata():

@@ -118,3 +118,23 @@ def test_manifest_missing_is_none_corrupt_raises(tmp_path):
             f.write(junk)
         with pytest.raises(ValueError, match="corrupt manifest"):
             generations.carries(root, 0)
+
+
+def test_current_stops_at_the_newest_marked_generation(tmp_path, monkeypatch):
+    """``current()`` lists the table once and checks markers from the
+    newest number down: past an unmarked debris directory, the first
+    marked one is the answer, and no older marker is read."""
+    root = str(tmp_path / "t")
+    for i in range(31):  # generations 0 to 30
+        generations.commit(root, _writer(f"f{i}"))
+    os.makedirs(generations.gen_path(root, 31))  # a dead writer's debris
+    calls = []
+    marked = generations._marked
+
+    def counting(path: str) -> bool:
+        calls.append(path)
+        return marked(path)
+
+    monkeypatch.setattr(generations, "_marked", counting)
+    assert generations.current(root) == 30
+    assert len(calls) <= 2

@@ -483,14 +483,29 @@ def test_triangles_known_graphs(spark):
     assert triangles(cycle).count() == 0
 
 
-def test_parse_byte_conf():
-    from dmshadoop_spark.catalog import _parse_byte_conf
+def test_scan_split_estimate_reads_spark_byte_sizes(spark, sf_dir, monkeypatch):
+    """The split estimate reads spark.sql.files.maxPartitionBytes with the
+    one byte-size parser (functions/checkpoint._parse_bytes), so every
+    unit Spark accepts counts, "1p" included, which a narrower parser
+    used to read as a 128 MiB default. Each file is made to look 1 TiB
+    large, so a misread size changes the count."""
+    import os
 
-    assert _parse_byte_conf("134217728b") == 128 * 1024 * 1024
-    assert _parse_byte_conf("128m") == 128 * 1024 * 1024
-    assert _parse_byte_conf("128MB") == 128 * 1024 * 1024
-    assert _parse_byte_conf("1g") == 1 << 30
-    assert _parse_byte_conf("junk") == 128 * 1024 * 1024  # safe default
+    from dmshadoop_spark.catalog import _estimated_scan_splits, load_table
+
+    docs = load_table(spark, sf_dir, "documents")
+    n_files = len(docs.inputFiles())
+    key = "spark.sql.files.maxPartitionBytes"
+    before = spark.conf.get(key)
+    monkeypatch.setattr(os.path, "getsize", lambda path: 1 << 40)
+    try:
+        for value, per_file in [
+            ("134217728b", 8192), ("64m", 16384), ("1g", 1024), ("1p", 1)
+        ]:
+            spark.conf.set(key, value)
+            assert _estimated_scan_splits(docs) == n_files * per_file, value
+    finally:
+        spark.conf.set(key, before)
 
 
 def test_widen_probe_estimates_without_rdd(spark, sf_dir):
