@@ -32,6 +32,30 @@ from pyspark.sql import functions as F
 
 from dmshadoop_spark.functions.checkpoint import stabilize
 
+
+def pairs_within(lists: DataFrame, col: str) -> DataFrame:
+    """(a, b) for every pair of distinct elements within each row's array
+    ``col``, each unordered pair once with ``a < b`` — the one pair
+    emission under every bucket/posting-list stage (Hamming banding,
+    MinHash LSH buckets, n-gram and frame-hash postings).
+
+    Two streamed Generate operators and one codegen'd filter: a row
+    never holds more than its own list. The nested ``transform``/
+    ``flatten`` form built the whole n² struct array per row through
+    interpreted lambdas: slower warm on x2_ngram_jaccard (~1.7 s vs
+    ~1.6 s at sf0.1) and much slower on the first run at a new data size
+    (interpreted lambdas need a C2 JIT that a small warmup never
+    triggers), and its |A|×|B| form killed a 32 GB heap at sf5 (see
+    ``blocked_cosine_pairs``). Elements compare as values (structs field
+    by field), so ``a < b`` orients each pair and drops an element
+    paired with itself or with an equal copy of itself."""
+    return (
+        lists.select(col, F.explode(col).alias("a"))
+        .select("a", F.explode(col).alias("b"))
+        .filter(F.col("a") < F.col("b"))
+    )
+
+
 # Below this many (undirected, deduplicated) edge rows, components are
 # solved with a driver-side union-find instead of the distributed loop.
 # Rationale (round-9 stage split, sf0.1): the distributed loop costs

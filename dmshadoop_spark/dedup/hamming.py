@@ -4,16 +4,19 @@ The pigeonhole construction shared by SimHash text dedup and perceptual
 image-hash dedup: split the 64 bits into ``chunks`` equal slices; two
 fingerprints within Hamming distance ``chunks−1`` must agree on at least
 one slice, so an equi-join on (chunk_idx, chunk_val) finds every such
-pair with ONE uniform shuffle — no corpus self-join. Pairs are emitted
-upper-triangle from each bucket's sorted posting list JVM-side and
-deduped; ``max_bucket`` caps degenerate buckets (the 100 TB skew guard,
-same policy as minhash_lsh_pairs).
+pair with ONE uniform shuffle — no corpus self-join. Each bucket's
+posting list streams its pairs through ``components.pairs_within`` (two
+explodes, ``a < b``) and they are deduped; ``max_bucket`` caps
+degenerate buckets (the 100 TB skew guard, same policy as
+minhash_lsh_pairs).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from dmshadoop_spark.dedup.components import pairs_within
 
 
 def hamming_candidate_pairs(
@@ -51,30 +54,17 @@ def hamming_candidate_pairs(
         F.explode(chunk_structs).alias("c"),
     ).select("d", "c.chunk_idx", "c.chunk_val")
 
-    ids = F.array_sort(F.collect_list("d")).alias("ids")
-    pair_structs = F.flatten(
-        F.transform(
-            F.col("ids"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ids"), i + 2, F.size(F.col("ids"))),
-                lambda y: F.struct(x.alias("a"), y.alias("b")),
-            ),
-        )
-    )
-    cand = (
+    buckets = (
         chunked.groupBy("chunk_idx", "chunk_val")
-        .agg(ids)
+        .agg(F.collect_list("d").alias("ids"))
         .filter((F.size("ids") >= 2) & (F.size("ids") <= max_bucket))
-        .select(F.explode_outer(pair_structs).alias("p"))
-        .filter(F.col("p").isNotNull())
-        .select(
-            F.col(f"p.a.{id_col}").alias(f"{id_col}_a"),
-            F.col(f"p.b.{id_col}").alias(f"{id_col}_b"),
-            F.col(f"p.a.{fp_col}").alias("_fp_a"),
-            F.col(f"p.b.{fp_col}").alias("_fp_b"),
-        )
-        .distinct()
     )
+    cand = pairs_within(buckets, "ids").select(
+        F.col(f"a.{id_col}").alias(f"{id_col}_a"),
+        F.col(f"b.{id_col}").alias(f"{id_col}_b"),
+        F.col(f"a.{fp_col}").alias("_fp_a"),
+        F.col(f"b.{fp_col}").alias("_fp_b"),
+    ).distinct()
     return cand.select(
         f"{id_col}_a",
         f"{id_col}_b",

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from dmshadoop_spark.catalog import widen
+from dmshadoop_spark.dedup.components import pairs_within
 from dmshadoop_spark.functions.text import shingles, tokenize
 
 
@@ -126,29 +127,9 @@ def _verified_pairs_from_index(
     small = buckets.filter(
         (F.size("ids") > 1) & (F.size("ids") <= max_bucket)
     )
-    pairs = (
-        small.select(
-            F.explode_outer(
-                F.filter(
-                    F.flatten(
-                        F.transform(
-                            F.col("ids"),
-                            lambda a: F.transform(
-                                F.col("ids"),
-                                lambda b: F.struct(
-                                    a.alias("doc_a"), b.alias("doc_b")
-                                ),
-                            ),
-                        )
-                    ),
-                    lambda p: p.doc_a < p.doc_b,
-                )
-            ).alias("p")
-        )
-        .filter(F.col("p").isNotNull())
-        .select("p.doc_a", "p.doc_b")
-        .distinct()
-    )
+    pairs = pairs_within(small, "ids").select(
+        F.col("a").alias("doc_a"), F.col("b").alias("doc_b")
+    ).distinct()
     if restrict_to_ids is not None:
         ta = pairs.join(
             restrict_to_ids, pairs.doc_a == restrict_to_ids.nid, "left_semi"

@@ -9,9 +9,9 @@ The published recipe, re-expressed as Spark stages:
      centroids, driver state = k×dim only).
   2. PAIR      — exact pairwise cosine WITHIN each cluster at threshold
      ``eps`` (the paper computes the full intra-cluster similarity
-     matrix; here each cluster block is triangle-sharded exactly like
-     x2_embedding_neardup so collected arrays stay bounded no matter how
-     hot a cluster gets — results identical for any shard count).
+     matrix; here each cluster block is triangle-sharded by
+     ``blocked_cosine_pairs`` so collected arrays stay bounded no matter
+     how hot a cluster gets — results identical for any shard count).
   3. GROUP     — connected components over the ≥ eps pairs
      (dedup/components.py: min-label propagation + pointer jumping).
   4. SURVIVOR  — per duplicate group keep the example with the LOWEST
@@ -237,12 +237,21 @@ def blocked_cosine_pairs(
     """Exact all-pairs cosine ≥ ``threshold`` within each block —
     (block, vec_a, vec_b, cosine), each unordered pair exactly once.
 
-    The triangle-shard pattern (see x2_embedding_neardup's docstring for
-    the full argument): each vector hashes to one of ``shards`` shards,
-    every unordered shard pair {i, j} (including i == j) is a group, a
+    The triangle-shard pattern, EXACT all-pairs at bounded memory: each
+    vector hashes to one of ``shards`` shards (xxhash64 of its id), every
+    unordered shard pair {i, j} (including i == j) is a group, and a
     vector in shard s replicates to the ``shards`` groups it can meet a
-    partner in, and the A×B product inside a group emits each pair once.
-    Exact for ANY shard count; worst-row memory shrinks shards×.
+    partner in. Side A of a group is its shard-i members, side B its
+    shard-j members; the A×B product emits each cross-shard pair exactly
+    once with no wasted cosine, and a diagonal group (i == j, both sides
+    the whole list) keeps only its id-ascending pairs. Each pair lands in
+    exactly one group — cross-shard pairs in their {i, j} group,
+    intra-shard pairs in (s, s) — so results are IDENTICAL for any shard
+    count, and the production shape is the tested shape (no recall bound
+    to document, unlike LSH bucketing). A group holds at most
+    2·block/shards vectors, so one degenerate block never builds a
+    block-sized row: worst-row memory shrinks shards× and the product
+    emission shards²×, for a shards× shuffle-replication cost.
 
     ``vectorized`` (opt-in; False is the pinned default) computes each
     group's A×B cosine block as ONE numpy contraction inside
@@ -341,8 +350,8 @@ def blocked_cosine_pairs(
     side_a = F.filter(F.col("vecs"), lambda d: d["_s"] == F.col("i"))
     side_b = F.filter(F.col("vecs"), lambda d: d["_s"] == F.col("j"))
     # DOUBLE EXPLODE, not nested transform/flatten (round-8 sf5 probe
-    # finding, the same pathology x2_ngram_jaccard's pair stage already
-    # documents): the HOF form MATERIALIZED the full |A|×|B| struct array
+    # finding, the same pathology components.pairs_within documents):
+    # the HOF form MATERIALIZED the full |A|×|B| struct array
     # — with every cosine computed through interpreted boxed-double
     # lambdas — per grouped row before the explode could stream it; at
     # sf5 (~780 vectors per shard side) that is ~600k structs per row

@@ -103,9 +103,9 @@ def simhash_candidate_pairs(
 
     Candidate generation is the shared Hamming-banding construction
     (dedup/hamming.py, also under perceptual image-hash dedup): group
-    fingerprints by (chunk_idx, chunk_val), emit upper-triangle pairs
-    from each bucket's sorted posting list JVM-side, dedupe, cap
-    degenerate buckets. One fingerprint computation, two uniform
+    fingerprints by (chunk_idx, chunk_val), stream each bucket's pairs
+    through ``components.pairs_within``, dedupe, cap degenerate
+    buckets. One fingerprint computation, two uniform
     shuffles — no self-join recompute."""
     from dmshadoop_spark.dedup.hamming import hamming_candidate_pairs
 

@@ -174,7 +174,12 @@ def vacuum(root: str, keep_last: int = 1) -> list[int]:
     """Drop the committed generations that are neither among the newest
     ``keep_last`` nor carried by one of them (a kept generation reads
     its carried generations' files, so those directories must stay).
-    Returns the removed generation numbers."""
+    Returns the removed generation numbers.
+
+    Each dropped generation first leaves the listing with one rename to
+    a staging path, so a removal that stops partway leaves debris for
+    the next commit's ``sweep``, never a marked ``gen=N`` that lost
+    files."""
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1")
     gens = committed(root)
@@ -183,5 +188,7 @@ def vacuum(root: str, keep_last: int = 1) -> list[int]:
         kept.update(carries(root, g))
     drop = [g for g in gens if g not in kept]
     for g in drop:
-        shutil.rmtree(gen_path(root, g))
+        doomed = staging_path(root)
+        os.rename(gen_path(root, g), doomed)
+        shutil.rmtree(doomed)
     return drop

@@ -18,7 +18,7 @@ from pyspark.sql.functions import broadcast
 
 from dmshadoop_spark.catalog import load_table
 from dmshadoop_spark.functions.checkpoint import stabilize
-from dmshadoop_spark.dedup.components import connected_components
+from dmshadoop_spark.dedup.components import connected_components, pairs_within
 from dmshadoop_spark.functions.text import (
     STOPWORDS,
     doc_fingerprint,
@@ -45,8 +45,9 @@ JACCARD_DF_CAP = 1000
 
 # Triangle-shard count for x2_embedding_neardup: a label block's collected
 # rows hold <= 2/S of the block's vectors. Exactness holds for ANY value
-# (see the query docstring), so test SF runs the same code path production
-# would; raise it with block size (memory per row shrinks linearly).
+# (see blocked_cosine_pairs' docstring), so test SF runs the same code
+# path production would; raise it with block size (memory per row
+# shrinks linearly).
 NEARDUP_SHARDS = 4
 
 # --------------------------------------------------------------------------
@@ -118,8 +119,8 @@ def x2_ngram_jaccard(spark, sf_dir):
     doc's set size as a (doc_id, n) struct, so the Jaccard denominator is
     available at pair-aggregation time with **no join back to the corpus**.
     Postings group by shingle, drop df=1 shingles immediately (the vast
-    majority — they can't produce a pair), and emit the upper-triangle doc
-    pairs JVM-side with nested ``transform`` over the sorted posting list.
+    majority — they can't produce a pair), and stream each posting list's
+    doc pairs through ``pairs_within`` (two explodes, ``a < b``).
     Total shuffles: postings on shingle hash, then pair counts on (doc_a,
     doc_b) — both uniform keys.
 
@@ -155,23 +156,17 @@ def x2_ngram_jaccard(spark, sf_dir):
         F.struct(F.col("doc_id"), F.size("sh").alias("n")).alias("d"),
         F.explode_outer("sh").alias("s"),
     ).filter(F.col("s").isNotNull())
-    # df>=2 postings only; emit upper-triangle pairs via a DOUBLE EXPLODE
-    # (two codegen'd Generate operators + a codegen'd filter) instead of
-    # nested transform/flatten/filter HOFs. Measured faster warm (~1.6s vs
-    # ~1.7s sf0.1) AND dramatically faster on the first run at a new data
-    # size: HOF lambdas evaluate interpreted, so their hot loop needs C2
-    # JIT that a small-SF warmup never triggers — pure generated code has
-    # no such cliff. Memory: each first-level row carries the ids array
-    # for the second Generate (<= CAP entries, bounded by the df cap),
-    # streamed — the HOF form materialized the full n² struct array per
-    # posting row, which is strictly worse.
-    pairs = (
+    # df>=2 postings only; pairs_within streams each list's pairs (its
+    # docstring has the measured case against nested transform/flatten).
+    # The doc ids of one posting list are distinct, so `a < b` on the
+    # (doc_id, n) struct orders each pair by doc_id.
+    postings = (
         sh.groupBy("s")
         .agg(F.collect_list("d").alias("ids"))
         .filter((F.size("ids") >= 2) & (F.size("ids") <= JACCARD_DF_CAP))
-        .select(F.explode("ids").alias("a"), F.col("ids"))
-        .select("a", F.explode("ids").alias("b"))
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
+    )
+    pairs = (
+        pairs_within(postings, "ids")
         .groupBy(
             F.col("a.doc_id").alias("doc_a"),
             F.col("a.n").alias("n_a"),
@@ -1048,89 +1043,20 @@ def x6_image_features(spark, sf_dir):
 )
 def x2_embedding_neardup(spark, sf_dir):
     """Embedding-cosine near-duplicate pairs, blocked by `label` (the
-    coarse class key) and triangle-sharded inside each block so collected
-    arrays stay bounded no matter how big a label gets.
+    coarse class key): ``blocked_cosine_pairs``' exact triangle-sharded
+    all-pairs stage (its docstring has the exactness argument) with
+    NEARDUP_SHARDS shards at cosine >= 0.35, on the pinned fold path.
+    Shuffles: one groupBy(label, i, j)."""
+    from dmshadoop_spark.dedup import blocked_cosine_pairs
 
-    EXACT all-pairs at bounded memory: each vector hashes to one of
-    NEARDUP_SHARDS shards; every unordered shard pair {i, j} (including
-    i == j) is a group, and a vector in shard s replicates to the S groups
-    it can meet a partner in. A group holds at most 2k/S vectors, so one
-    degenerate label can no longer build a k-vector row (the round-1 OOM
-    risk) — worst-row memory shrinks S× and the product emission S²×,
-    for an S× shuffle-replication cost. Results are IDENTICAL for any S
-    (each pair lands in exactly one group: cross-shard pairs in their
-    {i, j} group, intra-shard pairs in (s, s)), so the production shape is
-    the tested shape — no recall bound to document, unlike LSH bucketing.
-    The cosine is computed inside the emission lambda and exposed as a
-    generated-struct field so the threshold filter reads a field instead
-    of re-deriving the dot fold. Shuffles: one groupBy(label, i, j)."""
-    from dmshadoop_spark.functions.vectors import dot
-
-    S = NEARDUP_SHARDS
-    emb = (
-        load_table(spark, sf_dir, "embeddings")
-        .select("vec_id", "label", as_double("embedding").alias("v"))
-        .select(
-            "vec_id",
-            "label",
-            "v",
-            F.sqrt(norm_sq(F.col("v"))).alias("nv"),
-            F.pmod(F.xxhash64("vec_id"), F.lit(S)).cast("int").alias("s"),
-        )
-    )
-    memberships = F.array(
-        *[
-            F.struct(
-                F.least(F.col("s"), F.lit(t)).alias("i"),
-                F.greatest(F.col("s"), F.lit(t)).alias("j"),
-            )
-            for t in range(S)
-        ]
-    )
-    sharded = emb.select(
+    return blocked_cosine_pairs(
+        load_table(spark, sf_dir, "embeddings"),
         "label",
-        F.struct("vec_id", "v", "nv", "s").alias("d"),
-        F.explode(memberships).alias("g"),
-    )
-    grouped = sharded.groupBy("label", "g.i", "g.j").agg(
-        F.collect_list("d").alias("vecs")
-    )
-    # Side A = shard-i members, side B = shard-j members (for a diagonal
-    # group both sides are the whole list). The A×B product emits each
-    # cross-shard pair exactly once with no wasted cosine; diagonal groups
-    # contain both orientations plus self-pairs, so the `lt` flag keeps
-    # only vec_id-ascending pairs there. least/greatest orient the output
-    # pair by vec_id (cosine is symmetric).
-    side_a = F.filter(F.col("vecs"), lambda d: d["s"] == F.col("i"))
-    side_b = F.filter(F.col("vecs"), lambda d: d["s"] == F.col("j"))
-    pair_structs = F.flatten(
-        F.transform(
-            side_a,
-            lambda x: F.transform(
-                side_b,
-                lambda y: F.struct(
-                    F.least(x["vec_id"], y["vec_id"]).alias("vec_a"),
-                    F.greatest(x["vec_id"], y["vec_id"]).alias("vec_b"),
-                    (dot(x["v"], y["v"]) / (x["nv"] * y["nv"])).alias(
-                        "cosine"
-                    ),
-                    (x["vec_id"] < y["vec_id"]).alias("lt"),
-                ),
-            ),
-        )
-    )
-    return (
-        grouped.select(
-            (F.col("i") == F.col("j")).alias("intra"),
-            F.explode_outer(pair_structs).alias("p"),
-        )
-        .filter(
-            F.col("p").isNotNull()
-            & (F.col("p.lt") | ~F.col("intra"))
-            & (F.col("p.cosine") >= 0.35)
-        )
-        .select("p.vec_a", "p.vec_b", "p.cosine")
-    )
+        "vec_id",
+        "embedding",
+        0.35,
+        shards=NEARDUP_SHARDS,
+    ).select("vec_a", "vec_b", "cosine")
 
 
 @query(
@@ -5330,27 +5256,16 @@ def x33_video_neardup(spark, sf_dir):
     post = hashes.select(
         "phash", F.struct("path", n_over_path.alias("n")).alias("p")
     )
-    ps = F.array_sort(F.collect_list("p")).alias("ps")
-    pair_structs = F.flatten(
-        F.transform(
-            F.col("ps"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ps"), i + 2, F.size(F.col("ps"))),
-                lambda y: F.struct(x.alias("a"), y.alias("b")),
-            ),
-        )
-    )
-    exploded = (
+    postings = (
         post.groupBy("phash")
-        .agg(ps)
+        .agg(F.collect_list("p").alias("ps"))
         .filter(F.size("ps") >= 2)
-        .select(F.explode(pair_structs).alias("pr"))
-        .select(
-            F.col("pr.a.path").alias("video_a"),
-            F.col("pr.b.path").alias("video_b"),
-            F.col("pr.a.n").alias("na"),
-            F.col("pr.b.n").alias("nb"),
-        )
+    )
+    exploded = pairs_within(postings, "ps").select(
+        F.col("a.path").alias("video_a"),
+        F.col("b.path").alias("video_b"),
+        F.col("a.n").alias("na"),
+        F.col("b.n").alias("nb"),
     )
     agg = exploded.groupBy("video_a", "video_b", "na", "nb").agg(
         F.count(F.lit(1)).alias("s")

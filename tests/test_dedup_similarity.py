@@ -89,6 +89,23 @@ def test_hamming_banding_negative_fingerprints(spark):
     assert len(gotd) == 1
 
 
+def test_hamming_banding_never_pairs_a_row_with_itself(spark):
+    """A fingerprint row given twice must not pair the document with
+    itself: each bucket's pairs are oriented ``a < b``, which an element
+    and its equal copy never satisfy."""
+    from dmshadoop_spark.dedup.hamming import hamming_candidate_pairs
+
+    df = spark.createDataFrame(
+        [(1, 7), (1, 7), (2, 7), (3, 1 << 40)], "doc_id long, fp long"
+    )
+    got = {
+        tuple(r)
+        for r in hamming_candidate_pairs(df, "doc_id", "fp", chunks=4).collect()
+    }
+    assert not [r for r in got if r[0] == r[1]], got
+    assert got == {(1, 2, 0), (1, 3, 4), (2, 3, 4)}
+
+
 def test_knn_exact_duplicate_vector_is_top1(spark):
     vecs = [
         (0, [1.0, 0.0, 0.0, 0.0]),

@@ -96,6 +96,29 @@ def test_vacuum_keeps_generations_the_kept_one_carries(tmp_path):
         generations.vacuum(root, keep_last=0)
 
 
+def test_vacuum_stopped_partway_leaves_no_torn_generation(tmp_path, monkeypatch):
+    """A vacuum whose removal stops after deleting some of a dropped
+    generation's data files must not leave that generation committed
+    with files missing: it leaves debris, which the next commit sweeps."""
+    root = str(tmp_path / "t")
+    generations.commit(root, _writer("a"))  # 0
+    generations.commit(root, _writer("b"))  # 1
+
+    def torn(path, *args, **kwargs):
+        data = sorted(e for e in os.listdir(path) if e != "_SUCCESS")
+        os.remove(os.path.join(path, data[0]))
+        raise OSError("removal stopped partway")
+
+    with monkeypatch.context() as m:
+        m.setattr(generations.shutil, "rmtree", torn)
+        with pytest.raises(OSError, match="stopped partway"):
+            generations.vacuum(root, keep_last=1)
+    assert generations.committed(root) == [1]
+    assert generations.commit(root, _writer("c")) == 2
+    assert _staging_dirs(root) == []
+    assert generations.committed(root) == [1, 2]
+
+
 def test_unmarked_generation_is_invisible_and_swept(tmp_path):
     root = str(tmp_path / "t")
     generations.commit(root, _writer("a"))

@@ -101,6 +101,35 @@ def test_shingle_pipeline_single_evaluation(spark, sf_dir):
             )
 
 
+def test_pair_stages_stream_through_two_generates(spark, sf_dir):
+    """Every "all pairs in a bucket" stage emits its pairs through two
+    streamed explodes (dedup.components.pairs_within, or the A×B double
+    explode of blocked_cosine_pairs): no nested transform/flatten that
+    builds a group's whole pair array in one row, and a Generate that
+    carries the previous Generate's element into the second explode."""
+    import re
+
+    for qid in (
+        "x2_simhash",
+        "x2_minhash_lsh",
+        "x2_embedding_neardup",
+        "x33_video_neardup",
+        "x2_ngram_jaccard",
+    ):
+        p = plan(spark, sf_dir, qid)
+        assert "flatten(" not in p, qid
+        gens = re.findall(
+            r"^Arguments: explode\(.*\), \[([^\]]*)\], (?:true|false), "
+            r"\[([^\]]+)\]$",
+            p,
+            re.M,
+        )
+        generated = {out for _, out in gens}
+        assert any(
+            set(carried.split(", ")) & generated for carried, _ in gens
+        ), (qid, gens)
+
+
 def test_simhash_votes_are_compiled_aggregates(spark, sf_dir):
     """SimHash fingerprints must come from the explode + SUM-aggregate
     shape (codegen, partial agg) — not interpreted per-row array folds."""
