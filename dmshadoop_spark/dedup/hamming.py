@@ -6,7 +6,9 @@ fingerprints within Hamming distance ``chunks−1`` must agree on at least
 one slice, so an equi-join on (chunk_idx, chunk_val) finds every such
 pair with ONE uniform shuffle — no corpus self-join. Each bucket's
 posting list streams its pairs through ``components.pairs_within`` (two
-explodes, ``a < b``) and they are deduped; ``max_bucket`` caps
+explodes, ``a < b``); each id pair is reported once, with the least
+Hamming distance of its candidate fingerprint pairs (an id may come with
+several fingerprints, as a video with one per frame); ``max_bucket`` caps
 degenerate buckets (the 100 TB skew guard, same policy as
 minhash_lsh_pairs).
 """
@@ -26,10 +28,12 @@ def hamming_candidate_pairs(
     chunks: int = 4,
     max_bucket: int = 100_000,
 ) -> DataFrame:
-    """(id_a, id_b, hamming) for fingerprint pairs sharing ≥1 of
-    ``chunks`` exact 64/chunks-bit slices (catches ALL pairs with
-    hamming ≤ chunks−1; wider pairs appear only if they happen to agree
-    on a slice)."""
+    """(id_a, id_b, hamming), id_a < id_b, for the ids with fingerprints
+    sharing ≥1 of ``chunks`` exact 64/chunks-bit slices (catches ALL
+    pairs with hamming ≤ chunks−1; wider pairs appear only if they
+    happen to agree on a slice). An id is never paired with itself, and
+    an id pair is reported once, with the least hamming over the
+    fingerprint pairs that share a slice."""
     width = 64 // chunks
     chunk_structs = F.array(
         *[
@@ -59,14 +63,16 @@ def hamming_candidate_pairs(
         .agg(F.collect_list("d").alias("ids"))
         .filter((F.size("ids") >= 2) & (F.size("ids") <= max_bucket))
     )
-    cand = pairs_within(buckets, "ids").select(
+    # a < b orders the (id, fp) structs, so an id with two fingerprints
+    # pairs with itself there: those pairs are dropped here
+    cand = pairs_within(buckets, "ids").filter(
+        F.col(f"a.{id_col}") != F.col(f"b.{id_col}")
+    )
+    return cand.groupBy(
         F.col(f"a.{id_col}").alias(f"{id_col}_a"),
         F.col(f"b.{id_col}").alias(f"{id_col}_b"),
-        F.col(f"a.{fp_col}").alias("_fp_a"),
-        F.col(f"b.{fp_col}").alias("_fp_b"),
-    ).distinct()
-    return cand.select(
-        f"{id_col}_a",
-        f"{id_col}_b",
-        F.bit_count(F.col("_fp_a").bitwiseXOR(F.col("_fp_b"))).alias("hamming"),
+    ).agg(
+        F.min(
+            F.bit_count(F.col(f"a.{fp_col}").bitwiseXOR(F.col(f"b.{fp_col}")))
+        ).alias("hamming")
     )

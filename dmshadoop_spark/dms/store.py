@@ -50,16 +50,25 @@ whole price of a small call.
 - The point calls (``download``, ``get_file_meta_data``,
   ``get_file_version``, ``get_lastest_version``, ``upload``, ``delete``,
   ``delete_all_version`` and ``update``) and ``search`` run on the
-  driver. They read the committed generation with ``pyarrow.dataset``
-  filtered on ``name`` (or, for ``search``, on the postings twins'
-  ``term``), so they read one name's or one term's row groups, and
-  apply its tombstones in memory. ``update`` streams the one file it
-  rewrites, so it holds one row group at a time.
+  driver and apply the generation's tombstones in memory. A point call
+  reads one name the way an HBase get reads an HFile: the store keeps
+  every data file's parsed footer and every decoded tombstone part
+  (``_FileCache``, keyed by file identity, so the hardlinked files a
+  commit carries are read once), prunes row groups by their ``name``
+  min/max and decodes only the matching row groups' columns. Every data
+  file is written in row groups of at most ``_DATA_ROW_GROUP`` rows, so
+  after ``compact(cluster_by=["name"])`` a point read decodes one block
+  of about 240 KiB. ``search`` reads the postings twins with
+  ``pyarrow.dataset`` filtered on ``term``, so it reads one term's row
+  groups. ``update`` streams the one file it rewrites, so it holds one
+  row group at a time.
 - ``compact`` rewrites on the driver through Arrow at every size: it
   reads the key columns of every data file, then each row group that
   holds a live row and each twin once, spills them to memory-mapped
   Arrow files and writes the output files from those, a row group at a
-  time (see ``_write_slices``).
+  time (see ``_write_slices``). The twins are already sorted, so the
+  spilled twin is put in order by an integer sort of ranks, not by a
+  string sort.
 - ``bulk_ingest``, ``df()`` and ``diff`` take or return Spark frames
   and always run in Spark. ``delete_where``'s predicate scan runs in
   Spark and its commit on the driver: the matching keys come back in one
@@ -70,25 +79,27 @@ whole price of a small call.
 Every document file, data part and postings twin together, is written
 by ``_write_docs``. Timing ``compact(cluster_by=["name"])`` on a 4-vCPU
 host shared with other work (store of versioned 10-100-word text
-documents over a 30-word vocabulary, 9 data files from ``bulk_ingest``
-and ``upload``, 2 tombstones; sizes decoded: the ``length`` column plus
-the other columns' uncompressed footer sizes). Wall time is the median
-of the warm calls (4 per fresh process, two processes at 114 MiB); peak
-RSS growth and peak heap (anonymous RSS) growth are those of each
-process's first call (their mean at 114 MiB). RSS also counts the
-pages of the memory-mapped spills that the call touched, which are file
+documents over a 30-word vocabulary, 8 data files written by
+``_write_docs`` and 1 by ``upload``, 2 tombstones; sizes decoded: the
+``length`` column plus the other columns' uncompressed footer sizes).
+Wall time is the mean of two fresh processes' medians of their warm
+calls (4 calls per process, each on a restore of the same generation);
+peak RSS growth and peak heap (anonymous RSS) growth are those of each
+process's first call, averaged over the two. RSS also counts the pages
+of the memory-mapped spills that the call touched, which are file
 cache.
 
                           target_files=1            target_files=4
                           wall    RSS    heap       wall    RSS    heap
-    2.3 MiB (5k docs)    146 ms   55 MiB  39 MiB    108 ms   40 MiB  25 MiB
-    11.4 MiB (25k docs)  662 ms  138 MiB  93 MiB    626 ms  110 MiB  64 MiB
-    22.9 MiB (50k docs)  1.23 s  200 MiB 116 MiB    1.50 s  167 MiB  89 MiB
-    45.8 MiB (100k docs) 3.09 s  270 MiB 112 MiB    2.84 s  258 MiB 104 MiB
-    114 MiB (250k docs)  6.22 s  530 MiB 189 MiB    6.58 s  526 MiB 191 MiB
+    2.7 MiB (5k docs)    146 ms   51 MiB  35 MiB    144 ms   40 MiB  25 MiB
+    13.5 MiB (25k docs)  562 ms  135 MiB  86 MiB    488 ms  105 MiB  56 MiB
+    26.9 MiB (50k docs)  1.09 s  193 MiB 106 MiB    1.01 s  178 MiB  90 MiB
+    53.8 MiB (100k docs) 1.84 s  290 MiB 129 MiB    1.93 s  284 MiB 128 MiB
+    135 MiB (250k docs)  4.30 s  563 MiB 163 MiB    4.32 s  553 MiB 171 MiB
 
-At 114 MiB the heap holds 102 MiB of Arrow buffers at its peak, most of
-it the spilled twin's sort order (5.8M postings rows).
+On the 135 MiB store (5.8M postings rows) the code before the twin's
+integer ordering took 4.6-5.8 s with 183-196 MiB of heap growth, most of
+it the all-twins join's buffered output and the twin's multi-key sort.
 
 Fixed reference bugs (SURVEY.md §2 notes):
   B1 — latest version is numeric max(version), not a string sort
@@ -111,6 +122,7 @@ import os
 import shutil
 import uuid
 from collections.abc import Callable, Iterable
+from typing import NamedTuple
 
 import numpy as np
 import pyarrow as pa
@@ -195,28 +207,123 @@ _ATTEMPTS_DIR = ".attempts"
 # reads only the row groups whose range holds one of its terms.
 _POSTINGS_ROW_GROUP = 16384
 
-# Rows per row group of a data file that ``compact`` writes: the default
-# of spark.sql.execution.arrow.maxRecordsPerBatch, so a compacted file has
-# the row groups of a file written by a ``mapInArrow`` task.
-_DATA_ROW_GROUP = 10_000
+# Most rows per row group of any data file ``_write_docs`` writes: the
+# unit a point read decodes (about 240 KiB of 10-100-word texts), as an
+# HFile block is an HBase get's. Small enough that a read decodes little
+# besides its row, large enough that a footer stays small (5000
+# documents compact into 10 row groups).
+_DATA_ROW_GROUP = 512
+
+# Least rows per record batch of ``compact``'s spilled twin (the join
+# emits small batches; fewer, larger ones keep the per-chunk work of the
+# twin's ordering and of ``_taken`` small).
+_SPILL_BATCH = 65_536
+
+# ``_taken`` slices runs of rows instead of taking them when they average
+# this many rows: from there on, slicing a 262144-row window of postings
+# rows costs no more than taking it (for 512 document rows slicing wins
+# from runs of about 3 rows on).
+_RUN_ROWS = 32
+
+# How many distinct keys the packed int64 sort key of ``_twin_order``
+# can hold: slices x distinct terms x plan rows x postings rows must not
+# exceed it, else the twin is ordered by ``np.lexsort`` over the same
+# ranks.
+_PACKED_KEYS = 2**63
 
 # ``compact``'s spill files, inside its staging directory; hidden, and
 # removed before the commit
 _SPILL_DIR = ".spill"
 
 
-def _visible_files(dir_path: str) -> list[str]:
-    """Paths of the visible data files directly under ``dir_path`` (none
+def _visible(dir_path: str) -> list[os.DirEntry]:
+    """The visible data files directly under ``dir_path``, by name (none
     if it does not exist); markers and hidden files (``_``/``.``-prefixed)
     are skipped."""
-    if not os.path.isdir(dir_path):
+    try:
+        with os.scandir(dir_path) as entries:
+            found = [
+                e for e in entries
+                if not e.name.startswith(("_", ".")) and e.is_file()
+            ]
+    except (FileNotFoundError, NotADirectoryError):
         return []
-    return [
-        os.path.join(dir_path, fn)
-        for fn in sorted(os.listdir(dir_path))
-        if not fn.startswith(("_", "."))
-        and os.path.isfile(os.path.join(dir_path, fn))
-    ]
+    return sorted(found, key=lambda e: e.name)
+
+
+def _visible_files(dir_path: str) -> list[str]:
+    """Paths of the visible data files directly under ``dir_path``."""
+    return [e.path for e in _visible(dir_path)]
+
+
+class _FileCache:
+    """What ``load`` makes of each immutable file of a directory, kept
+    across calls. An entry is keyed by the file's identity (device,
+    inode, size, mtime), so the hardlinks that carry a file from one
+    generation to the next share it, and a file replaced under the same
+    name is loaded again. Each listing rebuilds the cache from the files
+    it lists, so it holds one directory's files at most."""
+
+    def __init__(self, load: Callable[[str], object]):
+        self._load = load
+        self._held: dict[tuple[int, int, int, int], object] = {}
+
+    def listed(self, dir_path: str) -> list[tuple[str, object]]:
+        """(path, value) of each visible file under ``dir_path``, by name."""
+        held, fresh, out = self._held, {}, []
+        for entry in _visible(dir_path):
+            st = entry.stat()
+            key = (st.st_dev, st.st_ino, st.st_size, st.st_mtime_ns)
+            value = fresh.get(key, held.get(key))
+            if value is None:
+                value = self._load(entry.path)
+            fresh[key] = value
+            out.append((entry.path, value))
+        self._held = fresh
+        return out
+
+
+class _Footer(NamedTuple):
+    """A data file's parsed footer and, per row group, its ``name`` range
+    (min, max), or None where the footer holds none (such a row group
+    may hold any name)."""
+
+    metadata: pq.FileMetaData
+    names: list[tuple[str, str] | None]
+
+
+def _footer(path: str) -> _Footer:
+    """Parse data file ``path``'s footer. ``name`` is the first column of
+    every data file (``_write_docs`` writes ``DOCUMENT_SCHEMA``)."""
+    md = pq.read_metadata(path)
+    names = []
+    for g in range(md.num_row_groups):
+        stats = md.row_group(g).column(0).statistics
+        names.append(
+            (stats.min, stats.max)
+            if stats is not None and stats.has_min_max
+            else None
+        )
+    return _Footer(md, names)
+
+
+def _read(
+    path: str,
+    footer: _Footer,
+    columns: list[str],
+    groups: list[int] | None = None,
+) -> pa.Table:
+    """``columns`` of data file ``path`` (of its row groups ``groups``
+    only, when given) with ``DOCUMENT_SCHEMA``'s types, read through its
+    cached ``footer``, which is not parsed again."""
+    pf = pq.ParquetFile(path, metadata=footer.metadata)
+    got = pf.read(columns) if groups is None else pf.read_row_groups(groups, columns)
+    return got.cast(pa.schema([_ARROW_DOCUMENT_SCHEMA.field(c) for c in columns]))
+
+
+def _read_tombstones(path: str) -> pa.Table:
+    """One tombstone part's (name, version) keys."""
+    return pq.ParquetFile(path).read().cast(_ARROW_TOMBSTONE_SCHEMA)
 
 
 def _link_visible(src_dir: str, dst_dir: str, skip: str | None = None) -> None:
@@ -347,8 +454,9 @@ def _write_docs(
     """The one writer of document files, used on the driver by
     ``upload``, ``update`` and ``compact`` and inside ``bulk_ingest``'s
     tasks. Streams ``docs`` (document rows: a table, or record batches or
-    tables, each of which becomes one row group; a table's batches are
-    its row groups) through one
+    tables, each of which becomes one row group, cut into row groups of
+    ``_DATA_ROW_GROUP`` rows when longer; a table's batches are its row
+    groups) through one
     ``pq.ParquetWriter`` into a new part file under ``dir_path``, and
     writes the part's postings twin, sorted by term in row groups of at
     most ``_POSTINGS_ROW_GROUP``, under ``dir_path/_postings/`` with the
@@ -385,7 +493,7 @@ def _write_docs(
                     ],
                     store_schema=False,
                 )
-            writer.write_table(table)
+            writer.write_table(table, row_group_size=_DATA_ROW_GROUP)
             if postings is None:
                 tokenized.append(_postings_of(table))
             rows += table.num_rows
@@ -413,13 +521,26 @@ def _taken(
     table: pa.Table, order: np.ndarray, size: int
 ) -> Iterable[pa.Table]:
     """The rows of ``table`` at the indices ``order``, as tables of at most
-    ``size`` rows. Each is taken from ``table``'s chunks one by one, so no
-    copy of the whole table is made."""
+    ``size`` rows. Each is built from ``table``'s chunks one by one, so no
+    copy of the whole table is made: as zero-copy slices when its indices
+    run in ascending steps of one within a chunk for ``_RUN_ROWS`` rows
+    on average (a compaction of files that are already in order), else
+    by a take from each chunk."""
     chunks = table.to_batches()
     starts = np.cumsum([0] + [c.num_rows for c in chunks])
     for lo in range(0, len(order), size):
         at = order[lo : lo + size]
         chunk = np.searchsorted(starts, at, "right") - 1
+        cut = np.flatnonzero((np.diff(at) != 1) | (np.diff(chunk) != 0)) + 1
+        if (len(cut) + 1) * _RUN_ROWS <= len(at):
+            yield pa.Table.from_batches(
+                [
+                    chunks[chunk[a]].slice(at[a] - starts[chunk[a]], b - a)
+                    for a, b in zip([0, *cut.tolist()], [*cut.tolist(), len(at)])
+                ],
+                table.schema,
+            )
+            continue
         # a stable sort of small integers is a radix sort
         small = chunk.astype(np.min_scalar_type(len(chunks)))
         by_chunk = np.argsort(small, kind="stable")
@@ -442,68 +563,174 @@ def _spilled(path: str, tables: Iterable, schema: pa.Schema | None = None) -> pa
     return pa.ipc.open_file(pa.memory_map(path)).read_all()
 
 
+def _rebatched(batches: Iterable[pa.RecordBatch], rows: int) -> Iterable[pa.Table]:
+    """``batches`` regrouped into one-chunk tables of at least ``rows``
+    rows (the last may hold fewer)."""
+    held, n = [], 0
+    for batch in batches:
+        if batch.num_rows:
+            held.append(batch)
+            n += batch.num_rows
+        if n >= rows:
+            yield pa.Table.from_batches(held).combine_chunks()
+            held, n = [], 0
+    if held:
+        yield pa.Table.from_batches(held).combine_chunks()
+
+
+def _joined(twin: str, keys: pa.Table) -> pa.RecordBatchReader:
+    """The rows of the postings file ``twin`` whose (name, version) is a
+    row of ``keys`` (name, version, ``__row``), each with its ``__row``,
+    by one streamed Acero hash join; its hash table holds ``keys``."""
+    scan = ac.ScanNodeOptions(
+        ds.dataset([twin], schema=_ARROW_POSTINGS_SCHEMA),
+        batch_readahead=1, fragment_readahead=1,
+    )
+    on_keys = ac.HashJoinNodeOptions(
+        "inner", ["name", "version"], ["name", "version"],
+        left_output=_ARROW_POSTINGS_SCHEMA.names, right_output=["__row"],
+    )
+    return ac.Declaration("hashjoin", on_keys, inputs=[
+        ac.Declaration("scan", scan),
+        ac.Declaration("table_source", ac.TableSourceNodeOptions(keys)),
+    ]).to_reader()
+
+
+def _twin_order(
+    twin: pa.Table, n_slices: int, slice_of: np.ndarray, rank_of: np.ndarray
+) -> tuple[np.ndarray, np.ndarray]:
+    """The order that sorts ``compact``'s spilled twin (postings rows, each
+    with ``__row``, the plan row of its document) by slice, then
+    ``_POSTINGS_ORDER``, and the number of rows of each of the
+    ``n_slices`` slices. ``slice_of`` and ``rank_of`` give each plan row's
+    slice and its rank in (name, version) order, so the order is a sort
+    of integers: the term's rank comes from a dictionary encoding of the
+    ``term`` column, whose distinct terms alone are sorted as strings.
+
+    The three ranks and the row's own position are packed into one int64
+    key per row, which is sorted in place and then reduced to the
+    position: the heap holds 8 bytes per postings row, and as the keys
+    are distinct the result is that of a stable sort. When slices x
+    distinct terms x plan rows x postings rows exceeds ``_PACKED_KEYS``
+    the key could overflow, and ``np.lexsort`` (stable) sorts by the
+    three ranks instead, holding 32 bytes per row."""
+    n_docs, n_rows = len(rank_of), twin.num_rows
+    encoded = pc.dictionary_encode(twin["term"])
+    terms = (
+        encoded.chunk(encoded.num_chunks - 1).dictionary
+        if encoded.num_chunks
+        else pa.array([], pa.string())
+    )
+    term_rank = np.empty(len(terms), np.int64)
+    term_rank[pc.sort_indices(terms).to_numpy()] = np.arange(len(terms))
+    packed = n_slices * len(terms) * n_docs * n_rows <= _PACKED_KEYS
+    keys = [np.empty(n_rows, np.int64) for _ in range(1 if packed else 3)]
+    counts = np.zeros(n_slices, np.int64)
+    lo = 0
+    for rows, words in zip(twin["__row"].chunks, encoded.chunks):
+        row = rows.to_numpy()
+        hi = lo + len(row)
+        where, doc = slice_of[row], rank_of[row]
+        term = term_rank[words.indices.to_numpy()]
+        counts += np.bincount(where, minlength=n_slices)
+        if packed:
+            keys[0][lo:hi] = (
+                ((where * len(terms) + term) * n_docs + doc) * n_rows
+                + np.arange(lo, hi)
+            )
+        else:
+            for out, rank in zip(keys, (doc, term, where)):
+                out[lo:hi] = rank
+        lo = hi
+    encoded = terms = words = None  # the sort needs none of the encoding
+    if not packed:
+        return np.lexsort(keys), counts
+    (order,) = keys
+    order.sort()
+    np.remainder(order, max(n_rows, 1), out=order)
+    return order, counts
+
+
 def _write_slices(
-    files: list[str], plan: pa.Table, cuts: list[int], staging: str
+    files: list[tuple[str, _Footer]], plan: pa.Table, cuts: list[int], staging: str
 ) -> None:
     """Write ``compact``'s plan (name, version and ``__gid``, each row's
-    running number across ``files``, in output order) under ``staging``:
-    one data part and twin per slice between consecutive ``cuts``.
+    running number across ``files``, the data files with their cached
+    footers, in output order) under ``staging``: one data part and twin
+    per slice between consecutive ``cuts``.
 
     Every data row group and twin is decoded once. One pass reads each
     row group of ``files`` that holds a planned row and spills those rows,
     in file order, to an Arrow IPC file in a hidden ``_SPILL_DIR`` (rows
     of a twin-less file are tokenized into a spilled twin on the way).
-    One streamed hash join of all the twins against the plan's keys, each
-    tagged with its slice, spills the live postings. Each slice is then
-    written by ``_write_docs`` from the memory-mapped spills, its rows in
-    plan order and its twin in ``_POSTINGS_ORDER``, a row group at a
-    time. The driver's heap holds the plan, the twin's sort order (8
-    bytes per postings row, twice that while it is sorted) and a few row
-    groups; the spilled rows are file cache, and the spills take about
-    the output's size again on disk until the commit."""
+    One streamed hash join per twin against its file's planned keys
+    (``_joined``) tags each live posting with its plan row, and they are
+    spilled in batches of at least ``_SPILL_BATCH`` rows; ``_twin_order``
+    then orders them by integer ranks instead of a sort of strings. Each
+    slice is written by ``_write_docs`` from the memory-mapped spills,
+    its rows in plan order and its twin in ``_POSTINGS_ORDER``, a row
+    group at a time. The driver's heap holds the plan, one twin's join,
+    the twin's order (8 bytes per postings row, 4 more for the term
+    encoding while the order is built) and a few row groups; the spilled
+    rows are file cache, and the spills take about the output's size
+    again on disk until the commit."""
     spill = os.path.join(staging, _SPILL_DIR)
     os.makedirs(spill)
-    slot = np.full(_footer_rows(files), -1)  # plan position, -1: dropped
+    # each file row's plan position, -1 for a dropped row
+    slot = np.full(sum(f.metadata.num_rows for _, f in files), -1)
     slot[plan.column("__gid").to_numpy()] = np.arange(plan.num_rows)
     tokens = os.path.join(spill, "tokens.parquet")
 
     def live_rows() -> Iterable[pa.Table]:
         first = 0
         with pq.ParquetWriter(tokens, _ARROW_POSTINGS_SCHEMA) as tokenized:
-            for f in files:
-                pf = pq.ParquetFile(f)
+            for path, footer in files:
+                pf = pq.ParquetFile(path, metadata=footer.metadata)
                 for g in range(pf.num_row_groups):
                     live = slot[first : first + pf.metadata.row_group(g).num_rows] >= 0
                     first += len(live)
                     if live.any():
                         rows = pf.read_row_group(g).cast(_ARROW_DOCUMENT_SCHEMA)
                         rows = rows if live.all() else rows.filter(live)
-                        if not os.path.isfile(_twin(f)):
+                        if not os.path.isfile(_twin(path)):
                             tokenized.write_table(_postings_of(rows))
                         yield rows
 
     rows = _spilled(os.path.join(spill, "rows"), live_rows(), _ARROW_DOCUMENT_SCHEMA)
-    twins = [t for t in map(_twin, files) if os.path.isfile(t)] + [tokens]
+    keys = plan.select(["name", "version"]).append_column(
+        "__row", [np.arange(plan.num_rows)]
+    )
+
+    def joined() -> Iterable[pa.RecordBatch]:
+        """Each twin's postings of planned rows, tagged with their plan
+        row: one hash join per twin against its data file's planned keys
+        (all twin-less files' at once for the tokenized twin), so the
+        join buffers one twin's output at most."""
+        first, bare = 0, []
+        for path, footer in files:
+            planned = slot[first : first + footer.metadata.num_rows]
+            first += len(planned)
+            planned = planned[planned >= 0]
+            if not os.path.isfile(_twin(path)):
+                bare.append(planned)
+            elif len(planned):
+                yield from _joined(_twin(path), keys.take(planned))
+        if bare:
+            yield from _joined(tokens, keys.take(np.concatenate(bare)))
+
+    twin = _spilled(
+        os.path.join(spill, "twin"),
+        _rebatched(joined(), _SPILL_BATCH),
+        _ARROW_POSTINGS_SCHEMA.append(pa.field("__row", pa.int64())),
+    )
+    by_key = np.empty(plan.num_rows, np.int64)  # plan row -> (name, version) rank
+    by_key[pc.sort_indices(keys, _POSTINGS_ORDER[1:]).to_numpy()] = np.arange(
+        plan.num_rows
+    )
     slices = np.searchsorted(cuts, np.arange(plan.num_rows), "right") - 1
-    keys = plan.select(["name", "version"]).append_column("__slice", [slices])
-    scan = ac.ScanNodeOptions(
-        ds.dataset(twins, schema=_ARROW_POSTINGS_SCHEMA),
-        batch_readahead=1, fragment_readahead=1,
-    )
-    on_keys = ac.HashJoinNodeOptions(
-        "inner", ["name", "version"], ["name", "version"],
-        left_output=_ARROW_POSTINGS_SCHEMA.names, right_output=["__slice"],
-    )
-    join = ac.Declaration("hashjoin", on_keys, inputs=[
-        ac.Declaration("scan", scan),
-        ac.Declaration("table_source", ac.TableSourceNodeOptions(keys)),
-    ])
-    # the join's reader, and with it its hash table, goes with the call
-    twin = _spilled(os.path.join(spill, "twin"), join.to_reader())
-    order = pc.sort_indices(twin, [("__slice", "ascending"), *_POSTINGS_ORDER])
-    counts = np.bincount(twin["__slice"].to_numpy(), minlength=len(cuts) - 1)
-    ends, order = np.cumsum([0, *counts]), order.to_numpy()
-    twin = twin.drop_columns("__slice")
+    order, counts = _twin_order(twin, len(cuts) - 1, slices, by_key)
+    ends = np.cumsum([0, *counts])
+    twin = twin.drop_columns("__row")
     at = np.argsort(slot[slot >= 0])  # plan row -> its row in the spill
     for s, (lo, hi) in enumerate(zip(cuts, cuts[1:])):
         if lo < hi:  # twin: tables of whole row groups, cut by _write_docs
@@ -617,6 +844,10 @@ class DocumentStore:
         self.spark = spark
         self.base_dir = base_dir
         os.makedirs(base_dir, exist_ok=True)
+        # parsed data-file footers and decoded tombstone parts: the files
+        # are immutable, so each is read once while its generation is read
+        self._footers = _FileCache(_footer)
+        self._tombs = _FileCache(_read_tombstones)
 
     # -- storage plumbing --------------------------------------------------
 
@@ -625,7 +856,7 @@ class DocumentStore:
         current generation when None (None for an empty store)."""
         if generation is None:
             return generations.current(self.base_dir)
-        if generation not in generations.committed(self.base_dir):
+        if not generations.is_committed(self.base_dir, generation):
             raise ValueError(f"no committed generation {generation}")
         return generation
 
@@ -661,34 +892,44 @@ class DocumentStore:
         generation: int | None = None,
     ) -> tuple[list[dict], set[int]]:
         """Driver-path read of one name in a committed generation (default:
-        the current one): its live rows (``version`` plus ``columns``) and
-        its tombstoned versions. ``pyarrow.dataset`` reads the
-        generation's files filtered on ``name`` — footer statistics skip
-        the row groups whose name range cannot match, and
-        ``compact(cluster_by=["name"])`` makes those ranges disjoint —
-        and the tombstones are applied in memory, the same anti-join
-        ``df()`` runs in Spark. No Spark job."""
+        the current one): its live rows (``version`` plus ``columns``;
+        ``__filename`` is the data file's path) and its tombstoned
+        versions. Each data file's row groups are pruned by the ``name``
+        ranges of its cached footer (``compact(cluster_by=["name"])``
+        makes those ranges disjoint), and only the matching row groups'
+        columns are decoded. The tombstones are applied in memory, the
+        same anti-join ``df()`` runs in Spark. No Spark job."""
         gen = self._resolve(generation)
         if gen is None:
             return [], set()
         dead = set(self._dead(gen, name).column("version").to_pylist())
-        data = ds.dataset(self._data_files(gen), schema=_ARROW_DOCUMENT_SCHEMA)
-        rows = data.to_table(
-            columns=["version", *columns], filter=ds.field("name") == name
-        )
-        return [r for r in rows.to_pylist() if r["version"] not in dead], dead
+        cols = ["version", *(c for c in columns if c != "__filename")]
+        live = []
+        for path, footer in self._footers.listed(self._gen_path(gen)):
+            groups = [
+                g for g, r in enumerate(footer.names)
+                if r is None or r[0] <= name <= r[1]
+            ]
+            if not groups:
+                continue
+            got = _read(path, footer, ["name", *cols], groups)
+            got = got.filter(pc.equal(got.column("name"), name)).select(cols)
+            for row in got.to_pylist():
+                if row["version"] not in dead:
+                    if "__filename" in columns:
+                        row["__filename"] = path
+                    live.append(row)
+        return live, dead
 
     def _dead(self, gen: int, name: str | None = None) -> pa.Table:
         """The driver-side read of generation ``gen``'s tombstones: its
-        tombstoned (name, version) keys, only ``name``'s when given. With
-        no tombstone file it returns an empty table and builds no
-        dataset."""
-        files = self._tombstone_files(gen)
-        if not files:
+        tombstoned (name, version) keys, only ``name``'s when given. Each
+        part is decoded once and kept (``_FileCache``)."""
+        parts = [t for _, t in self._tombs.listed(self._tombstone_dir(gen))]
+        if not parts:
             return _ARROW_TOMBSTONE_SCHEMA.empty_table()
-        match = None if name is None else ds.field("name") == name
-        tombs = ds.dataset(files, schema=_ARROW_TOMBSTONE_SCHEMA)
-        return tombs.to_table(filter=match)
+        dead = pa.concat_tables(parts)
+        return dead if name is None else dead.filter(pc.equal(dead["name"], name))
 
     def df(self, generation: int | None = None) -> DataFrame:
         """A table snapshot (empty, schema-stable, if no data).
@@ -785,15 +1026,12 @@ class DocumentStore:
         gen = self._resolve(None)
         if gen is None:
             return None
-        files = self._data_files(gen)
+        files = self._footers.listed(self._gen_path(gen))
         if not files:
             return self._commit(None, None)
         cluster_by = cluster_by or []
         cols = list(dict.fromkeys(["name", "version", *cluster_by]))
-        keys = pa.concat_tables(
-            ds.dataset(f, schema=_ARROW_DOCUMENT_SCHEMA).to_table(columns=cols)
-            for f in files
-        )
+        keys = pa.concat_tables(_read(path, footer, cols) for path, footer in files)
         plan = (
             keys.append_column("__gid", [np.arange(keys.num_rows)])
             .join(self._dead(gen), ["name", "version"], join_type="left anti")
@@ -901,19 +1139,20 @@ class DocumentStore:
 
     def layout(self, generation: int | None = None) -> dict[str, int]:
         """Physical-layout facts for one committed generation: data file
-        count, tombstone file/row counts, postings file/row counts, how
-        many data files are inode-shared with the PREVIOUS generation (the
-        merge-on-read pin: a delete commit shares every data file, an
-        update all but one, a compact none), and the store's committed
-        ``generations`` count. Row counts come from the parquet footers,
-        read with pyarrow, so no Spark job runs."""
+        and row-group counts, tombstone file/row counts, postings file/row
+        counts, how many data files are inode-shared with the PREVIOUS
+        generation (the merge-on-read pin: a delete commit shares every
+        data file, an update all but one, a compact none), and the
+        store's committed ``generations`` count. The data files' footers
+        and the tombstones are the cached ones the point calls read, the
+        twins' row counts come from their footers; no Spark job runs."""
         gen = self._resolve(generation)
         committed = generations.committed(self.base_dir)
-        data_files, tomb_files, postings_files = [], [], []
+        data, tombs, postings_files = [], [], []
         prev_inodes: set[int] = set()
         if gen is not None:
-            data_files = self._data_files(gen)
-            tomb_files = self._tombstone_files(gen)
+            data = self._footers.listed(self._gen_path(gen))
+            tombs = self._tombs.listed(self._tombstone_dir(gen))
             postings_files = _visible_files(
                 os.path.join(self._gen_path(gen), _POSTINGS_DIR)
             )
@@ -921,11 +1160,12 @@ class DocumentStore:
             prev_inodes = {
                 os.stat(f).st_ino for f in self._data_files(gen - 1)
             }
-        shared = sum(1 for f in data_files if os.stat(f).st_ino in prev_inodes)
+        shared = sum(1 for f, _ in data if os.stat(f).st_ino in prev_inodes)
         return {
-            "data_files": len(data_files),
-            "tombstone_files": len(tomb_files),
-            "tombstone_rows": _footer_rows(tomb_files),
+            "data_files": len(data),
+            "data_row_groups": sum(f.metadata.num_row_groups for _, f in data),
+            "tombstone_files": len(tombs),
+            "tombstone_rows": sum(t.num_rows for _, t in tombs),
             "postings_files": len(postings_files),
             "postings_rows": _footer_rows(postings_files),
             "data_files_shared_with_prev": shared,

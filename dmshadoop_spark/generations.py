@@ -11,7 +11,8 @@ through it; nothing else knows this layout::
 ``commit`` builds the next generation in a staging directory no reader
 lists and publishes it with ONE ``os.rename``, so a crash at any point
 leaves the committed generations untouched and only debris behind, which
-the next commit sweeps — the answer to the reference's non-atomic
+the next commit sweeps (``vacuum`` removes an unmarked directory below
+the current generation) — the answer to the reference's non-atomic
 two-store write (bug B5, src/DMS.py:121-165). Generations are immutable
 once published. A table has one writer at a time, and the rename
 enforces it (``ConcurrentWriteError``).
@@ -65,16 +66,31 @@ def committed(root: str) -> list[int]:
     """The committed generation numbers under ``root``, oldest first
     (none if ``root`` does not exist). Unmarked ``gen=*`` directories
     are not generations."""
-    return [g for g in _numbered(root) if _marked(gen_path(root, g))]
+    return [g for g in _numbered(root) if is_committed(root, g)]
+
+
+def is_committed(root: str, gen: int) -> bool:
+    """Whether generation ``gen`` of ``root`` is committed (one stat)."""
+    return _marked(gen_path(root, gen))
+
+
+def _top(root: str) -> tuple[int | None, list[int]]:
+    """The newest committed generation (None when there is none) and the
+    unmarked ``gen=N`` numbers above it, newest first: one directory
+    listing, then the markers from the newest number down to the first
+    that is marked."""
+    debris = []
+    for g in reversed(_numbered(root)):
+        if is_committed(root, g):
+            return g, debris
+        debris.append(g)
+    return None, debris
 
 
 def current(root: str) -> int | None:
-    """The newest committed generation, or None when there is none: one
-    directory listing, then the markers from the newest number down to
-    the first that is marked (only debris sits above it)."""
-    return next(
-        (g for g in reversed(_numbered(root)) if _marked(gen_path(root, g))), None
-    )
+    """The newest committed generation, or None when there is none (only
+    debris sits above it; see ``_top``)."""
+    return _top(root)[0]
 
 
 def manifest(root: str, gen: int) -> dict | None:
@@ -116,17 +132,23 @@ def write_manifest(staging: str, meta: dict) -> None:
         json.dump(meta, f)
 
 
-def sweep(root: str) -> None:
-    """Remove crash debris: ``.staging-*`` dirs and unmarked ``gen=*``
-    dirs (a non-empty one would fail every later claim of its number).
-    Safe under the single-writer contract: when this writer starts a
-    commit, such a directory can only be a dead writer's leftovers."""
+def sweep(root: str) -> int | None:
+    """Remove crash debris and return the current generation (``_top``):
+    ``.staging-*`` dirs and the unmarked ``gen=N`` dirs above the current
+    one (a non-empty one would fail every later claim of its number).
+    Only the markers ``_top`` reads are statted, so a commit costs no
+    system call per older generation; an unmarked directory below the
+    current one claims nothing and waits for ``vacuum``. Safe under the
+    single-writer contract: when this writer starts a commit, such a
+    directory can only be a dead writer's leftovers."""
     for entry in os.listdir(root):
         path = os.path.join(root, entry)
-        if (entry.startswith(_STAGING_PREFIX) and os.path.isdir(path)) or (
-            _GEN_RE.match(entry) and not _marked(path)
-        ):
+        if entry.startswith(_STAGING_PREFIX) and os.path.isdir(path):
             shutil.rmtree(path, ignore_errors=True)
+    cur, debris = _top(root)
+    for g in debris:
+        shutil.rmtree(gen_path(root, g), ignore_errors=True)
+    return cur
 
 
 def staging_path(root: str) -> str:
@@ -156,8 +178,7 @@ def commit(root: str, stage: Callable[[str], object]) -> int | None:
     or None when ``stage`` returns False (nothing to commit; the staging
     directory is removed). A ``stage`` that raises leaves debris."""
     os.makedirs(root, exist_ok=True)
-    sweep(root)
-    cur = current(root)
+    cur = sweep(root)
     gen = 0 if cur is None else cur + 1
     staging = staging_path(root)
     os.makedirs(staging)
@@ -174,9 +195,11 @@ def vacuum(root: str, keep_last: int = 1) -> list[int]:
     """Drop the committed generations that are neither among the newest
     ``keep_last`` nor carried by one of them (a kept generation reads
     its carried generations' files, so those directories must stay).
-    Returns the removed generation numbers.
+    Returns the removed generation numbers. Unmarked ``gen=N``
+    directories below the current generation, which ``sweep`` leaves,
+    are removed too (they are no generation, so they are not returned).
 
-    Each dropped generation first leaves the listing with one rename to
+    Each dropped directory first leaves the listing with one rename to
     a staging path, so a removal that stops partway leaves debris for
     the next commit's ``sweep``, never a marked ``gen=N`` that lost
     files."""
@@ -187,7 +210,9 @@ def vacuum(root: str, keep_last: int = 1) -> list[int]:
     for g in gens[-keep_last:]:
         kept.update(carries(root, g))
     drop = [g for g in gens if g not in kept]
-    for g in drop:
+    top, marked = (gens[-1] if gens else -1), set(gens)
+    unmarked = [g for g in _numbered(root) if g < top and g not in marked]
+    for g in drop + unmarked:
         doomed = staging_path(root)
         os.rename(gen_path(root, g), doomed)
         shutil.rmtree(doomed)

@@ -106,6 +106,23 @@ def test_hamming_banding_never_pairs_a_row_with_itself(spark):
     assert got == {(1, 2, 0), (1, 3, 4), (2, 3, 4)}
 
 
+def test_hamming_banding_pairs_ids_once_across_fingerprints(spark):
+    """An id with two fingerprints (7 and 15, one bit apart) is never
+    paired with itself, and its pair with id 2 comes once, with the
+    least hamming of its two fingerprint pairs (|7 ^ 2^40| = 4 bits, not
+    |15 ^ 2^40| = 5)."""
+    from dmshadoop_spark.dedup.hamming import hamming_candidate_pairs
+
+    df = spark.createDataFrame(
+        [(1, 7), (1, 15), (2, 1 << 40)], "doc_id long, fp long"
+    )
+    got = [
+        tuple(r)
+        for r in hamming_candidate_pairs(df, "doc_id", "fp", chunks=4).collect()
+    ]
+    assert got == [(1, 2, 4)]
+
+
 def test_knn_exact_duplicate_vector_is_top1(spark):
     vecs = [
         (0, [1.0, 0.0, 0.0, 0.0]),

@@ -1168,6 +1168,8 @@ def test_point_ops_run_no_spark_job(spark, store):
     search answer. An upload adds exactly one data file. compact and
     update rewrite on the driver at every size, so they start no job
     either."""
+    import pyarrow.parquet as pq
+
     _mixed_store(spark, store)
     files_before = store.layout()["data_files"]
     calls = {
@@ -1210,6 +1212,10 @@ def test_point_ops_run_no_spark_job(spark, store):
     # disk until compact(): eight "body i" rows, three "body i v2" rows
     assert got["layout"]["postings_files"] == got["layout"]["data_files"]
     assert got["layout"]["postings_rows"] == 8 * 2 + 3 * 3
+    assert got["layout"]["data_row_groups"] == sum(
+        pq.ParquetFile(f).metadata.num_row_groups
+        for f in store._data_files(store.history()[-1])
+    )
     rewrites = {
         "compact": lambda: store.compact(cluster_by=["name"]),
         "update": lambda: store.update("doc-6.txt", b"body 6 new"),
@@ -2121,3 +2127,312 @@ def test_clustered_compact_tokenizes_only_twin_less_rows(store, monkeypatch):
         ("doc-01.txt", 1, 2),
         ("doc-04.txt", 1, 2),
     ]
+
+
+# --------------------------------------------------------------------------
+# point reads through cached footers and tombstones; compact's twin order
+# --------------------------------------------------------------------------
+
+
+def _unpruned(store, name, gen=None):
+    """The live (version, content, meta) rows of ``name`` and its
+    tombstoned versions, from every data and tombstone file of the
+    generation read whole and filtered in Python."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from dmshadoop_spark.dms import store as store_mod
+
+    gen = store.history()[-1] if gen is None else gen
+    dead = {
+        (r["name"], r["version"])
+        for f in store._tombstone_files(gen)
+        for r in pq.read_table(
+            f, schema=store_mod._ARROW_TOMBSTONE_SCHEMA
+        ).to_pylist()
+    }
+    files = store._data_files(gen)
+    rows = pa.concat_tables(
+        [
+            pq.read_table(f, schema=store_mod._ARROW_DOCUMENT_SCHEMA)
+            for f in files
+        ]
+    ).to_pylist()
+    live = sorted(
+        (r["version"], r["content"], r["meta"])
+        for r in rows
+        if r["name"] == name and (name, r["version"]) not in dead
+    )
+    return live, {v for n, v in dead if n == name}
+
+
+_READ_NAMES = st.one_of(
+    st.text(min_size=65, max_size=90),  # longer than 64 bytes
+    st.sampled_from(["", "é.txt", "日本語.pdf", "a.txt", "a.txt.1", "\x00"]),
+    st.text(max_size=6),
+)
+
+
+@settings(max_examples=15, deadline=None)
+@given(
+    names=st.lists(_READ_NAMES, min_size=1, max_size=10, unique=True),
+    versions=st.integers(min_value=1, max_value=3),
+    dead=st.sets(st.integers(min_value=0, max_value=30), max_size=6),
+    row_group=st.integers(min_value=1, max_value=4),
+    cluster=st.booleans(),
+)
+def test_point_reads_equal_the_unpruned_read(
+    spark, tmp_path_factory, names, versions, dead, row_group, cluster
+):
+    """With row groups of 1-4 rows, so that a name's versions straddle
+    row-group boundaries, over names that are long, non-ASCII or empty,
+    with tombstones present and before and after a compaction: _rows,
+    download (latest and each version) and get_file_meta_data equal the
+    answer of reading every file whole, and no call builds a
+    pyarrow.dataset."""
+    import pyarrow as pa
+    import pyarrow.dataset as ds
+
+    from dmshadoop_spark.dms import store as store_mod
+
+    store = DocumentStore(spark, str(tmp_path_factory.mktemp("dms_rows")))
+    keys = [(n, v) for n in names for v in range(1, versions + 1)]
+    rows = pa.Table.from_pylist(
+        [
+            store_mod._make_row(n, v, f"{n}:{v}".encode(), {"i": str(i)})
+            for i, (n, v) in enumerate(keys)
+        ],
+        schema=store_mod._ARROW_DOCUMENT_SCHEMA,
+    )
+    if cluster:
+        rows = rows.sort_by([("name", "ascending"), ("version", "ascending")])
+
+    def no_dataset(*args, **kwargs):
+        raise AssertionError("a point read built a pyarrow.dataset")
+
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(store_mod, "_DATA_ROW_GROUP", row_group)
+        store._commit(lambda staging: store_mod._write_docs(rows, staging), None)
+        store.upload(names[0], b"another version")
+        gone = [keys[i] for i in sorted(dead) if i < len(keys)]
+        if gone:
+            store._delete_keys(
+                pa.table(
+                    {"name": [k[0] for k in gone], "version": [k[1] for k in gone]}
+                )
+            )
+        for compacted in (False, True):
+            if compacted:
+                store.compact(2, cluster_by=["name"] if cluster else None)
+            for name in [*names, "absent.txt", names[0] + "\x00"]:
+                live, tombstoned = _unpruned(store, name)
+                with pytest.MonkeyPatch.context() as reads:
+                    reads.setattr(ds, "dataset", no_dataset)
+                    got, got_dead = store._rows(name, ("content", "meta"))
+                    latest = store.download(name)
+                    by_version = {v: store.download(name, v) for v, _, _ in live}
+                    meta = store.get_file_meta_data(name)
+                assert sorted(
+                    (r["version"], r["content"], r["meta"]) for r in got
+                ) == live
+                assert got_dead == (set() if compacted else tombstoned)
+                assert latest == (live[-1][1] if live else None)
+                assert by_version == {v: c for v, c, _ in live}
+                assert meta == (dict(live[-1][2]) if live else None)
+
+
+def test_a_second_instance_sees_the_first_ones_commits(spark, tmp_path):
+    """Two DocumentStore objects over one directory: every commit of one
+    is seen by the other's next read, its cache warm or not."""
+    path = str(tmp_path / "dms")
+    writer, reader = DocumentStore(spark, path), DocumentStore(spark, path)
+    writer.upload("x.txt", b"one")
+    assert reader.download("x.txt") == b"one"
+    writer.upload("x.txt", b"two")
+    writer.delete("x.txt", 1)
+    assert reader.download("x.txt") == b"two"
+    assert reader.get_file_version("x.txt") == [2]
+    writer.compact(cluster_by=["name"])
+    assert reader.layout()["tombstone_rows"] == 0
+    writer.delete("x.txt")
+    assert reader.download("x.txt") is None
+    assert reader.get_lastest_version("x.txt") is None
+    assert writer.update("x.txt", b"three") is False
+    writer.upload("x.txt", b"four")
+    assert reader.download("x.txt") == b"four"
+    assert reader.get_lastest_version("x.txt") == 3
+
+
+def test_time_travel_reads_through_a_warm_cache(store):
+    """Reads of older generations, each after a read of the current one,
+    answer from the generation asked for; the current one is right again
+    afterwards; an uncommitted generation number raises."""
+    store.upload("t.txt", b"v1")
+    g1 = store.history()[-1]
+    store.upload("t.txt", b"v2")
+    store.delete("t.txt", 1)
+    g2 = store.history()[-1]
+    store.compact(cluster_by=["name"])
+    store.upload("t.txt", b"v3")
+    for _ in range(2):
+        assert store.download("t.txt") == b"v3"
+        assert store._rows("t.txt", ("content",), g1) == (
+            [{"version": 1, "content": b"v1"}],
+            set(),
+        )
+        assert store._rows("t.txt", ("content",), g2) == (
+            [{"version": 2, "content": b"v2"}],
+            {1},
+        )
+        assert store.layout(g2)["tombstone_rows"] == 1
+        assert store.get_file_version("t.txt") == [2, 3]
+    with pytest.raises(ValueError, match="no committed generation"):
+        store._rows("t.txt", (), g2 + 100)
+
+
+def test_a_replaced_file_is_read_again(store, tmp_path):
+    """A data file replaced under its name, by a new inode or rewritten
+    in place with a new mtime, is read again; an unchanged one is not."""
+    import os
+
+    import pyarrow as pa
+
+    from dmshadoop_spark.dms import store as store_mod
+
+    store.upload("r.txt", b"old body")
+    (path,) = store._data_files(store.history()[-1])
+    loads = []
+    load = store._footers._load
+    store._footers._load = lambda p: loads.append(p) or load(p)
+    assert store.download("r.txt") == b"old body"
+    assert store.download("r.txt") == b"old body"
+    assert len(loads) == 1
+
+    def file_of(content):
+        row = pa.Table.from_pylist(
+            [store_mod._make_row("r.txt", 1, content, None)],
+            schema=store_mod._ARROW_DOCUMENT_SCHEMA,
+        )
+        out = tmp_path / f"new-{len(content)}"
+        part, _ = store_mod._write_docs(row, str(out))
+        return os.path.join(out, part)
+
+    inode = os.stat(path).st_ino
+    os.replace(file_of(b"new body"), path)  # a new inode
+    assert os.stat(path).st_ino != inode
+    assert store.download("r.txt") == b"new body"
+    inode = os.stat(path).st_ino
+    with open(file_of(b"newer body"), "rb") as src, open(path, "r+b") as dst:
+        dst.truncate(0)  # the same inode, rewritten
+        dst.write(src.read())
+    st = os.stat(path)
+    os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    assert os.stat(path).st_ino == inode
+    assert store.download("r.txt") == b"newer body"
+    assert len(loads) == 3
+
+
+def test_clustered_point_read_decodes_one_row_group(spark, store, monkeypatch):
+    """After a clustered compaction into files of several row groups, a
+    point read decodes exactly one data row group, reads no footer again
+    and starts no Spark job; layout() counts the row groups."""
+    import random
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from dmshadoop_spark.dms import store as store_mod
+
+    monkeypatch.setattr(store_mod, "_DATA_ROW_GROUP", 8)
+    order = random.Random(3).sample(range(64), 64)
+    rows = pa.Table.from_pylist(
+        [
+            store_mod._make_row(f"doc-{i:02}.txt", 1, f"body {i}".encode(), None)
+            for i in order
+        ],
+        schema=store_mod._ARROW_DOCUMENT_SCHEMA,
+    )
+    store._commit(lambda staging: store_mod._write_docs(rows, staging), None)
+    assert store.layout()["data_row_groups"] == 8  # the writer cuts them
+    store.compact(2, cluster_by=["name"])
+    lay = store.layout()
+    assert (lay["data_files"], lay["data_row_groups"]) == (2, 8)
+    assert store.download("doc-20.txt") == b"body 20"  # warm
+    decoded, footers = [], []
+    reads = {
+        "read_row_groups": lambda self, groups, *a, **k: len(groups),
+        "read_row_group": lambda self, *a, **k: 1,
+        "read": lambda self, *a, **k: self.num_row_groups,
+    }
+    with monkeypatch.context() as m:
+        for method, count in reads.items():
+            real = getattr(pq.ParquetFile, method)
+
+            def spy(self, *a, _real=real, _count=count, **k):
+                decoded.append(_count(self, *a, **k))
+                return _real(self, *a, **k)
+
+            m.setattr(pq.ParquetFile, method, spy)
+        real_metadata = pq.read_metadata
+        m.setattr(pq, "read_metadata", lambda *a, **k: footers.append(a) or real_metadata(*a, **k))
+        for call, want in (
+            (lambda: store.download("doc-21.txt"), b"body 21"),
+            (lambda: store.get_file_meta_data("doc-40.txt")["length"], "7"),
+        ):
+            decoded.clear()
+            got, jobs = _jobs_started(spark, call)
+            assert (got, jobs, decoded) == (want, [], [1])
+    assert footers == []
+
+
+@pytest.mark.parametrize("packed", [True, False], ids=["packed_key", "lexsort"])
+def test_compacted_twins_equal_the_postings_of_their_rows(
+    store, monkeypatch, packed
+):
+    """compact with target_files 1 and 3, with and without clustering,
+    over files with twins, a twin-less file and tombstones: every output
+    twin equals the postings of its file's rows in _POSTINGS_ORDER, and
+    the rows are kept. Ordering the twin by np.lexsort, when the packed
+    key's bound is exceeded, gives the same twins."""
+    import os
+
+    import numpy as np
+    import pyarrow as pa
+
+    from dmshadoop_spark.dms import store as store_mod
+
+    for i in range(12):
+        store.upload(f"doc-{i:02}.txt", f"word{i} common m{i % 3}".encode())
+    store.upload("doc-05.txt", b"common again word5 m2 m2")
+    rows = pa.Table.from_pylist(
+        [
+            store_mod._make_row(f"bare-{i}.txt", 1, f"bare m{i} common".encode(), None)
+            for i in range(5)
+        ],
+        schema=store_mod._ARROW_DOCUMENT_SCHEMA,
+    )
+
+    def stage(staging):
+        part, _ = store_mod._write_docs(rows, staging)
+        os.remove(os.path.join(staging, "_postings", part))
+
+    store._commit(stage, store.history()[-1])
+    store.delete("doc-03.txt")
+    store.delete("bare-2.txt")
+    base = store.history()[-1]
+    before = _every_column(store)
+    lexsorts = []
+    if not packed:
+        monkeypatch.setattr(store_mod, "_PACKED_KEYS", 1)
+        lexsort = np.lexsort
+        monkeypatch.setattr(
+            store_mod.np, "lexsort", lambda keys: lexsorts.append(1) or lexsort(keys)
+        )
+    runs = ((1, None), (3, None), (1, ["name"]), (3, ["name"]))
+    for target_files, cluster_by in runs:
+        store.restore(base)
+        store.compact(target_files, cluster_by=cluster_by)
+        assert _every_column(store) == before
+        assert store.layout()["tombstone_rows"] == 0
+        assert len(_twins_match_rows(store)) == target_files
+    assert len(lexsorts) == (0 if packed else len(runs))

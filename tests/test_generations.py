@@ -161,3 +161,33 @@ def test_current_stops_at_the_newest_marked_generation(tmp_path, monkeypatch):
     monkeypatch.setattr(generations, "_marked", counting)
     assert generations.current(root) == 30
     assert len(calls) <= 2
+
+
+def test_commit_reads_no_marker_per_older_generation(tmp_path, monkeypatch):
+    """A commit over 40 generations, with debris above the newest,
+    checks two markers (the debris's and the newest generation's), not
+    one per generation. An unmarked directory below the newest is left
+    by the commit and removed by ``vacuum``, which returns only the
+    generations it dropped."""
+    root = str(tmp_path / "t")
+    for i in range(40):  # generations 0 to 39
+        generations.commit(root, _writer(f"f{i}"))
+    os.makedirs(generations.gen_path(root, 40))  # a dead writer's debris
+    os.remove(os.path.join(generations.gen_path(root, 5), "_SUCCESS"))
+    calls = []
+    marked = generations._marked
+
+    def counting(path: str) -> bool:
+        calls.append(path)
+        return marked(path)
+
+    with monkeypatch.context() as m:
+        m.setattr(generations, "_marked", counting)
+        assert generations.commit(root, _writer("new")) == 40
+    assert len(calls) == 2
+    assert sorted(os.listdir(generations.gen_path(root, 40))) == ["_SUCCESS", "new"]
+    assert os.path.isdir(generations.gen_path(root, 5))
+    assert 5 not in generations.committed(root)
+    assert generations.vacuum(root, keep_last=50) == []
+    assert not os.path.exists(generations.gen_path(root, 5))
+    assert generations.committed(root) == [g for g in range(41) if g != 5]
