@@ -33,6 +33,8 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from dmshadoop_spark.multimodal.tiff import TYPE_SIZES as TIFF_TYPE_SIZES
+
 _MAGIC = (
     (b"\xff\xd8\xff", "image/jpeg"),
     (b"\x89PNG\r\n\x1a\n", "image/png"),
@@ -196,7 +198,6 @@ _EXIF_TAGS = {
     0xA003: "exif_pixel_y",
 }
 _EXIF_IFD_POINTER = 0x8769
-_TIFF_TYPE_SIZE = {1: 1, 2: 1, 3: 2, 4: 4, 5: 8, 6: 1, 7: 1, 8: 2, 9: 4, 10: 8}
 
 
 def _render_tiff_value(endian: str, typ: int, count: int, raw: bytes) -> str:
@@ -229,7 +230,7 @@ def _walk_ifd(data: bytes, endian: str, off: int, out: dict[str, str]) -> int | 
         if pos + 12 > len(data):
             break
         tag, typ, count = struct.unpack_from(endian + "HHI", data, pos)
-        unit = _TIFF_TYPE_SIZE.get(typ, 0)
+        unit = TIFF_TYPE_SIZES.get(typ, 0)
         size = unit * count
         if 0 < size and count <= 65536:
             if size <= 4:

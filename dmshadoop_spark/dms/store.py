@@ -47,21 +47,25 @@ Execution rule. Every call has one fixed path; none chooses by size. A
 Spark job costs a few hundred milliseconds of scheduling, which is the
 whole price of a small call.
 
+Every call reads its generation through one snapshot
+(``DocumentStore._snapshot``): one listing each of its data files, twin
+names and tombstone parts, through ``_FileCache``, which keeps each
+parsed footer and decoded tombstone part by file identity. A write
+probes and commits on that one snapshot.
+
 - The point calls (``download``, ``get_file_meta_data``,
   ``get_file_version``, ``get_lastest_version``, ``upload``, ``delete``,
   ``delete_all_version`` and ``update``) and ``search`` run on the
-  driver and apply the generation's tombstones in memory. A point call
-  reads one name the way an HBase get reads an HFile: the store keeps
-  every data file's parsed footer and every decoded tombstone part
-  (``_FileCache``, keyed by file identity, so the hardlinked files a
-  commit carries are read once), prunes row groups by their ``name``
-  min/max and decodes only the matching row groups' columns. Every data
-  file is written in row groups of at most ``_DATA_ROW_GROUP`` rows, so
-  after ``compact(cluster_by=["name"])`` a point read decodes one block
-  of about 240 KiB. ``search`` reads the postings twins with
-  ``pyarrow.dataset`` filtered on ``term``, so it reads one term's row
-  groups. ``update`` streams the one file it rewrites, so it holds one
-  row group at a time.
+  driver and apply the snapshot's tombstones in memory. A point call
+  reads one name the way an HBase get reads an HFile: it prunes row
+  groups by their cached ``name`` min/max and decodes only the matching
+  row groups' columns. Every data file is written in row groups of at
+  most ``_DATA_ROW_GROUP`` rows, so after ``compact(cluster_by=["name"])``
+  a point read decodes one block of about 240 KiB. ``search`` reads the
+  postings twins with ``pyarrow.dataset`` filtered on ``term``, so it
+  reads one term's row groups. ``update`` streams the one file it
+  rewrites through its cached footers, so it holds one row group at a
+  time.
 - ``compact`` rewrites on the driver through Arrow at every size: it
   reads the key columns of every data file, then each row group that
   holds a live row and each twin once, spills them to memory-mapped
@@ -70,10 +74,12 @@ whole price of a small call.
   spilled twin is put in order by an integer sort of ranks, not by a
   string sort.
 - ``bulk_ingest``, ``df()`` and ``diff`` take or return Spark frames
-  and always run in Spark. ``delete_where``'s predicate scan runs in
-  Spark and its commit on the driver: the matching keys come back in one
-  Arrow collect and are committed as ``delete``'s are (``_delete_keys``),
-  so every tombstone file is written by the store's own Arrow writer.
+  and always run in Spark; their tombstone side is the snapshot's
+  decoded keys, handed to Spark as a local relation. ``delete_where``'s
+  predicate scan runs in Spark and its commit on the driver: the
+  matching keys come back in one Arrow collect and are committed as
+  ``delete``'s are (``_delete_keys``), so every tombstone file is
+  written by the store's own Arrow writer.
   ``delete_all`` commits an empty generation and reads nothing.
 
 Every document file, data part and postings twin together, is written
@@ -121,7 +127,7 @@ import operator
 import os
 import shutil
 import uuid
-from collections.abc import Callable, Iterable
+from collections.abc import Callable, Container, Iterable
 from typing import NamedTuple
 
 import numpy as np
@@ -161,16 +167,12 @@ DOCUMENT_SCHEMA = StructType(
     ]
 )
 
-TOMBSTONE_SCHEMA = StructType(
-    [
-        StructField("name", StringType()),
-        StructField("version", IntegerType()),
-    ]
-)
-
-# the same two schemas for the driver path's pyarrow reads and writes
+# the same schema for the driver path's pyarrow reads and writes
 _ARROW_DOCUMENT_SCHEMA = to_arrow_schema(DOCUMENT_SCHEMA)
-_ARROW_TOMBSTONE_SCHEMA = to_arrow_schema(TOMBSTONE_SCHEMA)
+# a tombstone is a document's key; ``df()`` hands it to Spark as is
+_ARROW_TOMBSTONE_SCHEMA = pa.schema(
+    [_ARROW_DOCUMENT_SCHEMA.field("name"), _ARROW_DOCUMENT_SCHEMA.field("version")]
+)
 
 # one row per (term, document) of a text/plain document: tf is how many
 # of the document's tokens equal the term
@@ -251,50 +253,54 @@ def _visible(dir_path: str) -> list[os.DirEntry]:
     return sorted(found, key=lambda e: e.name)
 
 
-def _visible_files(dir_path: str) -> list[str]:
-    """Paths of the visible data files directly under ``dir_path``."""
-    return [e.path for e in _visible(dir_path)]
-
-
 class _FileCache:
     """What ``load`` makes of each immutable file of a directory, kept
     across calls. An entry is keyed by the file's identity (device,
-    inode, size, mtime), so the hardlinks that carry a file from one
-    generation to the next share it, and a file replaced under the same
-    name is loaded again. Each listing rebuilds the cache from the files
-    it lists, so it holds one directory's files at most."""
+    inode, size, mtime) and its tag, so the hardlinks that carry a file
+    from one generation to the next share it, and a file replaced under
+    the same name, or whose tag changed, is loaded again. Each listing
+    rebuilds the cache from the files it lists, so it holds one
+    directory's files at most."""
 
-    def __init__(self, load: Callable[[str], object]):
+    def __init__(self, load: Callable[[str, bool], object]):
         self._load = load
-        self._held: dict[tuple[int, int, int, int], object] = {}
+        self._held: dict[tuple[int, int, int, int, bool], object] = {}
 
-    def listed(self, dir_path: str) -> list[tuple[str, object]]:
-        """(path, value) of each visible file under ``dir_path``, by name."""
+    def listed(self, dir_path: str, tagged: Container[str] = ()) -> list[tuple]:
+        """(path, inode, value) of each visible file under ``dir_path``,
+        by name. A file's tag is whether its name is in ``tagged``, and
+        ``load(path, tag)`` makes its value."""
         held, fresh, out = self._held, {}, []
         for entry in _visible(dir_path):
             st = entry.stat()
-            key = (st.st_dev, st.st_ino, st.st_size, st.st_mtime_ns)
+            tag = entry.name in tagged
+            key = (st.st_dev, st.st_ino, st.st_size, st.st_mtime_ns, tag)
             value = fresh.get(key, held.get(key))
             if value is None:
-                value = self._load(entry.path)
+                value = self._load(entry.path, tag)
             fresh[key] = value
-            out.append((entry.path, value))
+            out.append((entry.path, st.st_ino, value))
         self._held = fresh
         return out
 
 
-class _Footer(NamedTuple):
-    """A data file's parsed footer and, per row group, its ``name`` range
-    (min, max), or None where the footer holds none (such a row group
-    may hold any name)."""
+class _File(NamedTuple):
+    """One data file of a snapshot: its path and inode; its parsed
+    footer; per row group, its ``name`` range (min, max), or None where
+    the footer holds none (such a row group may hold any name); and its
+    postings twin's parsed footer, None when the file has no twin."""
 
+    path: str
+    inode: int
     metadata: pq.FileMetaData
     names: list[tuple[str, str] | None]
+    twin: pq.FileMetaData | None
 
 
-def _footer(path: str) -> _Footer:
-    """Parse data file ``path``'s footer. ``name`` is the first column of
-    every data file (``_write_docs`` writes ``DOCUMENT_SCHEMA``)."""
+def _footers(path: str, has_twin: bool) -> tuple:
+    """``_File``'s last three fields for data file ``path``, with its
+    twin's footer when ``has_twin`` (a twin is written and carried with
+    its data file alone). ``name`` is every data file's first column."""
     md = pq.read_metadata(path)
     names = []
     for g in range(md.num_row_groups):
@@ -304,46 +310,87 @@ def _footer(path: str) -> _Footer:
             if stats is not None and stats.has_min_max
             else None
         )
-    return _Footer(md, names)
+    return md, names, pq.read_metadata(_twin(path)) if has_twin else None
 
 
 def _read(
-    path: str,
-    footer: _Footer,
-    columns: list[str],
-    groups: list[int] | None = None,
+    f: _File, columns: list[str], groups: list[int] | None = None
 ) -> pa.Table:
-    """``columns`` of data file ``path`` (of its row groups ``groups``
-    only, when given) with ``DOCUMENT_SCHEMA``'s types, read through its
-    cached ``footer``, which is not parsed again."""
-    pf = pq.ParquetFile(path, metadata=footer.metadata)
+    """``columns`` of data file ``f`` (of its row groups ``groups`` only,
+    when given) with ``DOCUMENT_SCHEMA``'s types, read through its cached
+    footer, which is not parsed again."""
+    pf = pq.ParquetFile(f.path, metadata=f.metadata)
     got = pf.read(columns) if groups is None else pf.read_row_groups(groups, columns)
     return got.cast(pa.schema([_ARROW_DOCUMENT_SCHEMA.field(c) for c in columns]))
 
 
-def _read_tombstones(path: str) -> pa.Table:
-    """One tombstone part's (name, version) keys."""
+def _read_tombstones(path: str, _: bool) -> pa.Table:
+    """One tombstone part's (name, version) keys: the one tombstone decoder."""
     return pq.ParquetFile(path).read().cast(_ARROW_TOMBSTONE_SCHEMA)
 
 
-def _link_visible(src_dir: str, dst_dir: str, skip: str | None = None) -> None:
-    """Hardlink every visible data file from ``src_dir`` into ``dst_dir``
-    (copy on cross-device), except the one named ``skip``. Names are kept
-    — part files carry a fresh UUID, so files from different commits
-    can't collide."""
-    for src in _visible_files(src_dir):
-        if os.path.basename(src) == skip:
-            continue
+class _Snapshot(NamedTuple):
+    """One committed generation as a driver-side call reads it: its
+    number (None for an empty store), its data files by name, its
+    tombstone part files and their decoded (name, version) keys."""
+
+    gen: int | None
+    files: list[_File]
+    parts: list[str]
+    dead: pa.Table
+
+    def rows(
+        self, name: str, columns: tuple[str, ...] = ()
+    ) -> tuple[list[dict], set[int]]:
+        """One name's live rows (``version`` plus ``columns``; ``__file``
+        is the row's data ``_File``) and its tombstoned versions. Each
+        data file's row groups are pruned by the ``name`` ranges of its
+        cached footer (``compact(cluster_by=["name"])`` makes those
+        ranges disjoint), and only the matching row groups' columns are
+        decoded. The tombstones are applied in memory, the same anti-join
+        ``df()`` runs in Spark. No Spark job."""
+        dead = self.dead.filter(pc.equal(self.dead["name"], name))
+        dead = set(dead.column("version").to_pylist())
+        cols = ["version", *(c for c in columns if c != "__file")]
+        live = []
+        for f in self.files:
+            groups = [
+                g for g, r in enumerate(f.names) if r is None or r[0] <= name <= r[1]
+            ]
+            if not groups:
+                continue
+            got = _read(f, ["name", *cols], groups)
+            got = got.filter(pc.equal(got.column("name"), name)).select(cols)
+            for row in got.to_pylist():
+                if row["version"] not in dead:
+                    if "__file" in columns:
+                        row["__file"] = f
+                    live.append(row)
+        return live, dead
+
+    def max_version_any(self, name: str) -> int:
+        """Max version of ``name`` over LIVE rows ∪ TOMBSTONED keys.
+        Version numbers are never reused once tombstoned: a re-uploaded
+        (name, version) pair matching an old deletion vector would be
+        masked on read, and reuse would also break snapshot identity for
+        ``diff``/time travel (same key, different content across
+        generations)."""
+        live, dead = self.rows(name)
+        return max([r["version"] for r in live] + list(dead), default=0)
+
+
+def _link_into(dst_dir: str, paths: list[str]) -> None:
+    """Hardlink each file of ``paths`` into ``dst_dir`` under its own name
+    (copy on cross-device). Names are kept — part files carry a fresh
+    UUID, so files from different commits can't collide."""
+    if paths:
+        os.makedirs(dst_dir, exist_ok=True)
+    for src in paths:
         dst = os.path.join(dst_dir, os.path.basename(src))
         try:
             os.link(src, dst)
         except OSError:  # cross-device fallback
             shutil.copy2(src, dst)
-
-
-def _footer_rows(files: list[str]) -> int:
-    """Total rows of ``files``, read from their parquet footers."""
-    return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
 
 
 def _changes(col: pa.ChunkedArray) -> pa.ChunkedArray:
@@ -425,13 +472,14 @@ def _postings_of(docs: pa.Table) -> pa.Table:
 
 
 def _merged_postings(
-    path: str, drop: Callable[[pa.Table], pa.ChunkedArray], add: pa.Table
+    f: _File, drop: Callable[[pa.Table], pa.ChunkedArray], add: pa.Table
 ) -> Iterable[pa.Table]:
-    """The postings file ``path`` minus the rows ``drop`` marks, plus the
-    postings ``add``, streamed in ``_POSTINGS_ORDER``: each row group of
-    ``path`` with the rows of ``add`` that sort before its last row, then
-    the rest of ``add``. One row group is held at a time."""
-    pf = pq.ParquetFile(path)
+    """Data file ``f``'s twin, read through its cached footer, minus the
+    rows ``drop`` marks, plus the postings ``add``, streamed in
+    ``_POSTINGS_ORDER``: each row group of the twin with the rows of
+    ``add`` that sort before its last row, then the rest of ``add``. One
+    row group is held at a time."""
+    pf = pq.ParquetFile(_twin(f.path), metadata=f.twin)
     for i in range(pf.num_row_groups):
         rows = pf.read_row_group(i).cast(_ARROW_POSTINGS_SCHEMA)
         rows = rows.filter(pc.invert(drop(rows)))
@@ -652,12 +700,12 @@ def _twin_order(
 
 
 def _write_slices(
-    files: list[tuple[str, _Footer]], plan: pa.Table, cuts: list[int], staging: str
+    files: list[_File], plan: pa.Table, cuts: list[int], staging: str
 ) -> None:
     """Write ``compact``'s plan (name, version and ``__gid``, each row's
-    running number across ``files``, the data files with their cached
-    footers, in output order) under ``staging``: one data part and twin
-    per slice between consecutive ``cuts``.
+    running number across the snapshot's data ``files``, in output
+    order) under ``staging``: one data part and twin per slice between
+    consecutive ``cuts``.
 
     Every data row group and twin is decoded once. One pass reads each
     row group of ``files`` that holds a planned row and spills those rows,
@@ -677,22 +725,22 @@ def _write_slices(
     spill = os.path.join(staging, _SPILL_DIR)
     os.makedirs(spill)
     # each file row's plan position, -1 for a dropped row
-    slot = np.full(sum(f.metadata.num_rows for _, f in files), -1)
+    slot = np.full(sum(f.metadata.num_rows for f in files), -1)
     slot[plan.column("__gid").to_numpy()] = np.arange(plan.num_rows)
     tokens = os.path.join(spill, "tokens.parquet")
 
     def live_rows() -> Iterable[pa.Table]:
         first = 0
         with pq.ParquetWriter(tokens, _ARROW_POSTINGS_SCHEMA) as tokenized:
-            for path, footer in files:
-                pf = pq.ParquetFile(path, metadata=footer.metadata)
+            for f in files:
+                pf = pq.ParquetFile(f.path, metadata=f.metadata)
                 for g in range(pf.num_row_groups):
                     live = slot[first : first + pf.metadata.row_group(g).num_rows] >= 0
                     first += len(live)
                     if live.any():
                         rows = pf.read_row_group(g).cast(_ARROW_DOCUMENT_SCHEMA)
                         rows = rows if live.all() else rows.filter(live)
-                        if not os.path.isfile(_twin(path)):
+                        if f.twin is None:
                             tokenized.write_table(_postings_of(rows))
                         yield rows
 
@@ -707,14 +755,14 @@ def _write_slices(
         (all twin-less files' at once for the tokenized twin), so the
         join buffers one twin's output at most."""
         first, bare = 0, []
-        for path, footer in files:
-            planned = slot[first : first + footer.metadata.num_rows]
+        for f in files:
+            planned = slot[first : first + f.metadata.num_rows]
             first += len(planned)
             planned = planned[planned >= 0]
-            if not os.path.isfile(_twin(path)):
+            if f.twin is None:
                 bare.append(planned)
             elif len(planned):
-                yield from _joined(_twin(path), keys.take(planned))
+                yield from _joined(_twin(f.path), keys.take(planned))
         if bare:
             yield from _joined(tokens, keys.take(np.concatenate(bare)))
 
@@ -826,6 +874,36 @@ def _pick(rows: list[dict], version: int | None) -> dict | None:
     return next((r for r in rows if r["version"] == version), None)
 
 
+def _search_hits(base: _Snapshot, terms: list[str], k: int) -> pa.Table:
+    """``search``'s top ``k`` in snapshot ``base``, as an Arrow table of
+    ``_ARROW_HITS_SCHEMA``."""
+    missing = [_twin(f.path) for f in base.files if f.twin is None]
+    if missing:
+        raise RuntimeError(
+            f"generation {base.gen} has {len(missing)} data file(s) without a "
+            f"postings twin, e.g. {missing[0]}; compact() rewrites them "
+            f"with twins"
+        )
+    match = functools.reduce(operator.or_, [ds.field("term") == t for t in terms])
+    twins = [_twin(f.path) for f in base.files]
+    hits = ds.dataset(twins, schema=_ARROW_POSTINGS_SCHEMA).to_table(
+        columns=["name", "version", "tf"], filter=match
+    )
+    if hits.num_rows and base.dead.num_rows:
+        # an anti-join against no key still costs ~0.4 ms
+        hits = hits.join(base.dead, ["name", "version"], join_type="left anti")
+    top = (
+        hits.group_by(["name", "version"])
+        .aggregate([("tf", "sum")])
+        .sort_by([("tf_sum", "descending"), *_POSTINGS_ORDER[1:]])
+        .slice(0, k)
+    )
+    return pa.table(
+        [top["name"], top["version"], top["tf_sum"].cast(pa.int32())],
+        schema=_ARROW_HITS_SCHEMA,
+    )
+
+
 class DocumentStore:
     """DMS facade: upload/download/update/delete/get_*/search over Parquet.
 
@@ -844,21 +922,34 @@ class DocumentStore:
         self.spark = spark
         self.base_dir = base_dir
         os.makedirs(base_dir, exist_ok=True)
-        # parsed data-file footers and decoded tombstone parts: the files
-        # are immutable, so each is read once while its generation is read
-        self._footers = _FileCache(_footer)
+        # parsed data-file (and twin) footers and decoded tombstone parts:
+        # the files are immutable, so each is read once while it is listed
+        self._footers = _FileCache(_footers)
         self._tombs = _FileCache(_read_tombstones)
 
     # -- storage plumbing --------------------------------------------------
 
-    def _resolve(self, generation: int | None) -> int | None:
-        """``generation`` if committed (ValueError otherwise), or the
-        current generation when None (None for an empty store)."""
-        if generation is None:
-            return generations.current(self.base_dir)
-        if not generations.is_committed(self.base_dir, generation):
-            raise ValueError(f"no committed generation {generation}")
-        return generation
+    def _snapshot(self, generation: int | None = None) -> _Snapshot:
+        """Committed generation ``generation`` (ValueError when it is not
+        committed), or the current one when None, as every driver-side
+        call reads it: one listing each of its data files, its postings
+        twins' names and its tombstone parts, through the identity-keyed
+        caches, so only the files no earlier call has seen are read."""
+        gen = generation
+        if gen is None:
+            gen = generations.current(self.base_dir)
+        elif not generations.is_committed(self.base_dir, gen):
+            raise ValueError(f"no committed generation {gen}")
+        if gen is None:
+            return _Snapshot(None, [], [], _ARROW_TOMBSTONE_SCHEMA.empty_table())
+        path = self._gen_path(gen)
+        twins = {e.name for e in _visible(os.path.join(path, _POSTINGS_DIR))}
+        files = [_File(p, i, *v) for p, i, v in self._footers.listed(path, twins)]
+        parts = self._tombs.listed(self._tombstone_dir(gen))
+        dead = pa.concat_tables(
+            [t for _, _, t in parts] or [_ARROW_TOMBSTONE_SCHEMA.empty_table()]
+        )
+        return _Snapshot(gen, files, [p for p, _, _ in parts], dead)
 
     def _gen_path(self, gen: int) -> str:
         return generations.gen_path(self.base_dir, gen)
@@ -867,69 +958,7 @@ class DocumentStore:
         return os.path.join(self._gen_path(gen), _TOMBSTONE_DIR)
 
     def _data_files(self, gen: int) -> list[str]:
-        return _visible_files(self._gen_path(gen))
-
-    def _tombstone_files(self, gen: int) -> list[str]:
-        return _visible_files(self._tombstone_dir(gen))
-
-    def _tombstones(self, gen: int) -> DataFrame | None:
-        """The generation's deletion-vector frame (name, version), or
-        None when the snapshot carries no tombstones. Lives under an
-        ``_``-prefixed child of the generation dir, which Spark's
-        hidden-file filter excludes from the data scan (the
-        ``_delta_log`` trick). It is read by its explicit part-file
-        list: addressing the ``_``-prefixed directory itself makes Spark
-        warn that all paths were ignored."""
-        files = self._tombstone_files(gen)
-        if not files:
-            return None
-        return self.spark.read.schema(TOMBSTONE_SCHEMA).parquet(*files)
-
-    def _rows(
-        self,
-        name: str,
-        columns: tuple[str, ...] = (),
-        generation: int | None = None,
-    ) -> tuple[list[dict], set[int]]:
-        """Driver-path read of one name in a committed generation (default:
-        the current one): its live rows (``version`` plus ``columns``;
-        ``__filename`` is the data file's path) and its tombstoned
-        versions. Each data file's row groups are pruned by the ``name``
-        ranges of its cached footer (``compact(cluster_by=["name"])``
-        makes those ranges disjoint), and only the matching row groups'
-        columns are decoded. The tombstones are applied in memory, the
-        same anti-join ``df()`` runs in Spark. No Spark job."""
-        gen = self._resolve(generation)
-        if gen is None:
-            return [], set()
-        dead = set(self._dead(gen, name).column("version").to_pylist())
-        cols = ["version", *(c for c in columns if c != "__filename")]
-        live = []
-        for path, footer in self._footers.listed(self._gen_path(gen)):
-            groups = [
-                g for g, r in enumerate(footer.names)
-                if r is None or r[0] <= name <= r[1]
-            ]
-            if not groups:
-                continue
-            got = _read(path, footer, ["name", *cols], groups)
-            got = got.filter(pc.equal(got.column("name"), name)).select(cols)
-            for row in got.to_pylist():
-                if row["version"] not in dead:
-                    if "__filename" in columns:
-                        row["__filename"] = path
-                    live.append(row)
-        return live, dead
-
-    def _dead(self, gen: int, name: str | None = None) -> pa.Table:
-        """The driver-side read of generation ``gen``'s tombstones: its
-        tombstoned (name, version) keys, only ``name``'s when given. Each
-        part is decoded once and kept (``_FileCache``)."""
-        parts = [t for _, t in self._tombs.listed(self._tombstone_dir(gen))]
-        if not parts:
-            return _ARROW_TOMBSTONE_SCHEMA.empty_table()
-        dead = pa.concat_tables(parts)
-        return dead if name is None else dead.filter(pc.equal(dead["name"], name))
+        return [e.path for e in _visible(self._gen_path(gen))]
 
     def df(self, generation: int | None = None) -> DataFrame:
         """A table snapshot (empty, schema-stable, if no data).
@@ -939,21 +968,25 @@ class DocumentStore:
         exact and stable (the Delta/Iceberg ``VERSION AS OF`` analogue).
 
         Merge-on-read: when the generation carries deletion vectors, the
-        scan anti-joins the broadcast tombstone key set. Tombstones are
-        O(deletes committed since the last compaction) — a broadcast of
-        a few thousand (name, version) pairs against a 100 TB scan, not
-        a second data pass; ``compact()`` folds them away."""
-        gen = self._resolve(generation)
-        if gen is None:
+        scan anti-joins the broadcast tombstone key set. The keys are the
+        snapshot's, decoded on the driver by the reader the point calls
+        use, and reach Spark as a local relation, so the sidecar is read
+        by no Spark scan. Tombstones are O(deletes committed since the
+        last compaction) — a broadcast of a few thousand (name, version)
+        pairs against a 100 TB scan, not a second data pass;
+        ``compact()`` folds them away."""
+        return self._frame(self._snapshot(generation))
+
+    def _frame(self, base: _Snapshot) -> DataFrame:
+        """``df()`` of snapshot ``base``."""
+        if base.gen is None:
             return self.spark.createDataFrame([], DOCUMENT_SCHEMA)
         data = self.spark.read.schema(DOCUMENT_SCHEMA).parquet(
-            self._gen_path(gen)
+            self._gen_path(base.gen)
         )
-        tombs = self._tombstones(gen)
-        if tombs is not None:
-            data = data.join(
-                F.broadcast(tombs), ["name", "version"], "left_anti"
-            )
+        if base.dead.num_rows:
+            dead = self.spark.createDataFrame(base.dead)
+            data = data.join(F.broadcast(dead), ["name", "version"], "left_anti")
         return data
 
     def history(self) -> list[int]:
@@ -1023,18 +1056,18 @@ class DocumentStore:
         ``_write_slices`` then reads every data row group and twin once,
         spills what survives, and writes the slices one row group at a
         time (only rows of a twin-less file are tokenized)."""
-        gen = self._resolve(None)
-        if gen is None:
+        base = self._snapshot()
+        if base.gen is None:
             return None
-        files = self._footers.listed(self._gen_path(gen))
+        files = base.files
         if not files:
             return self._commit(None, None)
         cluster_by = cluster_by or []
         cols = list(dict.fromkeys(["name", "version", *cluster_by]))
-        keys = pa.concat_tables(_read(path, footer, cols) for path, footer in files)
+        keys = pa.concat_tables(_read(f, cols) for f in files)
         plan = (
             keys.append_column("__gid", [np.arange(keys.num_rows)])
-            .join(self._dead(gen), ["name", "version"], join_type="left anti")
+            .join(base.dead, ["name", "version"], join_type="left anti")
             .sort_by([(c, "ascending") for c in [*cluster_by, "__gid"]])
         )
         n, target_files = plan.num_rows, max(target_files, 1)
@@ -1056,9 +1089,10 @@ class DocumentStore:
         old state rather than rewinding history (the immutability
         invariant holds; intermediate generations stay time-travelable
         until vacuumed). Pure metadata: the target's data files, postings
-        twins and tombstone sidecar are hardlinked, nothing is read or
-        copied. Returns the new generation number."""
-        return self._commit(None, self._resolve(generation))
+        twins and tombstone sidecar are hardlinked, and only their footers
+        and tombstones are read (the target's snapshot); no data is read
+        or copied. Returns the new generation number."""
+        return self._commit(None, self._snapshot(generation))
 
     def vacuum(self, keep_last: int = 1) -> list[int]:
         """Drop all but the newest ``keep_last`` committed generations —
@@ -1072,38 +1106,39 @@ class DocumentStore:
     def _commit(
         self,
         stage: Callable[[str], object] | None,
-        base: int | None,
+        base: _Snapshot | None,
         skip: str | None = None,
     ) -> int | None:
         """The one commit of every write, through ``generations.commit``.
         Its stage callback lets ``stage`` write the new files into the
-        staging directory, then hardlinks ``base``'s data files, postings
-        twins and tombstone sidecar into it (data is never copied; O(files)
-        metadata ops; ``base=None`` carries nothing — a full rewrite). The
-        data file named ``skip`` and its twin are not carried: ``update``
-        staged their replacement. Returns the new generation number; a
-        ``stage`` that returns False staged nothing to commit, and then
-        nothing is published and None is returned."""
+        staging directory, then hardlinks snapshot ``base``'s data files,
+        postings twins and tombstone parts into it (data is never copied;
+        O(files) metadata ops, no listing; ``base=None`` carries nothing —
+        a full rewrite). The data file named ``skip`` and its twin are not
+        carried: ``update`` staged their replacement. Returns the new
+        generation number; a ``stage`` that returns False staged nothing
+        to commit, and then nothing is published and None is returned."""
 
         def build(staging: str) -> bool:
             if stage is not None and stage(staging) is False:
                 return False
             if base is not None:
-                _link_visible(self._gen_path(base), staging, skip)
-                for sidecar in (_TOMBSTONE_DIR, _POSTINGS_DIR):
-                    src = os.path.join(self._gen_path(base), sidecar)
-                    if os.path.isdir(src):
-                        dst = os.path.join(staging, sidecar)
-                        os.makedirs(dst, exist_ok=True)
-                        _link_visible(src, dst, skip)
+                kept = [f for f in base.files if os.path.basename(f.path) != skip]
+                _link_into(staging, [f.path for f in kept])
+                _link_into(
+                    os.path.join(staging, _POSTINGS_DIR),
+                    [_twin(f.path) for f in kept if f.twin is not None],
+                )
+                _link_into(os.path.join(staging, _TOMBSTONE_DIR), base.parts)
             return True
 
         return generations.commit(self.base_dir, build)
 
-    def _delete_keys(self, keys: pa.Table) -> None:
-        """Merge-on-read delete commit of ``keys`` (name, version):
-        generation N+1 is gen=N's data files hardlinked UNCHANGED (zero
-        data read or rewritten — the 100-TB requirement) plus the prior
+    def _delete_keys(self, keys: pa.Table, base: _Snapshot) -> None:
+        """Merge-on-read delete commit of ``keys`` (name, version) on
+        snapshot ``base``, generation N: generation N+1 is gen=N's data
+        files hardlinked UNCHANGED (zero data read or rewritten — the
+        100-TB requirement) plus the prior
         tombstones plus one new (name, version) tombstone part under
         ``_tombstones/``, through the shared ``_commit``. One part file
         per delete commit keeps the sidecar's file count at the number of
@@ -1118,7 +1153,7 @@ class DocumentStore:
             lambda staging: _write_part(
                 tbl, os.path.join(staging, _TOMBSTONE_DIR)
             ),
-            self._resolve(None),
+            base,
         )
 
     def delete_where(self, predicate) -> int:
@@ -1132,9 +1167,10 @@ class DocumentStore:
         Arrow collect and are committed as ``delete``'s are, data files
         hardlinked unchanged."""
         cond = F.expr(predicate) if isinstance(predicate, str) else predicate
-        keys = self.df().filter(cond).select("name", "version").toArrow()
+        base = self._snapshot()
+        keys = self._frame(base).filter(cond).select("name", "version").toArrow()
         if keys.num_rows:
-            self._delete_keys(keys)
+            self._delete_keys(keys, base)
         return keys.num_rows
 
     def layout(self, generation: int | None = None) -> dict[str, int]:
@@ -1143,32 +1179,25 @@ class DocumentStore:
         counts, how many data files are inode-shared with the PREVIOUS
         generation (the merge-on-read pin: a delete commit shares every
         data file, an update all but one, a compact none), and the
-        store's committed ``generations`` count. The data files' footers
-        and the tombstones are the cached ones the point calls read, the
-        twins' row counts come from their footers; no Spark job runs."""
-        gen = self._resolve(generation)
+        store's committed ``generations`` count. Every count comes from
+        the generation's snapshot, whose data and twin footers and
+        tombstones are the cached ones the point calls read; only the
+        previous generation's data files are listed and statted. No Spark
+        job runs."""
+        base = self._snapshot(generation)
         committed = generations.committed(self.base_dir)
-        data, tombs, postings_files = [], [], []
-        prev_inodes: set[int] = set()
-        if gen is not None:
-            data = self._footers.listed(self._gen_path(gen))
-            tombs = self._tombs.listed(self._tombstone_dir(gen))
-            postings_files = _visible_files(
-                os.path.join(self._gen_path(gen), _POSTINGS_DIR)
-            )
-        if gen is not None and gen - 1 in committed:
-            prev_inodes = {
-                os.stat(f).st_ino for f in self._data_files(gen - 1)
-            }
-        shared = sum(1 for f, _ in data if os.stat(f).st_ino in prev_inodes)
+        prev: set[int] = set()
+        if base.gen is not None and base.gen - 1 in committed:
+            prev = {os.stat(f).st_ino for f in self._data_files(base.gen - 1)}
+        twins = [f.twin for f in base.files if f.twin is not None]
         return {
-            "data_files": len(data),
-            "data_row_groups": sum(f.metadata.num_row_groups for _, f in data),
-            "tombstone_files": len(tombs),
-            "tombstone_rows": sum(t.num_rows for _, t in tombs),
-            "postings_files": len(postings_files),
-            "postings_rows": _footer_rows(postings_files),
-            "data_files_shared_with_prev": shared,
+            "data_files": len(base.files),
+            "data_row_groups": sum(f.metadata.num_row_groups for f in base.files),
+            "tombstone_files": len(base.parts),
+            "tombstone_rows": base.dead.num_rows,
+            "postings_files": len(twins),
+            "postings_rows": sum(t.num_rows for t in twins),
+            "data_files_shared_with_prev": sum(f.inode in prev for f in base.files),
             "generations": len(committed),
         }
 
@@ -1187,24 +1216,14 @@ class DocumentStore:
         twin, written by ``_write_docs`` and committed as the next
         generation (vs N+2 sequential HTTP inserts, src/DMS.py:125-165).
         No Spark job."""
-        version = self._max_version_any(name) + 1
+        base = self._snapshot()
+        version = base.max_version_any(name) + 1
         row = pa.Table.from_pylist(
             [_make_row(name, version, content, extra_meta)],
             schema=_ARROW_DOCUMENT_SCHEMA,
         )
-        self._commit(
-            lambda staging: _write_docs(row, staging), self._resolve(None)
-        )
+        self._commit(lambda staging: _write_docs(row, staging), base)
         return version
-
-    def _max_version_any(self, name: str) -> int:
-        """Max version over LIVE rows ∪ TOMBSTONED keys. Version numbers
-        are never reused once tombstoned: a re-uploaded (name, version)
-        pair matching an old deletion vector would be masked on read,
-        and reuse would also break snapshot identity for ``diff``/time
-        travel (same key, different content across generations)."""
-        live, dead = self._rows(name)
-        return max([r["version"] for r in live] + list(dead), default=0)
 
     def bulk_ingest(self, files: DataFrame) -> int:
         """Distributed ingest of many documents in ONE job — the scale path
@@ -1221,12 +1240,11 @@ class DocumentStore:
         ingested."""
         from pyspark.sql import Window
 
-        keys = self.df().select("name", "version")
-        cur = self._resolve(None)
-        tombs = self._tombstones(cur) if cur is not None else None
-        if tombs is not None:
-            # never reuse tombstoned versions — see _max_version_any
-            keys = keys.unionByName(tombs)
+        base = self._snapshot()
+        keys = self._frame(base).select("name", "version")
+        if base.dead.num_rows:
+            # never reuse tombstoned versions — see _Snapshot.max_version_any
+            keys = keys.unionByName(self.spark.createDataFrame(base.dead))
         latest = keys.groupBy("name").agg(
             F.max("version").alias("_base_version")
         )
@@ -1256,7 +1274,7 @@ class DocumentStore:
             nonlocal ingested
             ingested = _write_in_tasks(rows, staging)
 
-        self._commit(stage, cur)
+        self._commit(stage, base)
         return ingested
 
     def update(
@@ -1279,11 +1297,11 @@ class DocumentStore:
         This is update's one path at every size, as ``compact`` has one:
         it holds one row group of the file and one of its twin at a time,
         whatever the file's size. Tombstones stay until ``compact``."""
-        gen = self._resolve(None)
-        row = _pick(self._rows(name, ("__filename",), gen)[0], version or None)
+        base = self._snapshot()
+        row = _pick(base.rows(name, ("__file",))[0], version or None)
         if row is None:
             return False
-        path, v = row["__filename"], row["version"]
+        file, v = row["__file"], row["version"]
 
         def key(rows: pa.Table) -> pa.ChunkedArray:
             same = pc.and_(
@@ -1297,7 +1315,7 @@ class DocumentStore:
         )
 
         def docs() -> Iterable[pa.RecordBatch]:
-            pf = pq.ParquetFile(path)
+            pf = pq.ParquetFile(file.path, metadata=file.metadata)
             for i in range(pf.num_row_groups):
                 rows = pf.read_row_group(i).cast(_ARROW_DOCUMENT_SCHEMA)
                 at = pc.index(key(rows), True).as_py()
@@ -1308,12 +1326,12 @@ class DocumentStore:
                 yield from rows.combine_chunks().to_batches()
 
         twin = None
-        if os.path.isfile(_twin(path)):
-            twin = _merged_postings(_twin(path), key, _postings_of(replacement))
+        if file.twin is not None:
+            twin = _merged_postings(file, key, _postings_of(replacement))
         self._commit(
             lambda staging: _write_docs(docs(), staging, twin),
-            gen,
-            os.path.basename(path),
+            base,
+            os.path.basename(file.path),
         )
         return True
 
@@ -1323,21 +1341,25 @@ class DocumentStore:
         rewritten (the reference deleted row+blob per document,
         src/DMS.py:279-311). ``compact()`` folds tombstones into the
         data."""
-        row = _pick(self._rows(name)[0], version or None)
+        base = self._snapshot()
+        row = _pick(base.rows(name)[0], version or None)
         if row is None:
             return False
-        self._delete_keys(pa.table({"name": [name], "version": [row["version"]]}))
+        self._delete_keys(
+            pa.table({"name": [name], "version": [row["version"]]}), base
+        )
         return True
 
     def delete_all_version(self, name: str) -> bool:
         """Drop every version of a name (src/DMS.py:394) — one tombstone
         commit enumerating the name's versions (read from the
         column-pruned version listing, never the content column)."""
-        versions = self.get_file_version(name)
+        base = self._snapshot()
+        versions = sorted(r["version"] for r in base.rows(name)[0])
         if not versions:
             return False
         self._delete_keys(
-            pa.table({"name": [name] * len(versions), "version": versions})
+            pa.table({"name": [name] * len(versions), "version": versions}), base
         )
         return True
 
@@ -1352,7 +1374,7 @@ class DocumentStore:
         """Point read of content by (name, version); default latest
         (src/DMS.py:174-200). Only the name's row groups and the
         ``version``/``content`` columns are read."""
-        row = _pick(self._rows(name, ("content",))[0], version)
+        row = _pick(self._snapshot().rows(name, ("content",))[0], version)
         return None if row is None else row["content"]
 
     get_file_content = download
@@ -1361,19 +1383,19 @@ class DocumentStore:
         self, name: str, version: int | None = None
     ) -> dict[str, str] | None:
         """Project the metadata map (fetch(key)['meta_data'], src/DMS.py:327)."""
-        row = _pick(self._rows(name, ("meta",))[0], version)
+        row = _pick(self._snapshot().rows(name, ("meta",))[0], version)
         return None if row is None else dict(row["meta"])
 
     def get_file_version(self, name: str) -> list[int]:
         """All versions of a name, numerically sorted (src/DMS.py:368-383).
         Anchored name equality — 'a.txt' never matches 'bba.txt' (bug B2)."""
-        return sorted(r["version"] for r in self._rows(name)[0])
+        return sorted(r["version"] for r in self._snapshot().rows(name)[0])
 
     def get_lastest_version(self, name: str) -> int | None:
         """Numeric max(version) — v10 > v9 (bug B1 fixed; the reference's
         string sort at src/DMS.py:391 says otherwise). Name kept for
         reference parity; ``get_latest_version`` aliases it."""
-        return max((r["version"] for r in self._rows(name)[0]), default=None)
+        return max((r["version"] for r in self._snapshot().rows(name)[0]), default=None)
 
     get_latest_version = get_lastest_version
 
@@ -1404,49 +1426,8 @@ class DocumentStore:
         part of the store."""
         tokens = pc.list_flatten(_terms(pa.array([text], pa.string())))
         terms = sorted({t for t in tokens.to_pylist() if t})
-        gen = self._resolve(None)
+        base = self._snapshot()
         hits = _ARROW_HITS_SCHEMA.empty_table()
-        if terms and gen is not None:
-            hits = self._search_hits(gen, terms, k)
+        if terms and base.gen is not None:
+            hits = _search_hits(base, terms, k)
         return self.spark.createDataFrame(hits)
-
-    def _search_hits(self, gen: int, terms: list[str], k: int) -> pa.Table:
-        """``search``'s top ``k`` in generation ``gen``, as an Arrow table
-        of ``_ARROW_HITS_SCHEMA``."""
-        twins = [_twin(f) for f in self._data_files(gen)]
-        missing = [t for t in twins if not os.path.isfile(t)]
-        if missing:
-            raise RuntimeError(
-                f"generation {gen} has {len(missing)} data file(s) without a "
-                f"postings twin, e.g. {missing[0]}; compact() rewrites them "
-                f"with twins"
-            )
-        match = functools.reduce(
-            operator.or_, [ds.field("term") == t for t in terms]
-        )
-        hits = ds.dataset(twins, schema=_ARROW_POSTINGS_SCHEMA).to_table(
-            columns=["name", "version", "tf"], filter=match
-        )
-        dead = self._dead(gen) if hits.num_rows else None
-        if dead:  # an anti-join against no key still costs ~0.4 ms
-            hits = hits.join(dead, ["name", "version"], join_type="left anti")
-        top = (
-            hits.group_by(["name", "version"])
-            .aggregate([("tf", "sum")])
-            .sort_by(
-                [
-                    ("tf_sum", "descending"),
-                    ("name", "ascending"),
-                    ("version", "ascending"),
-                ]
-            )
-            .slice(0, k)
-        )
-        return pa.table(
-            [
-                top.column("name"),
-                top.column("version"),
-                top.column("tf_sum").cast(pa.int32()),
-            ],
-            schema=_ARROW_HITS_SCHEMA,
-        )

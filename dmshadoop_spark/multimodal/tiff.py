@@ -25,7 +25,9 @@ _TAG_SPP = 277
 _TAG_ROWS_PER_STRIP = 278
 _TAG_STRIP_COUNTS = 279
 
-_TYPE_SIZES = {1: 1, 2: 1, 3: 2, 4: 4, 5: 8, 6: 1, 7: 1, 8: 2, 9: 4, 10: 8}
+# bytes per value of each TIFF field type; dms.extract's EXIF parser
+# reads the same table
+TYPE_SIZES = {1: 1, 2: 1, 3: 2, 4: 4, 5: 8, 6: 1, 7: 1, 8: 2, 9: 4, 10: 8}
 
 
 def _read_ifd_values(data: bytes, e: str) -> dict[int, list[int]]:
@@ -42,7 +44,7 @@ def _read_ifd_values(data: bytes, e: str) -> dict[int, list[int]]:
         tag, typ, count = struct.unpack(e + "HHI", data[base : base + 8])
         if count > 1_000_000:  # corrupt count: would build a huge fmt string
             raise ValueError(f"implausible TIFF entry count {count}")
-        size = _TYPE_SIZES.get(typ, 1) * count
+        size = TYPE_SIZES.get(typ, 1) * count
         if size <= 4:
             payload = data[base + 8 : base + 8 + size]
         else:

@@ -45,6 +45,15 @@ _SCALE_CONF = {
 }
 
 
+def machine_defaults(usable_cpus: int, physical_bytes: int) -> tuple[str, str]:
+    """The local cores and driver heap when ``SPARK_GRAFT_CPUS`` and
+    ``SPARK_GRAFT_DRIVER_MEM`` are unset: every usable CPU, and half the
+    physical memory in whole GiB, from 1g to 32g (a 32g heap on a 15 GiB
+    host lost the JVM partway through a test run)."""
+    heap_gib = min(32, max(1, physical_bytes // 2 // 2**30))
+    return str(usable_cpus), f"{heap_gib}g"
+
+
 def get_spark(
     app_name: str = "dmshadoop-spark",
     master: str | None = None,
@@ -52,11 +61,16 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) the tuned SparkSession.
 
-    ``SPARK_GRAFT_CPUS`` controls local parallelism (default 32), matching
-    the driver's bench contract.
+    ``SPARK_GRAFT_CPUS`` controls local parallelism and the shuffle
+    partition count, ``SPARK_GRAFT_DRIVER_MEM`` the driver heap; unset,
+    they come from the machine (``machine_defaults``).
     """
+    cpus, heap = machine_defaults(
+        len(os.sched_getaffinity(0)),
+        os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE"),
+    )
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", cpus)
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
         master = os.environ.get("SPARK_MASTER", f"local[{cpus}]")
     builder = SparkSession.builder.appName(app_name).master(master)
     conf = dict(_SCALE_CONF)
@@ -65,10 +79,9 @@ def get_spark(
     # scheduler (discovered via j10's 50M-candidate stage: the thread
     # pool dies and every later test fails with ConnectionRefused).
     # Honored only at JVM launch, so it must be set on the FIRST session.
-    conf["spark.driver.memory"] = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g")
+    conf["spark.driver.memory"] = os.environ.get("SPARK_GRAFT_DRIVER_MEM", heap)
     # Shuffle partitions sized to the local core count; cluster deployments
     # override via SPARK_CONF or extra_conf.
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     conf["spark.sql.shuffle.partitions"] = cpus
     if extra_conf:
         conf.update(extra_conf)

@@ -627,7 +627,9 @@ def test_tombstone_read_plan_broadcasts_and_scans_data_once(store):
     """The merge-on-read scan must be: ONE scan of the generation's data
     files, anti-joined against a BROADCAST tombstone set — no shuffle of
     the data side, no second data pass, and the tombstone sidecar never
-    appears in the data scan's file listing."""
+    appears in the data scan's file listing. The tombstone set is the
+    snapshot's decoded keys as a local relation, so no scan reads the
+    sidecar."""
     for i in range(3):
         store.upload(f"d{i}.txt", f"b{i}".encode())
     store.delete("d0.txt")
@@ -642,14 +644,12 @@ def test_tombstone_read_plan_broadcasts_and_scans_data_once(store):
         df._jdf.queryExecution(), "formatted"
     )
     locs = re.findall(r"Location:.*?\[(.*?)\]", fmt)
-    assert len(locs) == 2  # one data scan + one tombstone scan, no more
+    assert len(locs) == 1  # one data scan, no more
+    assert "LocalTableScan" in plan
     gen = store.history()[-1]
-    tomb_locs = [p for p in locs if "_tombstones" in p]
-    data_locs = [p for p in locs if "_tombstones" not in p]
-    assert len(tomb_locs) == len(data_locs) == 1
     # the data scan reads the CURRENT generation and the hidden-file
     # filter keeps the sidecar out of it
-    assert f"gen={gen}" in data_locs[0]
+    assert f"gen={gen}" in locs[0] and "_tombstones" not in locs[0]
 
 
 # --------------------------------------------------------------------------
@@ -1305,9 +1305,31 @@ _store_ops = st.lists(
 )
 
 
+def _tombstone_keys(store, gen):
+    """Generation ``gen``'s tombstoned (name, version) keys, read from its
+    ``_tombstones/`` part files with pyarrow, not through the store."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from dmshadoop_spark.dms.store import _ARROW_TOMBSTONE_SCHEMA
+
+    tdir = store._tombstone_dir(gen)
+    parts = sorted(os.listdir(tdir)) if os.path.isdir(tdir) else []
+    return {
+        (r["name"], r["version"])
+        for f in parts
+        if not f.startswith(("_", "."))
+        for r in pq.read_table(
+            os.path.join(tdir, f), schema=_ARROW_TOMBSTONE_SCHEMA
+        ).to_pylist()
+    }
+
+
 def _spark_answers(store, gen):
-    """Per name: {version: (content, meta)} of the live rows and the
-    tombstoned versions of generation ``gen``, computed in Spark."""
+    """Per name: {version: (content, meta)} of the live rows of generation
+    ``gen``, computed in Spark, and its tombstoned versions, read from
+    the tombstone part files directly."""
     live: dict[str, dict] = {}
     for r in store.df(gen).select("name", "version", "content", "meta").collect():
         live.setdefault(r["name"], {})[r["version"]] = (
@@ -1315,10 +1337,8 @@ def _spark_answers(store, gen):
             dict(r["meta"]),
         )
     dead: dict[str, set] = {}
-    tombs = store._tombstones(gen)
-    if tombs is not None:
-        for r in tombs.collect():
-            dead.setdefault(r["name"], set()).add(r["version"])
+    for name, version in _tombstone_keys(store, gen):
+        dead.setdefault(name, set()).add(version)
     return live, dead
 
 
@@ -1350,7 +1370,7 @@ def test_driver_path_matches_spark_df(spark, tmp_path_factory, ops):
         live, dead = _spark_answers(store, gen)
         for name in (*_NAMES, "missing.txt"):
             want = live.get(name, {})
-            rows, tomb = store._rows(name, ("content", "meta"), gen)
+            rows, tomb = store._snapshot(gen).rows(name, ("content", "meta"))
             assert tomb == dead.get(name, set())
             assert {
                 r["version"]: (r["content"], dict(r["meta"])) for r in rows
@@ -1373,7 +1393,7 @@ def test_driver_path_matches_spark_df(spark, tmp_path_factory, ops):
                 assert store.get_file_meta_data(name, v) == (
                     want[v][1] if v in want else None
                 )
-            assert store._max_version_any(name) == max(
+            assert store._snapshot().max_version_any(name) == max(
                 [*want, *dead.get(name, ())], default=0
             )
 
@@ -2144,13 +2164,7 @@ def _unpruned(store, name, gen=None):
     from dmshadoop_spark.dms import store as store_mod
 
     gen = store.history()[-1] if gen is None else gen
-    dead = {
-        (r["name"], r["version"])
-        for f in store._tombstone_files(gen)
-        for r in pq.read_table(
-            f, schema=store_mod._ARROW_TOMBSTONE_SCHEMA
-        ).to_pylist()
-    }
+    dead = _tombstone_keys(store, gen)
     files = store._data_files(gen)
     rows = pa.concat_tables(
         [
@@ -2219,7 +2233,8 @@ def test_point_reads_equal_the_unpruned_read(
             store._delete_keys(
                 pa.table(
                     {"name": [k[0] for k in gone], "version": [k[1] for k in gone]}
-                )
+                ),
+                store._snapshot(),
             )
         for compacted in (False, True):
             if compacted:
@@ -2228,7 +2243,7 @@ def test_point_reads_equal_the_unpruned_read(
                 live, tombstoned = _unpruned(store, name)
                 with pytest.MonkeyPatch.context() as reads:
                     reads.setattr(ds, "dataset", no_dataset)
-                    got, got_dead = store._rows(name, ("content", "meta"))
+                    got, got_dead = store._snapshot().rows(name, ("content", "meta"))
                     latest = store.download(name)
                     by_version = {v: store.download(name, v) for v, _, _ in live}
                     meta = store.get_file_meta_data(name)
@@ -2276,37 +2291,48 @@ def test_time_travel_reads_through_a_warm_cache(store):
     store.upload("t.txt", b"v3")
     for _ in range(2):
         assert store.download("t.txt") == b"v3"
-        assert store._rows("t.txt", ("content",), g1) == (
+        assert store._snapshot(g1).rows("t.txt", ("content",)) == (
             [{"version": 1, "content": b"v1"}],
             set(),
         )
-        assert store._rows("t.txt", ("content",), g2) == (
+        assert store._snapshot(g2).rows("t.txt", ("content",)) == (
             [{"version": 2, "content": b"v2"}],
             {1},
         )
         assert store.layout(g2)["tombstone_rows"] == 1
         assert store.get_file_version("t.txt") == [2, 3]
     with pytest.raises(ValueError, match="no committed generation"):
-        store._rows("t.txt", (), g2 + 100)
+        store._snapshot(g2 + 100)
 
 
-def test_a_replaced_file_is_read_again(store, tmp_path):
+def test_a_replaced_file_is_read_again(store, tmp_path, monkeypatch):
     """A data file replaced under its name, by a new inode or rewritten
-    in place with a new mtime, is read again; an unchanged one is not."""
+    in place with a new mtime, is read again together with its postings
+    twin's footer; an unchanged one is not. A twin removed from under
+    its data file reloads the file as twin-less."""
     import os
 
     import pyarrow as pa
+    import pyarrow.parquet as pq
 
     from dmshadoop_spark.dms import store as store_mod
 
     store.upload("r.txt", b"old body")
     (path,) = store._data_files(store.history()[-1])
-    loads = []
+    loads, twin_reads = [], []
     load = store._footers._load
-    store._footers._load = lambda p: loads.append(p) or load(p)
+    store._footers._load = lambda p, twin: loads.append((p, twin)) or load(p, twin)
+    read_metadata = pq.read_metadata
+    monkeypatch.setattr(
+        pq,
+        "read_metadata",
+        lambda p, *a, **k: (p == store_mod._twin(path) and twin_reads.append(p))
+        or read_metadata(p, *a, **k),
+    )
     assert store.download("r.txt") == b"old body"
     assert store.download("r.txt") == b"old body"
-    assert len(loads) == 1
+    assert loads == [(path, True)]
+    assert len(twin_reads) == 1
 
     def file_of(content):
         row = pa.Table.from_pylist(
@@ -2329,7 +2355,14 @@ def test_a_replaced_file_is_read_again(store, tmp_path):
     os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
     assert os.stat(path).st_ino == inode
     assert store.download("r.txt") == b"newer body"
-    assert len(loads) == 3
+    assert loads == [(path, True)] * 3
+    assert len(twin_reads) == 3
+    (f,) = store._snapshot().files
+    assert f.twin is not None and f.twin.num_rows == 2  # "old", "body"
+    os.remove(store_mod._twin(path))
+    (f,) = store._snapshot().files
+    assert f.twin is None and loads[-1] == (path, False)
+    assert len(twin_reads) == 3
 
 
 def test_clustered_point_read_decodes_one_row_group(spark, store, monkeypatch):
@@ -2416,7 +2449,7 @@ def test_compacted_twins_equal_the_postings_of_their_rows(
         part, _ = store_mod._write_docs(rows, staging)
         os.remove(os.path.join(staging, "_postings", part))
 
-    store._commit(stage, store.history()[-1])
+    store._commit(stage, store._snapshot())
     store.delete("doc-03.txt")
     store.delete("bare-2.txt")
     base = store.history()[-1]
@@ -2436,3 +2469,117 @@ def test_compacted_twins_equal_the_postings_of_their_rows(
         assert store.layout()["tombstone_rows"] == 0
         assert len(_twins_match_rows(store)) == target_files
     assert len(lexsorts) == (0 if packed else len(runs))
+
+
+# --------------------------------------------------------------------------
+# every call reads its generation through one snapshot
+# --------------------------------------------------------------------------
+
+
+def test_each_call_reads_one_snapshot_before_its_commit(store, monkeypatch):
+    """Every public call resolves the current generation once and lists
+    the generation's data files, postings twins and tombstone parts once
+    each, all before its commit when it commits; layout() lists the
+    previous generation's data files besides."""
+    import os
+
+    from dmshadoop_spark import generations
+
+    for i in range(4):
+        store.upload(f"d{i}.txt", f"body {i} words".encode())
+    store.delete("d0.txt")
+    events = []
+    current, commit, scandir = generations.current, generations.commit, os.scandir
+
+    def counted_scandir(path="."):
+        p = str(path)
+        if "gen=" in p and ".staging-" not in p:
+            events.append("list")
+        return scandir(path)
+
+    monkeypatch.setattr(
+        generations, "current", lambda root: events.append("current") or current(root)
+    )
+    monkeypatch.setattr(
+        generations,
+        "commit",
+        lambda root, stage: events.append("commit") or commit(root, stage),
+    )
+    monkeypatch.setattr(os, "scandir", counted_scandir)
+    snapshot = ["current", "list", "list", "list"]
+    calls = [
+        (lambda: store.upload("d1.txt", b"again"), ["commit"]),
+        (lambda: store.delete("d1.txt", 1), ["commit"]),
+        (lambda: store.delete_all_version("d2.txt"), ["commit"]),
+        (lambda: store.delete_where("name = 'd3.txt'"), ["commit"]),
+        (lambda: store.update("d1.txt", b"changed words"), ["commit"]),
+        (lambda: store.download("d1.txt"), []),
+        (lambda: store.get_file_meta_data("d1.txt"), []),
+        (lambda: store.get_file_version("d1.txt"), []),
+        (lambda: store.search("words").collect(), []),
+        (lambda: store.compact(), ["commit"]),
+        (lambda: store.layout(), ["list"]),
+        (lambda: store.delete("absent.txt"), []),
+    ]
+    for i, (call, after) in enumerate(calls):
+        events.clear()
+        call()
+        assert (i, events) == (i, snapshot + after)
+    assert store.download("d1.txt") == b"changed words"
+    assert store.get_file_version("d1.txt") == [2]
+
+
+def test_a_tombstoned_store_reads_as_before(spark, store):
+    """On a store whose tombstones sit in several parts, df() of each
+    generation holds exactly its untombstoned rows, diff reports the
+    deletes, delete_where matches live rows only, and bulk_ingest never
+    reuses a tombstoned version."""
+
+    def keys(df):
+        return sorted(
+            (r["name"], r["version"]) for r in df.select("name", "version").collect()
+        )
+
+    for i in range(4):
+        store.upload(f"d{i}.txt", f"body {i}".encode())
+        store.upload(f"d{i}.txt", f"body {i} again".encode())
+    g0 = store.history()[-1]
+    store.delete("d0.txt")
+    store.delete_all_version("d1.txt")
+    g1 = store.history()[-1]
+    every = [(f"d{i}.txt", v) for i in range(4) for v in (1, 2)]
+    assert keys(store.df(g0)) == every
+    assert keys(store.df()) == [
+        ("d0.txt", 1), ("d2.txt", 1), ("d2.txt", 2), ("d3.txt", 1), ("d3.txt", 2)
+    ]
+    assert sorted(tuple(r) for r in store.diff(g0, g1).collect()) == [
+        ("delete", "d0.txt", 2), ("delete", "d1.txt", 1), ("delete", "d1.txt", 2)
+    ]
+    # d0 v2 and d1 v2 are tombstoned: only d2's and d3's match
+    assert store.delete_where("version = 2") == 2
+    assert keys(store.df()) == [("d0.txt", 1), ("d2.txt", 1), ("d3.txt", 1)]
+    assert store.layout()["tombstone_files"] == 3
+    batch = spark.createDataFrame(
+        [("d0.txt", b"x"), ("d1.txt", b"y"), ("d4.txt", b"z")],
+        "name string, content binary",
+    )
+    assert store.bulk_ingest(batch) == 3
+    assert keys(store.df()) == [
+        ("d0.txt", 1), ("d0.txt", 3), ("d1.txt", 3),
+        ("d2.txt", 1), ("d3.txt", 1), ("d4.txt", 1),
+    ]
+    assert store.download("d1.txt") == b"y"
+
+
+def test_tombstoned_frames_start_no_more_jobs(spark, store):
+    """On a store with tombstones, df().count() and delete_where start
+    no more Spark jobs than when a Spark scan read the tombstones (3 and
+    2 on this fixture's session)."""
+    for i in range(6):
+        store.upload(f"d{i}.txt", b"x" * (10 + i))
+    store.delete("d0.txt")
+    store.delete("d1.txt")
+    count, jobs = _jobs_started(spark, lambda: store.df().count())
+    assert (count, len(jobs) <= 3) == (4, True), jobs
+    n, jobs = _jobs_started(spark, lambda: store.delete_where("length >= 14"))
+    assert (n, len(jobs) <= 2) == (2, True), jobs

@@ -16,6 +16,11 @@ ratio of every pair, and how many pairs the change won (the direction
 comes from the ``better`` field of the change's ``BENCHMARK.json``;
 ties count for neither). A run that is not ``correct`` or that failed
 operations is flagged. ``--out`` also writes every run's output as JSON.
+
+Last, one no-regression verdict per end-to-end metric that has a
+``bound`` in ``BENCHMARK.json`` (``verdict``): "within bound", "worse
+beyond bound", or "unresolved" when the parent's own quartile spread is
+wider than the bound and not every change run beats every parent run.
 """
 
 from __future__ import annotations
@@ -47,10 +52,14 @@ def run_once(checkout: str, workload: str, seed: int, seconds: float, trace: int
     return out
 
 
-def directions(checkout: str) -> dict[str, str]:
-    """Metric name -> "higher" or "lower", from ``BENCHMARK.json``."""
+def load_bench(checkout: str) -> dict:
+    """``checkout``'s ``BENCHMARK.json``."""
     with open(os.path.join(checkout, "BENCHMARK.json")) as f:
-        bench = json.load(f)
+        return json.load(f)
+
+
+def directions(bench: dict) -> dict[str, str]:
+    """Metric name -> "higher" or "lower"."""
     return {
         m["name"]: m["better"]
         for m in bench.get("end_to_end", []) + bench.get("per_layer", [])
@@ -63,6 +72,41 @@ def quartiles(values: list[float]) -> tuple[float, float, float]:
         return values[0], values[0], values[0]
     q1, q2, q3 = statistics.quantiles(values, n=4, method="inclusive")
     return q1, q2, q3
+
+
+def verdict(parent: list[float], change: list[float], better: str, bound: float) -> str:
+    """The no-regression verdict on one metric's runs: "worse beyond
+    bound" when the change's median is worse than the parent's by more
+    than ``bound`` (a fraction of the parent's median); else "unresolved"
+    when the distance between the parent's quartiles is more than
+    ``bound`` of its median and not every change run is better than
+    every parent run; else "within bound". ``better`` is "higher" or
+    "lower"."""
+    sign = 1 if better == "higher" else -1
+    pq1, pm, pq3 = quartiles(parent)
+    cm = statistics.median(change)
+    if sign * (pm - cm) > bound * abs(pm):
+        return "worse beyond bound"
+    beats_all = min(sign * c for c in change) > max(sign * p for p in parent)
+    if pq3 - pq1 > bound * abs(pm) and not beats_all:
+        return "unresolved"
+    return "within bound"
+
+
+def verdicts(runs: dict[str, list[dict]], bench: dict) -> dict[str, str]:
+    """``verdict`` of each end-to-end metric of ``bench`` that has a
+    ``bound`` and a value in every run of ``runs`` ("parent" and
+    "change" lists of run outputs)."""
+    out = {}
+    for m in bench.get("end_to_end", []):
+        name = m["name"]
+        if "bound" not in m or not all(
+            name in r["metrics"] for side in runs.values() for r in side
+        ):
+            continue
+        p, c = ([r["metrics"][name]["value"] for r in runs[s]] for s in ("parent", "change"))
+        out[name] = verdict(p, c, m["better"], m["bound"])
+    return out
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -89,7 +133,8 @@ def main(argv: list[str] | None = None) -> int:
                 f"{k}={v['value']:.4g}" for k, v in out["metrics"].items()
             ) + flag, flush=True)
 
-    better = directions(sides["change"])
+    bench = load_bench(sides["change"])
+    better = directions(bench)
     names = [n for n in runs["change"][0]["metrics"] if n in runs["parent"][0]["metrics"]]
     print(f"\n{args.workload}, {len(args.seeds)} pairs, seeds {args.seeds}")
     for name in names:
@@ -107,6 +152,8 @@ def main(argv: list[str] | None = None) -> int:
             f"change wins {wins}/{len(p)} ({better.get(name, '?')} is better)"
         )
         print(f"  per-pair change/parent: {ratios}")
+    for name, v in verdicts(runs, bench).items():
+        print(f"verdict {name}: {v}")
     if args.out:
         with open(args.out, "w") as f:
             json.dump({"args": vars(args), "runs": runs}, f, indent=1)
